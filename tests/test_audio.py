@@ -2350,6 +2350,22 @@ def test_wav_header_poison_rows_never_kill_the_stage(spark):
     }
 
 
+def test_wav_header_refuses_columns_named_like_its_temporaries(spark):
+    """An input column named like one of the ``_w_*`` staging
+    temporaries would be silently overwritten and then dropped; the
+    operator refuses it at plan time, naming the clash."""
+    from top_secret_spark.operators.audio import with_wav_header
+
+    df = spark.createDataFrame(
+        [("a", bytearray(b"RIFF"), 1, 2)],
+        "clip_id string, bytes binary, _w_sr int, _w_issue int",
+    )
+    with pytest.raises(ValueError, match=r"\['_w_issue', '_w_sr'\]"):
+        with_wav_header(df)
+    # a non-clashing frame still plans
+    assert "wav_issue" in with_wav_header(df.drop("_w_sr", "_w_issue")).columns
+
+
 def test_speaker_turns_kernel_semantics():
     """Turns count only single-voiced handoffs; silence/overlap blocks
     neither add nor break; mono never turns; no cross-clip carryover."""

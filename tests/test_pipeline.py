@@ -129,11 +129,42 @@ def test_scrub_dropped_config(spark):
 
 def test_fused_equals_modular(spark):
     """The fused single-crossing stage and the modular operators must
-    produce identical results — both wrap the same kernel."""
+    produce identical results — both wrap the same kernel.  The modular
+    reference is assembled here: Catalyst quality signals → text
+    features → keep/drop → scrub of kept rows only (dropped rows enter
+    the scrub UDF as NULL and pass straight through)."""
+    from pyspark.sql import functions as F
+
+    from top_secret_spark.operators.features import with_text_features
+    from top_secret_spark.operators.quality import (
+        with_keep_drop,
+        with_quality_signals,
+    )
+    from top_secret_spark.operators.scrub import make_scrub_udf
+
     clips = clips_df(spark, 150, with_audio=False)
-    a = run_pipeline(clips, PipelineConfig(fused=True)).orderBy("clip_id").collect()
-    b = run_pipeline(clips, PipelineConfig(fused=False)).orderBy("clip_id").collect()
+    cfg = PipelineConfig()
+    a = run_pipeline(clips, cfg).orderBy("clip_id").collect()
+    modular = with_keep_drop(
+        with_text_features(with_quality_signals(clips, "transcript"),
+                           "transcript"),
+        cfg.thresholds,
+    )
+    scrub = make_scrub_udf(cfg.scrub)(
+        F.when(F.col("keep"), F.col("transcript"))
+    )
+    b = (
+        modular.withColumn("_scrub", scrub)
+        .withColumns({
+            "scrubbed": F.when(F.col("keep"), F.col("_scrub.scrubbed")),
+            "mapping": F.when(F.col("keep"), F.col("_scrub.mapping")),
+        })
+        .orderBy("clip_id")
+        .collect()
+    )
+    assert len(a) == len(b) == 150
     for ra, rb in zip(a, b):
+        assert ra["clip_id"] == rb["clip_id"]
         assert ra["keep"] == rb["keep"] and ra["drop_reason"] == rb["drop_reason"]
         assert ra["scrubbed"] == rb["scrubbed"] and ra["mapping"] == rb["mapping"]
         assert abs(ra["ppl"] - rb["ppl"]) < 1e-9
@@ -216,7 +247,7 @@ def test_per_codec_top_k_salted_equals_plain_window(spark):
 
 def test_pipeline_with_injected_entities(spark):
     """NER-entities slot at the pipeline level: injected entities column
-    drives the NER filters (fused AND modular paths agree)."""
+    drives the NER filters."""
     from pyspark.sql import functions as F
 
     rows = [
@@ -231,15 +262,14 @@ def test_pipeline_with_injected_entities(spark):
               "codec string, transcript string, "
               "entities array<struct<text:string,tag:string,score:double>>")
     df = spark.createDataFrame(rows, schema)
-    for fused in (True, False):
-        out = {r["clip_id"]: r for r in run_pipeline(
-            df, PipelineConfig(entities_col="entities", fused=fused)
-        ).collect()}
-        assert out["a"]["keep"]
-        assert out["a"]["scrubbed"] == (
-            "[PERSON_1] met the committee in [LOCATION_1] to review the "
-            "annual budget today.")
-        assert out["b"]["scrubbed"] == rows[1][5]
+    out = {r["clip_id"]: r for r in run_pipeline(
+        df, PipelineConfig(entities_col="entities")
+    ).collect()}
+    assert out["a"]["keep"]
+    assert out["a"]["scrubbed"] == (
+        "[PERSON_1] met the committee in [LOCATION_1] to review the "
+        "annual budget today.")
+    assert out["b"]["scrubbed"] == rows[1][5]
 
 
 def test_keep_drop_vector_matches_scalar_grid():
@@ -285,7 +315,7 @@ def test_keep_drop_vector_matches_scalar_grid():
 def test_pipeline_with_audio_gate(spark):
     """Multimodal keep/drop: with ``audio_gate`` set, keep requires both
     gates and the audio reason wins the drop_reason slot — checked
-    against a text-only twin run on both the fused and modular paths."""
+    against a text-only twin run."""
     from top_secret_spark.operators.audio import AudioGateThresholds
     from top_secret_spark.pipeline import PipelineConfig, run_pipeline
     from top_secret_spark.sources.clips import gate_clips_df
@@ -293,22 +323,20 @@ def test_pipeline_with_audio_gate(spark):
     clips = gate_clips_df(spark, 24, partitions=2)
     planted = {0: "silent", 1: "clipped", 2: "too_short_audio",
                3: "decode_error"}
-    for fused in (True, False):
-        cfg = PipelineConfig(include_audio=True, fused=fused,
-                             audio_gate=AudioGateThresholds())
-        text_cfg = PipelineConfig(include_audio=True, fused=fused)
-        out = {r["clip_id"]: r for r in run_pipeline(clips, cfg).collect()}
-        text = {r["clip_id"]: r for r in run_pipeline(clips, text_cfg).collect()}
-        assert len(out) == 24
-        for cid, row in out.items():
-            t = text[cid]
-            r_idx = int(cid.split("-")[1])
-            audio_reason = planted.get(r_idx % 6)
-            assert row["keep"] == (t["keep"] and audio_reason is None), (fused, cid)
-            exp_reason = audio_reason if audio_reason is not None else t["drop_reason"]
-            assert row["drop_reason"] == exp_reason, (fused, cid)
-            # text columns are untouched by the fold
-            assert row["scrubbed"] == t["scrubbed"], (fused, cid)
+    cfg = PipelineConfig(include_audio=True, audio_gate=AudioGateThresholds())
+    text_cfg = PipelineConfig(include_audio=True)
+    out = {r["clip_id"]: r for r in run_pipeline(clips, cfg).collect()}
+    text = {r["clip_id"]: r for r in run_pipeline(clips, text_cfg).collect()}
+    assert len(out) == 24
+    for cid, row in out.items():
+        t = text[cid]
+        r_idx = int(cid.split("-")[1])
+        audio_reason = planted.get(r_idx % 6)
+        assert row["keep"] == (t["keep"] and audio_reason is None), cid
+        exp_reason = audio_reason if audio_reason is not None else t["drop_reason"]
+        assert row["drop_reason"] == exp_reason, cid
+        # text columns are untouched by the fold
+        assert row["scrubbed"] == t["scrubbed"], cid
 
 
 def test_quality_rule_audit_cofiring_and_column_gating(spark):
@@ -346,7 +374,7 @@ def test_quality_rule_audit_cofiring_and_column_gating(spark):
 
 
 def test_multimodal_fused_single_crossing_equivalence(spark):
-    """include_audio + fused must take the one-Arrow-crossing stage and
+    """include_audio must take the one-Arrow-crossing stage and
     produce row-for-row identical output (by column NAME — the stage
     emits fused fields after the audio features) to the legacy
     two-crossing layout (decode mapInPandas + text pandas_udf),

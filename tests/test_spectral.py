@@ -136,13 +136,16 @@ def test_nonpositive_sample_rate_is_defaults_not_crash():
 
 
 def test_with_spectral_features_mixed_codecs_and_poison_rows(spark):
-    from top_secret_spark.operators.audio import with_spectral_features
+    from top_secret_spark.operators.audio import (
+        spectral_drop_reason_col,
+        with_spectral_features,
+    )
 
     t = np.arange(4800) / SR
     tone = (0.4 * np.sin(2 * np.pi * 1000 * t)).astype(np.float32)
     rows = pd.DataFrame(
         {
-            "clip_id": ["a", "b", "c", "d", "e", "f"],
+            "clip_id": ["a", "b", "c", "d", "e", "f", "g", "h"],
             "bytes": [
                 encode(tone, "pcm16"),
                 encode(tone, "ulaw"),
@@ -150,15 +153,19 @@ def test_with_spectral_features_mixed_codecs_and_poison_rows(spark):
                 None,  # NULL payload
                 b"\x00\x01\x02",  # odd-length pcm16 (poison)
                 b"\x00\x01\x02\x03",  # unknown codec
+                encode(tone[:100], "pcm16"),  # decodable, shorter than a frame
+                encode(tone, "pcm16"),  # decodable, sr_hz = 0
             ],
-            "sr_hz": pd.array([SR] * 6, dtype="int32"),
-            "dur_ms": pd.array([300] * 6, dtype="int32"),
-            "codec": ["pcm16", "ulaw", "alaw", "pcm16", "pcm16", "opus"],
-            "transcript": ["t"] * 6,
+            "sr_hz": pd.array([SR] * 7 + [0], dtype="int32"),
+            "dur_ms": pd.array([300] * 8, dtype="int32"),
+            "codec": ["pcm16", "ulaw", "alaw", "pcm16", "pcm16", "opus",
+                      "pcm16", "pcm16"],
+            "transcript": ["t"] * 8,
         }
     )
     out = (
         with_spectral_features(spark.createDataFrame(rows))
+        .withColumn("reason", spectral_drop_reason_col())
         .orderBy("clip_id")
         .collect()
     )
@@ -167,10 +174,13 @@ def test_with_spectral_features_mixed_codecs_and_poison_rows(spark):
         assert r.spectral_ok
         assert abs(r.spectral_centroid_hz - 1000) < 15
         assert r.spectral_flatness < 0.01
+    # nothing measured: not ok, so the gate names decode_error rather
+    # than reading the 0.0 centroid as low-frequency hum
     for r in out[3:]:
-        assert not r.spectral_ok
+        assert not r.spectral_ok, r.clip_id
         assert (r.spectral_centroid_hz, r.spectral_flatness) == (0.0, 1.0)
         assert r.n_frames == 0
+        assert r.reason == "decode_error", r.clip_id
 
 
 def test_with_spectral_features_keep_bytes_and_mixed_sr(spark):

@@ -6,6 +6,15 @@ raw PCM into the output table (at 10^12 clips that would be a multi-PB
 write amplification); it validates decodability and extracts cheap
 features instead.  ``decoded_pcm_df`` materializes PCM for tests and the
 SNR passthrough gate only.
+
+Every batch operator that carries its input columns (the ``with_*``
+feature appenders and the payload transforms) crosses Arrow through
+one seam, ``operators.seam.map_batches``: it builds the output schema
+(input columns minus ``drop``, then ``emits``), refuses emitted names
+that collide with carried columns, and runs the operator's batch
+function once per Arrow batch.  Only the fixed-schema emitters
+(``frame_energy_df``, ``decoded_pcm_df``, ``audio_window_hashes``,
+``audio_cdc_segments``) call ``mapInPandas`` directly.
 """
 
 from __future__ import annotations
@@ -17,11 +26,26 @@ from pyspark.sql import functions as F
 
 from ..kernel.audio import BYTES_PER_SAMPLE as _BYTES_PER_SAMPLE
 from ..kernel.audio import SUPPORTED_CODECS as _SUPPORTED_CODECS
+from .seam import map_batches
 
 _FEATURES_SCHEMA_SUFFIX = (
     "decode_ok boolean, rms double, zcr double, dur_ms_measured int, "
     "silence_ratio double, clipping_ratio double"
 )
+
+
+def _sr_groups(pdf):
+    """``kernel.audio.decode_sr_groups`` over a clips batch's
+    ``bytes`` / ``codec`` / ``sr_hz`` columns (NULL sr read as NaN)."""
+    import numpy as np
+
+    from ..kernel.audio import decode_sr_groups
+
+    return decode_sr_groups(
+        pdf["bytes"].tolist(),
+        pdf["codec"].to_numpy(),
+        pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan),
+    )
 
 
 def with_audio_features(df: DataFrame) -> DataFrame:
@@ -34,31 +58,33 @@ def with_audio_features(df: DataFrame) -> DataFrame:
     multi-KB audio blobs back across the Arrow boundary (and through
     every downstream stage) would double the pipeline's memory traffic
     for a column nothing downstream reads."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if f.name != "bytes"
+    return map_batches(
+        df, set_audio_feature_columns,
+        emits=_FEATURES_SCHEMA_SUFFIX,
     )
-    schema += ", " + _FEATURES_SCHEMA_SUFFIX
-
-    def run(iterator):
-        for pdf in iterator:
-            yield append_audio_feature_columns(pdf)
-
-    return df.mapInPandas(run, schema=schema)
 
 
 def append_audio_feature_columns(pdf):
+    """``set_audio_feature_columns`` on one batch (``pdf`` gains the
+    feature columns), then ``bytes`` dropped — the batch
+    ``with_audio_features`` emits, for callers that run the batch core
+    without Spark."""
+    return set_audio_feature_columns(pdf).drop(columns=["bytes"])
+
+
+def set_audio_feature_columns(pdf):
     """Decode-boundary core shared by ``with_audio_features`` and the
     single-crossing multimodal fused stage (operators/fused.py): one
     concatenated decode + segmented feature pass per codec present in
-    the Arrow batch — no per-clip Python loop — then ``bytes`` is
-    dropped and the six feature columns are appended in place."""
+    the Arrow batch — no per-clip Python loop — then the six feature
+    columns are set on ``pdf`` in place (``bytes`` stays; the seam
+    drops it)."""
     import numpy as np
 
     from ..kernel.audio import (
         SUPPORTED_CODECS,
         batch_decode,
-        pcm16_aligned_indices,
+        decodable_indices,
         segmented_features,
         segmented_ratios,
     )
@@ -77,14 +103,9 @@ def append_audio_feature_columns(pdf):
     codecs = pdf["codec"].to_numpy()
     srs = pdf["sr_hz"].to_numpy()
     for codec in SUPPORTED_CODECS:
-        idx = np.flatnonzero(
-            (codecs == codec)
-            & np.array([d is not None for d in datas])
-        )
-        if codec == "pcm16":
-            # a poison row must not kill the stage — mark
-            # odd-length clips decode_ok=false, decode the rest
-            idx = pcm16_aligned_indices(datas, idx)
+        # a poison row must not kill the stage — NULL payloads and
+        # odd-length pcm16 clips stay decode_ok=false
+        idx = decodable_indices(datas, codecs, codec)
         if not len(idx):
             continue
         samples, lengths = batch_decode(
@@ -100,7 +121,6 @@ def append_audio_feature_columns(pdf):
         durs[idx] = d
         sils[idx] = si
         clps[idx] = cl
-    pdf = pdf.drop(columns=["bytes"])
     pdf["decode_ok"] = oks
     pdf["rms"] = rmss
     pdf["zcr"] = zcrs
@@ -130,76 +150,48 @@ def with_spectral_features(
     the Arrow batch, never a per-clip Python loop.  Frame length is an
     sr-derived constant, hence the extra sr split inside each codec.
 
-    Undecodable / odd-pcm16 / NULL-payload rows get spectral_ok=false
-    with centroid 0.0 and flatness 1.0 ("indistinguishable from noise")
-    rather than failing the stage — a poison row must not kill a
-    1000-executor job.  ``bytes`` is dropped unless ``keep_bytes`` (the
+    Undecodable / odd-pcm16 / NULL-payload / NULL-or-nonpositive-sr
+    rows get spectral_ok=false with centroid 0.0 and flatness 1.0
+    ("indistinguishable from noise") rather than failing the stage — a
+    poison row must not kill a 1000-executor job.  So do decodable clips
+    shorter than one frame: they measured nothing, and a 0.0 centroid
+    would read as low-frequency hum (the mel/snr/bandwidth convention).
+    ``bytes`` is dropped unless ``keep_bytes`` (the
     ``with_audio_features`` convention: don't re-serialize multi-KB
     blobs through every downstream stage); pass keep_bytes=True to
     chain further payload transforms after this one.
     """
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += ", " + _SPECTRAL_SCHEMA_SUFFIX
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import (
-            SUPPORTED_CODECS,
-            batch_decode,
-            pcm16_aligned_indices,
-        )
         from ..kernel.spectral import batch_spectral
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            cents = np.zeros(n, dtype=np.float64)
-            flats = np.ones(n, dtype=np.float64)
-            nfs = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            # NULL sr_hz arrives as NaN (Arrow nullable int32 -> float64
-            # pandas column); such rows must stay spectral_ok=false, not
-            # crash int(sr) below — poison rows never kill the stage
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            sr_ok = np.isfinite(srs)
-            for codec in SUPPORTED_CODECS:
-                cidx = np.flatnonzero(
-                    (codecs == codec)
-                    & sr_ok
-                    & np.array([d is not None for d in datas])
-                )
-                if codec == "pcm16":
-                    cidx = pcm16_aligned_indices(datas, cidx)
-                if not len(cidx):
-                    continue
-                # frame length depends on sr: one kernel call per rate
-                for sr in np.unique(srs[cidx]):
-                    idx = cidx[srs[cidx] == sr]
-                    samples, lengths = batch_decode(
-                        [bytes(datas[i]) for i in idx], codec
-                    )
-                    c, fl, nf = batch_spectral(
-                        samples, lengths, int(sr),
-                        frame_ms=frame_ms, hop_ms=hop_ms,
-                    )
-                    oks[idx] = True
-                    cents[idx] = c
-                    flats[idx] = fl
-                    nfs[idx] = nf
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["spectral_ok"] = oks
-            pdf["spectral_centroid_hz"] = cents
-            pdf["spectral_flatness"] = flats
-            pdf["n_frames"] = nfs
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        cents = np.zeros(n, dtype=np.float64)
+        flats = np.ones(n, dtype=np.float64)
+        nfs = np.zeros(n, dtype=np.int64)
+        # frame length depends on sr: one kernel call per (codec, sr)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            c, fl, nf = batch_spectral(
+                samples, lengths, sr, frame_ms=frame_ms, hop_ms=hop_ms,
+            )
+            oks[idx] = nf > 0
+            cents[idx] = c
+            flats[idx] = fl
+            nfs[idx] = nf
+        pdf["spectral_ok"] = oks
+        pdf["spectral_centroid_hz"] = cents
+        pdf["spectral_flatness"] = flats
+        pdf["n_frames"] = nfs
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits=_SPECTRAL_SCHEMA_SUFFIX,
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def with_log_mel(
@@ -223,62 +215,52 @@ def with_log_mel(
     kill.  ``bytes`` is dropped unless ``keep_bytes`` (payloads are
     already multi-KB; the mel matrix REPLACES the waveform downstream,
     which is the point of feature extraction)."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (", mel_ok boolean, log_mel array<array<float>>, "
-               "n_mel_frames int, mel_argmax_hz double")
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_log_mel, mel_filterbank
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            mels = [[] for _ in range(n)]
-            nfs = np.zeros(n, dtype=np.int64)
-            amhz = np.zeros(n, dtype=np.float64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                mel, nf = batch_log_mel(
-                    samples, lengths, sr, n_mels=n_mels,
-                    frame_ms=frame_ms, hop_ms=hop_ms,
-                )
-                frame = max(2, int(sr * frame_ms / 1000))
-                centers = mel_filterbank(sr, frame, n_mels)[1]
-                off = 0
-                for k, i in enumerate(idx):
-                    rows = mel[off:off + int(nf[k])]
-                    off += int(nf[k])
-                    mels[i] = rows.tolist()  # one C-level conversion
-                    nfs[i] = int(nf[k])
-                    if len(rows):
-                        amhz[i] = float(
-                            centers[int(np.argmax(rows.mean(axis=0)))]
-                        )
-                    # ok only when the clip yielded >=1 frame: a decodable
-                    # clip shorter than one frame leaves mel_argmax_hz at an
-                    # authoritative-looking 0.0, which a downstream gate like
-                    # q71's hum check (argmax < 150 Hz) would silently match.
-                    # Matches the snr/bandwidth operators' ok convention.
-                    oks[i] = int(nf[k]) > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["mel_ok"] = oks
-            pdf["log_mel"] = mels
-            pdf["n_mel_frames"] = nfs
-            pdf["mel_argmax_hz"] = amhz
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        mels = [[] for _ in range(n)]
+        nfs = np.zeros(n, dtype=np.int64)
+        amhz = np.zeros(n, dtype=np.float64)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            mel, nf = batch_log_mel(
+                samples, lengths, sr, n_mels=n_mels,
+                frame_ms=frame_ms, hop_ms=hop_ms,
+            )
+            frame = max(2, int(sr * frame_ms / 1000))
+            centers = mel_filterbank(sr, frame, n_mels)[1]
+            off = 0
+            for k, i in enumerate(idx):
+                rows = mel[off:off + int(nf[k])]
+                off += int(nf[k])
+                mels[i] = rows.tolist()  # one C-level conversion
+                nfs[i] = int(nf[k])
+                if len(rows):
+                    amhz[i] = float(
+                        centers[int(np.argmax(rows.mean(axis=0)))]
+                    )
+                # ok only when the clip yielded >=1 frame: a decodable
+                # clip shorter than one frame leaves mel_argmax_hz at an
+                # authoritative-looking 0.0, which a downstream gate like
+                # q71's hum check (argmax < 150 Hz) would silently match.
+                # Matches the snr/bandwidth operators' ok convention.
+                oks[i] = int(nf[k]) > 0
+        pdf["mel_ok"] = oks
+        pdf["log_mel"] = mels
+        pdf["n_mel_frames"] = nfs
+        pdf["mel_argmax_hz"] = amhz
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="mel_ok boolean, log_mel array<array<float>>, "
+              "n_mel_frames int, mel_argmax_hz double",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def spectral_drop_reason_col(
@@ -347,7 +329,10 @@ def with_audio_keep_drop(
     (``operators.quality.with_keep_drop``) for a full multimodal filter:
     the two reason columns stay separate so counters can attribute drops
     to the right modality."""
-    feats = with_audio_features(df)
+    return _with_audio_reason(with_audio_features(df), th)
+
+
+def _with_audio_reason(feats: DataFrame, th: AudioGateThresholds) -> DataFrame:
     reason = audio_drop_reason_col(th)
     return feats.withColumn("audio_drop_reason", reason).withColumn(
         "audio_keep", reason.isNull()
@@ -367,37 +352,32 @@ def resampled_clips(df: DataFrame, target_sr: int = 16000) -> DataFrame:
     TRANSFORM whose output must cover every input row, so undecodable
     payloads (unknown codec, odd-length pcm16) raise loudly rather than
     passing through corrupt or silently changed rows."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_decode, batch_resample, float_to_pcm16
+        from ..kernel.audio import batch_decode, batch_resample
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy()
-            out_bytes = [None] * len(pdf)
-            for codec in sorted(set(codecs.tolist()), key=str):
-                idx = np.flatnonzero(codecs == codec)
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
-                )
-                res, res_lengths = batch_resample(
-                    samples, lengths, srs[idx], target_sr
-                )
-                for k, payload in enumerate(
-                    _pcm16_payloads(res, res_lengths)
-                ):
-                    out_bytes[idx[k]] = payload
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["sr_hz"] = target_sr
-            pdf["codec"] = "pcm16"
-            yield pdf
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy()
+        out_bytes = [None] * len(pdf)
+        for codec in sorted(set(codecs.tolist()), key=str):
+            idx = np.flatnonzero(codecs == codec)
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            res, res_lengths = batch_resample(
+                samples, lengths, srs[idx], target_sr
+            )
+            for i, payload in zip(idx, _pcm16_payloads(res, res_lengths)):
+                out_bytes[i] = payload
+        pdf["bytes"] = out_bytes
+        pdf["sr_hz"] = target_sr
+        pdf["codec"] = "pcm16"
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 def normalized_clips(
@@ -411,39 +391,30 @@ def normalized_clips(
     :func:`resampled_clips`: one concatenated kernel pass per codec per
     Arrow batch, undecodable payloads raise loudly (transform, not a
     gate).  Output codec is pcm16, sample rate unchanged."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import (
-            batch_decode,
-            batch_normalize_gain,
-            float_to_pcm16,
-        )
+        from ..kernel.audio import batch_decode, batch_normalize_gain
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            out_bytes = [None] * len(pdf)
-            for codec in sorted(set(codecs.tolist()), key=str):
-                idx = np.flatnonzero(codecs == codec)
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
-                )
-                normed = batch_normalize_gain(
-                    samples, lengths, target_rms, max_gain
-                )
-                for k, payload in enumerate(
-                    _pcm16_payloads(normed, lengths)
-                ):
-                    out_bytes[idx[k]] = payload
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["codec"] = "pcm16"
-            yield pdf
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        out_bytes = [None] * len(pdf)
+        for codec in sorted(set(codecs.tolist()), key=str):
+            idx = np.flatnonzero(codecs == codec)
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            normed = batch_normalize_gain(
+                samples, lengths, target_rms, max_gain
+            )
+            for i, payload in zip(idx, _pcm16_payloads(normed, lengths)):
+                out_bytes[i] = payload
+        pdf["bytes"] = out_bytes
+        pdf["codec"] = "pcm16"
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 def merge_segments(
@@ -534,35 +505,30 @@ def noise_mixed_clips(
     keyed = df.withColumn(
         "_noise_key", F.xxhash64(F.col("clip_id"), F.lit(int(seed)))
     )
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_decode, batch_mix_noise
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            # int64 -> uint64 reinterpret: same 64 bits, numpy-safe
-            keys = pdf["_noise_key"].to_numpy(dtype=np.int64).view(np.uint64)
-            out_bytes = [None] * len(pdf)
-            for codec in sorted(set(codecs.tolist()), key=str):
-                idx = np.flatnonzero(codecs == codec)
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
-                )
-                mixed = batch_mix_noise(samples, lengths, keys[idx], snr_db)
-                for k, payload in enumerate(
-                    _pcm16_payloads(mixed, lengths)
-                ):
-                    out_bytes[idx[k]] = payload
-            pdf = pdf.drop(columns=["_noise_key"]).copy()
-            pdf["bytes"] = out_bytes
-            pdf["codec"] = "pcm16"
-            yield pdf
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        # int64 -> uint64 reinterpret: same 64 bits, numpy-safe
+        keys = pdf["_noise_key"].to_numpy(dtype=np.int64).view(np.uint64)
+        out_bytes = [None] * len(pdf)
+        for codec in sorted(set(codecs.tolist()), key=str):
+            idx = np.flatnonzero(codecs == codec)
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            mixed = batch_mix_noise(samples, lengths, keys[idx], snr_db)
+            for i, payload in zip(idx, _pcm16_payloads(mixed, lengths)):
+                out_bytes[i] = payload
+        pdf["bytes"] = out_bytes
+        pdf["codec"] = "pcm16"
+        return pdf
 
-    return keyed.mapInPandas(run, schema=schema)
+    return map_batches(keyed, run, drop=("_noise_key",))
 
 
 def _bps_col() -> Column:
@@ -669,37 +635,33 @@ def transcode_clips(df: DataFrame, target_codec: str = "pcm16") -> DataFrame:
             f"codec '{target_codec}' requires an external encoder not "
             f"present in this container; supported: {_encodable}"
         )
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_decode
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            out_bytes = list(datas)  # same-codec rows pass through
-            nonnull = np.fromiter(
-                (d is not None for d in datas), dtype=bool, count=len(datas)
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        out_bytes = list(datas)  # same-codec rows pass through
+        nonnull = np.fromiter(
+            (d is not None for d in datas), dtype=bool, count=len(datas)
+        )
+        for codec in sorted(set(codecs.tolist()), key=str):
+            if codec == target_codec:
+                continue
+            idx = np.flatnonzero((codecs == codec) & nonnull)
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
             )
-            for codec in sorted(set(codecs.tolist()), key=str):
-                if codec == target_codec:
-                    continue
-                idx = np.flatnonzero((codecs == codec) & nonnull)
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
-                )
-                for k, payload in enumerate(
-                    _encoded_payloads(samples, lengths, target_codec)
-                ):
-                    out_bytes[idx[k]] = payload
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["codec"] = target_codec
-            yield pdf
+            payloads = _encoded_payloads(samples, lengths, target_codec)
+            for i, payload in zip(idx, payloads):
+                out_bytes[i] = payload
+        pdf["bytes"] = out_bytes
+        pdf["codec"] = target_codec
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 def trimmed_clips(
@@ -723,65 +685,62 @@ def trimmed_clips(
     row.  Same contract as :func:`resampled_clips` otherwise:
     undecodable payloads (unknown codec, odd-length pcm16, non-positive
     sr) raise loudly."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
     has_dur = "dur_ms" in df.columns
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_decode, batch_trim_bounds
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            nonnull = np.array([d is not None for d in datas])
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy()
-            out_bytes = list(datas)  # NULL payloads pass through
-            new_dur = pdf["dur_ms"].copy() if has_dur else None
-            for codec in sorted(
-                set(codecs[nonnull].tolist()), key=str
-            ):
-                bps = _BYTES_PER_SAMPLE.get(codec)
-                if bps is None:
-                    raise ValueError(
-                        f"trimmed_clips: codec {codec!r} is not "
-                        "byte-sliceable — trim keeps retained samples "
-                        "bit-identical via a payload slice, which only "
-                        "fixed-width codecs (SEEKABLE_CODECS) survive; "
-                        "gate undecodable rows out upstream "
-                        "(with_audio_keep_drop), and transcode stateful "
-                        "codecs (adpcm) to pcm16/ulaw/alaw first"
-                    )
-                idx = np.flatnonzero((codecs == codec) & nonnull)
-                if (srs[idx] <= 0).any():
-                    raise ValueError(
-                        "trimmed_clips: non-positive sr_hz — repair "
-                        "metadata upstream"
-                    )
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
+        datas = pdf["bytes"].tolist()
+        nonnull = np.array([d is not None for d in datas])
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy()
+        out_bytes = list(datas)  # NULL payloads pass through
+        new_dur = pdf["dur_ms"].copy() if has_dur else None
+        for codec in sorted(
+            set(codecs[nonnull].tolist()), key=str
+        ):
+            bps = _BYTES_PER_SAMPLE.get(codec)
+            if bps is None:
+                raise ValueError(
+                    f"trimmed_clips: codec {codec!r} is not "
+                    "byte-sliceable — trim keeps retained samples "
+                    "bit-identical via a payload slice, which only "
+                    "fixed-width codecs (SEEKABLE_CODECS) survive; "
+                    "gate undecodable rows out upstream "
+                    "(with_audio_keep_drop), and transcode stateful "
+                    "codecs (adpcm) to pcm16/ulaw/alaw first"
                 )
-                pad = (srs[idx].astype(np.int64) * int(pad_ms)) // 1000
-                starts, ends = batch_trim_bounds(
-                    samples, lengths, threshold, pad
+            idx = np.flatnonzero((codecs == codec) & nonnull)
+            if (srs[idx] <= 0).any():
+                raise ValueError(
+                    "trimmed_clips: non-positive sr_hz — repair "
+                    "metadata upstream"
                 )
-                for k, i in enumerate(idx):
-                    out_bytes[i] = bytes(datas[i])[
-                        int(starts[k]) * bps : int(ends[k]) * bps
-                    ]
-                if has_dur:
-                    # cast to the Series' own dtype: pandas deprecates
-                    # (future-errors) int64 setitem into an int32 column
-                    new_dur.iloc[idx] = np.round(
-                        (ends - starts) * 1000.0 / srs[idx]
-                    ).astype(new_dur.dtype, copy=False)
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            pad = (srs[idx].astype(np.int64) * int(pad_ms)) // 1000
+            starts, ends = batch_trim_bounds(
+                samples, lengths, threshold, pad
+            )
+            for k, i in enumerate(idx):
+                out_bytes[i] = bytes(datas[i])[
+                    int(starts[k]) * bps : int(ends[k]) * bps
+                ]
             if has_dur:
-                pdf["dur_ms"] = new_dur
-            yield pdf
+                # cast to the Series' own dtype: pandas deprecates
+                # (future-errors) int64 setitem into an int32 column
+                new_dur.iloc[idx] = np.round(
+                    (ends - starts) * 1000.0 / srs[idx]
+                ).astype(new_dur.dtype, copy=False)
+        pdf["bytes"] = out_bytes
+        if has_dur:
+            pdf["dur_ms"] = new_dur
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 def chunked_clips(
@@ -897,66 +856,61 @@ def speed_perturbed_clips(df: DataFrame, factor: float = 1.1) -> DataFrame:
     loudly; NULL payloads pass through."""
     if not factor > 0:
         raise ValueError("speed_perturbed_clips: factor must be positive")
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
     has_dur = "dur_ms" in df.columns
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_decode, batch_resample, float_to_pcm16
+        from ..kernel.audio import batch_decode, batch_resample
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            nonnull = np.array([d is not None for d in datas])
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy()
-            out_bytes = list(datas)
-            out_codec = pdf["codec"].copy()
-            new_dur = pdf["dur_ms"].copy() if has_dur else None
-            for codec, sr in sorted(
-                {(c, int(s)) for c, s, nn in
-                 zip(codecs.tolist(), srs.tolist(), nonnull) if nn},
-                key=str,
-            ):
-                if sr <= 0:
-                    raise ValueError(
-                        "speed_perturbed_clips: non-positive sr_hz — "
-                        "repair metadata upstream"
-                    )
-                idx = np.flatnonzero(
-                    (codecs == codec) & (srs == sr) & nonnull
+        datas = pdf["bytes"].tolist()
+        nonnull = np.array([d is not None for d in datas])
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy()
+        out_bytes = list(datas)
+        out_codec = pdf["codec"].copy()
+        new_dur = pdf["dur_ms"].copy() if has_dur else None
+        for codec, sr in sorted(
+            {(c, int(s)) for c, s, nn in
+             zip(codecs.tolist(), srs.tolist(), nonnull) if nn},
+            key=str,
+        ):
+            if sr <= 0:
+                raise ValueError(
+                    "speed_perturbed_clips: non-positive sr_hz — "
+                    "repair metadata upstream"
                 )
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
+            idx = np.flatnonzero(
+                (codecs == codec) & (srs == sr) & nonnull
+            )
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            virtual_sr = int(round(sr * factor))
+            if virtual_sr < 1:
+                raise ValueError(
+                    f"speed_perturbed_clips: factor {factor} "
+                    f"quantizes the virtual source rate to 0 at "
+                    f"sr_hz={sr} - the factor is too small"
                 )
-                virtual_sr = int(round(sr * factor))
-                if virtual_sr < 1:
-                    raise ValueError(
-                        f"speed_perturbed_clips: factor {factor} "
-                        f"quantizes the virtual source rate to 0 at "
-                        f"sr_hz={sr} - the factor is too small"
-                    )
-                res, res_lengths = batch_resample(
-                    samples, lengths,
-                    np.full(len(idx), virtual_sr, dtype=np.int64), sr
-                )
-                for k, payload in enumerate(
-                    _pcm16_payloads(res, res_lengths)
-                ):
-                    out_bytes[idx[k]] = payload
-                out_codec.iloc[idx] = "pcm16"
-                if has_dur:
-                    new_dur.iloc[idx] = np.round(
-                        res_lengths * 1000.0 / sr
-                    ).astype(new_dur.dtype, copy=False)
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["codec"] = out_codec
+            res, res_lengths = batch_resample(
+                samples, lengths,
+                np.full(len(idx), virtual_sr, dtype=np.int64), sr
+            )
+            for i, payload in zip(idx, _pcm16_payloads(res, res_lengths)):
+                out_bytes[i] = payload
+            out_codec.iloc[idx] = "pcm16"
             if has_dur:
-                pdf["dur_ms"] = new_dur
-            yield pdf
+                new_dur.iloc[idx] = np.round(
+                    res_lengths * 1000.0 / sr
+                ).astype(new_dur.dtype, copy=False)
+        pdf["bytes"] = out_bytes
+        pdf["codec"] = out_codec
+        if has_dur:
+            pdf["dur_ms"] = new_dur
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 def split_clips_on_silence(
@@ -983,110 +937,109 @@ def split_clips_on_silence(
     segment, and NULL payloads pass through as one untouched segment
     (a structural transform never loses rows).  Transform contract:
     undecodable payloads / non-positive sr raise loudly."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-    schema += ", seg_idx int, seg_id string"
     has_dur = "dur_ms" in df.columns
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_decode, batch_voiced_segments
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            nonnull = np.array([d is not None for d in datas])
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy()
-            all_rows, all_s, all_e = [], [], []
-            for codec, sr in sorted(
-                {(c, int(s)) for c, s, nn in
-                 zip(codecs.tolist(), srs.tolist(), nonnull) if nn},
-                key=str,
-            ):
-                if _BYTES_PER_SAMPLE.get(codec) is None:
-                    raise ValueError(
-                        f"split_clips_on_silence: codec {codec!r} is not "
-                        "byte-sliceable (segments are payload slices; "
-                        "stateful codecs like adpcm need a transcode to "
-                        "pcm16/ulaw/alaw first) — gate undecodable rows "
-                        "out upstream"
-                    )
-                if sr <= 0:
-                    raise ValueError(
-                        "split_clips_on_silence: non-positive sr_hz — "
-                        "repair metadata upstream"
-                    )
-                idx = np.flatnonzero(
-                    (codecs == codec) & (srs == sr) & nonnull
+        datas = pdf["bytes"].tolist()
+        nonnull = np.array([d is not None for d in datas])
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy()
+        all_rows, all_s, all_e = [], [], []
+        for codec, sr in sorted(
+            {(c, int(s)) for c, s, nn in
+             zip(codecs.tolist(), srs.tolist(), nonnull) if nn},
+            key=str,
+        ):
+            if _BYTES_PER_SAMPLE.get(codec) is None:
+                raise ValueError(
+                    f"split_clips_on_silence: codec {codec!r} is not "
+                    "byte-sliceable (segments are payload slices; "
+                    "stateful codecs like adpcm need a transcode to "
+                    "pcm16/ulaw/alaw first) — gate undecodable rows "
+                    "out upstream"
                 )
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
+            if sr <= 0:
+                raise ValueError(
+                    "split_clips_on_silence: non-positive sr_hz — "
+                    "repair metadata upstream"
                 )
-                gap = (sr * int(min_gap_ms)) // 1000
-                ci, s, e = batch_voiced_segments(
-                    samples, lengths, threshold, gap
-                )
-                rows = idx[ci]
-                # all-silent clips: one empty segment each
-                silent = np.setdiff1d(idx, rows, assume_unique=False)
-                all_rows.append(np.concatenate([rows, silent]))
-                all_s.append(np.concatenate([s, np.zeros(len(silent), np.int64)]))
-                all_e.append(np.concatenate([e, np.zeros(len(silent), np.int64)]))
-            # NULL payloads: one passthrough segment each (s == e == -1
-            # marks "do not slice, do not rewrite duration")
-            nulls = np.flatnonzero(~nonnull)
-            all_rows.append(nulls)
-            all_s.append(np.full(len(nulls), -1, np.int64))
-            all_e.append(np.full(len(nulls), -1, np.int64))
-            rows = np.concatenate(all_rows) if all_rows else np.empty(0, np.int64)
-            s = np.concatenate(all_s) if all_s else np.empty(0, np.int64)
-            e = np.concatenate(all_e) if all_e else np.empty(0, np.int64)
-            order = np.lexsort((s, rows))
-            rows, s, e = rows[order], s[order], e[order]
-            # seg_idx = rank of the segment within its clip
-            if len(rows):
-                new_clip = np.empty(len(rows), dtype=bool)
-                new_clip[0] = True
-                new_clip[1:] = rows[1:] != rows[:-1]
-                first_pos = np.flatnonzero(new_clip)
-                seg_idx = (np.arange(len(rows))
-                           - np.repeat(first_pos, np.diff(
-                               np.append(first_pos, len(rows)))))
-            else:
-                seg_idx = np.empty(0, dtype=np.int64)
-            out = pdf.iloc[rows].reset_index(drop=True)
-            passthrough = s < 0
-            # one source of truth for bytes-per-sample: the same dict the
-            # codec validation above checked against
-            bps_arr = (
-                out["codec"].map(_BYTES_PER_SAMPLE).fillna(1)
-                .to_numpy().astype(np.int64)
+            idx = np.flatnonzero(
+                (codecs == codec) & (srs == sr) & nonnull
             )
-            out["bytes"] = [
-                None if a < 0 else bytes(datas[r])[
-                    int(a) * int(b): int(z) * int(b)]
-                for r, a, z, b in zip(rows, s, e, bps_arr)
-            ]
-            if has_dur:
-                new_dur = out["dur_ms"].copy()
-                live = np.flatnonzero(~passthrough)
-                # cast to the Series' own dtype: pandas deprecates
-                # (future-errors) int64 setitem into an int32 column
-                new_dur.iloc[live] = np.round(
-                    (e[live] - s[live]) * 1000.0
-                    / out["sr_hz"].to_numpy()[live]
-                ).astype(new_dur.dtype, copy=False)
-                out["dur_ms"] = new_dur
-            if "transcript" in out.columns:
-                out["transcript"] = out["transcript"].where(seg_idx == 0)
-            out["seg_idx"] = seg_idx.astype(np.int32)
-            out["seg_id"] = [
-                f"{cid}#s{int(k):03d}"
-                for cid, k in zip(out[id_col], seg_idx)
-            ]
-            yield out
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            gap = (sr * int(min_gap_ms)) // 1000
+            ci, s, e = batch_voiced_segments(
+                samples, lengths, threshold, gap
+            )
+            rows = idx[ci]
+            # all-silent clips: one empty segment each
+            silent = np.setdiff1d(idx, rows, assume_unique=False)
+            all_rows.append(np.concatenate([rows, silent]))
+            all_s.append(np.concatenate([s, np.zeros(len(silent), np.int64)]))
+            all_e.append(np.concatenate([e, np.zeros(len(silent), np.int64)]))
+        # NULL payloads: one passthrough segment each (s == e == -1
+        # marks "do not slice, do not rewrite duration")
+        nulls = np.flatnonzero(~nonnull)
+        all_rows.append(nulls)
+        all_s.append(np.full(len(nulls), -1, np.int64))
+        all_e.append(np.full(len(nulls), -1, np.int64))
+        rows = np.concatenate(all_rows) if all_rows else np.empty(0, np.int64)
+        s = np.concatenate(all_s) if all_s else np.empty(0, np.int64)
+        e = np.concatenate(all_e) if all_e else np.empty(0, np.int64)
+        order = np.lexsort((s, rows))
+        rows, s, e = rows[order], s[order], e[order]
+        # seg_idx = rank of the segment within its clip
+        if len(rows):
+            new_clip = np.empty(len(rows), dtype=bool)
+            new_clip[0] = True
+            new_clip[1:] = rows[1:] != rows[:-1]
+            first_pos = np.flatnonzero(new_clip)
+            seg_idx = (np.arange(len(rows))
+                       - np.repeat(first_pos, np.diff(
+                           np.append(first_pos, len(rows)))))
+        else:
+            seg_idx = np.empty(0, dtype=np.int64)
+        out = pdf.iloc[rows].reset_index(drop=True)
+        passthrough = s < 0
+        # one source of truth for bytes-per-sample: the same dict the
+        # codec validation above checked against
+        bps_arr = (
+            out["codec"].map(_BYTES_PER_SAMPLE).fillna(1)
+            .to_numpy().astype(np.int64)
+        )
+        out["bytes"] = [
+            None if a < 0 else bytes(datas[r])[
+                int(a) * int(b): int(z) * int(b)]
+            for r, a, z, b in zip(rows, s, e, bps_arr)
+        ]
+        if has_dur:
+            new_dur = out["dur_ms"].copy()
+            live = np.flatnonzero(~passthrough)
+            # cast to the Series' own dtype: pandas deprecates
+            # (future-errors) int64 setitem into an int32 column
+            new_dur.iloc[live] = np.round(
+                (e[live] - s[live]) * 1000.0
+                / out["sr_hz"].to_numpy()[live]
+            ).astype(new_dur.dtype, copy=False)
+            out["dur_ms"] = new_dur
+        if "transcript" in out.columns:
+            out["transcript"] = out["transcript"].where(seg_idx == 0)
+        out["seg_idx"] = seg_idx.astype(np.int32)
+        out["seg_id"] = [
+            f"{cid}#s{int(k):03d}"
+            for cid, k in zip(out[id_col], seg_idx)
+        ]
+        return out
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run, emits="seg_idx int, seg_id string", drop=()
+    )
 
 
 def time_masked_clips(
@@ -1442,46 +1395,37 @@ def with_snr_estimate(
     rows (undecodable, NULL sr) AND decodable clips shorter than one
     frame (nothing measurable) get snr_ok=false / 0.0 / 0 frames,
     never a stage kill.  ``bytes`` dropped unless ``keep_bytes``."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += ", snr_ok boolean, snr_est_db double, snr_n_frames int"
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_snr_estimate, decode_sr_groups
+        from ..kernel.audio import batch_snr_estimate
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            snrs = np.zeros(n, dtype=np.float64)
-            nfs = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                s, nf = batch_snr_estimate(
-                    samples, lengths, sr,
-                    frame_ms=frame_ms, noise_q=noise_q,
-                )
-                snrs[idx] = s
-                nfs[idx] = nf
-                # a decodable clip SHORTER than one frame measured
-                # nothing — snr_ok=false, or a downstream gate would
-                # read an authoritative-looking 0.0 dB
-                oks[idx] = nf > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["snr_ok"] = oks
-            pdf["snr_est_db"] = snrs
-            pdf["snr_n_frames"] = nfs
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        snrs = np.zeros(n, dtype=np.float64)
+        nfs = np.zeros(n, dtype=np.int64)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            s, nf = batch_snr_estimate(
+                samples, lengths, sr,
+                frame_ms=frame_ms, noise_q=noise_q,
+            )
+            snrs[idx] = s
+            nfs[idx] = nf
+            # a decodable clip SHORTER than one frame measured
+            # nothing — snr_ok=false, or a downstream gate would
+            # read an authoritative-looking 0.0 dB
+            oks[idx] = nf > 0
+        pdf["snr_ok"] = oks
+        pdf["snr_est_db"] = snrs
+        pdf["snr_n_frames"] = nfs
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="snr_ok boolean, snr_est_db double, snr_n_frames int",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def with_mfcc(
@@ -1502,62 +1446,52 @@ def with_mfcc(
     positive).  Same per-(codec, sr) batching as ``with_log_mel``;
     poison rows → mfcc_ok=false; ``bytes`` dropped unless
     ``keep_bytes``."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (", mfcc_ok boolean, mfcc array<array<float>>, "
-               "n_mfcc_frames int, mfcc_c0_mean double, "
-               "mfcc_c1_mean double")
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_mfcc
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            mats = [[] for _ in range(n)]
-            nfs = np.zeros(n, dtype=np.int64)
-            c0m = np.zeros(n, dtype=np.float64)
-            c1m = np.zeros(n, dtype=np.float64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                mf, nf = batch_mfcc(
-                    samples, lengths, sr, n_mfcc=n_mfcc,
-                    n_mels=n_mels, frame_ms=frame_ms, hop_ms=hop_ms,
-                )
-                off = 0
-                for k, i in enumerate(idx):
-                    rows = mf[off:off + int(nf[k])]
-                    off += int(nf[k])
-                    mats[i] = rows.tolist()
-                    nfs[i] = int(nf[k])
-                    if len(rows):
-                        m = rows.mean(axis=0)
-                        c0m[i] = float(m[0])
-                        if n_mfcc > 1:
-                            c1m[i] = float(m[1])
-                    # ok requires >=1 frame — same convention as with_log_mel
-                    # / with_snr_estimate: sub-frame clips must not publish a
-                    # legitimate-looking mfcc_c0_mean of 0.0.
-                    oks[i] = int(nf[k]) > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["mfcc_ok"] = oks
-            pdf["mfcc"] = mats
-            pdf["n_mfcc_frames"] = nfs
-            pdf["mfcc_c0_mean"] = c0m
-            pdf["mfcc_c1_mean"] = c1m
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        mats = [[] for _ in range(n)]
+        nfs = np.zeros(n, dtype=np.int64)
+        c0m = np.zeros(n, dtype=np.float64)
+        c1m = np.zeros(n, dtype=np.float64)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            mf, nf = batch_mfcc(
+                samples, lengths, sr, n_mfcc=n_mfcc,
+                n_mels=n_mels, frame_ms=frame_ms, hop_ms=hop_ms,
+            )
+            off = 0
+            for k, i in enumerate(idx):
+                rows = mf[off:off + int(nf[k])]
+                off += int(nf[k])
+                mats[i] = rows.tolist()
+                nfs[i] = int(nf[k])
+                if len(rows):
+                    m = rows.mean(axis=0)
+                    c0m[i] = float(m[0])
+                    if n_mfcc > 1:
+                        c1m[i] = float(m[1])
+                # ok requires >=1 frame — same convention as with_log_mel
+                # / with_snr_estimate: sub-frame clips must not publish a
+                # legitimate-looking mfcc_c0_mean of 0.0.
+                oks[i] = int(nf[k]) > 0
+        pdf["mfcc_ok"] = oks
+        pdf["mfcc"] = mats
+        pdf["n_mfcc_frames"] = nfs
+        pdf["mfcc_c0_mean"] = c0m
+        pdf["mfcc_c1_mean"] = c1m
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="mfcc_ok boolean, mfcc array<array<float>>, "
+              "n_mfcc_frames int, mfcc_c0_mean double, "
+              "mfcc_c1_mean double",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def with_bandwidth(
@@ -1589,48 +1523,38 @@ def with_bandwidth(
     Same shared batching as the other sr-dependent features
     (``decode_sr_groups``); poison rows and sub-frame clips → bw_ok =
     false, never flagged, never a stage kill."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (", bw_ok boolean, rolloff_hz double, bw_n_frames int, "
-               "upsampled_suspect boolean")
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_rolloff
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            rolls = np.zeros(n, dtype=np.float64)
-            nfs = np.zeros(n, dtype=np.int64)
-            sus = np.zeros(n, dtype=bool)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                r, nf = batch_rolloff(
-                    samples, lengths, sr, q=q,
-                    frame_ms=frame_ms, hop_ms=hop_ms,
-                )
-                rolls[idx] = r
-                nfs[idx] = nf
-                oks[idx] = nf > 0
-                sus[idx] = (nf > 0) & (r < suspect_frac * sr)
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["bw_ok"] = oks
-            pdf["rolloff_hz"] = rolls
-            pdf["bw_n_frames"] = nfs
-            pdf["upsampled_suspect"] = sus
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        rolls = np.zeros(n, dtype=np.float64)
+        nfs = np.zeros(n, dtype=np.int64)
+        sus = np.zeros(n, dtype=bool)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            r, nf = batch_rolloff(
+                samples, lengths, sr, q=q,
+                frame_ms=frame_ms, hop_ms=hop_ms,
+            )
+            rolls[idx] = r
+            nfs[idx] = nf
+            oks[idx] = nf > 0
+            sus[idx] = (nf > 0) & (r < suspect_frac * sr)
+        pdf["bw_ok"] = oks
+        pdf["rolloff_hz"] = rolls
+        pdf["bw_n_frames"] = nfs
+        pdf["upsampled_suspect"] = sus
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="bw_ok boolean, rolloff_hz double, bw_n_frames int, "
+              "upsampled_suspect boolean",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def dc_removed_clips(df: DataFrame, win_ms: int = 125) -> DataFrame:
@@ -1647,43 +1571,38 @@ def dc_removed_clips(df: DataFrame, win_ms: int = 125) -> DataFrame:
     (the window is sr-derived, hence the sr split), undecodable
     payloads raise loudly (transform, not a gate).  Output codec is
     pcm16, sample rate unchanged."""
-    schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_decode, batch_remove_dc
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            out_bytes = [None] * len(pdf)
-            for codec in sorted(set(codecs.tolist()), key=str):
-                cidx = np.flatnonzero(codecs == codec)
-                for sr in np.unique(srs[cidx]):
-                    if not np.isfinite(sr) or sr <= 0:
-                        bad = pdf["clip_id"].iloc[int(cidx[0])]
-                        raise ValueError(
-                            f"dc_removed_clips: NULL/invalid sr_hz on "
-                            f"clip {bad!r} — repair metadata upstream"
-                        )
-                    idx = cidx[srs[cidx] == sr]
-                    samples, lengths = batch_decode(
-                        [bytes(datas[i]) for i in idx], codec
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        out_bytes = [None] * len(pdf)
+        for codec in sorted(set(codecs.tolist()), key=str):
+            cidx = np.flatnonzero(codecs == codec)
+            for sr in np.unique(srs[cidx]):
+                if not np.isfinite(sr) or sr <= 0:
+                    bad = pdf["clip_id"].iloc[int(cidx[0])]
+                    raise ValueError(
+                        f"dc_removed_clips: NULL/invalid sr_hz on "
+                        f"clip {bad!r} — repair metadata upstream"
                     )
-                    cleaned = batch_remove_dc(samples, lengths, int(sr),
-                                              win_ms=win_ms)
-                    for k, payload in enumerate(
-                        _pcm16_payloads(cleaned, lengths)
-                    ):
-                        out_bytes[idx[k]] = payload
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["codec"] = "pcm16"
-            yield pdf
+                idx = cidx[srs[cidx] == sr]
+                samples, lengths = batch_decode(
+                    [bytes(datas[i]) for i in idx], codec
+                )
+                cleaned = batch_remove_dc(samples, lengths, int(sr),
+                                          win_ms=win_ms)
+                for i, payload in zip(idx, _pcm16_payloads(cleaned, lengths)):
+                    out_bytes[i] = payload
+        pdf["bytes"] = out_bytes
+        pdf["codec"] = "pcm16"
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 def speech_drop_reason_col(min_ratio: float = 0.3) -> Column:
@@ -1726,51 +1645,43 @@ def with_speech_activity(
     Scale: map-only (zero Exchange); the gate itself
     (``speech_drop_reason_col``) is a codegen'd projection on top, so
     at 10^12 rows the cost is exactly one decode of each clip."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += ", vad_ok boolean, speech_ratio double, n_speech_segments int"
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_voiced_segments, decode_sr_groups
+        from ..kernel.audio import batch_voiced_segments
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            ratios = np.zeros(n, dtype=np.float64)
-            nsegs = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                gap = max(1, int(sr * gap_ms / 1000))
-                clip_idx, seg_start, seg_end = batch_voiced_segments(
-                    samples, lengths, threshold=threshold, gap=gap
-                )
-                voiced = np.zeros(len(idx), dtype=np.int64)
-                segs = np.zeros(len(idx), dtype=np.int64)
-                np.add.at(voiced, clip_idx, seg_end - seg_start)
-                np.add.at(segs, clip_idx, 1)
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    r = np.where(lengths > 0, voiced / lengths, 0.0)
-                ratios[idx] = r
-                nsegs[idx] = segs
-                # an empty-but-decodable payload measured nothing;
-                # same convention as with_snr_estimate's n_frames gate
-                oks[idx] = lengths > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["vad_ok"] = oks
-            pdf["speech_ratio"] = ratios
-            pdf["n_speech_segments"] = nsegs.astype("int32")
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        ratios = np.zeros(n, dtype=np.float64)
+        nsegs = np.zeros(n, dtype=np.int64)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            gap = max(1, int(sr * gap_ms / 1000))
+            clip_idx, seg_start, seg_end = batch_voiced_segments(
+                samples, lengths, threshold=threshold, gap=gap
+            )
+            voiced = np.zeros(len(idx), dtype=np.int64)
+            segs = np.zeros(len(idx), dtype=np.int64)
+            np.add.at(voiced, clip_idx, seg_end - seg_start)
+            np.add.at(segs, clip_idx, 1)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                r = np.where(lengths > 0, voiced / lengths, 0.0)
+            ratios[idx] = r
+            nsegs[idx] = segs
+            # an empty-but-decodable payload measured nothing;
+            # same convention as with_snr_estimate's n_frames gate
+            oks[idx] = lengths > 0
+        pdf["vad_ok"] = oks
+        pdf["speech_ratio"] = ratios
+        pdf["n_speech_segments"] = nsegs.astype("int32")
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="vad_ok boolean, speech_ratio double, "
+              "n_speech_segments int",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def audio_window_hashes(df: DataFrame, win_ms: int = 250) -> DataFrame:
@@ -2079,51 +1990,39 @@ def with_tempo_fingerprint(df: DataFrame, n_frames: int = 32) -> DataFrame:
     ``fp_ok`` is false (fingerprint 0) for undecodable / sub-n_frames /
     fully-silent clips.  Scale shape: one decode boundary, then dedup
     happens on an 8-byte fingerprint groupBy — PCM never shuffles."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if f.name != "bytes"
-    )
-    schema += ", fp_ok boolean, tempo_fp long"
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import (
             SUPPORTED_CODECS,
             batch_decode,
             batch_envelope_bits,
-            pcm16_aligned_indices,
+            decodable_indices,
         )
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            fps = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            for codec in SUPPORTED_CODECS:
-                idx = np.flatnonzero(
-                    (codecs == codec)
-                    & np.array([d is not None for d in datas])
-                )
-                if codec == "pcm16":
-                    idx = pcm16_aligned_indices(datas, idx)
-                if not len(idx):
-                    continue
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
-                )
-                ok, bits = batch_envelope_bits(
-                    samples, lengths, n_frames=n_frames
-                )
-                oks[idx] = ok
-                fps[idx] = bits
-            pdf = pdf.drop(columns=["bytes"])
-            pdf["fp_ok"] = oks
-            pdf["tempo_fp"] = fps
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        fps = np.zeros(n, dtype=np.int64)
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        for codec in SUPPORTED_CODECS:
+            idx = decodable_indices(datas, codecs, codec)
+            if not len(idx):
+                continue
+            samples, lengths = batch_decode(
+                [bytes(datas[i]) for i in idx], codec
+            )
+            ok, bits = batch_envelope_bits(
+                samples, lengths, n_frames=n_frames
+            )
+            oks[idx] = ok
+            fps[idx] = bits
+        pdf["fp_ok"] = oks
+        pdf["tempo_fp"] = fps
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, emits="fp_ok boolean, tempo_fp long")
 
 
 def redact_audio_pii(
@@ -2159,14 +2058,8 @@ def redact_audio_pii(
     cfg = config or DEFAULT_CONFIG
     cfg.all_filters()  # plan-time label validation
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
-    schema += ", scrubbed string, n_redacted_spans int, redacted_ms double"
-
-    def run(iterator):
+    def run(pdf):
         import numpy as np
-        import pandas as pd
 
         from ..kernel.audio import (
             SEEKABLE_CODECS,
@@ -2184,63 +2077,66 @@ def redact_audio_pii(
         }
         assert tuple(fill) == tuple(bps)
 
-        for pdf in iterator:
-            n = len(pdf)
-            new_bytes = pdf["bytes"].tolist()
-            scrubbed = [None] * n
-            n_spans = np.zeros(n, dtype=np.int32)
-            red_ms = np.zeros(n, dtype=np.float64)
-            codecs = pdf["codec"].tolist()
-            srs = pdf["sr_hz"].tolist()
-            texts = pdf[text_col].tolist()
-            for i in range(n):
-                t = texts[i]
-                if t is None:
-                    continue
-                mapping = scan_text(t, None, cfg)
-                scrubbed[i] = substitute_text(t, mapping)
-                if not mapping:
-                    continue
-                data, codec, sr = new_bytes[i], codecs[i], srs[i]
-                # SEEKABLE only: silence is written as a per-sample byte
-                # splice, which a stateful codec (adpcm) cannot survive —
-                # such rows pass through with the scrubbed transcript but
-                # n_redacted_spans = 0 (transcode to a fixed-width codec
-                # upstream to redact audio too)
-                if (
-                    data is None
-                    or codec not in SEEKABLE_CODECS
-                    or sr is None
-                    or sr != sr  # NULL sr_hz arrives from Arrow as NaN,
-                    # which passes both the None and <= 0 tests and
-                    # would pour NaN into red_ms below
-                    or sr <= 0
-                ):
-                    continue
-                w = bps[codec]
-                n_samp = len(data) // w
-                if n_samp == 0:
-                    continue
-                # reuse the mapping already scanned above — the regex
-                # scan dominates this stage's cost, never pay it twice
-                spans = pii_char_spans(t, None, cfg, mapping=mapping)
-                buf = bytearray(data)
-                tn = len(t)
-                for a, b, _label in spans:
-                    s0 = (a * n_samp) // tn
-                    s1 = -(-(b * n_samp) // tn)  # ceil
-                    buf[s0 * w: s1 * w] = fill[codec] * (s1 - s0)
-                    red_ms[i] += (s1 - s0) * 1000.0 / sr
-                n_spans[i] = len(spans)
-                new_bytes[i] = bytes(buf)
-            pdf = pdf.copy()
-            pdf["bytes"] = new_bytes
-            pdf["scrubbed"] = scrubbed
-            pdf["n_redacted_spans"] = n_spans
-            pdf["redacted_ms"] = red_ms
-            yield pdf
+        n = len(pdf)
+        new_bytes = pdf["bytes"].tolist()
+        scrubbed = [None] * n
+        n_spans = np.zeros(n, dtype=np.int32)
+        red_ms = np.zeros(n, dtype=np.float64)
+        codecs = pdf["codec"].tolist()
+        srs = pdf["sr_hz"].tolist()
+        texts = pdf[text_col].tolist()
+        for i in range(n):
+            t = texts[i]
+            if t is None:
+                continue
+            mapping = scan_text(t, None, cfg)
+            scrubbed[i] = substitute_text(t, mapping)
+            if not mapping:
+                continue
+            data, codec, sr = new_bytes[i], codecs[i], srs[i]
+            # SEEKABLE only: silence is written as a per-sample byte
+            # splice, which a stateful codec (adpcm) cannot survive —
+            # such rows pass through with the scrubbed transcript but
+            # n_redacted_spans = 0 (transcode to a fixed-width codec
+            # upstream to redact audio too)
+            if (
+                data is None
+                or codec not in SEEKABLE_CODECS
+                or sr is None
+                or sr != sr  # NULL sr_hz arrives from Arrow as NaN,
+                # which passes both the None and <= 0 tests and
+                # would pour NaN into red_ms below
+                or sr <= 0
+            ):
+                continue
+            w = bps[codec]
+            n_samp = len(data) // w
+            if n_samp == 0:
+                continue
+            # reuse the mapping already scanned above — the regex
+            # scan dominates this stage's cost, never pay it twice
+            spans = pii_char_spans(t, None, cfg, mapping=mapping)
+            buf = bytearray(data)
+            tn = len(t)
+            for a, b, _label in spans:
+                s0 = (a * n_samp) // tn
+                s1 = -(-(b * n_samp) // tn)  # ceil
+                buf[s0 * w: s1 * w] = fill[codec] * (s1 - s0)
+                red_ms[i] += (s1 - s0) * 1000.0 / sr
+            n_spans[i] = len(spans)
+            new_bytes[i] = bytes(buf)
+        pdf["bytes"] = new_bytes
+        pdf["scrubbed"] = scrubbed
+        pdf["n_redacted_spans"] = n_spans
+        pdf["redacted_ms"] = red_ms
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="scrubbed string, n_redacted_spans int, "
+              "redacted_ms double",
+        drop=(),
+    )
 
 
 def audio_cdc_segments(
@@ -2264,7 +2160,7 @@ def audio_cdc_segments(
             SUPPORTED_CODECS,
             batch_cdc_segments,
             batch_decode,
-            pcm16_aligned_indices,
+            decodable_indices,
         )
 
         for pdf in iterator:
@@ -2273,12 +2169,7 @@ def audio_cdc_segments(
             codecs = pdf["codec"].to_numpy()
             clip_ids = pdf["clip_id"].to_numpy()
             for codec in SUPPORTED_CODECS:
-                idx = np.flatnonzero(
-                    (codecs == codec)
-                    & np.array([d is not None for d in datas])
-                )
-                if codec == "pcm16":
-                    idx = pcm16_aligned_indices(datas, idx)
+                idx = decodable_indices(datas, codecs, codec)
                 if not len(idx):
                     continue
                 samples, lengths = batch_decode(
@@ -2376,53 +2267,47 @@ def with_channel_stats(
 
     Reference parity: top_secret is text-only; this is part of the
     audio twin the north rule adds (BASELINE.json north_star)."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (
-        ", chan_ok boolean, talk_ms_ch0 bigint, talk_ms_ch1 bigint"
-        ", overtalk_ms bigint"
-    )
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_channel_blocks, decode_sr_nch_groups
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            talk0 = np.zeros(n, dtype=np.int64)
-            talk1 = np.zeros(n, dtype=np.int64)
-            over = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            nchs = pdf["n_channels"].to_numpy(
-                dtype="float64", na_value=np.nan
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        talk0 = np.zeros(n, dtype=np.int64)
+        talk1 = np.zeros(n, dtype=np.int64)
+        over = np.zeros(n, dtype=np.int64)
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        nchs = pdf["n_channels"].to_numpy(
+            dtype="float64", na_value=np.nan
+        )
+        for idx, samples, lengths, sr, nch, _codec in (
+            decode_sr_nch_groups(datas, codecs, srs, nchs)
+        ):
+            vc, ot, nb = batch_channel_blocks(
+                samples, lengths, nch, sr,
+                threshold=threshold, block_ms=block_ms,
             )
-            for idx, samples, lengths, sr, nch, _codec in (
-                decode_sr_nch_groups(datas, codecs, srs, nchs)
-            ):
-                vc, ot, nb = batch_channel_blocks(
-                    samples, lengths, nch, sr,
-                    threshold=threshold, block_ms=block_ms,
-                )
-                oks[idx] = nb > 0
-                talk0[idx] = vc[:, 0] * block_ms
-                if nch >= 2:
-                    talk1[idx] = vc[:, 1] * block_ms
-                over[idx] = ot * block_ms
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["chan_ok"] = oks
-            pdf["talk_ms_ch0"] = talk0
-            pdf["talk_ms_ch1"] = talk1
-            pdf["overtalk_ms"] = over
-            yield pdf
+            oks[idx] = nb > 0
+            talk0[idx] = vc[:, 0] * block_ms
+            if nch >= 2:
+                talk1[idx] = vc[:, 1] * block_ms
+            over[idx] = ot * block_ms
+        pdf["chan_ok"] = oks
+        pdf["talk_ms_ch0"] = talk0
+        pdf["talk_ms_ch1"] = talk1
+        pdf["overtalk_ms"] = over
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="chan_ok boolean, talk_ms_ch0 bigint, "
+              "talk_ms_ch1 bigint, overtalk_ms bigint",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def downmix_to_mono(df: DataFrame) -> DataFrame:
@@ -2442,47 +2327,40 @@ def downmix_to_mono(df: DataFrame) -> DataFrame:
     Scale: map-only, zero Exchange, zero per-clip numpy calls; the
     downmix is one mean over a ``(frames, nch)`` view of the whole
     Arrow batch."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
         import pandas as pd
 
         from ..kernel.audio import batch_downmix, decode_sr_nch_groups
 
-        for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            out_bytes = list(datas)
-            nch_out = pdf["n_channels"].to_numpy(
-                dtype="float64", na_value=np.nan
-            ).copy()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            nchs = pdf["n_channels"].to_numpy(
-                dtype="float64", na_value=np.nan
-            )
-            for idx, samples, lengths, sr, nch, codec in (
-                decode_sr_nch_groups(datas, codecs, srs, nchs)
-            ):
-                mono, mlen = batch_downmix(samples, lengths, nch)
-                # per-codec re-encode + per-clip slice in one helper —
-                # handles the stateful adpcm case (fresh state per clip)
-                for k, payload in enumerate(
-                    _encoded_payloads(mono, mlen, codec)
-                ):
-                    out_bytes[idx[k]] = payload
-                nch_out[idx] = 1
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["n_channels"] = pd.array(
-                [None if not np.isfinite(v) else int(v) for v in nch_out],
-                dtype="Int32",
-            )
-            yield pdf
+        datas = pdf["bytes"].tolist()
+        out_bytes = list(datas)
+        nch_out = pdf["n_channels"].to_numpy(
+            dtype="float64", na_value=np.nan
+        ).copy()
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        nchs = pdf["n_channels"].to_numpy(
+            dtype="float64", na_value=np.nan
+        )
+        for idx, samples, lengths, sr, nch, codec in (
+            decode_sr_nch_groups(datas, codecs, srs, nchs)
+        ):
+            mono, mlen = batch_downmix(samples, lengths, nch)
+            # per-codec re-encode + per-clip slice in one helper —
+            # handles the stateful adpcm case (fresh state per clip)
+            for i, payload in zip(idx, _encoded_payloads(mono, mlen, codec)):
+                out_bytes[i] = payload
+            nch_out[idx] = 1
+        pdf["bytes"] = out_bytes
+        pdf["n_channels"] = pd.array(
+            [None if not np.isfinite(v) else int(v) for v in nch_out],
+            dtype="Int32",
+        )
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(df, run, drop=())
 
 
 # --- WAV/RIFF container handling (pure Catalyst) ------------------------------
@@ -2498,8 +2376,13 @@ def _le_uint(col, off: int, width: int):
     return F.conv(F.concat(*reversed(pairs)), 16, 10).cast("bigint")
 
 
-#: WAVE fmt codes this engine can decode (fmt 1 must also be 16-bit).
-_WAV_FMT_TO_CODEC = {1: "pcm16", 6: "alaw", 7: "ulaw"}
+#: staged temporaries of ``with_wav_header``; an input column of the
+#: same name would be overwritten and then dropped, so it is refused
+_WAV_TEMPS = (
+    "_w_blen", "_w_fmt_code", "_w_fmt_size", "_w_nch", "_w_sr",
+    "_w_bits", "_w_c1_off", "_w_c1_id", "_w_c1_size", "_w_c2_off",
+    "_w_c2_id", "_w_c2_size", "_w_data_off", "_w_data_len", "_w_issue",
+)
 
 
 def with_wav_header(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
@@ -2530,7 +2413,16 @@ def with_wav_header(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
 
     Reference parity: the reference has no container handling (audio is
     the graft axis); this is the ingest-side twin of q88's metadata
-    audit, one level deeper — the file format itself."""
+    audit, one level deeper — the file format itself.
+
+    Raises ``ValueError`` at plan time when an input column shares a
+    name with one of the ``_w_*`` staging temporaries."""
+    clash = sorted(set(df.columns) & set(_WAV_TEMPS))
+    if clash:
+        raise ValueError(
+            f"with_wav_header: input columns {clash} collide with its "
+            "_w_* staging temporaries; rename them first"
+        )
     b = F.col(bytes_col)
     # chunk walk honors the DECLARED fmt size (+ RIFF odd-size pad).
     # CLAMP every derived offset before the int cast: a malformed/lying
@@ -2640,12 +2532,7 @@ def with_wav_header(df: DataFrame, bytes_col: str = "bytes") -> DataFrame:
         .withColumn("bits_hdr", F.when(parsed, F.col("_w_bits")).cast("int"))
         .withColumn("data_off", F.when(ok, data_off))
         .withColumn("data_len", F.when(ok, data_len))
-        .drop(
-            "_w_blen", "_w_fmt_code", "_w_fmt_size", "_w_nch", "_w_sr",
-            "_w_bits", "_w_c1_off", "_w_c1_id", "_w_c1_size", "_w_c2_off",
-            "_w_c2_id", "_w_c2_size", "_w_data_off", "_w_data_len",
-            "_w_issue",
-        )
+        .drop(*_WAV_TEMPS)
     )
 
 
@@ -2715,42 +2602,38 @@ def declipped_clips(df: DataFrame, level: float = 0.95) -> DataFrame:
     no per-clip or per-run Python.  Poison rows (undecodable codec /
     NULL payload / bad sr) pass through byte-for-byte with zeroed
     counts, same convention as :func:`downmix_to_mono`."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
-    schema += ", n_clipped bigint, n_repaired bigint"
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_declip, decode_sr_groups
 
-        for pdf in iterator:
-            n = len(pdf)
-            datas = pdf["bytes"].tolist()
-            out_bytes = list(datas)
-            ncs = np.zeros(n, dtype=np.int64)
-            nrs = np.zeros(n, dtype=np.int64)
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, _sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                codec = str(codecs[idx[0]])
-                rep, nc, nr = batch_declip(samples, lengths, level=level)
-                for k, payload in enumerate(
-                    _encoded_payloads(rep, lengths, codec)
-                ):
-                    out_bytes[idx[k]] = payload
-                ncs[idx] = nc
-                nrs[idx] = nr
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["n_clipped"] = ncs
-            pdf["n_repaired"] = nrs
-            yield pdf
+        n = len(pdf)
+        datas = pdf["bytes"].tolist()
+        out_bytes = list(datas)
+        ncs = np.zeros(n, dtype=np.int64)
+        nrs = np.zeros(n, dtype=np.int64)
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        for idx, samples, lengths, _sr in decode_sr_groups(
+            datas, codecs, srs
+        ):
+            codec = str(codecs[idx[0]])
+            rep, nc, nr = batch_declip(samples, lengths, level=level)
+            for i, payload in zip(idx, _encoded_payloads(rep, lengths, codec)):
+                out_bytes[i] = payload
+            ncs[idx] = nc
+            nrs[idx] = nr
+        pdf["bytes"] = out_bytes
+        pdf["n_clipped"] = ncs
+        pdf["n_repaired"] = nrs
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="n_clipped bigint, n_repaired bigint",
+        drop=(),
+    )
 
 
 def pack_audio_examples(
@@ -2958,46 +2841,42 @@ def denoised_clips(
     per-clip or per-frame Python.  Poison rows pass through
     byte-for-byte (``denoise_ok`` false), sub-frame clips pass through
     with ``denoise_ok`` true and zero frames."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-    )
-    schema += ", denoise_ok boolean, n_frames_denoised int"
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_denoise
 
-        for pdf in iterator:
-            n = len(pdf)
-            datas = pdf["bytes"].tolist()
-            out_bytes = list(datas)
-            oks = np.zeros(n, dtype=bool)
-            nfs = np.zeros(n, dtype=np.int64)
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                codec = str(codecs[idx[0]])
-                den, nf = batch_denoise(
-                    samples, lengths, sr,
-                    alpha=alpha, beta=beta, quiet_frac=quiet_frac,
-                )
-                for k, payload in enumerate(
-                    _encoded_payloads(den, lengths, codec)
-                ):
-                    out_bytes[idx[k]] = payload
-                oks[idx] = True
-                nfs[idx] = nf
-            pdf = pdf.copy()
-            pdf["bytes"] = out_bytes
-            pdf["denoise_ok"] = oks
-            pdf["n_frames_denoised"] = nfs.astype("int32")
-            yield pdf
+        n = len(pdf)
+        datas = pdf["bytes"].tolist()
+        out_bytes = list(datas)
+        oks = np.zeros(n, dtype=bool)
+        nfs = np.zeros(n, dtype=np.int64)
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        for idx, samples, lengths, sr in decode_sr_groups(
+            datas, codecs, srs
+        ):
+            codec = str(codecs[idx[0]])
+            den, nf = batch_denoise(
+                samples, lengths, sr,
+                alpha=alpha, beta=beta, quiet_frac=quiet_frac,
+            )
+            for i, payload in zip(idx, _encoded_payloads(den, lengths, codec)):
+                out_bytes[i] = payload
+            oks[idx] = True
+            nfs[idx] = nf
+        pdf["bytes"] = out_bytes
+        pdf["denoise_ok"] = oks
+        pdf["n_frames_denoised"] = nfs.astype("int32")
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="denoise_ok boolean, n_frames_denoised int",
+        drop=(),
+    )
 
 
 def dedup_audio_against_corpus(
@@ -3052,43 +2931,39 @@ def with_speaker_turns(
     Same scaffold and scale posture as :func:`with_channel_stats`:
     map-only, one decode + one shared block-VAD pass per (codec, sr,
     nch) Arrow group, poison rows read ``turn_ok = false``."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += ", turn_ok boolean, n_turns bigint"
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_speaker_turns, decode_sr_nch_groups
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            turns = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            nchs = pdf["n_channels"].to_numpy(
-                dtype="float64", na_value=np.nan
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        turns = np.zeros(n, dtype=np.int64)
+        datas = pdf["bytes"].tolist()
+        codecs = pdf["codec"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        nchs = pdf["n_channels"].to_numpy(
+            dtype="float64", na_value=np.nan
+        )
+        for idx, samples, lengths, sr, nch, _codec in (
+            decode_sr_nch_groups(datas, codecs, srs, nchs)
+        ):
+            t, nb = batch_speaker_turns(
+                samples, lengths, nch, sr,
+                threshold=threshold, block_ms=block_ms,
             )
-            for idx, samples, lengths, sr, nch, _codec in (
-                decode_sr_nch_groups(datas, codecs, srs, nchs)
-            ):
-                t, nb = batch_speaker_turns(
-                    samples, lengths, nch, sr,
-                    threshold=threshold, block_ms=block_ms,
-                )
-                oks[idx] = nb > 0
-                turns[idx] = t
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["turn_ok"] = oks
-            pdf["n_turns"] = turns
-            yield pdf
+            oks[idx] = nb > 0
+            turns[idx] = t
+        pdf["turn_ok"] = oks
+        pdf["n_turns"] = turns
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="turn_ok boolean, n_turns bigint",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def with_pitch(
@@ -3116,50 +2991,39 @@ def with_pitch(
     shorter than one frame (sub-frame clips leave f0 at an
     authoritative-looking 0.0 — same convention as mel/snr/bandwidth).
     ``bytes`` is dropped unless ``keep_bytes``."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (", pitch_ok boolean, f0_hz double, voiced_ratio double, "
-               "n_pitch_frames int")
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_pitch
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            f0s = np.zeros(n, dtype=np.float64)
-            vrs = np.zeros(n, dtype=np.float64)
-            nfs = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                f0, vr, nf = batch_pitch(
-                    samples, lengths, sr, frame_ms=frame_ms,
-                    hop_ms=hop_ms, f_min=f_min, f_max=f_max,
-                    voiced_threshold=voiced_threshold,
-                )
-                for k, i in enumerate(idx):
-                    f0s[i] = float(f0[k])
-                    vrs[i] = float(vr[k])
-                    nfs[i] = int(nf[k])
-                    oks[i] = int(nf[k]) > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["pitch_ok"] = oks
-            pdf["f0_hz"] = f0s
-            pdf["voiced_ratio"] = vrs
-            pdf["n_pitch_frames"] = nfs
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        f0s = np.zeros(n, dtype=np.float64)
+        vrs = np.zeros(n, dtype=np.float64)
+        nfs = np.zeros(n, dtype=np.int64)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            f0, vr, nf = batch_pitch(
+                samples, lengths, sr, frame_ms=frame_ms,
+                hop_ms=hop_ms, f_min=f_min, f_max=f_max,
+                voiced_threshold=voiced_threshold,
+            )
+            f0s[idx] = f0
+            vrs[idx] = vr
+            nfs[idx] = nf
+            oks[idx] = nf > 0
+        pdf["pitch_ok"] = oks
+        pdf["f0_hz"] = f0s
+        pdf["voiced_ratio"] = vrs
+        pdf["n_pitch_frames"] = nfs
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="pitch_ok boolean, f0_hz double, voiced_ratio double, "
+              "n_pitch_frames int",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def with_reverb(
@@ -3186,49 +3050,38 @@ def with_reverb(
     tones, and silence legitimately read n_decay_pairs < min_pairs —
     unmeasurable is NOT dry, so the gate column only fires on clips
     that measured."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (", reverb_ok boolean, rt60_s double, n_decay_pairs int, "
-               "n_reverb_frames int")
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_reverb
 
-        for pdf in iterator:
-            n = len(pdf)
-            oks = np.zeros(n, dtype=bool)
-            rts = np.zeros(n, dtype=np.float64)
-            nps = np.zeros(n, dtype=np.int64)
-            nfs = np.zeros(n, dtype=np.int64)
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                rt, np_, nf = batch_reverb(
-                    samples, lengths, sr, frame_ms=frame_ms,
-                    min_run=min_run, min_pairs=min_pairs, drop_db=drop_db,
-                )
-                for k, i in enumerate(idx):
-                    rts[i] = float(rt[k])
-                    nps[i] = int(np_[k])
-                    nfs[i] = int(nf[k])
-                    oks[i] = int(nf[k]) > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            pdf["reverb_ok"] = oks
-            pdf["rt60_s"] = rts
-            pdf["n_decay_pairs"] = nps
-            pdf["n_reverb_frames"] = nfs
-            yield pdf
+        n = len(pdf)
+        oks = np.zeros(n, dtype=bool)
+        rts = np.zeros(n, dtype=np.float64)
+        nps = np.zeros(n, dtype=np.int64)
+        nfs = np.zeros(n, dtype=np.int64)
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            rt, np_, nf = batch_reverb(
+                samples, lengths, sr, frame_ms=frame_ms,
+                min_run=min_run, min_pairs=min_pairs, drop_db=drop_db,
+            )
+            rts[idx] = rt
+            nps[idx] = np_
+            nfs[idx] = nf
+            oks[idx] = nf > 0
+        pdf["reverb_ok"] = oks
+        pdf["rt60_s"] = rts
+        pdf["n_decay_pairs"] = nps
+        pdf["n_reverb_frames"] = nfs
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="reverb_ok boolean, rt60_s double, n_decay_pairs int, "
+              "n_reverb_frames int",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def reverb_drop_reason_col(
@@ -3264,67 +3117,55 @@ def with_voice_health(
     snr_ok/snr_est_db/snr_n_frames.  Gate columns
     (``reverb_drop_reason_col`` etc.) compose over the output
     unchanged."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (
-        ", pitch_ok boolean, f0_hz double, voiced_ratio double,"
-        " n_pitch_frames int"
-        ", reverb_ok boolean, rt60_s double, n_decay_pairs int,"
-        " n_reverb_frames int"
-        ", snr_ok boolean, snr_est_db double, snr_n_frames int"
-    )
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_snr_estimate, decode_sr_groups
+        from ..kernel.audio import batch_snr_estimate
         from ..kernel.spectral import batch_pitch, batch_reverb
 
-        for pdf in iterator:
-            n = len(pdf)
-            cols = {
-                "pitch_ok": np.zeros(n, dtype=bool),
-                "f0_hz": np.zeros(n, dtype=np.float64),
-                "voiced_ratio": np.zeros(n, dtype=np.float64),
-                "n_pitch_frames": np.zeros(n, dtype=np.int64),
-                "reverb_ok": np.zeros(n, dtype=bool),
-                "rt60_s": np.zeros(n, dtype=np.float64),
-                "n_decay_pairs": np.zeros(n, dtype=np.int64),
-                "n_reverb_frames": np.zeros(n, dtype=np.int64),
-                "snr_ok": np.zeros(n, dtype=bool),
-                "snr_est_db": np.zeros(n, dtype=np.float64),
-                "snr_n_frames": np.zeros(n, dtype=np.int64),
-            }
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
-                f0, vr, pnf = batch_pitch(samples, lengths, sr)
-                rt, dp, rnf = batch_reverb(samples, lengths, sr)
-                snr, snf = batch_snr_estimate(samples, lengths, sr)
-                ii = np.asarray(idx, dtype=np.int64)
-                cols["f0_hz"][ii] = f0
-                cols["voiced_ratio"][ii] = vr
-                cols["n_pitch_frames"][ii] = pnf
-                cols["pitch_ok"][ii] = pnf > 0
-                cols["rt60_s"][ii] = rt
-                cols["n_decay_pairs"][ii] = dp
-                cols["n_reverb_frames"][ii] = rnf
-                cols["reverb_ok"][ii] = rnf > 0
-                cols["snr_est_db"][ii] = snr
-                cols["snr_n_frames"][ii] = snf
-                cols["snr_ok"][ii] = snf > 0
-            if not keep_bytes:
-                pdf = pdf.drop(columns=["bytes"])
-            for k, v in cols.items():
-                pdf[k] = v
-            yield pdf
+        n = len(pdf)
+        cols = {
+            "pitch_ok": np.zeros(n, dtype=bool),
+            "f0_hz": np.zeros(n, dtype=np.float64),
+            "voiced_ratio": np.zeros(n, dtype=np.float64),
+            "n_pitch_frames": np.zeros(n, dtype=np.int64),
+            "reverb_ok": np.zeros(n, dtype=bool),
+            "rt60_s": np.zeros(n, dtype=np.float64),
+            "n_decay_pairs": np.zeros(n, dtype=np.int64),
+            "n_reverb_frames": np.zeros(n, dtype=np.int64),
+            "snr_ok": np.zeros(n, dtype=bool),
+            "snr_est_db": np.zeros(n, dtype=np.float64),
+            "snr_n_frames": np.zeros(n, dtype=np.int64),
+        }
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            f0, vr, pnf = batch_pitch(samples, lengths, sr)
+            rt, dp, rnf = batch_reverb(samples, lengths, sr)
+            snr, snf = batch_snr_estimate(samples, lengths, sr)
+            ii = np.asarray(idx, dtype=np.int64)
+            cols["f0_hz"][ii] = f0
+            cols["voiced_ratio"][ii] = vr
+            cols["n_pitch_frames"][ii] = pnf
+            cols["pitch_ok"][ii] = pnf > 0
+            cols["rt60_s"][ii] = rt
+            cols["n_decay_pairs"][ii] = dp
+            cols["n_reverb_frames"][ii] = rnf
+            cols["reverb_ok"][ii] = rnf > 0
+            cols["snr_est_db"][ii] = snr
+            cols["snr_n_frames"][ii] = snf
+            cols["snr_ok"][ii] = snf > 0
+        for k, v in cols.items():
+            pdf[k] = v
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="pitch_ok boolean, f0_hz double, voiced_ratio double, "
+              "n_pitch_frames int, reverb_ok boolean, rt60_s double, "
+              "n_decay_pairs int, n_reverb_frames int, "
+              "snr_ok boolean, snr_est_db double, snr_n_frames int",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 _CODEC_FAMILY = {"pcm16": "pcm16", "ulaw": "companded", "alaw": "companded"}
@@ -3355,46 +3196,40 @@ def with_codec_verify(
     own those) and payloads too smooth/noisy to discriminate read
     verified=false, mismatch=false: unverifiable is never asserted.
     ``bytes`` kept by default — this operator runs BEFORE decode."""
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in df.schema
-        if keep_bytes or f.name != "bytes"
-    )
-    schema += (", codec_family_detected string, codec_verified boolean, "
-               "codec_mismatch boolean")
 
-    def run(iterator):
+    def run(pdf):
         import numpy as np
 
         from ..kernel.audio import batch_codec_family
 
-        for pdf in iterator:
-            n = len(pdf)
-            rho_pcm, rho_comp = batch_codec_family(
-                pdf["bytes"].tolist(), max_bytes=max_bytes
-            )
-            win_pcm = rho_pcm >= rho_comp
-            win_rho = np.where(win_pcm, rho_pcm, rho_comp)
-            lose_rho = np.where(win_pcm, rho_comp, rho_pcm)
-            verified = (win_rho >= min_rho) & (
-                win_rho - lose_rho >= min_margin
-            )
-            detected = np.where(win_pcm, "pcm16", "companded")
-            mapped = pdf["codec"].map(_CODEC_FAMILY)
-            # .map(dict) yields NaN (not None) for unmapped codecs —
-            # notna() is the only correct known-family test here
-            known = mapped.notna().to_numpy(dtype=bool)
-            declared = mapped.to_numpy(dtype=object)
-            verified = verified & known
-            mismatch = verified & (detected != declared.astype(str))
-            out = pdf if keep_bytes else pdf.drop(columns=["bytes"])
-            out["codec_family_detected"] = np.where(
-                verified, detected, None
-            )
-            out["codec_verified"] = verified
-            out["codec_mismatch"] = mismatch
-            yield out
+        rho_pcm, rho_comp = batch_codec_family(
+            pdf["bytes"].tolist(), max_bytes=max_bytes
+        )
+        win_pcm = rho_pcm >= rho_comp
+        win_rho = np.where(win_pcm, rho_pcm, rho_comp)
+        lose_rho = np.where(win_pcm, rho_comp, rho_pcm)
+        verified = (win_rho >= min_rho) & (
+            win_rho - lose_rho >= min_margin
+        )
+        detected = np.where(win_pcm, "pcm16", "companded")
+        mapped = pdf["codec"].map(_CODEC_FAMILY)
+        # .map(dict) yields NaN (not None) for unmapped codecs —
+        # notna() is the only correct known-family test here
+        known = mapped.notna().to_numpy(dtype=bool)
+        declared = mapped.to_numpy(dtype=object)
+        verified = verified & known
+        mismatch = verified & (detected != declared.astype(str))
+        pdf["codec_family_detected"] = np.where(verified, detected, None)
+        pdf["codec_verified"] = verified
+        pdf["codec_mismatch"] = mismatch
+        return pdf
 
-    return df.mapInPandas(run, schema=schema)
+    return map_batches(
+        df, run,
+        emits="codec_family_detected string, codec_verified boolean, "
+              "codec_mismatch boolean",
+        drop=() if keep_bytes else ("bytes",),
+    )
 
 
 def codec_mismatch_reason_col() -> Column:

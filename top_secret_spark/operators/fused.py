@@ -1,22 +1,24 @@
 """Fused single-pass pipeline stage: ONE Arrow crossing per batch.
 
-The modular pipeline (quality.py + features.py + scrub.py) crosses the
-JVM↔Python boundary twice and computes signals JVM-side.  That layout is
-the right default when the heavy work is Catalyst-expressible — but this
-pipeline's gating stages (langid, perplexity, scrub) are irreducibly
-Python/numpy, so every extra stage just adds an Arrow round-trip of the
-full transcript column.  The fused stage computes everything in one
-crossing, using the SAME kernel functions the oracles test, and scrubs
-only rows that pass keep/drop:
+The modular operators (quality.py + features.py + scrub.py), composed,
+cross the JVM↔Python boundary twice and compute signals JVM-side.  That
+layout is the right default when the heavy work is Catalyst-expressible
+— but this pipeline's gating stages (langid, perplexity, scrub) are
+irreducibly Python/numpy, so every extra stage just adds an Arrow
+round-trip of the full transcript column.  The fused stage computes
+everything in one crossing, using the SAME kernel functions the oracles
+test, and scrubs only rows that pass keep/drop:
 
     transcript → (signals, lang, lang_conf, ppl, keep, drop_reason,
                   scrubbed, mapping)
 
-Semantics are identical to the modular path by construction (both call
-the kernel; the kernel is pinned by the golden corpus + DuckDB oracles).
-At cluster scale the fused stage halves Python-boundary traffic and
-leaves the plan scan → one ArrowEvalPython → project, still fully
-pushdown/pruning-friendly on the input side.
+Semantics are identical to the composed modular operators by
+construction (both call the kernel; the kernel is pinned by the golden
+corpus + DuckDB oracles).  ``run_pipeline`` runs only this stage;
+tests/test_pipeline.py assembles the modular composition as its
+reference.  At cluster scale the fused stage halves Python-boundary
+traffic and leaves the plan scan → one ArrowEvalPython → project, still
+fully pushdown/pruning-friendly on the input side.
 """
 
 from __future__ import annotations
@@ -227,7 +229,7 @@ def run_pipeline_fused_multimodal(
     two-stage layout pays a second worker round-trip plus an Arrow
     ser/deser of every non-audio column per batch).  Calls EXACTLY the
     same batch cores as the two-crossing path
-    (``append_audio_feature_columns``, ``fused_text_frame``), so
+    (``set_audio_feature_columns``, ``fused_text_frame``), so
     semantics are identical by construction — equivalence pytest-gated.
 
     The plan stays scan → one MapInPandas → project: pushdown/pruning
@@ -236,27 +238,22 @@ def run_pipeline_fused_multimodal(
     columns).  ``bytes`` is consumed and not emitted, as in
     ``with_audio_features``."""
     scrub_config.all_filters()  # plan-time label validation (op 9)
-    from .audio import _FEATURES_SCHEMA_SUFFIX, append_audio_feature_columns
+    from .audio import _FEATURES_SCHEMA_SUFFIX, set_audio_feature_columns
+    from .seam import map_batches
 
-    schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in clips.schema
-        if f.name != "bytes"
+    def run(pdf):
+        out = set_audio_feature_columns(pdf)
+        text = fused_text_frame(
+            out[text_col], None, scrub_config, thresholds,
+            scrub_dropped, counters,
+        )
+        for name in FUSED_FIELDS:
+            # .values sidesteps index alignment: both frames are
+            # positionally parallel over the same Arrow batch
+            out[name] = text[name].values
+        return out
+
+    emits = T.StructType(
+        T.DataType.fromDDL(_FEATURES_SCHEMA_SUFFIX).fields + FUSED_TYPE.fields
     )
-    schema += ", " + _FEATURES_SCHEMA_SUFFIX + ", " + ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in FUSED_TYPE.fields
-    )
-
-    def run(iterator):
-        for pdf in iterator:
-            out = append_audio_feature_columns(pdf)
-            text = fused_text_frame(
-                out[text_col], None, scrub_config, thresholds,
-                scrub_dropped, counters,
-            )
-            for name in FUSED_FIELDS:
-                # .values sidesteps index alignment: both frames are
-                # positionally parallel over the same Arrow batch
-                out[name] = text[name].values
-            yield out
-
-    return clips.mapInPandas(run, schema=schema)
+    return map_batches(clips, run, emits=emits)

@@ -2,10 +2,13 @@
 
 clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript)
   → [optional] audio decode-validate + features   (mapInPandas, numpy)
-  → Catalyst quality signals                      (codegen, no Python)
-  → langid + perplexity + repetition              (one pandas UDF stage)
-  → keep/drop decision                            (Catalyst when-chain)
-  → PII scrub of kept transcripts                 (one pandas UDF stage)
+  → quality signals + langid + perplexity
+    + keep/drop + PII scrub of kept transcripts   (one fused Arrow stage,
+                                                   operators/fused.py)
+  → [optional] audio gate folded into keep/drop   (Catalyst when-chain)
+
+With audio and no injected entities, decode and the text stage share
+one ``mapInPandas`` crossing.
 
 The whole pipeline is map-only: zero shuffles, zero driver collects —
 embarrassingly parallel, which is what makes the N→4N scaling-efficiency
@@ -26,12 +29,10 @@ from .kernel.filters import NORTH_STAR_CONFIG, ScrubConfig
 from .kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
 from .operators.audio import (
     AudioGateThresholds,
-    audio_drop_reason_col,
+    _with_audio_reason,
     with_audio_features,
 )
-from .operators.features import with_text_features
-from .operators.quality import with_keep_drop, with_quality_signals
-from .operators.scrub import make_scrub_udf
+from .operators.fused import run_pipeline_fused, run_pipeline_fused_multimodal
 
 
 @dataclass(frozen=True)
@@ -57,11 +58,6 @@ class PipelineConfig:
     # transcript reads).  None keeps the text-only reference semantics.
     audio_gate: AudioGateThresholds | None = None
     n_buckets: int = 64  # hash buckets for the checkpointed layout
-    # fused=True runs signals+features+keep/drop+scrub in ONE Arrow
-    # crossing (operators/fused.py) — identical semantics, half the
-    # Python-boundary traffic.  fused=False uses the modular operators
-    # (Catalyst signals, two UDF stages).
-    fused: bool = True
 
 
 DEFAULT_PIPELINE = PipelineConfig()
@@ -128,9 +124,8 @@ def run_pipeline(
 ) -> DataFrame:
     """clips → clips + (quality signals, lang, lang_conf, ppl, keep,
     drop_reason, scrubbed, mapping)."""
-    df = clips
-    audio_gated = config.include_audio and config.audio_gate is not None
-    if config.include_audio and config.fused and config.entities_col is None:
+    gate = config.audio_gate if config.include_audio else None
+    if config.include_audio and config.entities_col is None:
         # single-crossing multimodal stage: decode + audio features +
         # the full text kernel in ONE mapInPandas — the transcript (and
         # every carried column) pays one Arrow round-trip, not two.
@@ -138,69 +133,22 @@ def run_pipeline(
         # cores; equivalence pytest-gated).  The entities-injected
         # variant keeps the two-stage layout: struct columns arrive
         # differently under mapInPandas and that path is rare.
-        from .operators.fused import run_pipeline_fused_multimodal
-
         out = run_pipeline_fused_multimodal(
-            df, config.scrub, config.thresholds, config.scrub_dropped
+            clips, config.scrub, config.thresholds, config.scrub_dropped
         )
-        if audio_gated:
-            reason = audio_drop_reason_col(config.audio_gate)
-            out = out.withColumn("audio_drop_reason", reason).withColumn(
-                "audio_keep", reason.isNull()
-            )
-            return _fold_audio_gate(out)
-        return out
-    if config.include_audio:
-        df = with_audio_features(df)
-        if audio_gated:
-            reason = audio_drop_reason_col(config.audio_gate)
-            df = df.withColumn("audio_drop_reason", reason).withColumn(
-                "audio_keep", reason.isNull()
-            )
-
-    if config.fused:
-        from .operators.fused import run_pipeline_fused
-
+        if gate is not None:
+            out = _with_audio_reason(out, gate)
+    else:
+        df = clips
+        if config.include_audio:
+            df = with_audio_features(df)
+            if gate is not None:
+                df = _with_audio_reason(df, gate)
         out = run_pipeline_fused(
             df, config.scrub, config.thresholds, config.scrub_dropped,
             entities_col=config.entities_col,
         )
-        return _fold_audio_gate(out) if audio_gated else out
-
-    df = with_quality_signals(df, "transcript")
-    df = with_text_features(df, "transcript")
-    df = with_keep_drop(df, config.thresholds)
-
-    # Scrub only kept rows unless configured otherwise: dropped rows never
-    # reach training data, so scrubbing them is wasted Python time.  The
-    # trick keeps one UDF and no union: dropped rows enter the UDF as
-    # null and pass straight through.
-    scrub_input = (
-        F.col("transcript")
-        if config.scrub_dropped
-        else F.when(F.col("keep"), F.col("transcript"))
-    )
-    if config.entities_col is not None:
-        from .operators.scrub import make_scrub_with_entities_udf
-
-        scrub_udf = make_scrub_with_entities_udf(config.scrub)
-        df = df.withColumn(
-            "_scrub", scrub_udf(scrub_input, F.col(config.entities_col))
-        )
-    else:
-        scrub_udf = make_scrub_udf(config.scrub)
-        df = df.withColumn("_scrub", scrub_udf(scrub_input))
-    df = df.withColumns(
-        {
-            "scrubbed": F.when(
-                F.col("keep") | F.lit(config.scrub_dropped), F.col("_scrub.scrubbed")
-            ),
-            "mapping": F.when(
-                F.col("keep") | F.lit(config.scrub_dropped), F.col("_scrub.mapping")
-            ),
-        }
-    ).drop("_scrub")
-    return _fold_audio_gate(df) if audio_gated else df
+    return out if gate is None else _fold_audio_gate(out)
 
 
 def _fold_audio_gate(out: DataFrame) -> DataFrame:
