@@ -2,6 +2,7 @@
 heuristics (all [north-rule] stages — BASELINE.json north_star)."""
 
 import numpy as np
+import pytest
 
 from top_secret_spark.kernel.langid import LANGS, UNKNOWN, detect_batch
 from top_secret_spark.kernel.perplexity import perplexity_batch
@@ -169,13 +170,14 @@ def _reset_ppl_hook():
 
 
 def test_langid_hook_falls_back_without_wheel(monkeypatch):
-    # env var set but the fasttext wheel is absent (this sandbox):
-    # detect_batch must silently use the synthetic weights
+    # env var set but the model cannot load (no fasttext wheel or no
+    # file): detect_batch warns once and uses the synthetic weights
     from top_secret_spark.kernel import langid
     _reset_langid_hook()
     monkeypatch.setenv(langid._REAL_MODEL_ENV, "/nonexistent/lid.bin")
     try:
-        langs, conf = langid.detect_batch([EN, ES])
+        with pytest.warns(RuntimeWarning, match="/nonexistent/lid.bin"):
+            langs, conf = langid.detect_batch([EN, ES])
         assert list(langs) == ["en", "es"]
         assert langid._REAL_MODEL is False  # probed once, cached
     finally:
@@ -188,10 +190,13 @@ def test_langid_hook_uses_real_model_when_loadable(monkeypatch):
     monkeypatch.setenv(langid._REAL_MODEL_ENV, "/any/path.bin")
     langid._MODEL_LOADER = lambda path: _FakeFastText()
     try:
-        langs, conf = langid.detect_batch([EN, "ab"])
+        langs, conf = langid.detect_batch([EN, "ab", "日本"])
         assert langs[0] == "xx" and conf[0] == 0.75
         # sub-_MIN_CHARS text stays ("und", 0.0) through the real path
         assert langs[1] == "und" and conf[1] == 0.0
+        # the short-text gate counts UTF-8 bytes on both paths: 2 chars,
+        # 6 bytes is long enough, as on the synthetic path
+        assert langs[2] == "xx" and conf[2] == 0.75
     finally:
         _reset_langid_hook()
 
@@ -202,7 +207,8 @@ def test_perplexity_hook_both_ways(monkeypatch):
     _reset_ppl_hook()
     # wheel absent -> synthetic tables
     monkeypatch.setenv(perplexity._REAL_MODEL_ENV, "/nonexistent/lm.bin")
-    base = perplexity.perplexity_batch([EN])
+    with pytest.warns(RuntimeWarning, match="/nonexistent/lm.bin"):
+        base = perplexity.perplexity_batch([EN])
     assert perplexity._REAL_MODEL is False
     assert base[0] < 50.0  # in-domain English scores low synthetically
     # mocked real model -> its perplexity, empty text -> _MAX_PPL

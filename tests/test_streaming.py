@@ -96,7 +96,8 @@ def test_dedup_stream_first_seen_wins(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    # the default (no state TTL) lets a bounded run terminate
+    assert q.awaitTermination(180) is True
 
     rows = spark.sql("select * from dedup_stream_t").collect()
     n_distinct_texts = tripled.select("transcript").distinct().count()
@@ -139,7 +140,7 @@ def test_dedup_stream_simhash_key_drops_near_identical(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180) is True
     got = spark.sql("select * from dedup_stream_sh").collect()
     # one survivor from the {a,b,c} sketch-identical family + d + e
     assert len(got) == 3

@@ -32,6 +32,7 @@ writes the raw record to BENCH/SCALING.json, and prints one JSON line.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import subprocess
@@ -51,14 +52,44 @@ REPEATS = int(os.environ.get("TSS_SCALING_REPEATS", "4"))
 INPUT_PARQUET = os.environ.get("TSS_SCALING_INPUT", "/tmp/tss_clips_5m")
 
 
+def _generator_digest() -> str:
+    """Digest of the first 256 rows the current clips generator makes
+    (values and dtypes), so input written by an older generator is
+    recognised as stale."""
+    from top_secret_spark.sources.clips import rows_for_range
+
+    df = rows_for_range(0, 256, with_audio=False)
+    key = repr((df.dtypes.astype(str).tolist(), df.to_dict("list")))
+    return hashlib.sha256(key.encode()).hexdigest()
+
+
 def ensure_input(n_clips: int) -> str:
     """Write the clips input as PARQUET once (deterministic generator) —
     the arms then SCAN it, like the north-rule job scans its Iceberg
     table.  Reading parquet also measures better than the earlier
     deserialized-object cache: the vectorized columnar scan is cheaper
     JVM-side work per row, so less of the 4N arm's core budget goes to
-    scan overhead (measured eff 0.69 cached → ~0.76 parquet)."""
+    scan overhead (measured eff 0.69 cached → ~0.76 parquet).
+
+    The dir is reused only when its ``_meta.json`` stamp (written after
+    a complete write) names the same ``n_clips`` and generator digest;
+    anything else — another TSS_SCALING_CLIPS, a partial write, an
+    older generator — is regenerated, with a note on stderr."""
+    meta_path = os.path.join(INPUT_PARQUET, "_meta.json")
+    stamp = {"n_clips": n_clips, "generator_digest": _generator_digest()}
+    try:
+        with open(meta_path) as f:
+            have = json.load(f)
+    except (OSError, ValueError):
+        have = None
+    if have == stamp:
+        return INPUT_PARQUET
+    if os.path.isdir(INPUT_PARQUET):
+        print(f"regenerating {INPUT_PARQUET}: stamp {have} != {stamp}",
+              file=sys.stderr)
     from pyspark.sql import SparkSession
+
+    from top_secret_spark.sources.clips import clips_df
 
     spark = (
         SparkSession.builder.master("local[32]")
@@ -67,23 +98,12 @@ def ensure_input(n_clips: int) -> str:
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
-    if os.path.isdir(INPUT_PARQUET):
-        # validate, don't trust: a stale dir from a different
-        # TSS_SCALING_CLIPS (or a partial previous write) would be
-        # scanned silently while the record is stamped with n_clips
-        try:
-            have = spark.read.parquet(INPUT_PARQUET).count()
-        except Exception:
-            have = -1
-        if have == n_clips:
-            spark.stop()
-            return INPUT_PARQUET
-    from top_secret_spark.sources.clips import clips_df
-
     clips_df(spark, n_clips, with_audio=False, partitions=128).write.mode(
         "overwrite"
     ).parquet(INPUT_PARQUET)
     spark.stop()
+    with open(meta_path, "w") as f:
+        json.dump(stamp, f)
     return INPUT_PARQUET
 
 

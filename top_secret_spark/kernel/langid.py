@@ -16,6 +16,8 @@ stage"; not present in the reference repo.
 
 from __future__ import annotations
 
+import warnings
+
 import numpy as np
 
 from .hashing import encode_batch, ngram_hashes, ngram_hashes_multi
@@ -151,7 +153,8 @@ def real_model():
     """The real fastText model, or None (worker-local singleton).
 
     Unavailable (no env var, no wheel, unreadable artifact) caches as
-    False so workers don't re-probe per batch."""
+    False so workers don't re-probe per batch; a set env var whose
+    model fails to load warns (RuntimeWarning) before the fallback."""
     global _REAL_MODEL
     if _REAL_MODEL is None:
         import os
@@ -162,7 +165,12 @@ def real_model():
         else:
             try:
                 _REAL_MODEL = (_MODEL_LOADER or _load_fasttext)(path)
-            except Exception:
+            except Exception as e:
+                warnings.warn(
+                    f"{_REAL_MODEL_ENV}={path!r} failed to load ({e!r}); "
+                    f"falling back to the synthetic langid model",
+                    RuntimeWarning, stacklevel=2,
+                )
                 _REAL_MODEL = False  # documented fallback: synthetic
     return _REAL_MODEL or None
 
@@ -181,7 +189,12 @@ def _detect_real(model, texts) -> tuple[np.ndarray, np.ndarray]:
         dtype=object,
     )
     conf = np.array([float(p[0]) if len(p) else 0.0 for p in probs])
-    short = np.array([len(c) < _MIN_CHARS for c in cleaned])
+    # same short-text basis as the synthetic path: UTF-8 bytes of the
+    # lowered text (encode_batch), so the hook changes only the model
+    short = np.array(
+        [len(c.lower().encode("utf-8", "replace")) < _MIN_CHARS
+         for c in cleaned]
+    )
     langs[short] = UNKNOWN
     return langs, np.where(short, 0.0, conf)
 

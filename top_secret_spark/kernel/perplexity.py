@@ -23,6 +23,7 @@ KenLM-style perplexity scorer"; not present in the reference repo.
 from __future__ import annotations
 
 import re
+import warnings
 
 import numpy as np
 
@@ -110,7 +111,9 @@ def _load_kenlm(path: str):
 
 
 def real_model():
-    """The real KenLM model, or None (worker-local singleton)."""
+    """The real KenLM model, or None (worker-local singleton); a set
+    env var whose model fails to load warns (RuntimeWarning) before the
+    cached synthetic fallback, as in kernel/langid.py."""
     global _REAL_MODEL
     if _REAL_MODEL is None:
         import os
@@ -121,7 +124,12 @@ def real_model():
         else:
             try:
                 _REAL_MODEL = (_MODEL_LOADER or _load_kenlm)(path)
-            except Exception:
+            except Exception as e:
+                warnings.warn(
+                    f"{_REAL_MODEL_ENV}={path!r} failed to load ({e!r}); "
+                    f"falling back to the synthetic perplexity model",
+                    RuntimeWarning, stacklevel=2,
+                )
                 _REAL_MODEL = False  # documented fallback: synthetic
     return _REAL_MODEL or None
 

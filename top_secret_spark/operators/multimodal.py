@@ -41,31 +41,28 @@ from ..kernel.media import (
     synth_image,
     synth_video,
 )
+from ..sources.clips import ddl_fields, range_df, rows_frame
 
-MEDIA_COLUMNS = [
-    "media_id", "kind", "bytes", "codec", "width", "height", "n_frames", "fps",
-]
 MEDIA_SCHEMA_DDL = (
     "media_id string, kind string, bytes binary, codec string, "
     "width int, height int, n_frames int, fps double"
 )
+MEDIA_COLUMNS = [name for name, _ in ddl_fields(MEDIA_SCHEMA_DDL)]
 MEDIA_SEED = 1337
 
 
 def media_rows_for_range(start: int, end: int) -> pd.DataFrame:
     """Deterministic synthetic media rows [start, end) — pure function,
-    partitioning-independent (same contract as sources/clips.py)."""
-    out: dict = {c: [] for c in MEDIA_COLUMNS}
+    partitioning-independent (the row-range contract of
+    sources/clips.py)."""
+    rows = []
     for r in range(start, end):
         width = 8 + r % 16
         height = 6 + r % 12
-        is_video = r % 4 == 0
-        if is_video:
+        if r % 4 == 0:
             n_frames = 2 + r % 7
             data = encode_video(synth_video(MEDIA_SEED + r, width, height, n_frames))
-            out["kind"].append("video")
-            out["codec"].append(RAW_VIDEO_CODEC)
-            out["fps"].append(float(10 + r % 20))
+            kind, codec, fps = "video", RAW_VIDEO_CODEC, float(10 + r % 20)
         else:
             n_frames = 1
             img = synth_image(MEDIA_SEED + r, width, height)
@@ -74,33 +71,17 @@ def media_rows_for_range(start: int, end: int) -> pd.DataFrame:
             # the container parse itself sits under the oracle gate
             codec = BMP_IMAGE_CODEC if r % 2 else RAW_IMAGE_CODEC
             data = encode_image(img, codec)
-            out["kind"].append("image")
-            out["codec"].append(codec)
-            out["fps"].append(0.0)
-        out["media_id"].append(f"media-{r:010d}")
-        out["bytes"].append(data)
-        out["width"].append(width)
-        out["height"].append(height)
-        out["n_frames"].append(n_frames)
-    df = pd.DataFrame(out)[MEDIA_COLUMNS]
-    for c in ("width", "height", "n_frames"):
-        df[c] = df[c].astype("int32")
-    return df
+            kind, fps = "image", 0.0
+        rows.append((
+            f"media-{r:010d}", kind, data, codec, width, height, n_frames, fps,
+        ))
+    return rows_frame(rows, MEDIA_SCHEMA_DDL)
 
 
 def media_df(spark, n_rows: int, partitions: int | None = None) -> DataFrame:
-    """Distributed generation — spark.range → mapInPandas, no shuffle."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield media_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return spark.range(0, n_rows, numPartitions=parts).mapInPandas(
-        gen, schema=MEDIA_SCHEMA_DDL
-    )
+    """Distributed ``media_rows_for_range`` (``range_df``, no shuffle)."""
+    return range_df(spark, n_rows, media_rows_for_range, MEDIA_SCHEMA_DDL,
+                    partitions)
 
 
 _FEATURES_DDL = (

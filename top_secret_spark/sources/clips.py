@@ -1,19 +1,31 @@
-"""Deterministic synthetic clips table (BASELINE.json input_hint).
+"""Deterministic synthetic clips table (BASELINE.json input_hint) and
+the planted-signal fixture families built the same way.
 
-Schema: clip_id:string, bytes:binary, sr_hz:int, dur_ms:int, codec:string,
-transcript:string.  Every row is a pure function of (seed, row index) —
-the table is identical regardless of how generation is partitioned, which
-machine runs it, or how many times it is re-run.  That property is what
-lets the same generator back unit tests (pyarrow, hundreds of rows) and
-benchmarks (Spark mapInPandas, millions of rows) and still compare
-clip-by-clip.
+Schema (``CLIPS_SCHEMA_DDL``): clip_id:string, bytes:binary, sr_hz:int,
+dur_ms:int, codec:string, transcript:string; the stereo families add
+n_channels:int (``STEREO_SCHEMA_DDL``).
 
-Row mix is designed to exercise every pipeline stage: clean English
-(kept), English with planted PII (kept + scrubbed), non-English,
-gibberish, symbol soup, too-short, repetition, duplicate lines, and
-digit-heavy rows (each dropped by its rule).  Codec distribution is
-deliberately skewed (~80% pcm16) with a long-tail duration distribution
-to exercise salting.
+Row-range contract, shared by every generator here and by
+``operators.multimodal.media_df``: ``X_rows_for_range(start, end)``
+returns rows [start, end) as a pandas frame, and every row is a pure
+function of (seed, row index).  The distributed twin ``X_clips_df(spark,
+n_rows, partitions=None)`` is ``range_df``: ``spark.range(n_rows)`` over
+p partitions (default max(8, defaultParallelism)), then one
+``rows_fn(ids.min(), ids.max() + 1)`` call per non-empty Arrow batch —
+no shuffle, no driver bottleneck.  The table is therefore identical
+however generation is partitioned, which machine runs it, or how many
+times it is re-run, so the same generator backs unit tests (pandas,
+hundreds of rows) and benchmarks (Spark, millions of rows) and still
+compares clip-by-clip.  ``rows_frame`` turns a generator's row tuples
+into the frame: column order and int32 casts both come from the DDL
+string.
+
+Row mix of ``rows_for_range`` is designed to exercise every pipeline
+stage: clean English (kept), English with planted PII (kept +
+scrubbed), non-English, gibberish, symbol soup, too-short, repetition,
+duplicate lines, and digit-heavy rows (each dropped by its rule).  Codec
+distribution is deliberately skewed (~80% pcm16) with a long-tail
+duration distribution to exercise salting.
 """
 
 from __future__ import annotations
@@ -65,7 +77,61 @@ _PII_TEMPLATES = [
 _CODECS = ("pcm16", "ulaw", "alaw")
 _CODEC_CDF = (0.80, 0.90, 1.00)  # skewed on purpose
 
-CLIPS_COLUMNS = ["clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"]
+CLIPS_SCHEMA_DDL = (
+    "clip_id string, bytes binary, sr_hz int, dur_ms int, "
+    "codec string, transcript string"
+)
+STEREO_SCHEMA_DDL = CLIPS_SCHEMA_DDL + ", n_channels int"
+
+
+def ddl_fields(schema: str) -> list[tuple[str, str]]:
+    """(name, type) pairs of a flat DDL string like ``CLIPS_SCHEMA_DDL``."""
+    return [tuple(f.split()) for f in schema.split(",")]
+
+
+def rows_frame(rows: list[tuple],
+               schema: str = CLIPS_SCHEMA_DDL) -> pd.DataFrame:
+    """A generator's row tuples as the pandas frame of ``schema``:
+    columns in DDL order, ``int`` columns cast to int32 (an empty range
+    keeps the columns, object-typed except the casts)."""
+    fields = ddl_fields(schema)
+    cols = list(zip(*rows)) or [()] * len(fields)
+    df = pd.DataFrame({name: list(c) for (name, _), c in zip(fields, cols)})
+    for name, typ in fields:
+        if typ == "int":
+            df[name] = df[name].astype("int32")
+    return df
+
+
+def range_df(spark, n_rows: int, rows_fn, schema: str = CLIPS_SCHEMA_DDL,
+             partitions: int | None = None):
+    """Distributed ``rows_fn`` over rows [0, n_rows): the row-range
+    contract of the module docstring."""
+    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+
+    def gen(iterator):
+        for pdf in iterator:
+            ids = pdf["id"].to_numpy()
+            if len(ids):
+                yield rows_fn(int(ids.min()), int(ids.max()) + 1)
+
+    return spark.range(0, n_rows, numPartitions=parts).mapInPandas(
+        gen, schema=schema
+    )
+
+
+def _range_generator(rows_fn, schema: str = CLIPS_SCHEMA_DDL):
+    """``X_clips_df(spark, n_rows, partitions=None)`` for ``rows_fn =
+    X_rows_for_range``."""
+
+    def distributed(spark, n_rows: int, partitions: int | None = None):
+        return range_df(spark, n_rows, rows_fn, schema, partitions)
+
+    distributed.__name__ = distributed.__qualname__ = (
+        rows_fn.__name__.replace("_rows_for_range", "_clips_df")
+    )
+    distributed.__doc__ = f"Distributed ``{rows_fn.__name__}``."
+    return distributed
 
 
 def _email(r: int, k: int = 0) -> str:
@@ -125,7 +191,7 @@ def _transcript(r: int, rng: np.random.Generator) -> str:
 
 def rows_for_range(start: int, end: int, with_audio: bool = True) -> pd.DataFrame:
     """Generate clips rows [start, end) — the pure-function core."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         rng = np.random.default_rng(SEED * 1_000_003 + r)
         codec_u = rng.random()
@@ -140,41 +206,17 @@ def rows_for_range(start: int, end: int, with_audio: bool = True) -> pd.DataFram
             data = encode(pcm, codec)
         else:
             data = b""
-        out["clip_id"].append(f"clip-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(dur_ms)
-        out["codec"].append(codec)
-        out["transcript"].append(transcript)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
-
-
-CLIPS_SCHEMA_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, "
-    "codec string, transcript string"
-)
+        rows.append((f"clip-{r:010d}", data, sr_hz, dur_ms, codec, transcript))
+    return rows_frame(rows)
 
 
 def clips_df(spark, n_rows: int, with_audio: bool = True, partitions: int | None = None):
-    """Distributed generation: spark.range → mapInPandas.
-
-    Each task generates its own id range independently — no shuffle, no
-    driver bottleneck; at 10^12 rows this is exactly how the table would
-    be materialized (write per-bucket, see sources/checkpoint.py)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield rows_for_range(int(ids.min()), int(ids.max()) + 1, with_audio)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
+    """Distributed ``rows_for_range``.  Each task generates its own id
+    range independently; at 10^12 rows this is exactly how the table
+    would be materialized (write per-bucket, see sources/checkpoint.py)."""
+    return range_df(
+        spark, n_rows, lambda start, end: rows_for_range(start, end, with_audio),
+        partitions=partitions,
     )
 
 
@@ -188,7 +230,7 @@ def gate_rows_for_range(start: int, end: int) -> pd.DataFrame:
     three — companded zeros must still read as silent), 1 clipped
     (overdriven 10x then clamped by the encoder), 2 too-short (120 ms),
     3 undecodable codec tag, 4-5 clean speech-band signal (kept)."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         kind = r % GATE_DEFECT_PERIOD
         codec = _CODECS[r % 3]
@@ -205,33 +247,14 @@ def gate_rows_for_range(start: int, end: int) -> pd.DataFrame:
             data = b"\x00\x01\x02\x03"
         else:
             data = encode(synth_pcm(SEED * 7_000_003 + r, n, sr_hz), codec)
-        out["clip_id"].append(f"gate-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(dur_ms)
-        out["codec"].append(codec)
-        out["transcript"].append(f"clean transcript for gated clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"gate-{r:010d}", data, sr_hz, dur_ms, codec,
+            f"clean transcript for gated clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def gate_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted-defect clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield gate_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+gate_clips_df = _range_generator(gate_rows_for_range)
 
 
 NEARDUP_FAMILY_SIZE = 3  # r // 3 = family, r % 3 = codec member
@@ -247,7 +270,7 @@ def neardup_rows_for_range(start: int, end: int) -> pd.DataFrame:
     candidate key across DIFFERENT sources too — the verify stage must
     reject those (~0 dB).  Pure function of the row index, so a SQL
     oracle recomputes the expected pair structure from ``range()``."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         f, m = divmod(r, NEARDUP_FAMILY_SIZE)
         codec = _CODECS[m]
@@ -255,33 +278,14 @@ def neardup_rows_for_range(start: int, end: int) -> pd.DataFrame:
         dur_ms = 400 + (f % 5) * 150
         n = int(sr_hz * dur_ms / 1000)
         pcm = synth_pcm(SEED * 11_000_027 + f, n, sr_hz)
-        out["clip_id"].append(f"nd-{r:08d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(dur_ms)
-        out["codec"].append(codec)
-        out["transcript"].append(f"near dup family {f} member {m}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"nd-{r:08d}", encode(pcm, codec), sr_hz, dur_ms, codec,
+            f"near dup family {f} member {m}",
+        ))
+    return rows_frame(rows)
 
 
-def neardup_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted near-dup families (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield neardup_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+neardup_clips_df = _range_generator(neardup_rows_for_range)
 
 
 #: transcripts planted by ``rate_rows_for_range``, indexed by ``r % 4``:
@@ -302,37 +306,18 @@ def rate_rows_for_range(start: int, end: int) -> pd.DataFrame:
     1000 ms pcm16 clip, so the measured duration is exactly 1 s and the
     expected chars-per-second equals the transcript length — a SQL
     oracle recomputes every decision and value from ``range()``."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     for r in range(start, end):
         pcm = synth_pcm(SEED * 13_000_039 + r, sr_hz, sr_hz)
-        out["clip_id"].append(f"rate-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append("pcm16")
-        out["transcript"].append(RATE_TRANSCRIPTS[r % 4])
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"rate-{r:08d}", encode(pcm, "pcm16"), sr_hz, 1000, "pcm16",
+            RATE_TRANSCRIPTS[r % 4],
+        ))
+    return rows_frame(rows)
 
 
-def rate_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted rate-inconsistency clips (same no-shuffle
-    range → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield rate_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+rate_clips_df = _range_generator(rate_rows_for_range)
 
 
 RESAMPLE_SRS = (8000, 16000, 44100)  # r % 3 picks the source rate
@@ -347,39 +332,20 @@ def resample_rows_for_range(start: int, end: int) -> pd.DataFrame:
     sample count at the target rate: n (16 kHz), 2n (8 kHz), or
     round(n*16000/44100) (44.1 kHz; no round-half ties below r=311,
     where Python's banker's rounding and SQL's half-away would part)."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         sr_hz = RESAMPLE_SRS[r % 3]
         codec = "ulaw" if sr_hz == 8000 else "pcm16"
         n = 400 + 37 * r
         pcm = synth_pcm(SEED * 17_000_023 + r, n, sr_hz)
-        out["clip_id"].append(f"rs-{r:08d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(1000 * n / sr_hz))
-        out["codec"].append(codec)
-        out["transcript"].append(f"resample probe {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"rs-{r:08d}", encode(pcm, codec), sr_hz, int(1000 * n / sr_hz),
+            codec, f"resample probe {r}",
+        ))
+    return rows_frame(rows)
 
 
-def resample_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed mixed-rate clips (same no-shuffle range → mapInPandas
-    shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield resample_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+resample_clips_df = _range_generator(resample_rows_for_range)
 
 
 TRANSCODE_CODECS = ("pcm16", "ulaw", "alaw")  # r % 3 picks the source codec
@@ -391,41 +357,20 @@ def transcode_rows_for_range(start: int, end: int) -> pd.DataFrame:
     ``n_samples = 400 + 37*r`` — pure row arithmetic, so a SQL oracle
     recomputes every clip's expected payload size at the target codec
     (1 byte/sample G.711, 2 bytes/sample pcm16) without decoding."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         codec = TRANSCODE_CODECS[r % 3]
         n = 400 + 37 * r
         sr_hz = 8000
         pcm = synth_pcm(SEED * 23_000_057 + r, n, sr_hz)
-        out["clip_id"].append(f"tc-{r:08d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(1000 * n / sr_hz))
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcode probe {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"tc-{r:08d}", encode(pcm, codec), sr_hz, int(1000 * n / sr_hz),
+            codec, f"transcode probe {r}",
+        ))
+    return rows_frame(rows)
 
 
-def transcode_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed mixed-codec clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield transcode_rows_for_range(
-                    int(ids.min()), int(ids.max()) + 1
-                )
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+transcode_clips_df = _range_generator(transcode_rows_for_range)
 
 
 TRIM_CLASSES = ("clean", "padded", "silent")  # r % 3 picks the class
@@ -446,7 +391,7 @@ def trim_rows_for_range(start: int, end: int) -> pd.DataFrame:
     lead = 100 + 50*(r%4),
     tail = 60 + 30*(r%5), silent n = 500.  Codec cycles with
     (r // 3) % 3 so every class × codec pair appears."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     codecs = ("pcm16", "ulaw", "alaw")
     for r in range(start, end):
@@ -465,33 +410,14 @@ def trim_rows_for_range(start: int, end: int) -> pd.DataFrame:
             )
         else:
             pcm = np.zeros(500, dtype=np.float32)
-        out["clip_id"].append(f"tr-{r:08d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(round(len(pcm) * 1000.0 / sr_hz)))
-        out["codec"].append(codec)
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"tr-{r:08d}", encode(pcm, codec), sr_hz,
+            int(round(len(pcm) * 1000.0 / sr_hz)), codec, cls,
+        ))
+    return rows_frame(rows)
 
 
-def trim_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted trim-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield trim_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+trim_clips_df = _range_generator(trim_rows_for_range)
 
 
 SEGMENT_CLASSES = ("single", "two_utterances", "short_gap", "silent")
@@ -509,7 +435,7 @@ def segment_rows_for_range(start: int, end: int) -> pd.DataFrame:
     block length n = 320 + 16*(r%5); all lengths are multiples of 8 so
     durations at 8 kHz are exact integers in both engines.  Codec
     cycles with (r // 4) % 3."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     codecs = ("pcm16", "ulaw", "alaw")
     for r in range(start, end):
@@ -528,33 +454,14 @@ def segment_rows_for_range(start: int, end: int) -> pd.DataFrame:
         else:
             body = z(512)
         pcm = body if cls == "silent" else np.concatenate([z(80), body, z(48)])
-        out["clip_id"].append(f"sg-{r:08d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(round(len(pcm) * 1000.0 / sr_hz)))
-        out["codec"].append(codec)
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"sg-{r:08d}", encode(pcm, codec), sr_hz,
+            int(round(len(pcm) * 1000.0 / sr_hz)), codec, cls,
+        ))
+    return rows_frame(rows)
 
 
-def segment_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted utterance-structure clips (same no-shuffle
-    range → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield segment_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+segment_clips_df = _range_generator(segment_rows_for_range)
 
 
 LOUDNESS_CLASSES = ("quiet", "loud", "silent")  # r % 3 picks the class
@@ -569,7 +476,7 @@ def loudness_rows_for_range(start: int, end: int) -> pd.DataFrame:
     every non-silent clip must measure RMS ≈ target and every silent
     clip must stay at exactly 0 — decisions a SQL oracle recomputes
     from the row index alone."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     n = 800
     for r in range(start, end):
@@ -581,33 +488,13 @@ def loudness_rows_for_range(start: int, end: int) -> pd.DataFrame:
             pcm = np.clip(base * 2.5, -1.0, 1.0).astype(np.float32)
         else:
             pcm = np.zeros(n, dtype=np.float32)
-        out["clip_id"].append(f"ln-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(100)
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"ln-{r:08d}", encode(pcm, "pcm16"), sr_hz, 100, "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def loudness_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted level-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield loudness_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+loudness_clips_df = _range_generator(loudness_rows_for_range)
 
 
 SPECTRAL_CLASSES = ("tone", "tone", "noise", "hum")  # r % 4 -> class
@@ -623,7 +510,7 @@ def spectral_rows_for_range(start: int, end: int) -> pd.DataFrame:
     0.15x white Gaussian (flatness must read > 0.3), hum = 0.4x 80 Hz
     sine (centroid must read < 150 Hz).  All pcm16/16 kHz/4800 samples —
     decisions a SQL oracle recomputes from the row index alone."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 16000
     n = 4800
     t = np.arange(n, dtype=np.float64) / sr_hz
@@ -641,33 +528,13 @@ def spectral_rows_for_range(start: int, end: int) -> pd.DataFrame:
             pcm = (
                 0.4 * np.sin(2.0 * np.pi * SPECTRAL_HUM_HZ * t)
             ).astype(np.float32)
-        out["clip_id"].append(f"sp-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(300)
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"sp-{r:08d}", encode(pcm, "pcm16"), sr_hz, 300, "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def spectral_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted spectral-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield spectral_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+spectral_clips_df = _range_generator(spectral_rows_for_range)
 
 
 def write_clips_parquet(path: str, n_rows: int, with_audio: bool = True,
@@ -704,7 +571,7 @@ def snr_rows_for_range(start: int, end: int) -> pd.DataFrame:
     - steady_noise: 0.2 Gaussian noise, no gaps — a gapless signal
       correctly reads ~0 dB (< 3), the estimator's documented limit.
     """
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz, n = 16000, 9600
     t = np.arange(n, dtype=np.float64) / sr_hz
     burst = 0.4 * np.sin(2.0 * np.pi * 1000.0 * t)
@@ -715,33 +582,13 @@ def snr_rows_for_range(start: int, end: int) -> pd.DataFrame:
         noise = SNR_NOISE_AMPS[r % 3] * rng.standard_normal(n)
         pcm = noise if cls == "steady_noise" else burst + noise
         pcm = np.clip(pcm, -1.0, 1.0).astype(np.float32)
-        out["clip_id"].append(f"sn-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(600)
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"sn-{r:08d}", encode(pcm, "pcm16"), sr_hz, 600, "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def snr_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted SNR-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield snr_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+snr_clips_df = _range_generator(snr_rows_for_range)
 
 
 BW_CLASSES = ("wideband", "upsampled", "native8k")  # r % 3
@@ -760,7 +607,7 @@ def bw_rows_for_range(start: int, end: int) -> pd.DataFrame:
     - native8k: noise born and labeled 8 kHz — rolloff ~0.47 × its own
       sr; honest narrowband audio must NOT flag.
     All pcm16, 600 ms."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         cls = BW_CLASSES[r % 3]
         rng = np.random.default_rng(SEED * 37_000_013 + r)
@@ -777,33 +624,13 @@ def bw_rows_for_range(start: int, end: int) -> pd.DataFrame:
             sr, n = 8000, 4800
             pcm = np.clip(0.2 * rng.standard_normal(n), -1, 1)
         pcm = pcm.astype(np.float32)
-        out["clip_id"].append(f"bw-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr)
-        out["dur_ms"].append(600)
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"bw-{r:08d}", encode(pcm, "pcm16"), sr, 600, "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def bw_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted bandwidth-class clips (same no-shuffle range
-    → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield bw_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+bw_clips_df = _range_generator(bw_rows_for_range)
 
 
 DC_CLASSES = ("offset", "clean")  # r % 2
@@ -816,40 +643,20 @@ def dc_rows_for_range(start: int, end: int) -> pd.DataFrame:
     0.415 — the inflated level a constant offset causes).  After
     ``dc_removed_clips`` BOTH classes must read the tone's rms.  All
     pcm16 / 16 kHz / 4800 samples."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz, n = 16000, 4800
     t = np.arange(n, dtype=np.float64) / sr_hz
     tone = 0.4 * np.sin(2.0 * np.pi * 1000.0 * t)
     for r in range(start, end):
         cls = DC_CLASSES[r % 2]
         pcm = (tone + 0.3 if cls == "offset" else tone).astype(np.float32)
-        out["clip_id"].append(f"dc-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(300)
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"dc-{r:08d}", encode(pcm, "pcm16"), sr_hz, 300, "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def dc_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted DC-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield dc_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+dc_clips_df = _range_generator(dc_rows_for_range)
 
 
 INTEGRITY_CLASS_PERIOD = 8  # row r's planted metadata state = r % 8
@@ -863,7 +670,7 @@ def integrity_rows_for_range(start: int, end: int) -> pd.DataFrame:
     payload declared as 1000), 3 misaligned pcm16 (last byte torn),
     4 unknown codec tag, 5 zero sample rate, 6 empty payload with a
     positive declared duration, 7 consistent alaw (500 ms @ 16 kHz)."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         kind = r % INTEGRITY_CLASS_PERIOD
         sr_hz, dur_ms, codec = 8000, 1000, "pcm16"
@@ -884,33 +691,14 @@ def integrity_rows_for_range(start: int, end: int) -> pd.DataFrame:
             data = encode(pcm, codec)
             if kind == 3:
                 data = data[:-1]  # torn final sample
-        out["clip_id"].append(f"meta-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(dur_ms)
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for audited clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"meta-{r:010d}", data, sr_hz, dur_ms, codec,
+            f"transcript for audited clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def integrity_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted metadata-state clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield integrity_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+integrity_clips_df = _range_generator(integrity_rows_for_range)
 
 
 VAD_CLASS_PERIOD = 5  # row r's planted speech-activity class = r % 5
@@ -938,7 +726,7 @@ def vad_rows_for_range(start: int, end: int) -> pd.DataFrame:
     EXACT by construction — every voiced sample sits at |x| ≈ 0.45 and
     every silent sample below 2.5e-4 after any codec — so the oracle
     gates the measured speech_ratio, not just the decision."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     for r in range(start, end):
         kind = r % VAD_CLASS_PERIOD
@@ -960,33 +748,15 @@ def vad_rows_for_range(start: int, end: int) -> pd.DataFrame:
             codec, data = "opus", b"\x00\x01\x02\x03"
         else:
             data = encode(pcm, codec)
-        out["clip_id"].append(f"vad-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for vad clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"vad-{r:010d}", data, sr_hz, 1000, codec,
+            f"transcript for vad clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def vad_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted speech-activity clips (same no-shuffle range
-    → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+vad_clips_df = _range_generator(vad_rows_for_range)
 
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield vad_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
 
 REPEAT_CLASS_PERIOD = 4  # row r's planted repeated-segment class = r % 4
 
@@ -1027,7 +797,7 @@ def repeat_rows_for_range(start: int, end: int) -> pd.DataFrame:
     250 ms window plus a ragged tail the windower must drop).  At
     win_ms=250 / sr 8000 the oracle knows every clip's
     (n_repeated_windows, first_repeated_win) from the row index alone."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     jingle = _repeat_jingle(4000)
     for r in range(start, end):
@@ -1041,33 +811,16 @@ def repeat_rows_for_range(start: int, end: int) -> pd.DataFrame:
             pcm = np.concatenate([_repeat_noise(r, 4000), jingle])
         else:
             pcm = _repeat_noise(r, 3000)
-        out["clip_id"].append(f"rep-{r:010d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(len(pcm) * 1000 / sr_hz))
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for repeat clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"rep-{r:010d}", encode(pcm, codec), sr_hz,
+            int(len(pcm) * 1000 / sr_hz), codec,
+            f"transcript for repeat clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def repeat_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted repeated-segment clips (same no-shuffle range
-    → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+repeat_clips_df = _range_generator(repeat_rows_for_range)
 
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield repeat_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
 
 PAIRING_CLASS_PERIOD = 5  # row r's planted pairing class = r % 5
 
@@ -1084,7 +837,7 @@ def pairing_rows_for_range(start: int, end: int) -> pd.DataFrame:
     2 = voiced + 2-char transcript (rate_too_slow, 2 cps),
     3 = digital silence + 16-char transcript (transcript_without_speech),
     4 = voiced + empty transcript (missing_transcript)."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     for r in range(start, end):
         kind = r % PAIRING_CLASS_PERIOD
@@ -1094,35 +847,15 @@ def pairing_rows_for_range(start: int, end: int) -> pd.DataFrame:
         )
         transcript = {0: "c" * 16, 1: "c" * 80, 2: "c" * 2,
                       3: "c" * 16, 4: ""}[kind]
-        out["clip_id"].append(f"pair-{r:010d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(transcript)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"pair-{r:010d}", encode(pcm, codec), sr_hz, 1000, codec,
+            transcript,
+        ))
+    return rows_frame(rows)
 
 
-def pairing_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted pairing clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+pairing_clips_df = _range_generator(pairing_rows_for_range)
 
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield pairing_rows_for_range(
-                    int(ids.min()), int(ids.max()) + 1
-                )
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
 
 TEMPO_GROUP = 3      # rows r, r+1, r+2 with r % 3 == 0 form one group
 TEMPO_UNIQUE_MOD = 4  # group g is all-unique when g % 4 == 3
@@ -1157,7 +890,7 @@ def tempo_rows_for_range(start: int, end: int) -> pd.DataFrame:
     size (3 or 1) from the row index alone.  Patterns: shared groups
     use ``g + 1`` (1..80 at 240 rows), unique rows use ``81 +
     3*(g//4) + m`` (81..140) — all distinct by construction."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     sec_lens = (1000, 900, 1100)
     for r in range(start, end):
@@ -1168,33 +901,16 @@ def tempo_rows_for_range(start: int, end: int) -> pd.DataFrame:
             pattern = g + 1
         pcm = _tempo_pattern_pcm(pattern, sec_lens[m])
         codec = _CODECS[r % 3]
-        out["clip_id"].append(f"tempo-{r:010d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(len(pcm) * 1000 / sr_hz))
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for tempo clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"tempo-{r:010d}", encode(pcm, codec), sr_hz,
+            int(len(pcm) * 1000 / sr_hz), codec,
+            f"transcript for tempo clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def tempo_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted tempo-duplicate clips (same no-shuffle range
-    → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+tempo_clips_df = _range_generator(tempo_rows_for_range)
 
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield tempo_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
 
 REDACT_CLASS_PERIOD = 3  # row r's planted PII class = r % 3
 
@@ -1211,7 +927,7 @@ def redact_rows_for_range(start: int, end: int) -> pd.DataFrame:
     emitted placeholder label from the row index alone.  Values are
     framed by spaces so the unanchored email pattern and the \\b-bound
     SSN pattern match exactly the planted chars."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     base = "word " * 20  # exactly 100 chars, no digits/dots/@
     for r in range(start, end):
@@ -1231,33 +947,15 @@ def redact_rows_for_range(start: int, end: int) -> pd.DataFrame:
             )
             assert len(transcript) == 100
         pcm = synth_pcm(SEED * 11_000_003 + r, 8000, sr_hz)
-        out["clip_id"].append(f"redact-{r:010d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(transcript)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"redact-{r:010d}", encode(pcm, codec), sr_hz, 1000, codec,
+            transcript,
+        ))
+    return rows_frame(rows)
 
 
-def redact_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted-PII clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
+redact_clips_df = _range_generator(redact_rows_for_range)
 
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield redact_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
 
 OFFSET_GROUP = 3       # rows r, r+1, r+2 with r // 3 == g form one group
 OFFSET_UNIQUE_MOD = 4  # group g is all-unique when g % 4 == 3
@@ -1274,7 +972,7 @@ def offset_rows_for_range(start: int, end: int) -> pd.DataFrame:
     hashes live on the decode lattice, so partners are same-codec by
     design.  The oracle knows each clip's partner count (2 or 0) from
     the row index alone."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     for r in range(start, end):
         g, m = divmod(r, OFFSET_GROUP)
@@ -1294,37 +992,18 @@ def offset_rows_for_range(start: int, end: int) -> pd.DataFrame:
             pcm = np.concatenate([body, np.zeros(512, np.float32)])
         else:
             pcm = body
-        out["clip_id"].append(f"off-{r:010d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(len(pcm) * 1000 / sr_hz))
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for offset clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"off-{r:010d}", encode(pcm, codec), sr_hz,
+            int(len(pcm) * 1000 / sr_hz), codec,
+            f"transcript for offset clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def offset_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted offset-duplicate clips (same no-shuffle range
-    → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield offset_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+offset_clips_df = _range_generator(offset_rows_for_range)
 
 
 STEREO_CLASS_PERIOD = 6  # row r's planted channel-activity class = r % 6
-STEREO_SCHEMA_DDL = CLIPS_SCHEMA_DDL + ", n_channels int"
 
 
 def stereo_rows_for_range(start: int, end: int) -> pd.DataFrame:
@@ -1343,8 +1022,7 @@ def stereo_rows_for_range(start: int, end: int) -> pd.DataFrame:
     voiced channel → 0.225 amplitude ('half'), both in-phase → 0.45
     ('loud'), silence → 0, so q99 gates the downmixed level class and
     the halved payload byte length per codec."""
-    out = {c: [] for c in CLIPS_COLUMNS}
-    out["n_channels"] = []
+    rows = []
     sr_hz = 8000
     n = 8000  # frames per channel = 1 s
     half = n // 2
@@ -1373,35 +1051,14 @@ def stereo_rows_for_range(start: int, end: int) -> pd.DataFrame:
             inter[0::2] = ch0
             inter[1::2] = ch1
             data = encode(inter, codec)
-        out["clip_id"].append(f"st-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for stereo clip {r}")
-        out["n_channels"].append(2)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    df["n_channels"] = df["n_channels"].astype("int32")
-    return df
+        rows.append((
+            f"st-{r:010d}", data, sr_hz, 1000, codec,
+            f"transcript for stereo clip {r}", 2,
+        ))
+    return rows_frame(rows, STEREO_SCHEMA_DDL)
 
 
-def stereo_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted stereo clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield stereo_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=STEREO_SCHEMA_DDL)
-    )
+stereo_clips_df = _range_generator(stereo_rows_for_range, STEREO_SCHEMA_DDL)
 
 
 WAV_CLASS_PERIOD = 6  # row r's planted container class = r % 6
@@ -1448,7 +1105,7 @@ def wav_rows_for_range(start: int, end: int) -> pd.DataFrame:
     closed-form ('loud') and byte lengths are exact constants: pcm16
     payload 16000 B / container 16044 B, LIST variant 16064 B, mu-law
     8000 / 8044 B."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     voiced = _vad_voiced(8000)
     pcm_payload = encode(voiced, "pcm16")
@@ -1473,33 +1130,14 @@ def wav_rows_for_range(start: int, end: int) -> pd.DataFrame:
             )
         else:
             codec, data = "pcm16", pcm_payload
-        out["clip_id"].append(f"wv-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for wav clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"wv-{r:010d}", data, sr_hz, 1000, codec,
+            f"transcript for wav clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def wav_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted WAV-container clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield wav_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+wav_clips_df = _range_generator(wav_rows_for_range)
 
 
 DECLIP_CLASS_PERIOD = 4  # row r's planted clipping class = r % 4
@@ -1517,7 +1155,7 @@ def declip_rows_for_range(start: int, end: int) -> pd.DataFrame:
     sample sits <= 0.45, so the 0.95 detection level classifies every
     sample identically across codecs and the oracle knows both counts
     from the row index alone."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     n = 8000
     clean = _vad_voiced(n)
@@ -1532,33 +1170,14 @@ def declip_rows_for_range(start: int, end: int) -> pd.DataFrame:
         kind = r % DECLIP_CLASS_PERIOD
         codec = _CODECS[r % 3]
         data = encode(waves[kind], codec)
-        out["clip_id"].append(f"dc-{r:010d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for declip clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"dc-{r:010d}", data, sr_hz, 1000, codec,
+            f"transcript for declip clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def declip_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted clipping-damage clips (same no-shuffle range
-    → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield declip_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+declip_clips_df = _range_generator(declip_rows_for_range)
 
 
 def pack_rows_for_range(start: int, end: int) -> pd.DataFrame:
@@ -1567,38 +1186,19 @@ def pack_rows_for_range(start: int, end: int) -> pd.DataFrame:
     the stream length, hence every pack boundary, is closed-form), each
     clip a distinct constant level so assembled example bytes are
     position-verifiable."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(start, end):
         dur = (600, 1000, 1400)[r % 3]
         n = dur * 8
         pcm = np.full(n, 0.05 + 0.001 * (r % 100), np.float32)
-        out["clip_id"].append(f"pk-{r:010d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(8000)
-        out["dur_ms"].append(dur)
-        out["codec"].append("pcm16")
-        out["transcript"].append(f"transcript for pack clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"pk-{r:010d}", encode(pcm, "pcm16"), 8000, dur, "pcm16",
+            f"transcript for pack clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def pack_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed uniform packing clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield pack_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+pack_clips_df = _range_generator(pack_rows_for_range)
 
 
 XMODAL_GROUP = 3       # members per planted cross-modal group
@@ -1619,7 +1219,7 @@ def xmodal_rows_for_range(start: int, end: int) -> pd.DataFrame:
     pattern: shared groups use ``g + 1`` (<= 80), class-1 members
     ``81 + 3*(g//4) + m`` (81..140), class-3 members ``141 + 3*(g//4)
     + m`` (141..200)."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 8000
     for r in range(start, end):
         g, m = divmod(r, XMODAL_GROUP)
@@ -1636,51 +1236,26 @@ def xmodal_rows_for_range(start: int, end: int) -> pd.DataFrame:
             transcript = f"transcript for clip {r}"
         pcm = _tempo_pattern_pcm(pattern, 1000)
         codec = _CODECS[m]
-        out["clip_id"].append(f"xm-{r:010d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(transcript)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"xm-{r:010d}", encode(pcm, codec), sr_hz, 1000, codec, transcript,
+        ))
+    return rows_frame(rows)
 
 
-def xmodal_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted cross-modal-duplicate clips (same no-shuffle
-    range → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield xmodal_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+xmodal_clips_df = _range_generator(xmodal_rows_for_range)
 
 
 def audidx_corpus_rows(n_patterns: int = 20) -> pd.DataFrame:
     """Tiny deterministic audio corpus for the incremental-dedup index
     (q110): one pcm16 clip per envelope pattern 1..n_patterns."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for p in range(1, n_patterns + 1):
         pcm = _tempo_pattern_pcm(p, 1000)
-        out["clip_id"].append(f"corp-{p:06d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(8000)
-        out["dur_ms"].append(1000)
-        out["codec"].append("pcm16")
-        out["transcript"].append(f"corpus clip {p}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"corp-{p:06d}", encode(pcm, "pcm16"), 8000, 1000, "pcm16",
+            f"corpus clip {p}",
+        ))
+    return rows_frame(rows)
 
 
 def audidx_batch_rows(n_rows: int = 120, n_patterns: int = 20) -> pd.DataFrame:
@@ -1691,7 +1266,7 @@ def audidx_batch_rows(n_rows: int = 120, n_patterns: int = 20) -> pd.DataFrame:
     (survives), 2 a within-batch duplicate pair — consecutive class-2
     rows (r and r+3) share pattern ``150 + r//6``, the min-id member
     survives.  All arithmetic closed-form for the oracle."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     for r in range(n_rows):
         kind = r % 3
         if kind == 0:
@@ -1701,16 +1276,11 @@ def audidx_batch_rows(n_rows: int = 120, n_patterns: int = 20) -> pd.DataFrame:
         else:
             pattern, sec, codec = 150 + r // 6, 1000, "alaw"
         pcm = _tempo_pattern_pcm(pattern, sec)
-        out["clip_id"].append(f"newb-{r:06d}")
-        out["bytes"].append(encode(pcm, codec))
-        out["sr_hz"].append(8000)
-        out["dur_ms"].append(int(len(pcm) * 1000 / 8000))
-        out["codec"].append(codec)
-        out["transcript"].append(f"batch clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"newb-{r:06d}", encode(pcm, codec), 8000,
+            int(len(pcm) * 1000 / 8000), codec, f"batch clip {r}",
+        ))
+    return rows_frame(rows)
 
 
 RESTORE_CLASS_PERIOD = 4  # row r's planted restoration class = r % 4
@@ -1727,7 +1297,7 @@ def restore_rows_for_range(start: int, end: int) -> pd.DataFrame:
     denoise: kept), 3 hopeless: constant full-scale, nothing to anchor
     (dropped both ways via the still-clipped counter).  Per-row seeded
     noise keeps every measurement deterministic."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz, n = 16000, 9600
     t = np.arange(n, dtype=np.float64) / sr_hz
     burst = 0.4 * np.sin(2.0 * np.pi * 1000.0 * t)
@@ -1745,33 +1315,14 @@ def restore_rows_for_range(start: int, end: int) -> pd.DataFrame:
         else:
             pcm = np.ones(n)
         pcm = np.clip(pcm, -1.0, 1.0).astype(np.float32)
-        out["clip_id"].append(f"rs-{r:010d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(600)
-        out["codec"].append("pcm16")
-        out["transcript"].append(f"transcript for restore clip {r}")
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"rs-{r:010d}", encode(pcm, "pcm16"), sr_hz, 600, "pcm16",
+            f"transcript for restore clip {r}",
+        ))
+    return rows_frame(rows)
 
 
-def restore_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted restoration-class clips (same no-shuffle
-    range → mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield restore_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+restore_clips_df = _range_generator(restore_rows_for_range)
 
 
 TURNS_CLASS_PERIOD = 4  # row r's planted turn-structure class = r % 4
@@ -1786,8 +1337,7 @@ def turns_rows_for_range(start: int, end: int) -> pd.DataFrame:
     ch1, ch0 (2 turns; pauses and overlap must neither add nor break
     turns).  Spans are 100 ms (10 blocks at the 10 ms VAD block), so
     every count is exact by construction."""
-    out = {c: [] for c in CLIPS_COLUMNS}
-    out["n_channels"] = []
+    rows = []
     sr_hz = 8000
     span = 800  # 100 ms per channel
 
@@ -1813,35 +1363,14 @@ def turns_rows_for_range(start: int, end: int) -> pd.DataFrame:
             parts = [seg(0), seg(0), silence, seg(1), seg(1),
                      overlap, seg(0), seg(0), silence, silence]
         inter = np.concatenate(parts).ravel()
-        out["clip_id"].append(f"tn-{r:010d}")
-        out["bytes"].append(encode(inter, codec))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(1000)
-        out["codec"].append(codec)
-        out["transcript"].append(f"transcript for turns clip {r}")
-        out["n_channels"].append(2)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    df["n_channels"] = df["n_channels"].astype("int32")
-    return df
+        rows.append((
+            f"tn-{r:010d}", encode(inter, codec), sr_hz, 1000, codec,
+            f"transcript for turns clip {r}", 2,
+        ))
+    return rows_frame(rows, STEREO_SCHEMA_DDL)
 
 
-def turns_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted speaker-turn clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield turns_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=STEREO_SCHEMA_DDL)
-    )
+turns_clips_df = _range_generator(turns_rows_for_range, STEREO_SCHEMA_DDL)
 
 
 PITCH_CLASSES = ("tone100", "tone220", "harmonic120", "noise")  # r % 4
@@ -1856,7 +1385,7 @@ def pitch_rows_for_range(start: int, end: int) -> pd.DataFrame:
     f0 must read the FUNDAMENTAL, the subharmonic-ambiguity case), and
     white noise (must read unvoiced, f0 = 0).  All pcm16/16 kHz/4800
     samples — per-class decisions a SQL oracle recomputes from r % 4."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 16000
     n = 4800
     t = np.arange(n, dtype=np.float64) / sr_hz
@@ -1875,33 +1404,14 @@ def pitch_rows_for_range(start: int, end: int) -> pd.DataFrame:
         else:
             rng = np.random.default_rng(SEED * 31_000_081 + r)
             pcm = np.clip(0.15 * rng.standard_normal(n), -1.0, 1.0)
-        out["clip_id"].append(f"pi-{r:08d}")
-        out["bytes"].append(encode(pcm.astype(np.float32), "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(300)
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"pi-{r:08d}", encode(pcm.astype(np.float32), "pcm16"), sr_hz, 300,
+            "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def pitch_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted pitch-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield pitch_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+pitch_clips_df = _range_generator(pitch_rows_for_range)
 
 
 REVERB_CLASSES = ("dry", "moderate", "reverberant", "steady")  # r % 4
@@ -1917,7 +1427,7 @@ def reverb_rows_for_range(start: int, end: int) -> pd.DataFrame:
     (must read UNMEASURABLE: n_decay_pairs < min_pairs, keeps).
     Bursts are spaced >= 9 tau so tails never overlap (an overlapping
     tail floors the apparent decay rate).  All pcm16/16 kHz/3 s."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 16000
     dur_s = 3.0
     n = int(sr_hz * dur_s)
@@ -1940,33 +1450,14 @@ def reverb_rows_for_range(start: int, end: int) -> pd.DataFrame:
                     0.3 * rng.standard_normal(tail_n) * np.exp(-t / tau)
                 )
         pcm = np.clip(pcm, -1.0, 1.0).astype(np.float32)
-        out["clip_id"].append(f"rv-{r:08d}")
-        out["bytes"].append(encode(pcm, "pcm16"))
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(int(dur_s * 1000))
-        out["codec"].append("pcm16")
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((
+            f"rv-{r:08d}", encode(pcm, "pcm16"), sr_hz, int(dur_s * 1000),
+            "pcm16", cls,
+        ))
+    return rows_frame(rows)
 
 
-def reverb_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted reverb-class clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield reverb_rows_for_range(int(ids.min()), int(ids.max()) + 1)
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+reverb_clips_df = _range_generator(reverb_rows_for_range)
 
 
 CODEC_LIE_CLASSES = (
@@ -1981,7 +1472,7 @@ def codec_lie_rows_for_range(start: int, end: int) -> pd.DataFrame:
     bytes DECLARED mu-law.  Content is a speech-band tone mix with a
     touch of noise (rho ~ 0.99 under the true family) at 16 kHz,
     300 ms."""
-    out = {c: [] for c in CLIPS_COLUMNS}
+    rows = []
     sr_hz = 16000
     n = 4800
     t = np.arange(n, dtype=np.float64) / sr_hz
@@ -2001,32 +1492,8 @@ def codec_lie_rows_for_range(start: int, end: int) -> pd.DataFrame:
             data, codec = encode(pcm, "ulaw"), "pcm16"
         else:
             data, codec = encode(pcm, "pcm16"), "ulaw"
-        out["clip_id"].append(f"cl-{r:08d}")
-        out["bytes"].append(data)
-        out["sr_hz"].append(sr_hz)
-        out["dur_ms"].append(300)
-        out["codec"].append(codec)
-        out["transcript"].append(cls)
-    df = pd.DataFrame(out)
-    df["sr_hz"] = df["sr_hz"].astype("int32")
-    df["dur_ms"] = df["dur_ms"].astype("int32")
-    return df
+        rows.append((f"cl-{r:08d}", data, sr_hz, 300, codec, cls))
+    return rows_frame(rows)
 
 
-def codec_lie_clips_df(spark, n_rows: int, partitions: int | None = None):
-    """Distributed planted codec-lie clips (same no-shuffle range →
-    mapInPandas shape as ``clips_df``)."""
-    parts = partitions or max(8, spark.sparkContext.defaultParallelism)
-
-    def gen(iterator):
-        for pdf in iterator:
-            ids = pdf["id"].to_numpy()
-            if len(ids):
-                yield codec_lie_rows_for_range(
-                    int(ids.min()), int(ids.max()) + 1
-                )
-
-    return (
-        spark.range(0, n_rows, numPartitions=parts)
-        .mapInPandas(gen, schema=CLIPS_SCHEMA_DDL)
-    )
+codec_lie_clips_df = _range_generator(codec_lie_rows_for_range)

@@ -40,17 +40,22 @@ def scrub_stream(
 def dedup_stream(
     stream: DataFrame,
     text_col: str = "transcript",
-    state_ttl: str | int | None = "30 minutes",
+    state_ttl: str | int | None = None,
     key: str = "fingerprint",
     fingerprint_col_name: str | None = None,
 ) -> DataFrame:
     """Stateful streaming dedup: first-seen row per content key wins;
     later arrivals (same or later micro-batches) are dropped.  Custom
     stateful operator via ``applyInPandasWithState`` — state is one
-    counter per key, grouped so each key's state lives on one executor;
-    ``state_ttl`` bounds state size for unbounded streams
-    (ProcessingTimeTimeout evicts idle keys, after which a re-arrival
-    would be emitted again — the standard TTL trade-off).
+    counter per key, grouped so each key's state lives on one executor.
+
+    ``state_ttl`` (default None: state kept for the query's lifetime)
+    bounds state size for unbounded streams: ProcessingTimeTimeout
+    evicts idle keys, after which a re-arrival would be emitted again —
+    the standard TTL trade-off.  A TTL needs a continuous trigger: with
+    a timeout every micro-batch schedules another, so a bounded run
+    (``trigger(availableNow=True)``, ``processAllAvailable``) never
+    terminates.
 
     ``key`` picks the content identity:
 
@@ -214,7 +219,7 @@ def ingest_dedup_stream(
     stream: DataFrame,
     corpus_index: DataFrame,
     text_col: str = "transcript",
-    state_ttl: str | int | None = "30 minutes",
+    state_ttl: str | int | None = None,
 ) -> DataFrame:
     """Streaming twin of the incremental batch dedup
     (``operators.dedup.dedup_against_corpus``): rows whose content the
@@ -223,7 +228,8 @@ def ingest_dedup_stream(
     stage, so streaming state only ever tracks genuinely-new keys —
     at 10^12 corpus rows that is the difference between state the size
     of the crawl delta and state the size of the corpus.  Within-stream
-    duplicates then dedup via ``dedup_stream`` (first-seen-wins, TTL).
+    duplicates then dedup via ``dedup_stream`` (first-seen-wins; see
+    there for ``state_ttl``).
 
     ``corpus_index`` needs a ``fingerprint`` column
     (``sources.bucketed.write_fingerprint_index`` /
