@@ -391,3 +391,81 @@ def test_url_filter_does_not_touch_reference_email_fixture():
     # bare domain — URL scrubbing must not alter its scrub result
     out, _ = filter_text("Contact ralph[at]thoughtbot.com", config=NORTH_STAR_CONFIG)
     assert "[URL_" not in out
+
+
+# --- the required-character gate in front of the regex filters ----------
+
+
+def _gate_chars(f):
+    from top_secret_spark.kernel.scrub import _prefilter
+
+    gate = _prefilter(f)
+    if gate is None or isinstance(gate, str):
+        return gate
+    return [chars.decode("ascii") for chars in gate]
+
+
+class _Duck:
+    label, kind = "DUCK", "regex"
+
+    def call(self, text):
+        return []
+
+
+class _Sub(RegexFilter):
+    pass
+
+
+@pytest.mark.parametrize("f, expected", [
+    # a branch: the union of one set per alternative
+    (dictionary_filter("T", ["cat", "dog"]), ["cd"]),
+    # an alternative with no required set voids the branch
+    (RegexFilter("T", "a|b?"), None),
+    (RegexFilter("T", "^a|b$"), ["ab"]),
+    # IGNORECASE, global or scoped, gives nothing
+    (RegexFilter("T", "(?i)cat"), None),
+    (RegexFilter("T", "(?i:c)at"), ["a", "t"]),
+    # lookarounds, backreferences, negated and non-ASCII classes give nothing
+    (RegexFilter("T", r"(?<=\$)\d+(?=kg)"), ["0123456789"]),
+    (RegexFilter("T", r"(x)\1"), ["x"]),
+    (RegexFilter("T", "[^a]b"), ["b"]),
+    (RegexFilter("T", "[aé]"), None),
+    # a minimum repeat of zero gives nothing; repeated sets appear once
+    (RegexFilter("T", "x*y{0,2}"), None),
+    (RegexFilter("T", r"\d+-\d+"), ["0123456789", "-"]),
+    (RegexFilter("T", r"\s"), ["\t\n\x0b\x0c\r "]),
+    (NERFilter("PERSON", "person"), "entities"),
+    (_Sub("T", "cat"), None),
+    (_Duck(), None),
+])
+def test_prefilter_required_sets(f, expected):
+    assert _gate_chars(f) == expected
+
+
+def test_prefiltered_scrub_batch_skips_nothing_it_must_scan():
+    cfg = ScrubConfig(custom_filters=(dictionary_filter("PET", ["cat", "dog"]),))
+    texts = ["a dog", "a cat", "none", None, "", "call 555-555-5555"]
+    ents = [None, [E("Ann", "person")], [], None, [E("Rome", "location")], None]
+    outputs, mappings = scrub_batch(texts, ents, cfg)
+    assert outputs == ["a [PET_1]", "a [PET_1]", "none", "", "",
+                       "call [PHONE_NUMBER_1]"]
+    assert mappings == [[("PET_1", "dog")],
+                        [("PERSON_1", "Ann"), ("PET_1", "cat")],
+                        [], [], [("LOCATION_1", "Rome")],
+                        [("PHONE_NUMBER_1", "555-555-5555")]]
+
+
+def test_prefiltered_scrub_batch_over_64_required_sets():
+    """The presence test packs 64 sets per pass; a config with more
+    distinct sets spans several passes and must still admit every row
+    that a filter matches."""
+    import re
+
+    chars = [chr(c) for c in range(33, 127) if chr(c) not in "[]"][:70]
+    cfg = ScrubConfig(custom_filters=tuple(
+        RegexFilter("CHAR", re.escape(c) + "q") for c in chars))
+    texts = [f"x{c}q y" for c in chars] + ["plain", "~q !q"]
+    expected = [filter_text(t, None, cfg) for t in texts]
+    assert scrub_batch(texts, None, cfg) == (
+        [o for o, _ in expected], [m for _, m in expected])
+    assert sum(1 for _, m in expected if m) == 71

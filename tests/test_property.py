@@ -7,8 +7,16 @@ randomized inputs.
 
 import re
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
+
+from top_secret_spark.kernel.filters import (
+    DEFAULT_CONFIG,
+    NORTH_STAR_CONFIG,
+    RegexFilter,
+    ScrubConfig,
+    dictionary_filter,
+)
 
 from top_secret_spark.kernel.quality import (
     digit_ratio,
@@ -395,3 +403,169 @@ def test_text_kernels_chunk_layout_invariance(texts, chunk_bytes):
     np.testing.assert_array_equal(got[2], ref[2])
     for a, b in zip(got[3], ref[3]):
         np.testing.assert_array_equal(a, b)
+
+
+# --- batch twins of the fused stage's per-row loops ----------------------
+
+_NORM_TEXTS = st.one_of(
+    st.none(),
+    st.just(""),
+    st.text(max_size=60),
+    st.text(st.sampled_from(list("aZ éÀɏΣσς9#!'-\x00\x1c\x1d\x1e\x1f\xa0\t\n")),
+            max_size=30),
+)
+
+
+@given(st.lists(_NORM_TEXTS, min_size=0, max_size=20))
+@example([])
+@example([None, ""])
+@example(["a\x00b", "c d"])
+@example(["\x1c a\x1d\x1e b\x1f", " x\xa0y "])
+@example(["ΟΔΟΣ", "Σ ς σ"])
+@example(["Àÿ ɏ Ā ɐ"])
+@example(["12, rock 'n' roll!!", "...end 99"])
+@settings(max_examples=300, deadline=None)
+def test_normalize_batch_matches_normalize(texts):
+    """normalize_batch (one NUL-joined regex pass, scalar fallback when
+    a text holds a NUL) equals the scalar normalize text by text."""
+    from top_secret_spark.kernel.perplexity import normalize, normalize_batch
+
+    assert normalize_batch(texts) == [normalize(t) for t in texts]
+
+
+_BIGRAM_WORDS = st.sampled_from(["a", "b", "the", "día", "日本", "x-1", "ΟΔΟΣ"])
+_BIGRAM_TEXTS = st.one_of(
+    st.none(),
+    st.text(max_size=40),
+    st.builds(
+        lambda words, seps: "".join(w + s for w, s in zip(words, seps)),
+        st.lists(_BIGRAM_WORDS, min_size=0, max_size=14),
+        st.lists(st.sampled_from([" ", "  ", "\n", "\t", "\xa0", "\x1c"]),
+                 min_size=14, max_size=14),
+    ),
+)
+
+
+@given(st.lists(_BIGRAM_TEXTS, min_size=0, max_size=20))
+@example([])
+@example([None])
+@example([" ".join("abcdefg"), " ".join("abcdefgh"), " ".join("abcdefghi")])
+@example(["w " * 8, "w " * 9])
+@example(["día 日本 día 日本 día 日本 día 日本"])
+@settings(max_examples=300, deadline=None)
+def test_batch_top_bigram_frac_matches_scalar(texts):
+    """batch_top_bigram_frac (exact factorized word ids, np.unique over
+    within-text bigram keys) equals the scalar Counter twin exactly,
+    with the word counts batch_char_signals reports."""
+    import numpy as np
+
+    from top_secret_spark.kernel.quality import (
+        batch_char_signals,
+        batch_top_bigram_frac,
+    )
+
+    got = batch_top_bigram_frac(texts, batch_char_signals(texts)[1])
+    assert got.dtype == np.float64 and len(got) == len(texts)
+    assert got.tolist() == [top_bigram_frac(t) for t in texts]
+
+
+class _ShoutFilter(RegexFilter):
+    """A RegexFilter subclass whose call reads the upper-cased text, so
+    its pattern says nothing about the characters of the original."""
+
+    def call(self, text):
+        return self._re.findall(text.upper())
+
+
+class _DuckFilter:
+    """A filter that is no RegexFilter at all (label/kind/call only)."""
+
+    label = "DUCK"
+    kind = "regex"
+
+    def call(self, text):
+        return re.findall(r"q.", text)
+
+
+_CUSTOM_FILTERS = (
+    dictionary_filter("TERM", ["cat", "dog", "ünï"]),
+    RegexFilter("CASELESS", "(?i)secret"),
+    RegexFilter("SCOPED", "(?i:key)s"),
+    RegexFilter("AHEAD", r"\d+(?=kg)"),
+    RegexFilter("BEHIND", r"(?<=\$)\d+"),
+    RegexFilter("NEGATED", r"[^a-z ]{3}"),
+    RegexFilter("ANCHORED", r"^\w+|\w+$"),
+    RegexFilter("EMPTY", "x*"),
+    _ShoutFilter("SHOUT", "CAT"),
+)
+SCRUB_CONFIGS = [
+    DEFAULT_CONFIG,
+    NORTH_STAR_CONFIG,
+    ScrubConfig(custom_filters=_CUSTOM_FILTERS),
+    ScrubConfig(custom_filters=(_DuckFilter(),)),
+]
+
+_SCRUB_TOKENS = st.sampled_from([
+    "cat", "dog", "ünï", "SeCrEt", "KEYs", "keys", "5kg", "$12", "ABC",
+    "x", "q!", "Ann", "Paris", "https://ex.io/a", "a\nb", "\t", "日本",
+])
+_SCRUB_TEXTS = st.one_of(
+    st.none(),
+    st.text(max_size=30),
+    st.lists(st.one_of(_WORD, _EMAIL, _PHONE, _SSN, _CC, _SCRUB_TOKENS),
+             min_size=0, max_size=10).map(" ".join),
+)
+_ENTITIES = st.one_of(
+    st.none(),
+    st.lists(st.fixed_dictionaries({
+        "text": st.sampled_from(["Ann", "Paris", "cat"]),
+        "tag": st.sampled_from(["PERSON", "LOCATION", "ORG"]),
+        "score": st.sampled_from([0.2, 0.5, 0.9]),
+    }), max_size=3),
+)
+
+
+def _scan_by_kind(text, entities, config):
+    """scan_text's mapping rules with scrub_batch's kind dispatch — the
+    per-row reference for filters scan_text refuses (duck-typed)."""
+    mapping = {}
+    for f in config.all_filters():
+        if f.kind == "regex":
+            values = f.call(text)
+        else:
+            values = f.call(entities or [], config.min_confidence_score)
+        for i, value in enumerate(dict.fromkeys(values), 1):
+            mapping[f"{f.label}_{i}"] = value
+    return list(mapping.items())
+
+
+@given(
+    st.sampled_from(range(len(SCRUB_CONFIGS))),
+    st.lists(st.tuples(_SCRUB_TEXTS, _ENTITIES), min_size=0, max_size=12),
+    st.booleans(),
+)
+@example(2, [("dog", None), ("a cat", None), ("ünï", None)], False)
+@settings(max_examples=400, deadline=None)
+def test_prefiltered_scrub_batch_matches_per_row_scan(which, rows, with_entities):
+    """scrub_batch runs a filter only on rows its required-character /
+    entity gate admits; outputs and mappings must equal the unfiltered
+    per-row scan + substitution on every row (None → ("", []))."""
+    from top_secret_spark.kernel.scrub import scrub_batch, substitute_text
+
+    config = SCRUB_CONFIGS[which]
+    texts = [t for t, _ in rows]
+    ents = [e for _, e in rows] if with_entities else None
+    scan = _scan_by_kind if which == 3 else scan_text
+    exp_out, exp_map = [], []
+    for i, text in enumerate(texts):
+        if text is None:
+            exp_out.append("")
+            exp_map.append([])
+            continue
+        mapping = scan(text, None if ents is None else ents[i], config)
+        if which != 3:
+            assert mapping == _scan_by_kind(
+                text, None if ents is None else ents[i], config)
+        exp_out.append(substitute_text(text, mapping) if mapping else text)
+        exp_map.append(mapping)
+    assert scrub_batch(texts, ents, config) == (exp_out, exp_map)

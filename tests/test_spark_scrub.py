@@ -220,3 +220,37 @@ def test_pseudonym_secret_changes_mapping_and_is_required(spark):
         pseudonym_col("speaker_id", "")
     with pytest.raises(ValueError, match="length"):
         pseudonym_col("speaker_id", "k", length=64)
+
+
+def test_udfs_are_built_per_call(spark, monkeypatch):
+    """with_text_features and with_restore build a fresh UDF on every
+    call: pyspark binds a UDF's JVM function to the first SparkContext
+    that runs it, so a reused UDF object would report to a stopped
+    context on a later one.  The module-level restore_udf is never bound."""
+    from top_secret_spark.kernel.quality import top_bigram_frac
+    from top_secret_spark.operators import features, scrub
+    from top_secret_spark.operators.features import with_text_features
+
+    made = []
+
+    def recording(real):
+        def build(*args, **kwargs):
+            made.append(real(*args, **kwargs))
+            return made[-1]
+        return build
+
+    monkeypatch.setattr(features, "pandas_udf", recording(features.pandas_udf))
+    monkeypatch.setattr(scrub, "pandas_udf", recording(scrub.pandas_udf))
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(TEXTS)], ["clip_id", "transcript"]
+    )
+    scrubbed = with_scrub(df)  # one scrub UDF
+    for _ in range(2):
+        restored = with_restore(scrubbed).orderBy("clip_id").collect()
+        assert [r["restored_text"] for r in restored] == TEXTS
+        feats = with_text_features(df).orderBy("clip_id").collect()
+        assert [r["top_bigram_frac"] for r in feats] == [
+            top_bigram_frac(t) for t in TEXTS]
+    assert len(made) == 5
+    assert len({id(u) for u in made}) == 5
+    assert scrub.restore_udf._unwrapped._judf_placeholder is None

@@ -53,6 +53,31 @@ def normalize(text: str) -> str:
     return t.strip()
 
 
+# the non-letter class with NUL excluded as well, so a run can never
+# cross the NUL that joins two documents in ``normalize_batch``
+_NORM_JOINED_RE = re.compile(r"[^a-zÀ-ɏ' \x00]+")
+
+
+def normalize_batch(texts) -> list[str]:
+    """``[normalize(t) for t in texts]`` with ONE regex pass per batch.
+
+    ``" ".join(t.lower().split())`` is the ``\\s+`` collapse plus the
+    final strip (``str.split`` and ``re``'s ``\\s`` share the Unicode
+    whitespace set, and the strip can move before the substitution
+    because the class never matches a space).  The lowering stays per
+    text (a final sigma depends on its neighbours); the non-letter
+    substitution then runs once over the NUL-joined batch, which the
+    class excludes.  A text that itself holds a NUL would merge two
+    runs, so such a batch takes the scalar path."""
+    lowered = [" ".join((t or "").lower().split()) for t in texts]
+    if not lowered:
+        return []
+    joined = "\x00".join(lowered)
+    if joined.count("\x00") != len(lowered) - 1:
+        return [normalize(t) for t in texts]
+    return _NORM_JOINED_RE.sub("#", joined).split("\x00")
+
+
 def count_ngrams(normed_texts, buckets: int = BUCKETS) -> list:
     """Hashed n-gram count vectors (n = 1, 2, 3) over already-normalized
     texts — the shared counting core of the built-in model AND the
@@ -158,7 +183,7 @@ def perplexity_batch(texts, model=None) -> np.ndarray:
                 np.array(
                     [
                         rm.perplexity(nt) if nt else _MAX_PPL
-                        for nt in (normalize(t) for t in texts)
+                        for nt in normalize_batch(texts)
                     ],
                     dtype=np.float64,
                 ),
@@ -168,7 +193,7 @@ def perplexity_batch(texts, model=None) -> np.ndarray:
     # the hash space is the table size — a fitted model with a
     # different bucket count stays self-consistent automatically
     buckets = len(c1)
-    normed = [normalize(x) for x in texts]
+    normed = normalize_batch(texts)
     data, lengths = encode_batch(normed)
     ndocs = len(normed)
     out = np.full(ndocs, _MAX_PPL, dtype=np.float64)

@@ -234,6 +234,45 @@ def batch_char_signals(texts):
     return n_chars, n_words, n_alsp, n_dig, has_nl
 
 
+def batch_top_bigram_frac(texts, n_words):
+    """``top_bigram_frac`` per text of a list, over the whole batch at
+    once.
+
+    ``n_words`` is the per-text ``\\S+`` count (``batch_char_signals``);
+    texts under 8 words read 0.0 and are never split.  The words of the
+    rest come from one ``str.split`` of their space-joined text
+    (``str.split`` and ``re``'s ``\\s`` share the Unicode whitespace
+    set), get exact ids from ``pd.factorize``, and every within-text
+    bigram is counted once by ``np.unique`` over (text, pair) keys; the
+    per-text max over runs of equal text then divides by
+    ``n_words - 1``, as the scalar twin does."""
+    import pandas as pd
+
+    n_words = _np.asarray(n_words, dtype=_np.int64)
+    out = _np.zeros(len(n_words), dtype=_np.float64)
+    rows = _np.flatnonzero(n_words >= 8)
+    if not len(rows):
+        return out
+    counts = n_words[rows]
+    words = " ".join([texts[i] for i in rows.tolist()]).split()
+    if len(words) != counts.sum():
+        raise ValueError("n_words does not match the texts' word counts")
+    ids, vocab = pd.factorize(_np.array(words, dtype=object))
+    ids = ids.astype(_np.int64, copy=False)
+    # pair ids are exact (no hashing: a collision would change a max);
+    # compacting them keeps (text, pair) keys far inside int64
+    pairs, pair_vocab = pd.factorize(ids[:-1] * len(vocab) + ids[1:])
+    doc = _np.repeat(_np.arange(len(rows), dtype=_np.int64), counts)
+    within = doc[:-1] == doc[1:]
+    n_pairs = len(pair_vocab)
+    keys = doc[:-1][within] * n_pairs + pairs[within]
+    uniq, n_seen = _np.unique(keys, return_counts=True)
+    key_doc = uniq // n_pairs
+    starts = _np.flatnonzero(_np.r_[True, key_doc[1:] != key_doc[:-1]])
+    out[rows] = _np.maximum.reduceat(n_seen, starts) / (counts - 1)
+    return out
+
+
 def keep_drop_vector(
     n_chars,
     n_words,

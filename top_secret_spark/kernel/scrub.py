@@ -18,7 +18,12 @@ Spark schema is array<struct<key,value>>, never MapType.
 from __future__ import annotations
 
 import re
+import string
 from functools import lru_cache
+from re import _constants as _sre
+from re import _parser as _sre_parser
+
+import numpy as np
 
 from .filters import DEFAULT_CONFIG, NERFilter, RegexFilter, ScrubConfig, TopSecretError
 from .patterns import UNRESTORED_RE
@@ -159,10 +164,135 @@ def restore_text(
 # ---------------------------------------------------------------------------
 
 
+# what ``\d``, ``\s`` and ``\w`` match under re.ASCII, the flag every
+# RegexFilter compiles with
+_ASCII_CATEGORIES = {
+    _sre.CATEGORY_DIGIT: string.digits,
+    _sre.CATEGORY_SPACE: " \t\n\r\f\v",
+    _sre.CATEGORY_WORD: string.ascii_letters + string.digits + "_",
+}
+_REPEATS = (_sre.MAX_REPEAT, _sre.MIN_REPEAT, _sre.POSSESSIVE_REPEAT)
+
+
+def _class_chars(items, ascii_mode: bool) -> frozenset | None:
+    """ASCII code points a character class matches, or None when it is
+    negated or can match outside ASCII."""
+    chars: set[int] = set()
+    for op, av in items:
+        if op is _sre.LITERAL and av < 128:
+            chars.add(av)
+        elif op is _sre.RANGE and av[1] < 128:
+            chars.update(range(av[0], av[1] + 1))
+        elif op is _sre.CATEGORY and ascii_mode and av in _ASCII_CATEGORIES:
+            chars.update(map(ord, _ASCII_CATEGORIES[av]))
+        else:
+            return None
+    return frozenset(chars)
+
+
+def _required_sets(items, ascii_mode: bool) -> list[frozenset]:
+    """Sets of ASCII code points such that every match of the parsed
+    sequence ``items`` holds at least one point of EACH set — a
+    necessary condition for a match, never a sufficient one.  Only a
+    literal or class that must occur (repeat minimum >= 1), possibly
+    inside plain groups, yields a set; a branch yields the union of one
+    set per alternative, and only if every alternative has one.
+    Lookarounds, anchors, backreferences and flag-scoped groups yield
+    nothing."""
+    sets: list[frozenset] = []
+    for op, av in items:
+        if op is _sre.LITERAL:
+            if av < 128:
+                sets.append(frozenset((av,)))
+        elif op is _sre.IN:
+            chars = _class_chars(av, ascii_mode)
+            if chars:
+                sets.append(chars)
+        elif op in _REPEATS:
+            if av[0] >= 1:
+                sets.extend(_required_sets(av[2], ascii_mode))
+        elif op is _sre.SUBPATTERN:
+            _group, add_flags, del_flags, sub = av
+            if not (add_flags or del_flags):
+                sets.extend(_required_sets(sub, ascii_mode))
+        elif op is _sre.BRANCH:
+            alts = [_required_sets(alt, ascii_mode) for alt in av[1]]
+            if all(alts):
+                sets.append(frozenset().union(*(min(a, key=len) for a in alts)))
+    return sets
+
+
+def _prefilter(f):
+    """The row gate of one filter: a tuple of required sets, each the
+    ``bytes`` of its ASCII characters (the row must contain one of
+    each), ``"entities"`` (the row must carry entities), or None (every
+    row)."""
+    if type(f) is NERFilter:
+        return "entities"
+    if type(f) is not RegexFilter:
+        return None
+    parsed = _sre_parser.parse(f._re.pattern, f._re.flags)
+    if parsed.state.flags & re.IGNORECASE:
+        return None
+    sets = _required_sets(parsed.data, bool(parsed.state.flags & re.ASCII))
+    return tuple(dict.fromkeys(bytes(sorted(s)) for s in sets)) or None
+
+
 @lru_cache(maxsize=32)
 def _compiled_plan(config: ScrubConfig):
-    """Precompile the filter plan once per (executor-worker, config)."""
-    return tuple(config.all_filters())
+    """Precompile the filter plan and its row gates once per
+    (executor-worker, config)."""
+    plan = tuple(config.all_filters())
+    return plan, tuple(_prefilter(f) for f in plan)
+
+
+def _set_presence(texts, sets) -> np.ndarray:
+    """rows × sets: does the row contain a character of the set?
+
+    Every set is ASCII, and a UTF-8 byte below 128 is always that ASCII
+    character, so byte presence is character presence.  A byte → bit
+    mask lookup (bit k: the byte is in set k) OR-reduced over each row's
+    bytes gives all of a row's answers at once, 64 sets per pass."""
+    from .hashing import encode_batch
+    from .langid import chunk_spans
+
+    data, lengths = encode_batch(texts)
+    present = np.zeros((len(lengths), len(sets)), dtype=bool)
+    for g0 in range(0, len(sets), 64):
+        group = sets[g0:g0 + 64]
+        lut = np.zeros(256, dtype=np.uint64)
+        for k, chars in enumerate(group):
+            lut[np.frombuffer(chars, dtype=np.uint8)] |= np.uint64(1 << k)
+        mask = np.zeros(len(lengths), dtype=np.uint64)
+        for d0, d1, b0, b1 in chunk_spans(lengths):
+            clen = lengths[d0:d1]
+            nonempty = clen > 0
+            if nonempty.any():
+                starts = (np.cumsum(clen) - clen)[nonempty]
+                mask[d0:d1][nonempty] = np.bitwise_or.reduceat(
+                    lut[data[b0:b1]], starts)
+        bits = np.arange(len(group), dtype=np.uint64)
+        present[:, g0:g0 + len(group)] = (mask[:, None] >> bits) & np.uint64(1)
+    return present
+
+
+def _candidates(texts, entities_list, gates) -> np.ndarray:
+    """rows × filters: may the filter match the row?"""
+    cand = np.ones((len(texts), len(gates)), dtype=bool)
+    sets = list(dict.fromkeys(
+        s for g in gates if isinstance(g, tuple) for s in g))
+    if sets:
+        present = _set_presence(texts, sets)
+        column = {s: k for k, s in enumerate(sets)}
+    for j, gate in enumerate(gates):
+        if gate == "entities":
+            cand[:, j] = (
+                False if entities_list is None
+                else [bool(e) for e in entities_list]
+            )
+        elif gate is not None:
+            cand[:, j] = present[:, [column[s] for s in gate]].all(axis=1)
+    return cand
 
 
 def scrub_batch(
@@ -175,9 +305,16 @@ def scrub_batch(
     ``entities_list`` is an optional parallel iterable of per-text entity
     lists (each entity a dict with text/tag/score).  Null texts pass
     through as ("", []).
-    """
-    plan = _compiled_plan(config)
+
+    A filter runs only on the rows its gate admits (``_candidates``): a
+    regex filter needs one character of each of its required sets, an
+    NER filter needs entities.  Skipping a filter that cannot match adds
+    nothing to the mapping, so a row no filter admits is ``(text, [])``
+    without a scan — equivalence with ``scan_text`` + ``substitute_text``
+    is hypothesis-gated."""
+    plan, gates = _compiled_plan(config)
     min_score = config.min_confidence_score
+    cand = _candidates(texts, entities_list, gates).tolist()
     outputs: list[str] = []
     mappings: list[list[tuple[str, str]]] = []
     n = len(texts)
@@ -187,10 +324,17 @@ def scrub_batch(
             outputs.append("")
             mappings.append([])
             continue
+        admitted = cand[i]
+        if not any(admitted):
+            outputs.append(text)
+            mappings.append([])
+            continue
         entities = entities_list[i] if entities_list is not None else None
         entities = entities or []
         mapping: dict[str, str] = {}
-        for f in plan:
+        for f, ok in zip(plan, admitted):
+            if not ok:
+                continue
             if f.kind == "regex":
                 values = f.call(text)
             else:

@@ -28,17 +28,17 @@ FEATURES_TYPE = T.StructType(
 )
 
 
-@pandas_udf(FEATURES_TYPE)
-def text_features_udf(texts: pd.Series) -> pd.DataFrame:
+def text_features(texts: pd.Series) -> pd.DataFrame:
+    """lang / lang_conf / ppl / top_bigram_frac for one Arrow batch."""
     # imports inside the UDF so executors resolve them after --py-files
     from ..kernel.langid import detect_batch
     from ..kernel.perplexity import perplexity_batch
-    from ..kernel.quality import top_bigram_frac
+    from ..kernel.quality import batch_char_signals, batch_top_bigram_frac
 
     t = texts.tolist()
     langs, conf = detect_batch(t)
     ppl = perplexity_batch(t)
-    rep = [top_bigram_frac(x) for x in t]
+    rep = batch_top_bigram_frac(t, batch_char_signals(t)[1])
     return pd.DataFrame(
         {"lang": langs, "lang_conf": conf, "ppl": ppl, "top_bigram_frac": rep}
     )
@@ -49,9 +49,14 @@ def with_text_features(df: DataFrame, text_col: str = "transcript") -> DataFrame
 
     top_bigram_frac rides along here (rather than Catalyst) because
     computing an array mode with higher-order functions is O(n²) per row;
-    a dict count inside the already-paid Python stage is O(n)."""
+    a batch count inside the already-paid Python stage is O(n log n).
+
+    The UDF is built per call: pyspark binds a UDF's JVM function to the
+    SparkContext that first runs it, so a module-level UDF would report
+    to a stopped context's accumulator server on a later one."""
+    udf = pandas_udf(text_features, FEATURES_TYPE)
     return (
-        df.withColumn("_feat", text_features_udf(F.col(text_col)))
+        df.withColumn("_feat", udf(F.col(text_col)))
         .withColumns(
             {
                 "lang": F.col("_feat.lang"),

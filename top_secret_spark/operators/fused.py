@@ -115,9 +115,9 @@ def fused_text_frame(
     from ..kernel.perplexity import perplexity_batch
     from ..kernel.quality import (
         batch_char_signals,
+        batch_top_bigram_frac,
         dup_line_frac,
         keep_drop_vector,
-        top_bigram_frac,
     )
     from ..kernel.scrub import scrub_batch
     from ..kernel.toxicity import TOXICITY_PATTERN
@@ -142,15 +142,13 @@ def fused_text_frame(
         s.str.lower().str.count(TOXICITY_PATTERN, flags=re.ASCII).to_numpy()
         / n_words_v.clip(min=1)
     )
-    # the two set/dict signals stay per-row but only run where they
-    # can be nonzero: dup_line_frac needs a newline, top_bigram_frac
-    # needs >= 8 words — most transcripts skip both loops entirely
+    # dup_line_frac stays per-row but only runs where it can be
+    # nonzero (a newline-bearing text); top_bigram_frac is one batch
+    # pass over the texts with >= 8 words
     dup_v = np.zeros(n, dtype=np.float64)
     for i in np.flatnonzero(has_nl_v):
         dup_v[i] = dup_line_frac(t[i] or "")
-    big_v = np.zeros(n, dtype=np.float64)
-    for i in np.flatnonzero(n_words_v >= 8):
-        big_v[i] = top_bigram_frac(t[i] or "")
+    big_v = batch_top_bigram_frac(t, n_words_v)
 
     keep_v, reason_v = keep_drop_vector(
         n_chars_v, n_words_v, symbol_v, digit_v, dup_v, big_v, tox_v,

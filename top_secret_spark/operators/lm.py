@@ -53,10 +53,10 @@ def fit_ngram_counts(
         )
 
     def partials(iterator):
-        from ..kernel.perplexity import count_ngrams, normalize
+        from ..kernel.perplexity import count_ngrams, normalize_batch
 
         for pdf in iterator:
-            texts = [normalize(t or "") for t in pdf[text_col].tolist()]
+            texts = normalize_batch(pdf[text_col].tolist())
             vecs = count_ngrams(texts, buckets=buckets)
             frames = []
             for n, c in enumerate(vecs, start=1):

@@ -153,8 +153,14 @@ def with_restore(
     text_col: str = "scrubbed",
     mapping_col: str = "mapping",
 ) -> DataFrame:
-    """Add restored/unrestored columns (op 19)."""
-    res = restore_udf(F.col(text_col), F.col(mapping_col))
+    """Add restored/unrestored columns (op 19).
+
+    Wraps ``restore_udf.func`` in a fresh UDF per call: pyspark binds a
+    UDF's JVM function to the SparkContext that first runs it, so
+    calling the module-level ``restore_udf`` on a later context would
+    report to a stopped context's accumulator server."""
+    udf = pandas_udf(restore_udf.func, RESTORE_RESULT_TYPE)
+    res = udf(F.col(text_col), F.col(mapping_col))
     return df.withColumn("_restore", res).withColumns(
         {
             "restored_text": F.col("_restore.output"),

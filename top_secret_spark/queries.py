@@ -7303,7 +7303,10 @@ QUERIES = {
     "q122_leakage_safe_split": (q_leakage_safe_split, Q_LEAKAGE_SPLIT_SQL),
     "q124_corpus_fit_perplexity": (q_corpus_fit_perplexity, Q_CORPUS_FIT_PPL_SQL),
     "q127_soft_dedup_weights": (q_soft_dedup_weights, Q_SOFT_DEDUP_SQL),
-    "q130_pseudonymize_ids": (q_pseudonymize_ids, Q_PSEUDONYMIZE_SQL),
+    # q15 is the direct oracle of the perplexity kernel, whose normalize
+    # front went batch-wise; it took q130's slot (pure Catalyst md5,
+    # green in every recorded run so far, see CORRECTNESS_r05.json)
+    "q15_perplexity_planted": (q_perplexity_planted, Q_PERPLEXITY_SQL),
     # --- displaced to local-only gating (identical protocol) ---
     "q01_email_extract": (q_email_extract, Q_EMAIL_EXTRACT_SQL),
     "q02_category_extract_counts": (q_category_extract_counts, Q_CATEGORY_EXTRACT_SQL),
@@ -7316,7 +7319,7 @@ QUERIES = {
     "q93_pairing_gate": (q_pairing_gate, Q_PAIRING_GATE_SQL),
     "q119_voice_health": (q_voice_health, Q_VOICE_HEALTH_SQL),
     "q14_langid_planted": (q_langid_planted, Q_LANGID_SQL),
-    "q15_perplexity_planted": (q_perplexity_planted, Q_PERPLEXITY_SQL),
+    "q130_pseudonymize_ids": (q_pseudonymize_ids, Q_PSEUDONYMIZE_SQL),
     "q98_channel_stats": (q_channel_stats, Q_CHANNEL_STATS_SQL),
     "q117_pitch_stats": (q_pitch_stats, Q_PITCH_STATS_SQL),
     "q118_reverb_gate": (q_reverb_gate, Q_REVERB_GATE_SQL),
