@@ -63,6 +63,20 @@ def _bandwidth_probe_sec() -> float:
     return round(_t.perf_counter() - t0, 3)
 
 
+def _best_of_2(fn):
+    """One untimed warm call (closure and worker spin-up), then the
+    minimum of two timed calls: (raw seconds, last call's result).
+    Every secondary arm is map-only or has one small exchange, so no
+    interleaving is needed."""
+    fn()
+    times = []
+    for _ in range(2):
+        t0 = time.time()
+        out = fn()
+        times.append(time.time() - t0)
+    return min(times), out
+
+
 def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -202,197 +216,92 @@ def main():
     extras["pipeline_audio_clips_per_sec"] = round(
         na / timings["pipeline_audio"], 1)
 
-    # NON-headline extra: the audio-prep transform chain (endpoint trim →
-    # utterance split).  Kept OUT of the headline sum so `value` stays
-    # arm-for-arm comparable with BENCH_r01/r02; best-of-2 warm, same
-    # interleave-free protocol is fine because the chain is map-only
-    # (no shuffle to collide with neighbor load)
-    from top_secret_spark.operators.audio import (
-        split_clips_on_silence,
-        trimmed_clips,
-    )
-
-    prep = lambda: split_clips_on_silence(
-        trimmed_clips(aclips), min_gap_ms=200
-    ).count()
-    prep()  # warm the closure
-    prep_times = []
-    for _ in range(2):
-        t0 = time.time()
-        n_segs = prep()
-        prep_times.append(time.time() - t0)
-    extras["audio_prep_sec"] = round(min(prep_times), 3)
-    # divide by the RAW minimum, not the rounded record value — a
-    # sub-millisecond run would round to 0.000 and a few-ms run would
-    # distort the rate by up to ~50%
-    extras["audio_prep_clips_per_sec"] = round(
-        na / max(min(prep_times), 1e-9), 1)
-    extras["audio_prep_segments"] = n_segs
-
-    # NON-headline extra: frequency-domain features (blocked batch FFT)
-    # and the pure-Catalyst time-mask splice over the same audio corpus.
-    # Same best-of-2 warm protocol as audio_prep — both are map-only.
-    from top_secret_spark.operators.audio import (
-        time_masked_clips,
-        with_spectral_features,
-    )
-
-    spec = lambda: with_spectral_features(aclips).agg(
-        F.count(F.when(F.col("spectral_ok"), 1)),
-        F.avg("spectral_flatness"),
-    ).collect()
-    spec()
-    spec_times = []
-    for _ in range(2):
-        t0 = time.time()
-        spec()
-        spec_times.append(time.time() - t0)
-    extras["spectral_sec"] = round(min(spec_times), 3)
-    extras["spectral_clips_per_sec"] = round(na / max(min(spec_times), 1e-9), 1)
-
-    # NON-headline extra: log-mel filterbank extraction — the heaviest
-    # per-clip compute in the suite (FFT + mel matmul per frame); the
-    # agg keeps the matrices on the executors, only frame counts return.
-    from top_secret_spark.operators.audio import with_log_mel
-
-    lmel = lambda: with_log_mel(aclips).agg(
-        F.sum("n_mel_frames"),
-        F.count(F.when(F.col("mel_ok"), 1)),
-    ).collect()
-    lmel()
-    lmel_times = []
-    for _ in range(2):
-        t0 = time.time()
-        lmel()
-        lmel_times.append(time.time() - t0)
-    extras["log_mel_sec"] = round(min(lmel_times), 3)
-    extras["log_mel_clips_per_sec"] = round(
-        na / max(min(lmel_times), 1e-9), 1)
-
-    # NON-headline extra: the fused voice-health stage (pitch + RT60 +
-    # SNR behind ONE decode) — the per-clip speech-triage throughput a
-    # production gate pays.  Same best-of-2 warm protocol; map-only.
-    from top_secret_spark.operators.audio import with_voice_health
-
-    vh = lambda: with_voice_health(aclips).agg(
-        F.count(F.when(F.col("pitch_ok"), 1)),
-        F.avg("rt60_s"),
-        F.avg("snr_est_db"),
-    ).collect()
-    vh()
-    vh_times = []
-    for _ in range(2):
-        t0 = time.time()
-        vh()
-        vh_times.append(time.time() - t0)
-    extras["voice_health_sec"] = round(min(vh_times), 3)
-    extras["voice_health_clips_per_sec"] = round(
-        na / max(min(vh_times), 1e-9), 1)
-
-    mask = lambda: time_masked_clips(aclips, mask_ms=200).agg(
-        F.sum(F.length("bytes"))
-    ).collect()
-    mask()
-    mask_times = []
-    for _ in range(2):
-        t0 = time.time()
-        mask()
-        mask_times.append(time.time() - t0)
-    extras["time_mask_sec"] = round(min(mask_times), 3)
-    extras["time_mask_clips_per_sec"] = round(
-        na / max(min(mask_times), 1e-9), 1)
-
-    # NON-headline extra: codec normalization (transcode to ulaw) over
-    # the same audio corpus, and the top-k bigram vocabulary over the
-    # documents table.  Same best-of-2 warm protocol — transcode is
-    # map-only; vocab's one exchange carries per-mapper term counts.
-    from top_secret_spark.operators.audio import transcode_clips
-    from top_secret_spark.operators.text_analysis import top_terms
-
-    tcode = lambda: transcode_clips(aclips, "ulaw").agg(
-        F.sum(F.length("bytes"))
-    ).collect()
-    tcode()
-    tcode_times = []
-    for _ in range(2):
-        t0 = time.time()
-        tcode()
-        tcode_times.append(time.time() - t0)
-    extras["transcode_sec"] = round(min(tcode_times), 3)
-    extras["transcode_clips_per_sec"] = round(
-        na / max(min(tcode_times), 1e-9), 1)
-
-    vocab = lambda: top_terms(docs, k=100, n=2).count()
-    vocab()
-    vocab_times = []
-    for _ in range(2):
-        t0 = time.time()
-        vocab()
-        vocab_times.append(time.time() - t0)
-    extras["vocab_topk_sec"] = round(min(vocab_times), 3)
-    extras["vocab_docs_per_sec"] = round(
-        docs.count() / max(min(vocab_times), 1e-9), 1)
-
-    # NON-headline extras (round 4): spectral-subtraction denoise (the
-    # heaviest restoration kernel — two blocked FFT passes + OLA) and
-    # fixed-duration example packing (prefix sum + Catalyst slices + the
-    # one groupBy payload shuffle) over the same audio corpus; WAV header
-    # audit at scan speed over container-wrapped rows.  Same best-of-2
-    # warm protocol.
+    # NON-headline extras, kept OUT of the headline sum so `value` stays
+    # arm-for-arm comparable with BENCH_r01/r02: audio prep (endpoint
+    # trim → utterance split), frequency-domain features, log-mel, the
+    # fused voice-health stage, the pure-Catalyst time mask, codec
+    # transcode, the top-k bigram vocabulary over documents, spectral-
+    # subtraction denoise, fixed-duration example packing, and the WAV
+    # header audit over container-wrapped rows.  The aggregates keep the
+    # outputs on the executors.  One row = (record key prefix, call,
+    # rows it covers); see _best_of_2 for the protocol.
     from top_secret_spark.operators.audio import (
         denoised_clips,
         pack_audio_examples,
+        split_clips_on_silence,
+        time_masked_clips,
+        transcode_clips,
+        trimmed_clips,
+        with_log_mel,
+        with_spectral_features,
+        with_voice_health,
         with_wav_header,
     )
-
-    deno = lambda: denoised_clips(aclips).agg(
-        F.sum(F.length("bytes")), F.sum("n_frames_denoised")
-    ).collect()
-    deno()
-    deno_times = []
-    for _ in range(2):
-        t0 = time.time()
-        deno()
-        deno_times.append(time.time() - t0)
-    extras["denoise_sec"] = round(min(deno_times), 3)
-    extras["denoise_clips_per_sec"] = round(
-        na / max(min(deno_times), 1e-9), 1)
+    from top_secret_spark.operators.text_analysis import top_terms
+    from top_secret_spark.sources.clips import wav_clips_df
 
     pcm_clips = aclips.filter(
         (F.col("codec") == "pcm16") & (F.col("sr_hz") == 16000)
     )
-    npc = pcm_clips.count()
-    pack = lambda: pack_audio_examples(
-        pcm_clips, 30_000, codec="pcm16", sr_hz=16000
-    ).agg(
-        F.sum(F.length("bytes")), F.sum("n_clips")
-    ).collect()
-    pack()
-    pack_times = []
-    for _ in range(2):
-        t0 = time.time()
-        pack()
-        pack_times.append(time.time() - t0)
-    extras["pack_audio_sec"] = round(min(pack_times), 3)
-    extras["pack_audio_clips_per_sec"] = round(
-        npc / max(min(pack_times), 1e-9), 1)
-
-    from top_secret_spark.sources.clips import wav_clips_df
-
     wavs = wav_clips_df(spark, na, partitions=cores * 2).cache()
     wavs.count()
-    wav = lambda: with_wav_header(wavs).agg(
-        F.count(F.when(F.col("wav_issue").isNull(), 1)), F.sum("data_len")
-    ).collect()
-    wav()
-    wav_times = []
-    for _ in range(2):
-        t0 = time.time()
-        wav()
-        wav_times.append(time.time() - t0)
-    extras["wav_audit_sec"] = round(min(wav_times), 3)
-    extras["wav_audit_clips_per_sec"] = round(
-        na / max(min(wav_times), 1e-9), 1)
+    secondary = [
+        ("audio_prep",
+         lambda: split_clips_on_silence(
+             trimmed_clips(aclips), min_gap_ms=200).count(),
+         na),
+        ("spectral",
+         lambda: with_spectral_features(aclips).agg(
+             F.count(F.when(F.col("spectral_ok"), 1)),
+             F.avg("spectral_flatness")).collect(),
+         na),
+        ("log_mel",
+         lambda: with_log_mel(aclips).agg(
+             F.sum("n_mel_frames"),
+             F.count(F.when(F.col("mel_ok"), 1))).collect(),
+         na),
+        ("voice_health",
+         lambda: with_voice_health(aclips).agg(
+             F.count(F.when(F.col("pitch_ok"), 1)),
+             F.avg("rt60_s"), F.avg("snr_est_db")).collect(),
+         na),
+        ("time_mask",
+         lambda: time_masked_clips(aclips, mask_ms=200).agg(
+             F.sum(F.length("bytes"))).collect(),
+         na),
+        ("transcode",
+         lambda: transcode_clips(aclips, "ulaw").agg(
+             F.sum(F.length("bytes"))).collect(),
+         na),
+        ("vocab_topk", lambda: top_terms(docs, k=100, n=2).count(),
+         docs.count()),
+        ("denoise",
+         lambda: denoised_clips(aclips).agg(
+             F.sum(F.length("bytes")), F.sum("n_frames_denoised")).collect(),
+         na),
+        ("pack_audio",
+         lambda: pack_audio_examples(
+             pcm_clips, 30_000, codec="pcm16", sr_hz=16000).agg(
+             F.sum(F.length("bytes")), F.sum("n_clips")).collect(),
+         pcm_clips.count()),
+        ("wav_audit",
+         lambda: with_wav_header(wavs).agg(
+             F.count(F.when(F.col("wav_issue").isNull(), 1)),
+             F.sum("data_len")).collect(),
+         na),
+    ]
+    # the vocabulary arm's rate counts documents, every other one clips
+    rate_keys = {"vocab_topk": "vocab_docs_per_sec"}
+    for name, fn, n_rows in secondary:
+        sec, out = _best_of_2(fn)
+        extras[f"{name}_sec"] = round(sec, 3)
+        # divide by the RAW minimum, not the rounded record value — a
+        # sub-millisecond run would round to 0.000 and a few-ms run
+        # would distort the rate by up to ~50%
+        extras[rate_keys.get(name, f"{name}_clips_per_sec")] = round(
+            n_rows / max(sec, 1e-9), 1)
+        if name == "audio_prep":
+            extras["audio_prep_segments"] = out
     wavs.unpersist()
 
     # untimed stats pass: candidate-pair volume is THE cost driver at web

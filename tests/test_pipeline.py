@@ -3,6 +3,8 @@ comparing the Spark pipeline's keep/drop + scrubbed output clip-by-clip
 against reference labels computed by the kernel oracle, plus
 partitioning-invariance checks."""
 
+import itertools
+
 import numpy as np
 import pytest
 
@@ -373,31 +375,48 @@ def test_quality_rule_audit_cofiring_and_column_gating(spark):
     assert sum(n for _, n in got.values()) == 3
 
 
-def test_multimodal_fused_single_crossing_equivalence(spark):
-    """include_audio must take the one-Arrow-crossing stage and
-    produce row-for-row identical output (by column NAME — the stage
-    emits fused fields after the audio features) to the legacy
-    two-crossing layout (decode mapInPandas + text pandas_udf),
-    including the folded audio gate."""
-    from top_secret_spark.operators.audio import AudioGateThresholds
-    from top_secret_spark.operators.fused import run_pipeline_fused
-    from top_secret_spark.operators.audio import with_audio_features
+def _with_entities(clips):
+    """Add an injected-entities column derived from each transcript: a
+    NULL, an empty or a one-entity (the second word, tagged PERSON, at a
+    score above or below the confidence cut) array, by clip."""
+    from pyspark.sql import functions as F
 
-    clips = clips_df(spark, 150, with_audio=True)
-    gate = AudioGateThresholds()
-    cfg = PipelineConfig(include_audio=True, audio_gate=gate)
-    one = run_pipeline(clips, cfg).orderBy("clip_id").collect()
-
-    # legacy two-crossing path, assembled explicitly
-    from top_secret_spark.pipeline import _fold_audio_gate
-    from top_secret_spark.operators.audio import audio_drop_reason_col
-    df = with_audio_features(clips)
-    reason = audio_drop_reason_col(gate)
-    df = df.withColumn("audio_drop_reason", reason).withColumn(
-        "audio_keep", reason.isNull()
+    entity = F.struct(
+        F.try_element_at(F.split("transcript", " "), F.lit(2)).alias("text"),
+        F.lit("PERSON").alias("tag"),
+        F.when(F.pmod(F.xxhash64("transcript"), F.lit(2)) == 0, F.lit(0.9))
+        .otherwise(F.lit(0.3)).alias("score"),
     )
-    two = _fold_audio_gate(run_pipeline_fused(df)).orderBy("clip_id").collect()
+    pick = F.pmod(F.xxhash64("clip_id"), F.lit(3))
+    return clips.withColumn(
+        "entities",
+        F.when(pick == 1, F.array(entity))
+        .when(pick == 2, F.array().cast(
+            "array<struct<text:string,tag:string,score:double>>")),
+    )
 
+
+def _two_stage(clips, gate=None, entities_col=None):
+    """The two-crossing layout, assembled explicitly: decode mapInPandas,
+    the Catalyst audio gate, then the text pandas_udf and the fold."""
+    from top_secret_spark.operators.audio import (
+        audio_drop_reason_col,
+        with_audio_features,
+    )
+    from top_secret_spark.operators.fused import run_pipeline_fused
+    from top_secret_spark.pipeline import _fold_audio_gate
+
+    df = with_audio_features(clips)
+    if gate is not None:
+        reason = audio_drop_reason_col(gate)
+        df = df.withColumn("audio_drop_reason", reason).withColumn(
+            "audio_keep", reason.isNull()
+        )
+    out = run_pipeline_fused(df, entities_col=entities_col)
+    return out if gate is None else _fold_audio_gate(out)
+
+
+def _assert_same_rows_by_name(one, two):
     assert len(one) == len(two) > 0
     cols = sorted(one[0].asDict())
     assert cols == sorted(two[0].asDict())
@@ -407,19 +426,76 @@ def test_multimodal_fused_single_crossing_equivalence(spark):
             assert da[c] == db[c], (da["clip_id"], c, da[c], db[c])
 
 
-def test_multimodal_fused_plan_single_python_stage(spark):
-    """The multimodal pipeline's plan must contain exactly ONE Python
-    boundary (the fused MapInPandas) and no Exchange."""
+def test_multimodal_fused_single_crossing_equivalence(spark):
+    """include_audio must take the one-Arrow-crossing stage and
+    produce row-for-row identical output (by column NAME — the stage
+    emits fused fields after the audio features) to the legacy
+    two-crossing layout (decode mapInPandas + text pandas_udf),
+    including the folded audio gate."""
+    from top_secret_spark.operators.audio import AudioGateThresholds
+
+    clips = clips_df(spark, 150, with_audio=True)
+    gate = AudioGateThresholds()
+    cfg = PipelineConfig(include_audio=True, audio_gate=gate)
+    one = run_pipeline(clips, cfg).orderBy("clip_id").collect()
+    two = _two_stage(clips, gate).orderBy("clip_id").collect()
+    _assert_same_rows_by_name(one, two)
+
+
+@pytest.mark.parametrize("gated", [False, True], ids=["nogate", "gate"])
+def test_multimodal_entities_single_crossing_equivalence(spark, gated):
+    """Audio + injected entities runs through the same one-crossing
+    stage, which reads the entities column from the mapInPandas batch;
+    its output equals the two-crossing composition by column name, and
+    the injected entities actually scrub."""
+    from top_secret_spark.operators.audio import AudioGateThresholds
+
+    clips = _with_entities(clips_df(spark, 150, with_audio=True))
+    gate = AudioGateThresholds() if gated else None
+    cfg = PipelineConfig(
+        include_audio=True, entities_col="entities", audio_gate=gate
+    )
+    one = run_pipeline(clips, cfg).orderBy("clip_id").collect()
+    two = _two_stage(clips, gate, "entities").orderBy("clip_id").collect()
+    _assert_same_rows_by_name(one, two)
+    assert any(
+        e["key"].startswith("PERSON_")
+        for r in one for e in (r["mapping"] or [])
+    )
+
+
+_CONFIGS = list(itertools.product([False, True], repeat=3))
+
+
+@pytest.mark.parametrize(
+    "include_audio,entities,gated", _CONFIGS,
+    ids=["-".join(n for n, on in zip(("audio", "entities", "gate"), c) if on)
+         or "text" for c in _CONFIGS],
+)
+def test_multimodal_fused_plan_single_python_stage(
+    spark, include_audio, entities, gated
+):
+    """Every pipeline config's plan contains exactly ONE Python
+    boundary (MapInPandas with audio, ArrowEvalPython without) and no
+    Exchange."""
+    from top_secret_spark.operators.audio import AudioGateThresholds
+
     # localCheckpoint cuts the generator's own MapInPandas out of the
     # measured plan — only the pipeline's boundary should remain
-    clips = clips_df(spark, 10, with_audio=True).localCheckpoint(eager=True)
-    plan = (
-        run_pipeline(clips, PipelineConfig(include_audio=True))
-        ._jdf.queryExecution().executedPlan().toString()
+    clips = clips_df(spark, 10, with_audio=include_audio)
+    if entities:
+        clips = _with_entities(clips)
+    clips = clips.localCheckpoint(eager=True)
+    cfg = PipelineConfig(
+        include_audio=include_audio,
+        entities_col="entities" if entities else None,
+        audio_gate=AudioGateThresholds() if gated else None,
     )
+    plan = run_pipeline(clips, cfg)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     n_python = plan.count("MapInPandas") + plan.count("ArrowEvalPython")
     assert n_python == 1, plan
+    assert ("MapInPandas" in plan) == include_audio, plan
 
 
 def test_lang_consistency_col(spark):

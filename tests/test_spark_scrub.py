@@ -224,11 +224,12 @@ def test_pseudonym_secret_changes_mapping_and_is_required(spark):
 
 def test_udfs_are_built_per_call(spark, monkeypatch):
     """with_text_features and with_restore build a fresh UDF on every
-    call: pyspark binds a UDF's JVM function to the first SparkContext
-    that runs it, so a reused UDF object would report to a stopped
-    context on a later one.  The module-level restore_udf is never bound."""
+    call (through the seam's struct_udf): pyspark binds a UDF's JVM
+    function to the first SparkContext that runs it, so a reused UDF
+    object would report to a stopped context on a later one.  The
+    module-level restore_udf is never bound."""
     from top_secret_spark.kernel.quality import top_bigram_frac
-    from top_secret_spark.operators import features, scrub
+    from top_secret_spark.operators import scrub, seam
     from top_secret_spark.operators.features import with_text_features
 
     made = []
@@ -239,8 +240,7 @@ def test_udfs_are_built_per_call(spark, monkeypatch):
             return made[-1]
         return build
 
-    monkeypatch.setattr(features, "pandas_udf", recording(features.pandas_udf))
-    monkeypatch.setattr(scrub, "pandas_udf", recording(scrub.pandas_udf))
+    monkeypatch.setattr(seam, "pandas_udf", recording(seam.pandas_udf))
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(TEXTS)], ["clip_id", "transcript"]
     )

@@ -28,11 +28,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..kernel.filters import DEFAULT_CONFIG, ScrubConfig
 from ..kernel.scrub import substitute_text
-from .scrub import MAPPING_TYPE, with_scrub
+from .scrub import MAPPING_TYPE, mapping_rows, with_scrub
+from .seam import with_struct_udf
 
 _PLACEHOLDER_RE = re.compile(r"\[([^\]]+)\]")
 
@@ -86,13 +86,11 @@ GLOBAL_ITEM_TYPE = T.StructType(
 )
 
 
-def _make_global_substitute_udf(global_entries: list[tuple[str, str]]):
-    """Stage C UDF: re-substitute originals with the broadcast global map
-    (result.rb:47-59).  global_entries is the global mapping in insertion
-    order (first-seen order)."""
-    key_set = {k for k, _ in global_entries}
+def _global_substitute(global_entries: list[tuple[str, str]]):
+    """Stage C batch function: re-substitute originals with the broadcast
+    global map (result.rb:47-59).  global_entries is the global mapping
+    in insertion order (first-seen order)."""
 
-    @pandas_udf(GLOBAL_ITEM_TYPE)
     def substitute(texts: pd.Series) -> pd.DataFrame:
         outs, maps = [], []
         for text in texts.tolist():
@@ -102,13 +100,10 @@ def _make_global_substitute_udf(global_entries: list[tuple[str, str]]):
                 continue
             output = substitute_text(text, global_entries)
             found = set(_PLACEHOLDER_RE.findall(output))
-            item = [
-                {"key": k, "value": v}
-                for k, v in global_entries
-                if k in found and k in key_set
-            ]
             outs.append(output)
-            maps.append(item)
+            maps.append(
+                mapping_rows((k, v) for k, v in global_entries if k in found)
+            )
         return pd.DataFrame({"output": outs, "mapping": maps})
 
     return substitute
@@ -152,15 +147,8 @@ def batch_scrub(
         )
     global_entries = [(r["global_key"], r["value"]) for r in rows]
 
-    sub = _make_global_substitute_udf(global_entries)
-    items = df.select(
-        F.col(order_col),
-        F.col(text_col).alias("input"),
-        sub(F.col(text_col)).alias("_g"),
-    ).select(
-        order_col,
-        "input",
-        F.col("_g.output").alias("output"),
-        F.col("_g.mapping").alias("mapping"),
+    items = with_struct_udf(
+        df.select(order_col, F.col(text_col).alias("input")),
+        _global_substitute(global_entries), GLOBAL_ITEM_TYPE, ["input"],
     )
     return items, global_entries

@@ -14,9 +14,9 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from .seam import with_struct_udf
 
 FEATURES_TYPE = T.StructType(
     [
@@ -49,21 +49,5 @@ def with_text_features(df: DataFrame, text_col: str = "transcript") -> DataFrame
 
     top_bigram_frac rides along here (rather than Catalyst) because
     computing an array mode with higher-order functions is O(n²) per row;
-    a batch count inside the already-paid Python stage is O(n log n).
-
-    The UDF is built per call: pyspark binds a UDF's JVM function to the
-    SparkContext that first runs it, so a module-level UDF would report
-    to a stopped context's accumulator server on a later one."""
-    udf = pandas_udf(text_features, FEATURES_TYPE)
-    return (
-        df.withColumn("_feat", udf(F.col(text_col)))
-        .withColumns(
-            {
-                "lang": F.col("_feat.lang"),
-                "lang_conf": F.col("_feat.lang_conf"),
-                "ppl": F.col("_feat.ppl"),
-                "top_bigram_frac": F.col("_feat.top_bigram_frac"),
-            }
-        )
-        .drop("_feat")
-    )
+    a batch count inside the already-paid Python stage is O(n log n)."""
+    return with_struct_udf(df, text_features, FEATURES_TYPE, [text_col])

@@ -14,24 +14,30 @@ test, and scrubs only rows that pass keep/drop:
 
 Semantics are identical to the composed modular operators by
 construction (both call the kernel; the kernel is pinned by the golden
-corpus + DuckDB oracles).  ``run_pipeline`` runs only this stage;
-tests/test_pipeline.py assembles the modular composition as its
-reference.  At cluster scale the fused stage halves Python-boundary
-traffic and leaves the plan scan → one ArrowEvalPython → project, still
-fully pushdown/pruning-friendly on the input side.
+corpus + DuckDB oracles); tests/test_pipeline.py assembles the modular
+composition as its reference.
+
+The stage has two forms, one batch function.  ``run_pipeline_fused``
+is one scalar ``pandas_udf``: the plan is scan → one ArrowEvalPython →
+project and only the transcript (plus the entities column, when
+injected) crosses, so the scan still prunes.
+``run_pipeline_fused_multimodal`` runs audio decode and the same text
+batch function inside one ``mapInPandas``.  ``run_pipeline`` picks the
+text form for text configs and the multimodal form for every audio
+config, with or without injected entities: one Python crossing per
+config.
 """
 
 from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..kernel.filters import DEFAULT_CONFIG, ScrubConfig
 from ..kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
-from .scrub import MAPPING_TYPE
+from .scrub import MAPPING_TYPE, entity_lists, mapping_rows
+from .seam import map_batches, with_struct_udf
 
 FUSED_TYPE = T.StructType(
     [
@@ -55,44 +61,23 @@ FUSED_TYPE = T.StructType(
 FUSED_FIELDS = [f.name for f in FUSED_TYPE.fields]
 
 
-def make_fused_udf(
-    scrub_config: ScrubConfig = DEFAULT_CONFIG,
-    thresholds: QualityThresholds = DEFAULT_THRESHOLDS,
-    scrub_dropped: bool = False,
-    counters=None,
-    with_entities: bool = False,
+def _fused_frame(
+    scrub_config: ScrubConfig,
+    thresholds: QualityThresholds,
+    scrub_dropped: bool,
+    counters,
 ):
+    """The stage's batch function ``(texts[, entities]) → FUSED_FIELDS``,
+    shared by the text stage and the multimodal stage."""
     scrub_config.all_filters()  # plan-time label validation (op 9)
 
-    def _run(texts: pd.Series, ents: list | None) -> pd.DataFrame:
+    def run(texts: pd.Series, entities: pd.Series | None = None) -> pd.DataFrame:
         return fused_text_frame(
-            texts, ents, scrub_config, thresholds, scrub_dropped, counters
+            texts, entity_lists(entities), scrub_config, thresholds,
+            scrub_dropped, counters,
         )
 
-    if with_entities:
-
-        @pandas_udf(FUSED_TYPE)
-        def fused_with_entities(
-            texts: pd.Series, entities: pd.Series
-        ) -> pd.DataFrame:
-            ents = [
-                None
-                if e is None
-                else [
-                    {"text": x["text"], "tag": x["tag"], "score": x["score"]}
-                    for x in e
-                ]
-                for e in entities.tolist()
-            ]
-            return _run(texts, ents)
-
-        return fused_with_entities
-
-    @pandas_udf(FUSED_TYPE)
-    def fused(texts: pd.Series) -> pd.DataFrame:
-        return _run(texts, None)
-
-    return fused
+    return run
 
 
 def fused_text_frame(
@@ -181,9 +166,7 @@ def fused_text_frame(
     )
     for j, i in enumerate(to_scrub):
         rows["scrubbed"][i] = outputs[j]
-        rows["mapping"][i] = [
-            {"key": k, "value": v} for k, v in mappings[j]
-        ]
+        rows["mapping"][i] = mapping_rows(mappings[j])
     if counters is not None:
         counters.rows_in.add(n)
         counters.rows_kept.add(int(keep_v.sum()))
@@ -200,16 +183,17 @@ def run_pipeline_fused(
     counters=None,
     entities_col: str | None = None,
 ) -> DataFrame:
-    udf = make_fused_udf(
-        scrub_config, thresholds, scrub_dropped, counters,
-        with_entities=entities_col is not None,
+    """The text pipeline as one scalar ``pandas_udf`` (one
+    ArrowEvalPython node): only ``text_col`` — and ``entities_col``
+    when set — crosses the boundary, so the scan still prunes every
+    other column.  Appends ``FUSED_FIELDS``."""
+    args = [text_col] if entities_col is None else [text_col, entities_col]
+    return with_struct_udf(
+        clips,
+        _fused_frame(scrub_config, thresholds, scrub_dropped, counters),
+        FUSED_TYPE,
+        args,
     )
-    args = (F.col(text_col),) if entities_col is None else (
-        F.col(text_col), F.col(entities_col))
-    df = clips.withColumn("_f", udf(*args))
-    return df.withColumns(
-        {name: F.col(f"_f.{name}") for name in FUSED_FIELDS}
-    ).drop("_f")
 
 
 def run_pipeline_fused_multimodal(
@@ -219,36 +203,34 @@ def run_pipeline_fused_multimodal(
     scrub_dropped: bool = False,
     text_col: str = "transcript",
     counters=None,
+    entities_col: str | None = None,
 ) -> DataFrame:
     """The audio+text pipeline in ONE Arrow crossing: decode → segmented
     audio features → fused text kernel, all inside a single mapInPandas,
-    so the transcript column crosses the JVM↔Python boundary once
-    instead of riding a decode crossing AND a text crossing (the
-    two-stage layout pays a second worker round-trip plus an Arrow
-    ser/deser of every non-audio column per batch).  Calls EXACTLY the
-    same batch cores as the two-crossing path
-    (``set_audio_feature_columns``, ``fused_text_frame``), so
-    semantics are identical by construction — equivalence pytest-gated.
+    so the transcript (and every carried column) crosses the JVM↔Python
+    boundary once.  The batch function reads ``entities_col``, when set,
+    from the same batch.  It calls the same batch cores as
+    ``with_audio_features`` followed by ``run_pipeline_fused``
+    (``set_audio_feature_columns``, ``fused_text_frame``), so the output
+    equals that composition by column name — equivalence pytest-gated.
 
     The plan stays scan → one MapInPandas → project: pushdown/pruning
     still reach the scan, and nothing downstream changes (the audio
     gate and keep/drop fold are Catalyst expressions over the emitted
     columns).  ``bytes`` is consumed and not emitted, as in
     ``with_audio_features``."""
-    scrub_config.all_filters()  # plan-time label validation (op 9)
     from .audio import _FEATURES_SCHEMA_SUFFIX, set_audio_feature_columns
-    from .seam import map_batches
+
+    text = _fused_frame(scrub_config, thresholds, scrub_dropped, counters)
+    cols = [text_col] if entities_col is None else [text_col, entities_col]
 
     def run(pdf):
         out = set_audio_feature_columns(pdf)
-        text = fused_text_frame(
-            out[text_col], None, scrub_config, thresholds,
-            scrub_dropped, counters,
-        )
+        frame = text(*(out[c] for c in cols))
         for name in FUSED_FIELDS:
             # .values sidesteps index alignment: both frames are
             # positionally parallel over the same Arrow batch
-            out[name] = text[name].values
+            out[name] = frame[name].values
         return out
 
     emits = T.StructType(

@@ -24,6 +24,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernel.filters import DEFAULT_CONFIG, ScrubConfig
 from ..kernel.scrub import restore_text, scrub_batch
+from .seam import struct_udf, with_struct_udf
 
 MAPPING_TYPE = T.ArrayType(
     T.StructType(
@@ -50,50 +51,51 @@ RESTORE_RESULT_TYPE = T.StructType(
 )
 
 
-def _mapping_to_rows(mapping):
-    return [{"key": k, "value": v} for k, v in mapping]
+def mapping_rows(pairs) -> list[dict]:
+    """Ordered (key, value) pairs → one ``MAPPING_TYPE`` value."""
+    return [{"key": k, "value": v} for k, v in pairs]
+
+
+def entity_lists(entities: pd.Series | None) -> list | None:
+    """One batch of a pre-extracted entities column
+    (array<struct<text,tag,score>>) → the per-row entity dict lists
+    ``scrub_batch`` takes; a NULL row stays None, and so does a missing
+    column.  This is the engine's equivalent of the reference's injected
+    Mitie entities (spec/spec_helper.rb:26-31)."""
+    if entities is None:
+        return None
+    return [
+        None
+        if e is None
+        else [{"text": x["text"], "tag": x["tag"], "score": x["score"]} for x in e]
+        for e in entities.tolist()
+    ]
+
+
+def _scrub_frame(config: ScrubConfig):
+    """Batch function ``(texts[, entities]) → (scrubbed, mapping)``."""
+    config.all_filters()  # validate labels at PLAN time (op 9 — driver-side)
+
+    def scrub(texts: pd.Series, entities: pd.Series | None = None) -> pd.DataFrame:
+        outputs, mappings = scrub_batch(
+            texts.tolist(), entity_lists(entities), config
+        )
+        return pd.DataFrame(
+            {"scrubbed": outputs, "mapping": [mapping_rows(m) for m in mappings]}
+        )
+
+    return scrub
 
 
 def make_scrub_udf(config: ScrubConfig = DEFAULT_CONFIG):
-    """Scalar pandas UDF: transcript → struct(scrubbed, mapping).
+    """Scalar pandas UDF: transcript[, entities] → struct(scrubbed,
+    mapping).  The optional second column is a pre-extracted entities
+    column (see :func:`entity_lists`).
 
     The compiled filter plan is cached per (Python worker, config) via the
     kernel's lru_cache — the executor-local-singleton pattern the
     reference uses for its model cache (text.rb:21-33)."""
-    config.all_filters()  # validate labels at PLAN time (op 9 — driver-side)
-
-    @pandas_udf(SCRUB_RESULT_TYPE)
-    def scrub(texts: pd.Series) -> pd.DataFrame:
-        outputs, mappings = scrub_batch(texts.tolist(), None, config)
-        return pd.DataFrame(
-            {"scrubbed": outputs, "mapping": [_mapping_to_rows(m) for m in mappings]}
-        )
-
-    return scrub
-
-
-def make_scrub_with_entities_udf(config: ScrubConfig = DEFAULT_CONFIG):
-    """Like make_scrub_udf but consuming a pre-extracted entities column
-    (array<struct<text,tag,score>>) — the engine's equivalent of the
-    reference's injected Mitie entities (spec/spec_helper.rb:26-31)."""
-    config.all_filters()  # validate labels at PLAN time (op 9 — driver-side)
-
-    @pandas_udf(SCRUB_RESULT_TYPE)
-    def scrub(texts: pd.Series, entities: pd.Series) -> pd.DataFrame:
-        ents = [
-            None
-            if e is None
-            else [
-                {"text": x["text"], "tag": x["tag"], "score": x["score"]} for x in e
-            ]
-            for e in entities.tolist()
-        ]
-        outputs, mappings = scrub_batch(texts.tolist(), ents, config)
-        return pd.DataFrame(
-            {"scrubbed": outputs, "mapping": [_mapping_to_rows(m) for m in mappings]}
-        )
-
-    return scrub
+    return struct_udf(_scrub_frame(config), SCRUB_RESULT_TYPE)
 
 
 def make_scan_udf(config: ScrubConfig = DEFAULT_CONFIG):
@@ -103,7 +105,7 @@ def make_scan_udf(config: ScrubConfig = DEFAULT_CONFIG):
     @pandas_udf(MAPPING_TYPE)
     def scan(texts: pd.Series) -> pd.Series:
         _, mappings = scrub_batch(texts.tolist(), None, config)
-        return pd.Series([_mapping_to_rows(m) for m in mappings])
+        return pd.Series([mapping_rows(m) for m in mappings])
 
     return scan
 
@@ -137,15 +139,11 @@ def with_scrub(
     mapping_col: str = "mapping",
 ) -> DataFrame:
     """Add scrubbed-text + mapping columns (op 13, text.rb:165-171)."""
-    if entities_col is not None:
-        udf = make_scrub_with_entities_udf(config)
-        res = udf(F.col(text_col), F.col(entities_col))
-    else:
-        udf = make_scrub_udf(config)
-        res = udf(F.col(text_col))
-    return df.withColumn("_scrub", res).withColumns(
-        {output_col: F.col("_scrub.scrubbed"), mapping_col: F.col("_scrub.mapping")}
-    ).drop("_scrub")
+    args = [text_col] if entities_col is None else [text_col, entities_col]
+    return with_struct_udf(
+        df, _scrub_frame(config), SCRUB_RESULT_TYPE, args,
+        names={"scrubbed": output_col, "mapping": mapping_col},
+    )
 
 
 def with_restore(
@@ -153,21 +151,12 @@ def with_restore(
     text_col: str = "scrubbed",
     mapping_col: str = "mapping",
 ) -> DataFrame:
-    """Add restored/unrestored columns (op 19).
-
-    Wraps ``restore_udf.func`` in a fresh UDF per call: pyspark binds a
-    UDF's JVM function to the SparkContext that first runs it, so
-    calling the module-level ``restore_udf`` on a later context would
-    report to a stopped context's accumulator server."""
-    udf = pandas_udf(restore_udf.func, RESTORE_RESULT_TYPE)
-    res = udf(F.col(text_col), F.col(mapping_col))
-    return df.withColumn("_restore", res).withColumns(
-        {
-            "restored_text": F.col("_restore.output"),
-            "unrestored": F.col("_restore.unrestored"),
-            "restored": F.col("_restore.restored"),
-        }
-    ).drop("_restore")
+    """Add restored/unrestored columns (op 19)."""
+    return with_struct_udf(
+        df, restore_udf.func, RESTORE_RESULT_TYPE, [text_col, mapping_col],
+        names={"output": "restored_text", "unrestored": "unrestored",
+               "restored": "restored"},
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -6,15 +6,21 @@ columns are appended, all computed by numpy kernels over one Arrow
 batch at a time.  :func:`map_batches` writes that shape once: the
 output schema, the collision check and the per-batch loop.  Operators
 supply only the batch function.
+
+Operators that read one or two columns and return a struct go through
+:func:`with_struct_udf` instead: a scalar ``pandas_udf`` sends only its
+argument columns across, not the whole row.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable
+from typing import Callable, Iterable, Mapping
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 
 def map_batches(
@@ -62,3 +68,48 @@ def map_batches(
             yield out
 
     return df.mapInPandas(run, schema=schema)
+
+
+def struct_udf(fn: Callable[..., pd.DataFrame], returns: T.StructType):
+    """A fresh scalar ``pandas_udf`` over ``fn(*series) -> DataFrame``.
+
+    Build one per plan, never at import: pyspark binds a UDF's JVM
+    function to the SparkContext that first runs it, so a reused UDF
+    object would report to a stopped context's accumulator server on a
+    later one.  ``.func(*series)`` runs ``fn`` without Spark."""
+
+    def run(*cols: pd.Series) -> pd.DataFrame:
+        return fn(*cols)
+
+    return pandas_udf(run, returns)
+
+
+def with_struct_udf(
+    df: DataFrame,
+    fn: Callable[..., pd.DataFrame],
+    returns: T.StructType,
+    args: Iterable[str | Column],
+    names: Mapping[str, str] | None = None,
+) -> DataFrame:
+    """The column-UDF twin of :func:`map_batches`: one scalar
+    ``pandas_udf`` (one ArrowEvalPython node) over ``args``, whose
+    ``returns`` struct fields become top-level columns.  Only ``args``
+    cross the boundary, so scan column pruning still applies.
+
+    ``names`` maps struct field → output column (default: every field
+    under its own name).  An output name that is already an input
+    column is replaced in place; new names are appended.  The struct
+    itself lands in a temporary column named so that it cannot overwrite
+    any input column, and is dropped again."""
+    names = names or {f: f for f in returns.fieldNames()}
+    taken = {c.lower() for c in [*df.columns, *names.values()]}
+    tmp = "_struct"
+    while tmp in taken:
+        tmp = "_" + tmp
+    return (
+        df.withColumn(tmp, struct_udf(fn, returns)(*args))
+        .withColumns(
+            {out: F.col(f"{tmp}.{field}") for field, out in names.items()}
+        )
+        .drop(tmp)
+    )

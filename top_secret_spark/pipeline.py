@@ -1,14 +1,14 @@
 """The end-to-end quality-filter + PII-scrub pipeline.
 
-clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript)
-  → [optional] audio decode-validate + features   (mapInPandas, numpy)
-  → quality signals + langid + perplexity
-    + keep/drop + PII scrub of kept transcripts   (one fused Arrow stage,
-                                                   operators/fused.py)
+clips(clip_id, bytes, sr_hz, dur_ms, codec, transcript[, entities])
+  → [optional] audio decode-validate + features   ┐ ONE Python crossing
+  → quality signals + langid + perplexity         │ (operators/fused.py):
+    + keep/drop + PII scrub of kept transcripts   ┘ mapInPandas with audio,
+                                                    one pandas_udf without
   → [optional] audio gate folded into keep/drop   (Catalyst when-chain)
 
-With audio and no injected entities, decode and the text stage share
-one ``mapInPandas`` crossing.
+Every config, with or without audio or injected entities, runs as
+exactly one Python crossing.
 
 The whole pipeline is map-only: zero shuffles, zero driver collects —
 embarrassingly parallel, which is what makes the N→4N scaling-efficiency
@@ -27,11 +27,7 @@ from pyspark.sql import functions as F
 
 from .kernel.filters import NORTH_STAR_CONFIG, ScrubConfig
 from .kernel.quality import DEFAULT_THRESHOLDS, QualityThresholds
-from .operators.audio import (
-    AudioGateThresholds,
-    _with_audio_reason,
-    with_audio_features,
-)
+from .operators.audio import AudioGateThresholds, _with_audio_reason
 from .operators.fused import run_pipeline_fused, run_pipeline_fused_multimodal
 
 
@@ -124,31 +120,17 @@ def run_pipeline(
 ) -> DataFrame:
     """clips → clips + (quality signals, lang, lang_conf, ppl, keep,
     drop_reason, scrubbed, mapping)."""
-    gate = config.audio_gate if config.include_audio else None
-    if config.include_audio and config.entities_col is None:
-        # single-crossing multimodal stage: decode + audio features +
-        # the full text kernel in ONE mapInPandas — the transcript (and
-        # every carried column) pays one Arrow round-trip, not two.
-        # Semantics identical to the two-stage path below (same batch
-        # cores; equivalence pytest-gated).  The entities-injected
-        # variant keeps the two-stage layout: struct columns arrive
-        # differently under mapInPandas and that path is rare.
-        out = run_pipeline_fused_multimodal(
-            clips, config.scrub, config.thresholds, config.scrub_dropped
-        )
-        if gate is not None:
-            out = _with_audio_reason(out, gate)
-    else:
-        df = clips
-        if config.include_audio:
-            df = with_audio_features(df)
-            if gate is not None:
-                df = _with_audio_reason(df, gate)
-        out = run_pipeline_fused(
-            df, config.scrub, config.thresholds, config.scrub_dropped,
-            entities_col=config.entities_col,
-        )
-    return out if gate is None else _fold_audio_gate(out)
+    stage = (
+        run_pipeline_fused_multimodal if config.include_audio
+        else run_pipeline_fused
+    )
+    out = stage(
+        clips, config.scrub, config.thresholds, config.scrub_dropped,
+        entities_col=config.entities_col,
+    )
+    if config.include_audio and config.audio_gate is not None:
+        out = _fold_audio_gate(_with_audio_reason(out, config.audio_gate))
+    return out
 
 
 def _fold_audio_gate(out: DataFrame) -> DataFrame:

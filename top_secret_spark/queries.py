@@ -7268,11 +7268,6 @@ QUERIES = {
     "q57_speed_perturb": (q_speed_perturb, Q_SPEED_PERTURB_SQL),
     "q58_dedup_spans": (q_dedup_spans, Q_DEDUP_SPANS_SQL),
     "q59_spectral_gate": (q_spectral_gate, Q_SPECTRAL_GATE_SQL),
-    "q60_temperature_rebalance": (
-        q_temperature_rebalance,
-        Q_TEMPERATURE_REBALANCE_SQL,
-    ),
-    "q63_time_mask": (q_time_mask, Q_TIME_MASK_SQL),
     "q64_noise_mix": (q_noise_mix, Q_NOISE_MIX_SQL),
     "q65_merge_segments": (q_merge_segments, Q_MERGE_SEGMENTS_SQL),
     "q66_transcode": (q_transcode, Q_TRANSCODE_SQL),
@@ -7282,9 +7277,6 @@ QUERIES = {
     "q72_repetition_signals": (q_repetition_signals, Q_REPETITION_SQL),
     "q73_snr_estimate": (q_snr_estimate, Q_SNR_ESTIMATE_SQL),
     "q74_webdataset_manifest": (q_webdataset_manifest, Q_WEBDATASET_SQL),
-    "q75_budget_select": (q_budget_select, Q_BUDGET_SELECT_SQL),
-    "q78_repeat_epochs": (q_repeat_epochs, Q_REPEAT_EPOCHS_SQL),
-    "q79_cap_per_key": (q_cap_per_key, Q_CAP_PER_KEY_SQL),
     "q84_bandwidth_gate": (q_bandwidth_gate, Q_BANDWIDTH_SQL),
     "q101_wav_unwrap": (q_wav_unwrap, Q_WAV_UNWRAP_SQL),
     "q102_bloom_decontaminate": (q_bloom_decontaminate, Q_BLOOM_DECONTAMINATE_SQL),
@@ -7307,12 +7299,30 @@ QUERIES = {
     # front went batch-wise; it took q130's slot (pure Catalyst md5,
     # green in every recorded run so far, see CORRECTNESS_r05.json)
     "q15_perplexity_planted": (q_perplexity_planted, Q_PERPLEXITY_SQL),
+    # direct oracles of the single-crossing pipeline and the struct-UDF
+    # seam (restore, keep/drop, NER scrub via with_scrub, the streaming
+    # audio gate via run_pipeline); they took the slots of five
+    # pure-Catalyst sampling/masking queries (q60, q63, q75, q78, q79)
+    "q04_restore_roundtrip": (q_restore_roundtrip, Q_RESTORE_ROUNDTRIP_SQL),
+    "q07_keep_drop": (q_keep_drop, Q_KEEP_DROP_SQL),
+    "q23_ner_scrub": (q_ner_scrub, Q_NER_SCRUB_SQL),
+    "q33_ner_model_scrub": (q_ner_model_scrub, Q_NER_MODEL_SCRUB_SQL),
+    "q95_streaming_audio_gate": (
+        q_streaming_audio_gate,
+        Q_STREAMING_AUDIO_GATE_SQL,
+    ),
     # --- displaced to local-only gating (identical protocol) ---
+    "q60_temperature_rebalance": (
+        q_temperature_rebalance,
+        Q_TEMPERATURE_REBALANCE_SQL,
+    ),
+    "q63_time_mask": (q_time_mask, Q_TIME_MASK_SQL),
+    "q75_budget_select": (q_budget_select, Q_BUDGET_SELECT_SQL),
+    "q78_repeat_epochs": (q_repeat_epochs, Q_REPEAT_EPOCHS_SQL),
+    "q79_cap_per_key": (q_cap_per_key, Q_CAP_PER_KEY_SQL),
     "q01_email_extract": (q_email_extract, Q_EMAIL_EXTRACT_SQL),
     "q02_category_extract_counts": (q_category_extract_counts, Q_CATEGORY_EXTRACT_SQL),
-    "q04_restore_roundtrip": (q_restore_roundtrip, Q_RESTORE_ROUNDTRIP_SQL),
     "q05_categories_present": (q_categories_present, Q_CATEGORIES_PRESENT_SQL),
-    "q07_keep_drop": (q_keep_drop, Q_KEEP_DROP_SQL),
     "q08_quality_signals": (q_quality_signals, Q_QUALITY_SIGNALS_SQL),
     "q09_token_counts": (q_token_counts, Q_TOKEN_COUNTS_SQL),
     "q10_dedup_exact": (q_dedup_exact, Q_DEDUP_EXACT_SQL),
@@ -7325,7 +7335,6 @@ QUERIES = {
     "q118_reverb_gate": (q_reverb_gate, Q_REVERB_GATE_SQL),
     "q20_dictionary_scrub": (q_dictionary_scrub, Q_DICTIONARY_SCRUB_SQL),
     "q88_metadata_audit": (q_metadata_audit, Q_METADATA_AUDIT_SQL),
-    "q23_ner_scrub": (q_ner_scrub, Q_NER_SCRUB_SQL),
     "q24_embedding_neardup": (q_embedding_neardup, Q_EMBEDDING_NEARDUP_SQL),
     "q89_vad_gate": (q_vad_gate, Q_VAD_GATE_SQL),
     "q96_audio_redact": (q_audio_redact, Q_AUDIO_REDACT_SQL),
@@ -7334,7 +7343,6 @@ QUERIES = {
     "q29_ivf_ann": (q_ivf_ann, Q_IVF_ANN_SQL),
     "q31_filter_composition": (q_filter_composition, Q_FILTER_COMPOSITION_SQL),
     "q131_adpcm_transcode": (q_adpcm_transcode, Q_ADPCM_TRANSCODE_SQL),
-    "q33_ner_model_scrub": (q_ner_model_scrub, Q_NER_MODEL_SCRUB_SQL),
     "q90_survivor_policy": (q_survivor_policy, Q_SURVIVOR_POLICY_SQL),
     "q36_simhash_hamming": (q_simhash_hamming_neardup, Q_SIMHASH_HAMMING_SQL),
     "q91_repeated_segments": (q_repeated_segments, Q_REPEATED_SEGMENTS_SQL),
@@ -7371,10 +7379,6 @@ QUERIES = {
     "q35_ivf_indexed": (q_ivf_indexed, Q_IVF_INDEXED_SQL),
     "q37_text_embedding_neardup": (q_text_embedding_neardup, Q_TEXT_EMBEDDING_SQL),
     "q92_strip_repeated": (q_strip_repeated, Q_STRIP_REPEATED_SQL),
-    "q95_streaming_audio_gate": (
-        q_streaming_audio_gate,
-        Q_STREAMING_AUDIO_GATE_SQL,
-    ),
     "q12_simhash_neardup": (q_simhash_neardup, Q_MINHASH_SQL),
     "q18_join_orders_per_nation": (q_join_orders_per_nation, Q_JOIN_ORDERS_SQL),
     "q19_window_latest_event": (q_window_latest_event, Q_WINDOW_LATEST_SQL),

@@ -267,12 +267,11 @@ def multimodal_stream(stream: DataFrame, config=None) -> DataFrame:
     """Streaming lift of the FULL multimodal pipeline: decode →
     segmented audio features → fused text kernel → audio gate →
     multimodal keep/drop fold, applied to a streaming clips frame.
-    Every stage is a stateless per-row map (one mapInPandas plus
-    codegen'd projections — operators/fused.py
-    run_pipeline_fused_multimodal), so the lift needs no watermark and
-    works with any source and exactly-once file/Delta sinks — the
-    ingest-time shape of the batch pipeline: gate clips AS THEY LAND,
-    before anything is persisted downstream.
+    Every stage is a stateless per-row map (``run_pipeline``: the
+    config's one Python crossing plus codegen'd projections), so the
+    lift needs no watermark and works with any source and exactly-once
+    file/Delta sinks — the ingest-time shape of the batch pipeline:
+    gate clips AS THEY LAND, before anything is persisted downstream.
 
     ``config`` defaults to ``PipelineConfig(include_audio=True,
     audio_gate=AudioGateThresholds())`` — the multimodal gate; pass any
