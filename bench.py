@@ -19,7 +19,7 @@ decorrelates an arm from a single bad window and best-of-N is the
 faithful estimate of what the code costs.  Round 1 additionally absorbs
 per-closure Python-worker spin-up (6-14 s on this host), so the minimum
 is always a warm measurement.  Instrumentation (dedup candidate-pair
-stats: an extra persist + count + collapse probe) runs in a separate
+stats: extra count jobs and the collapse probe) runs in a separate
 UNTIMED invocation after the timed rounds — signatures are
 deterministic, so the stats describe exactly the timed computation.
 
@@ -220,7 +220,8 @@ def main():
     # arm-for-arm comparable with BENCH_r01/r02: audio prep (endpoint
     # trim → utterance split), frequency-domain features, log-mel, the
     # fused voice-health stage, the pure-Catalyst time mask, codec
-    # transcode, the top-k bigram vocabulary over documents, spectral-
+    # transcode, the top-k bigram vocabulary over documents, MinHash
+    # near-dup over a duplicate-heavy copy of them, spectral-
     # subtraction denoise, fixed-duration example packing, and the WAV
     # header audit over container-wrapped rows.  The aggregates keep the
     # outputs on the executors.  One row = (record key prefix, call,
@@ -245,6 +246,13 @@ def main():
     )
     wavs = wav_clips_df(spark, na, partitions=cores * 2).cache()
     wavs.count()
+    # the collapsing side of near_duplicates_minhash's "auto" choice: one
+    # page copied 1,000 times (the headline dedup_minhash arm does not
+    # collapse)
+    page = docs.select("text").first()[0]
+    dupheavy = docs.select("doc_id", "text").unionByName(spark.range(1000).select(
+        (F.col("id") - 1000).alias("doc_id"), F.lit(page).alias("text"))).cache()
+    n_dupheavy = dupheavy.count()
     secondary = [
         ("audio_prep",
          lambda: split_clips_on_silence(
@@ -275,6 +283,10 @@ def main():
          na),
         ("vocab_topk", lambda: top_terms(docs, k=100, n=2).count(),
          docs.count()),
+        ("dedup_dupheavy",
+         lambda: near_duplicates_minhash(
+             dupheavy, threshold=0.8, collapse_exact="auto").count(),
+         n_dupheavy),
         ("denoise",
          lambda: denoised_clips(aclips).agg(
              F.sum(F.length("bytes")), F.sum("n_frames_denoised")).collect(),
@@ -290,8 +302,10 @@ def main():
              F.sum("data_len")).collect(),
          na),
     ]
-    # the vocabulary arm's rate counts documents, every other one clips
-    rate_keys = {"vocab_topk": "vocab_docs_per_sec"}
+    # the vocabulary and dup-heavy arms' rates count documents, every
+    # other one clips
+    rate_keys = {"vocab_topk": "vocab_docs_per_sec",
+                 "dedup_dupheavy": "dedup_dupheavy_docs_per_sec"}
     for name, fn, n_rows in secondary:
         sec, out = _best_of_2(fn)
         extras[f"{name}_sec"] = round(sec, 3)
@@ -313,6 +327,12 @@ def main():
     extras["dedup_candidate_pairs"] = dd_stats.get("n_candidate_pairs")
     extras["dedup_exact_dup_ratio"] = dd_stats.get("exact_dup_ratio")
     extras["dedup_collapsed_exact"] = dd_stats.get("collapsed_exact")
+    dd_stats = {}
+    near_duplicates_minhash(
+        dupheavy, threshold=0.8, collapse_exact="auto", stats=dd_stats
+    ).count()
+    extras["dedup_dupheavy_collapsed_exact"] = dd_stats.get("collapsed_exact")
+    dupheavy.unpersist()
 
     # Iceberg runtime availability, recorded every run so the unexecuted
     # Iceberg branch (sources/checkpoint.py) stays visibly gated on the

@@ -462,6 +462,127 @@ def test_collapse_exact_equivalent_output(spark):
     assert (some_id, some_id + 10_000, 1.0) in collapsed
 
 
+def _planted_minhash_corpus():
+    """Families of a random-word base text: exact copies, one-word edits
+    and a two-word edit, plus unrelated singletons (40 rows)."""
+    rng = np.random.default_rng(11)
+    vocab = [f"tok{i}" for i in range(400)]
+    rows = []
+    for fam in range(10):
+        base = [str(w) for w in rng.choice(vocab, 50)]
+        rows.append(" ".join(base))
+        rows += [" ".join(base)] * (fam % 3)
+        if fam % 2:
+            edit = list(base)
+            edit[7] = "zzz"
+            rows.append(" ".join(edit))
+        if fam % 5 == 0:
+            edit = list(base)
+            edit[20], edit[40] = "yyy", "xxx"
+            rows.append(" ".join(edit))
+    while len(rows) < 40:
+        rows.append(" ".join(str(w) for w in rng.choice(vocab, 50)))
+    return [(i * 3 + 1, t) for i, t in enumerate(rows)]
+
+
+def _brute_force_minhash_pairs(rows, threshold, num_hashes=64):
+    """Every id pair sharing one band slice whose estimated Jaccard
+    reaches ``threshold`` — the LSH + filter contract, pair by pair."""
+    import pandas as pd
+
+    from top_secret_spark.operators.dedup import _auto_bands, make_minhash_udf
+
+    ids = [i for i, _ in rows]
+    sigs = make_minhash_udf(num_hashes).func(pd.Series([t for _, t in rows]))
+    r = num_hashes // _auto_bands(num_hashes, threshold)
+    out = set()
+    for x in range(len(ids)):
+        for y in range(x + 1, len(ids)):
+            sx, sy = sigs[x], sigs[y]
+            if not any((sx[k:k + r] == sy[k:k + r]).all()
+                       for k in range(0, num_hashes, r)):
+                continue
+            est = round(float((sx == sy).mean()), 6)
+            if est >= threshold:
+                a, b = sorted((ids[x], ids[y]))
+                out.add((a, b, est))
+    return out
+
+
+def test_minhash_collapse_modes_equal_brute_force(spark):
+    from top_secret_spark.operators.dedup import near_duplicates_minhash
+
+    rows = _planted_minhash_corpus()
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = _brute_force_minhash_pairs(rows, 0.8)
+    assert any(e == 1.0 for _, _, e in want) and any(e < 1.0 for _, _, e in want)
+    n_candidates = set()
+    for mode in (False, True, "auto"):
+        stats: dict = {}
+        got = [(r["a"], r["b"], r["est_jaccard"]) for r in
+               near_duplicates_minhash(df, threshold=0.8, collapse_exact=mode,
+                                       stats=stats).collect()]
+        assert len(got) == len(set(got)), mode  # each pair once
+        assert set(got) == want, mode
+        n_candidates.add(stats["n_candidate_pairs"])
+    # collapsed, candidates still count document pairs, not group pairs
+    assert len(n_candidates) == 1 and n_candidates.pop() >= len(want)
+
+
+def test_minhash_collapse_one_large_group(spark):
+    """1,500 identical documents: "auto" collapses them to one band
+    representative, and their 1,124,250 pairs come out of joins on
+    (rep, member) rows — no aggregate gathers a member list."""
+    from top_secret_spark.operators.dedup import near_duplicates_minhash
+
+    g = 1500
+    planted = [(10_000 + i, t) for i, t in _planted_minhash_corpus()]
+    rows = [(i, "the same boilerplate footer, copied onto every page")
+            for i in range(g)] + planted
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    stats: dict = {}
+    out = near_duplicates_minhash(df, threshold=0.8, collapse_exact="auto",
+                                  stats=stats)
+    assert stats["collapsed_exact"] is True
+    assert stats["n_candidate_pairs"] >= g * (g - 1) // 2
+    group = out.filter(F.col("b") < g).agg(
+        F.count(F.lit(1)), F.min("est_jaccard"), F.countDistinct("a", "b")
+    ).collect()[0]
+    assert tuple(group) == (g * (g - 1) // 2, 1.0, g * (g - 1) // 2)
+    rest = {(r["a"], r["b"], r["est_jaccard"])
+            for r in out.filter(F.col("a") >= g).collect()}
+    assert rest == _brute_force_minhash_pairs(planted, 0.8)
+    assert out.filter((F.col("a") < g) & (F.col("b") >= g)).count() == 0
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "collect_list" not in plan and "Window" in plan
+
+
+@pytest.mark.parametrize("mode", [False, True])
+def test_minhash_one_plan_few_jobs_one_udf_pass(spark, mode):
+    """One call is one lazy plan: ≤ 4 jobs when collected, the MinHash
+    UDF evaluated once (one ArrowEvalPython), and the second join side
+    (and, collapsed, every use of the by-signature shuffle) read through
+    a reused exchange instead of a cache."""
+    from top_secret_spark.operators.dedup import near_duplicates_minhash
+
+    df = spark.createDataFrame(_planted_minhash_corpus(),
+                               "doc_id long, text string")
+    sc = spark.sparkContext
+    group = f"minhash-one-plan-{mode}"
+    sc.setJobGroup(group, "near_duplicates_minhash job count")
+    try:
+        out = near_duplicates_minhash(df, threshold=0.8, collapse_exact=mode)
+        assert out.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1
+    assert "ReusedExchange" in final
+
+
 # --- near-dup cluster resolution -------------------------------------------------
 
 

@@ -157,12 +157,15 @@ def main():
 
     nd_plan = explain_str(near_duplicates_minhash(docs.limit(200)))
     sections.append((
-        "MinHash near-dup (signatures → LSH bucket self-join → verify)",
+        "MinHash near-dup (signatures → LSH bucket self-join → estimate)",
         nd_plan,
-        "- The expensive signature UDF runs once (persisted `InMemoryRelation`)\n"
-        "  and feeds candidate generation AND both verify-join sides; candidate\n"
-        "  pairs have a single consumer (the verify join) and flow through\n"
-        "  unpersisted — no extra materialization barrier.\n"
+        "- One lazy plan, no cache and no verify joins: the band rows carry\n"
+        "  the signature, so `est_jaccard` is computed right after the\n"
+        "  bucket self-join.  Both join sides are one subtree; at run time\n"
+        "  AQE reads the second side from the first side's exchange\n"
+        "  (`ReusedExchange` in the final plan), so the signature UDF runs\n"
+        "  once per document.  The plan shown is the initial plan, which\n"
+        "  still lists both sides.\n"
         "- Candidate expansion is a codegen'd self-JOIN on (band, bucket)\n"
         "  — a giant near-duplicate bucket becomes join work that AQE can\n"
         "  skew-split, not one quadratic expression on a single row.\n"

@@ -14,4 +14,13 @@ Layout:
   pipeline.py the end-to-end quality-filter pipeline
 """
 
+import os as _os
+
 __version__ = "0.1.0"
+
+# Spark sets this in every Python worker it starts, daemon or not; the
+# driver and the no-Spark replay never see it.
+if "PYTHON_WORKER_FACTORY_SECRET" in _os.environ:
+    from .worker_imports import patch_zip_importers
+
+    patch_zip_importers()

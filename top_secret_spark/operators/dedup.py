@@ -7,8 +7,8 @@ Four families, each chosen for a different scale/accuracy point:
                       not documents.
   * MinHash + LSH   — char-shingle MinHash signatures (numpy per Arrow
                       batch), banded LSH bucketing; candidate generation
-                      is an explode + groupBy on small (band, hash) keys,
-                      so the shuffle is signatures, never text.
+                      is an explode + self-join on small (band, hash)
+                      keys, so the shuffle is signatures, never text.
   * SimHash         — 64-bit sign-of-weighted-sum sketch; near-dup =
                       Hamming proximity via band buckets.
   * n-gram Jaccard  — exact verification on candidate pairs only (join
@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 from pyspark.sql.functions import pandas_udf
 
 from .text_analysis import fingerprint_col
@@ -480,88 +481,25 @@ def with_minhash(
     )
 
 
-def _banded(sig_df: DataFrame, id_col: str, sig_col: str, bands: int) -> DataFrame:
-    """(id, band, bucket) rows: signature sliced into `bands` chunks,
-    each chunk hashed with the band index as seed — the ONE banding
-    expression shared by candidate generation and oversize accounting
-    (same bands ⇒ same buckets)."""
-    sig = F.col(sig_col)
-    n = F.size(sig)
-    rows_per_band = (n / bands).cast("int")
+def _band_bucket(sig, band, bands: int):
+    """Bucket of signature ``sig`` in ``band`` (a Column): the band's
+    chunk of the signature, hashed with the band index as seed."""
+    rows_per_band = (F.size(sig) / bands).cast("int")
+    return F.xxhash64(F.slice(sig, band * rows_per_band + 1, rows_per_band), band)
+
+
+def _banded(sig_df: DataFrame, sig_col: str, bands: int) -> DataFrame:
+    """``sig_df``'s columns plus (band, bucket), one row per band — the
+    ONE banding expression of near-dup candidate generation and fuzzy
+    decontamination (same bands ⇒ same buckets)."""
     return sig_df.select(
-        F.col(id_col),
+        "*",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: F.xxhash64(F.slice(sig, i * rows_per_band + 1, rows_per_band), i),
+                lambda i: _band_bucket(F.col(sig_col), i, bands),
             )
         ).alias("band", "bucket"),
-    )
-
-
-def lsh_candidate_pairs(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 16,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Banded LSH: split the signature into `bands` rows-per-band chunks,
-    hash each chunk, self-join ids sharing any (band, hash) bucket →
-    distinct (a, b) candidate pairs with a < b.
-
-    The shuffle key is (band, bucket_hash) — small and well distributed;
-    pair expansion is a codegen'd self-JOIN on the bucket key (not an
-    in-expression nested loop), so a giant bucket is handled by the join
-    machinery and AQE skew splitting instead of one quadratic expression
-    evaluated on a single row.  ``max_bucket`` (optional, off by default)
-    drops buckets larger than the cap — complete subgraphs of
-    near-identical docs, better collapsed by exact dedup first; callers
-    that cap should count dropped buckets via
-    ``lsh_oversize_buckets(sig_df, ..., bands=<same bands>)`` and surface
-    the number, never cap silently.
-    """
-    banded = _banded(sig_df, id_col, sig_col, bands)
-    if max_bucket is not None:
-        # broadcast the OVERSIZE set (tiny by construction — these are the
-        # rare mega-buckets) and anti-join; broadcasting the keep-side
-        # would ship ~one row per (doc, band) and blow the broadcast limit
-        # at scale.
-        oversize = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .filter(F.col("_bn") > max_bucket)
-            .select("band", "bucket")
-        )
-        banded = banded.join(
-            F.broadcast(oversize), ["band", "bucket"], "left_anti"
-        )
-    left = banded.select("band", "bucket", F.col(id_col).alias("a"))
-    right = banded.select("band", "bucket", F.col(id_col).alias("b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
-def lsh_oversize_buckets(
-    sig_df: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    bands: int = 16,
-    max_bucket: int = 4096,
-) -> DataFrame:
-    """(band, bucket, n) rows for buckets a ``max_bucket`` cap would drop
-    — the accounting side of capped candidate generation.  Pass the SAME
-    ``bands`` used for lsh_candidate_pairs (or the value
-    ``_auto_bands(num_hashes, threshold)`` resolved to)."""
-    return (
-        _banded(sig_df, id_col, sig_col, bands)
-        .groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_bucket)
     )
 
 
@@ -588,6 +526,25 @@ def _auto_bands(num_hashes: int, threshold: float, min_detect: float = 0.9) -> i
     return num_hashes  # r=1: every position its own band (recall-max)
 
 
+def _identical_signature_groups(df: DataFrame, text_col: str) -> tuple[int, int, int]:
+    """(documents, groups, pairs inside groups) of the documents whose
+    MinHash signatures are identical because their normalized texts are
+    (lowercase, whitespace runs collapsed), or because they are too
+    short for one shingle.  One aggregate over 64-bit text hashes: it
+    does not run the signature UDF, and it only steers the collapse
+    choice, never the output."""
+    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    # texts under one 5-byte shingle all get the empty-set signature
+    key = F.xxhash64(F.when(F.octet_length(norm) >= 5, norm).otherwise(F.lit("")))
+    row = (
+        df.groupBy(key.alias("_k")).count()
+        .agg(F.sum("count"), F.count(F.lit(1)),
+             F.sum(F.col("count") * (F.col("count") - 1)))
+        .collect()[0]
+    )
+    return row[0] or 0, row[1], (row[2] or 0) // 2
+
+
 def near_duplicates_minhash(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -596,61 +553,66 @@ def near_duplicates_minhash(
     num_hashes: int = 64,
     bands: int | None = None,
     collapse_exact: bool | str = False,
-    collapse_min_dup_ratio: float = 0.2,
-    materialize: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
-    """End-to-end MinHash near-dup: signatures → LSH candidates →
-    signature-estimated Jaccard filter → (a, b, est_jaccard).
+    """End-to-end MinHash near-dup: signatures → banded LSH bucket
+    self-join → signature-estimated Jaccard filter → (a, b, est_jaccard)
+    pairs with a < b, returned lazily as one plan.
 
-    Signatures are computed once and persisted — they feed candidate
-    generation AND both sides of the pair join; without the persist the
-    (expensive) signature UDF would run three times.  Candidate pairs
-    have a single downstream consumer (the verify join) and flow through
-    unpersisted — except when ``stats`` is requested, where the count
-    action would otherwise recompute the LSH shuffle.  The returned
-    frame is eagerly localCheckpoint-ed (it is small: above-threshold
-    pairs only) so the intermediates can be UNPERSISTED before
-    returning — repeated invocations do not accumulate cached datasets.
+    The signature rides in the band rows, so ``est_jaccard`` is computed
+    right after the (band, bucket) self-join: no join fetches signatures
+    back.  Both join sides are one subtree, so the band exchange is
+    reused (a ``ReusedExchange`` in the plan) and the MinHash UDF runs
+    once per document without a persist.  A pair sharing several buckets
+    keeps only the join row of its first shared band, so no distinct
+    (and no shuffle of pairs) is needed.  Pair expansion is a join, not
+    an in-expression nested loop, so AQE can skew-split a giant bucket.
 
-    ``collapse_exact=True`` pre-collapses identical signatures to one
-    representative before LSH: the banding shuffle, bucket self-join and
-    verify join then scale with UNIQUE documents, and representative
-    pairs are expanded back through group membership afterwards.  Output
-    is identical to the uncollapsed path (group members share one
-    signature, so every expanded pair has the representative pair's
-    est_jaccard, and intra-group pairs are est 1.0 ≥ any threshold ≤ 1).
-    This is the scale switch for corpora with heavy exact duplication —
-    web crawls routinely >30% — where mega duplicate groups otherwise
-    flood every one of their LSH buckets.  Groups are keyed on the FULL
+    ``collapse_exact=True`` shuffles the documents once by signature
+    and bands one representative per group of identical signatures (its
+    min id): the band shuffle, the self-join and the filter then scale
+    with UNIQUE signatures.  Verified representative pairs, and each
+    group of several paired with itself, expand to member pairs through
+    two joins on the representative id against one (rep, member) row
+    per document, so the output equals the uncollapsed one and no row
+    ever holds a group's member list.  Groups are keyed on the FULL
     signature array, not a 64-bit hash of it: at 10^11+ docs a 64-bit
-    collision would silently merge docs with different signatures into
-    one "exact" group and emit false est_jaccard=1.0 pairs.
+    collision would silently merge docs with different signatures and
+    emit false est_jaccard=1.0 pairs.
 
-    On a corpus with LITTLE exact duplication, collapsing is pure
-    overhead (the array-keyed groupBy + membership joins run for
-    nothing — measured ~2× slower on a 98%-unique table), so
-    ``collapse_exact="auto"`` probes first: one approx-distinct
-    aggregate over 64-bit signature digests (collisions only perturb a
-    ratio estimate — never correctness) and collapses only when the
-    duplicate fraction is ≥ ``collapse_min_dup_ratio``.  This is the
-    recommended setting for unknown corpora; the probe costs one pass
-    over the persisted signatures.
+    Uncollapsed, a group of g identical documents shares every bucket,
+    so the self-join makes ``bands`` join rows for each of its g²/2
+    pairs; collapsing costs one more shuffle of the documents and two
+    joins.  Measured at local[4] with 8 shuffle partitions: 2,500
+    documents holding one group of 2,001 ran 37 s uncollapsed and 2.5 s
+    collapsed, while the 3,000-document perfbench ``scrub_dedup``
+    corpus (8.9% exact duplicates, in small groups) ran 1.6 s
+    uncollapsed and 2.7 s collapsed, and with 35% duplicates in pairs
+    1.6 s against 3.2 s.  The pairs inside groups decide, not the
+    duplicate share, so ``"auto"`` counts them first in one aggregate
+    over text hashes (``_identical_signature_groups``) and collapses
+    when they are at least as many as the documents: there the join
+    rows they add uncollapsed match the band shuffle's own rows.
 
-    ``materialize=False`` returns the result lazily instead of the
-    default eager ``localCheckpoint``; the intermediates then stay
-    persisted (unpersisting them would force recomputation through the
-    lazy result), so callers should write/consume the frame promptly
-    and may ``spark.catalog.clearCache()`` afterwards.  Use it when the
-    pair set may be large — e.g. ``collapse_exact`` over corpora with
-    mega duplicate groups, where member-pair expansion is quadratic in
-    group size — or when the result feeds straight into another job
-    stage; the default keeps small-result ergonomics (eager, executor-
-    local, no cache accumulation across invocations) at the cost of
-    fault-tolerance of the checkpointed blocks.
+    ``stats`` (a dict) receives ``collapsed_exact`` and
+    ``n_candidate_pairs`` (distinct bucket-sharing document pairs; when
+    collapsed, |group_a|·|group_b| per bucket-sharing representative
+    pair plus the pairs inside groups), plus ``n_unique_signatures`` and
+    ``exact_dup_ratio`` (1 − groups/docs) when collapsed; ``"auto"``
+    sets ``exact_dup_ratio`` from its text groups when it does not
+    collapse.  Each count is an extra Spark job, run only when ``stats``
+    is passed.
     """
-    from pyspark import StorageLevel
-
+    if collapse_exact == "auto":
+        n_docs, n_groups, n_dup_pairs = _identical_signature_groups(df, text_col)
+        collapse_exact = n_dup_pairs >= n_docs > 0
+        if stats is not None:
+            stats["exact_dup_ratio"] = round(1 - n_groups / max(n_docs, 1), 4)
+    elif not isinstance(collapse_exact, bool):
+        raise ValueError(
+            f"collapse_exact must be True, False, or 'auto', got "
+            f"{collapse_exact!r}"
+        )
     # A small parquet scan can land in fewer splits than cores, which
     # would serialize the signature UDF; spread it first.  At 100 TB the
     # scan already yields >> cores splits and this is a no-op.
@@ -658,107 +620,85 @@ def near_duplicates_minhash(
     if df.rdd.getNumPartitions() < cores:
         df = df.repartition(cores)
 
-    all_sigs = (
-        with_minhash(df, text_col, num_hashes)
-        .select(id_col, "minhash")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sigs = with_minhash(df, text_col, num_hashes).select(
+        F.col(id_col).alias("_id"), "minhash"
     )
-    if collapse_exact == "auto":
-        probe = all_sigs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct(F.xxhash64("minhash")).alias("u"),
-        ).collect()[0]
-        n_docs, n_unique = probe["n"], probe["u"]
-        dup_ratio = (n_docs - n_unique) / max(n_docs, 1)
-        collapse_exact = dup_ratio >= collapse_min_dup_ratio
-        if stats is not None:
-            stats["exact_dup_ratio"] = round(dup_ratio, 4)
-    elif not isinstance(collapse_exact, bool):
-        raise ValueError(
-            f"collapse_exact must be True, False, or 'auto', got "
-            f"{collapse_exact!r}"
-        )
-    if stats is not None:
-        stats["collapsed_exact"] = collapse_exact
-    extra_pairs = None
     if collapse_exact:
-        # group key is the signature ARRAY itself (array<long> is a valid
-        # shuffle/grouping key) — a 64-bit digest here would merge
-        # colliding-but-different signatures at 10^11+ doc scale
-        reps = all_sigs.groupBy("minhash").agg(F.min(id_col).alias(id_col))
-        sigs = reps.select(id_col, "minhash").persist(
-            StorageLevel.MEMORY_AND_DISK
+        # one row per document with its group's min id and size; the
+        # group key is the signature ARRAY itself (array<long> is a
+        # valid shuffle key), and every use below reads its one exchange
+        group = Window.partitionBy("minhash")
+        members = sigs.select(
+            "_id", "minhash",
+            F.min("_id").over(group).alias("_rep"),
+            F.count(F.lit(1)).over(group).alias("_n"),
         )
-        members = all_sigs.select(
-            F.col("minhash").alias("_sig"), F.col(id_col).alias("_member")
-        )
-        # intra-group pairs: identical signatures → est 1.0
-        ml = members.select("_sig", F.col("_member").alias("a"))
-        mr = members.select("_sig", F.col("_member").alias("b"))
-        extra_pairs = (
-            ml.join(mr, "_sig")
-            .filter(F.col("a") < F.col("b"))
-            .select("a", "b", F.lit(1.0).alias("est_jaccard"))
-        )
+        reps = members.filter(F.col("_id") == F.col("_rep")).drop("_rep")
     else:
-        sigs = all_sigs
-        members = None
+        reps = sigs.withColumn("_n", F.lit(1))
+    bands = bands or _auto_bands(num_hashes, threshold)
+    banded = _banded(reps, "minhash", bands)
 
-    # pairs has ONE downstream consumer (the verify join), so it is NOT
-    # persisted in the plain path — a persist + materialize there is a
-    # pure extra job barrier.  With a stats request the count() action
-    # would otherwise recompute the LSH shuffle, so persist first.
-    pairs = lsh_candidate_pairs(
-        sigs, id_col, bands=bands or _auto_bands(num_hashes, threshold)
+    def side(s):
+        return banded.select(
+            "band", "bucket", F.col("_id").alias(s),
+            F.col("minhash").alias(f"_sig_{s}"), F.col("_n").alias(f"_n_{s}"),
+        )
+
+    sig_a, sig_b = F.col("_sig_a"), F.col("_sig_b")
+    # a pair sharing several buckets joins once per shared band: keep
+    # only its first shared band, so each pair is one row without a
+    # distinct (and the shuffle it would take)
+    shared_earlier = F.exists(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda j: (j < F.col("band"))
+        & (_band_bucket(sig_a, j, bands) == _band_bucket(sig_b, j, bands)),
     )
-    pairs_persisted = False
-    if stats is not None:
-        # candidate volume is THE cost driver at web scale — callers
-        # (bench, ops dashboards) surface it
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs_persisted = True
-        stats["n_candidate_pairs"] = pairs.count()
-        if collapse_exact:
-            stats["n_unique_signatures"] = sigs.count()
-    sa = sigs.select(F.col(id_col).alias("a"), F.col("minhash").alias("sig_a"))
-    sb = sigs.select(F.col(id_col).alias("b"), F.col("minhash").alias("sig_b"))
-    verified = (
-        pairs.join(sa, "a").join(sb, "b")
-        .withColumn("est_jaccard", minhash_similarity_col(F.col("sig_a"), F.col("sig_b")))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("a", "b", "est_jaccard")
+    candidates = side("a").join(side("b"), ["band", "bucket"]).filter(
+        (F.col("a") < F.col("b")) & ~shared_earlier
     )
+    pairs = candidates.select(
+        "a", "b", "_sig_a", "_sig_b",
+        minhash_similarity_col(sig_a, sig_b).alias("est_jaccard"),
+    ).filter(F.col("est_jaccard") >= threshold)
     if collapse_exact:
-        # expand representative pairs through group membership (each rep
-        # pair fans out to |group_a| x |group_b| member pairs); the rep →
-        # member join key is the signature array (reps carry it already)
-        ga = sigs.select(F.col(id_col).alias("a"), F.col("minhash").alias("_sa"))
-        gb = sigs.select(F.col(id_col).alias("b"), F.col("minhash").alias("_sb"))
-        expanded = (
-            verified.join(ga, "a").join(gb, "b")
-            .join(members.select(F.col("_sig").alias("_sa"),
-                                 F.col("_member").alias("ma")), "_sa")
-            .join(members.select(F.col("_sig").alias("_sb"),
-                                 F.col("_member").alias("mb")), "_sb")
+        # each verified group pair fans out to |group_a| x |group_b|
+        # member pairs, and each group of several paired with itself to
+        # its member pairs at est 1.0: two joins on the representative
+        # id against one (rep, member) row per document
+        def member(s):
+            return members.select(F.col("_rep").alias(s), F.col("_id").alias(f"_m{s}"))
+
+        pairs = (
+            pairs.select("a", "b", "est_jaccard")
+            .unionByName(reps.filter(F.col("_n") > 1).select(
+                F.col("_id").alias("a"), F.col("_id").alias("b"),
+                F.lit(1.0).alias("est_jaccard"),
+            ))
+            .join(member("a"), "a").join(member("b"), "b")
+            # a group paired with itself meets each member pair twice
+            .filter((F.col("a") != F.col("b")) | (F.col("_ma") < F.col("_mb")))
             .select(
-                F.least("ma", "mb").alias("a"),
-                F.greatest("ma", "mb").alias("b"),
+                F.least("_ma", "_mb").alias("a"),
+                F.greatest("_ma", "_mb").alias("b"),
                 "est_jaccard",
             )
         )
-        verified = expanded.unionByName(extra_pairs)
-    result = verified.select(
-        "a", "b", F.round("est_jaccard", 6).alias("est_jaccard")
-    )
-    if not materialize:
-        return result
-    result = result.localCheckpoint(eager=True)
-    if pairs_persisted:
-        pairs.unpersist()
-    if sigs is not all_sigs:  # plain path: sigs IS all_sigs
-        sigs.unpersist()
-    all_sigs.unpersist()
-    return result
+    if stats is not None:
+        # candidate volume is THE cost driver at web scale — callers
+        # (bench, ops dashboards) surface it
+        stats["collapsed_exact"] = collapse_exact
+        n_cand = candidates.agg(
+            F.sum(F.col("_n_a") * F.col("_n_b"))).collect()[0][0] or 0
+        if collapse_exact:
+            n_groups, n_docs, n_ordered_inside = reps.agg(
+                F.count(F.lit(1)), F.sum("_n"), F.sum(F.col("_n") * (F.col("_n") - 1))
+            ).collect()[0]
+            n_cand += (n_ordered_inside or 0) // 2
+            stats["n_unique_signatures"] = n_groups
+            stats["exact_dup_ratio"] = round(1 - n_groups / max(n_docs or 0, 1), 4)
+        stats["n_candidate_pairs"] = n_cand
+    return pairs.select("a", "b", F.round("est_jaccard", 6).alias("est_jaccard"))
 
 
 # --- near-dup cluster resolution -------------------------------------------------
@@ -860,6 +800,11 @@ def dedup_near(
     ``method`` picks the sketch: ``"minhash"`` (default; Jaccard ≥
     ``threshold``) or ``"simhash"`` (Hamming ≤ ``max_distance`` on the
     64-bit sketch — 8 bytes/doc, the cheaper sketch at extreme scale).
+    The MinHash pairs arrive as one lazy plan (``collapse_exact="auto"``
+    collapses identical signatures when a corpus holds more pairs of
+    them than documents, see ``near_duplicates_minhash``);
+    ``near_duplicate_clusters`` materializes them once, as its edge
+    frame, so the signature UDF runs once per document.
 
     ``verify_exact=True`` re-checks every estimated pair with TRUE
     shingle Jaccard (text joined back for candidates only) before
@@ -1050,7 +995,7 @@ def simhash_candidate_pairs(
     the differing bits span ≤3 bands).
 
     Pair expansion is a codegen'd self-JOIN on the (band, bucket) key —
-    exactly the ``lsh_candidate_pairs`` shape — NOT a collect_list +
+    the band join of ``near_duplicates_minhash`` — NOT a collect_list +
     nested-transform expansion: a mega-bucket (heavy exact duplication,
     the norm in web crawls) is handled by the join machinery and AQE
     skew splitting instead of materializing O(n²) structs from one row
@@ -1119,7 +1064,8 @@ def near_duplicates_simhash(
     sides; the result is eagerly localCheckpoint-ed (≤-max_distance
     pairs only) so intermediates are unpersisted before returning.
     ``materialize=False`` returns lazily and leaves the persist in
-    place (see near_duplicates_minhash).  Feed the pairs to
+    place: write or consume the frame promptly, then
+    ``spark.catalog.clearCache()``.  Feed the pairs to
     ``near_duplicate_clusters`` / ``dedup_near(method='simhash')`` for
     actual survivor selection."""
     from pyspark import StorageLevel
@@ -1273,7 +1219,7 @@ def flag_contaminated_fuzzy(
     # persist: the signature UDF (the dominant cost — full corpus scan +
     # shingling + num_hashes mins per doc) feeds BOTH the banding pass
     # and the verify join; without the persist one action evaluates it
-    # twice (same reasoning as near_duplicates_minhash's all_sigs)
+    # twice
     corpus_sig = df.select(
         F.col(id_col), mk(F.col(text_col)).alias("minhash")
     ).persist()
@@ -1283,8 +1229,8 @@ def flag_contaminated_fuzzy(
     ).localCheckpoint(eager=True)  # freeze nondeterministic ids — the
     # bench side is small by contract, so the eager materialization is
     # cheap and both downstream uses (banding + verify) see ONE id set
-    cband = _banded(corpus_sig, id_col, "minhash", b)
-    bband = _banded(bench_sig, "_bid", "_bsig", b)
+    cband = _banded(corpus_sig, "minhash", b)
+    bband = _banded(bench_sig, "_bsig", b)
     cands = (
         cband.join(
             F.broadcast(bband.withColumnRenamed("_bid", "_b")),
@@ -1306,7 +1252,7 @@ def flag_contaminated_fuzzy(
         # contaminated doc — bounded by the candidate set, tiny next to
         # the corpus), then release the signature cache: without this
         # the persist leaks cached signature blocks for the application
-        # lifetime (near_duplicates_minhash unpersists the same way)
+        # lifetime
         .localCheckpoint(eager=True)
     )
     corpus_sig.unpersist()

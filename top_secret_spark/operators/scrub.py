@@ -208,13 +208,6 @@ def sensitive_col(mapping_col) -> Column:
     return F.size(col) > 0
 
 
-def mapping_as_map(mapping_col) -> Column:
-    """Convenience MapType view for ad-hoc queries.  The authoritative
-    representation stays the ordered array (order is load-bearing)."""
-    col = F.col(mapping_col) if isinstance(mapping_col, str) else mapping_col
-    return F.map_from_entries(col)
-
-
 def with_pii_density(
     df: DataFrame,
     text_col: str = "transcript",

@@ -28,44 +28,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-SCORES_TYPE = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), False),
-            T.StructField("score", T.DoubleType(), False),
-        ]
-    )
-)
-
-
 def _normalize_rows(m: np.ndarray) -> np.ndarray:
     norms = np.linalg.norm(m, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return m / norms
-
-
-def make_cosine_scores_udf(queries: list[tuple[int, list[float]]]):
-    """UDF: embedding → [(query_id, cosine)] for every query — one
-    numpy matmul per Arrow batch against the broadcast query matrix."""
-    qids = np.array([q[0] for q in queries], dtype=np.int64)
-    qmat = _normalize_rows(np.array([q[1] for q in queries], dtype=np.float64))
-
-    @pandas_udf(SCORES_TYPE)
-    def scores(embs: pd.Series) -> pd.Series:
-        mat = np.array(embs.tolist(), dtype=np.float64)
-        if mat.ndim != 2 or len(mat) == 0:
-            return pd.Series([[]] * len(embs))
-        sims = _normalize_rows(mat) @ qmat.T  # (batch, n_queries)
-        out = [
-            [
-                {"query_id": int(qids[j]), "score": float(sims[i, j])}
-                for j in range(len(qids))
-            ]
-            for i in range(len(mat))
-        ]
-        return pd.Series(out)
-
-    return scores
 
 
 def _partial_top_k(

@@ -178,20 +178,3 @@ class PipelineCounters:
             "rows_kept": self.rows_kept.value,
             "rows_scrubbed": self.rows_scrubbed.value,
         }
-
-
-OUTPUT_COLUMNS = [
-    "clip_id",
-    "keep",
-    "drop_reason",
-    "lang",
-    "lang_conf",
-    "ppl",
-    "scrubbed",
-    "mapping",
-]
-
-
-def pipeline_output(clips: DataFrame, config: PipelineConfig = DEFAULT_PIPELINE) -> DataFrame:
-    """The compact output projection (SURVEY.md §1 north-rule schema)."""
-    return run_pipeline(clips, config).select("clip_id", *OUTPUT_COLUMNS[1:])
