@@ -557,30 +557,73 @@ def test_minhash_collapse_one_large_group(spark):
     assert "collect_list" not in plan and "Window" in plan
 
 
-@pytest.mark.parametrize("mode", [False, True])
-def test_minhash_one_plan_few_jobs_one_udf_pass(spark, mode):
-    """One call is one lazy plan: ≤ 4 jobs when collected, the MinHash
-    UDF evaluated once (one ArrowEvalPython), and the second join side
-    (and, collapsed, every use of the by-signature shuffle) read through
-    a reused exchange instead of a cache."""
-    from top_secret_spark.operators.dedup import near_duplicates_minhash
+def _lsh_call(mode, df):
+    """One call of the LSH operator ``mode`` names: MinHash near-dup
+    uncollapsed (False) or collapsed (True), SimHash near-dup, or fuzzy
+    decontamination against a few of ``df``'s own texts."""
+    from top_secret_spark.operators import dedup as D
 
-    df = spark.createDataFrame(_planted_minhash_corpus(),
-                               "doc_id long, text string")
+    if mode == "simhash":
+        return D.near_duplicates_simhash(df)
+    if mode == "fuzzy":
+        bench = df.filter(F.col("doc_id") < 20).select("text")
+        return D.flag_contaminated_fuzzy(df, bench, threshold=0.8)
+    return D.near_duplicates_minhash(df, threshold=0.8, collapse_exact=mode)
+
+
+@pytest.mark.parametrize("mode", [False, True, "simhash", "fuzzy"])
+def test_minhash_one_plan_few_jobs_one_udf_pass(spark, tmp_path, mode):
+    """One call over a parquet scan is one lazy plan: few jobs when
+    collected, nothing left cached, and the sketch UDF evaluated once
+    per input.  The near-dup self-joins read the second side (and,
+    collapsed, every use of the by-signature shuffle) through a reused
+    exchange instead of a cache, also with broadcast joins on; fuzzy
+    decontamination has one ArrowEvalPython per input."""
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(_planted_minhash_corpus(),
+                          "doc_id long, text string").write.parquet(path)
+    df = spark.read.parquet(path)
     sc = spark.sparkContext
-    group = f"minhash-one-plan-{mode}"
-    sc.setJobGroup(group, "near_duplicates_minhash job count")
+    cached_before = sc._jsc.getPersistentRDDs().size()
+    group = f"lsh-one-plan-{mode}"
+    sc.setJobGroup(group, "LSH operator job count")
     try:
-        out = near_duplicates_minhash(df, threshold=0.8, collapse_exact=mode)
+        out = _lsh_call(mode, df)
         assert out.collect()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 4
+    assert sc._jsc.getPersistentRDDs().size() == cached_before
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan
     final = plan.split("== Initial Plan ==")[0]
-    assert final.count("ArrowEvalPython") == 1
-    assert "ReusedExchange" in final
+    if mode == "fuzzy":
+        assert n_jobs <= 6
+        assert final.count("ArrowEvalPython") <= 2
+    else:
+        assert n_jobs <= 4
+        assert final.count("ArrowEvalPython") == 1
+        assert "ReusedExchange" in final
+
+
+@pytest.mark.parametrize("mode", [False, "simhash", "fuzzy"])
+def test_lsh_call_runs_no_job_on_exchange_input(spark, mode):
+    """Deciding whether to spread the input over the cores must not run
+    an input whose plan holds an exchange: the result's action would
+    run that shuffle again."""
+    df = (
+        spark.createDataFrame(_planted_minhash_corpus(),
+                              "doc_id long, text string")
+        .groupBy("doc_id").agg(F.first("text").alias("text"))
+    )
+    sc = spark.sparkContext
+    group = f"lsh-call-{mode}"
+    sc.setJobGroup(group, "LSH operator call")
+    try:
+        _lsh_call(mode, df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 # --- near-dup cluster resolution -------------------------------------------------
@@ -677,6 +720,27 @@ def test_simhash_max_bucket_accounting(spark):
     oversize = simhash_oversize_buckets(sh, "doc_id", max_bucket=10)
     assert oversize.count() == 4  # 64/16 bands, one mega-bucket each
     assert all(r["n"] == 30 for r in oversize.collect())
+
+
+def test_simhash_capped_keeps_pair_behind_dropped_band(spark):
+    """Docs 0 and 1 share buckets in bands 0 and 2; filler docs push
+    band 0's bucket over the cap.  The pair's first shared band is then
+    dropped, so the capped plan must still return it from band 2."""
+    from top_secret_spark.operators.dedup import simhash_candidate_pairs
+
+    def sketch(b0, b1, b2, b3):
+        return b0 | b1 << 16 | b2 << 32 | b3 << 48
+
+    rows = [(0, sketch(7, 1, 9, 1)), (1, sketch(7, 2, 9, 2))]
+    rows += [(10 + i, sketch(7, 100 + i, 200 + i, 300 + i)) for i in range(5)]
+    df = spark.createDataFrame(rows, "doc_id long, simhash long")
+    capped = {(r["a"], r["b"]): r["hamming"]
+              for r in simhash_candidate_pairs(df, max_bucket=3).collect()}
+    assert set(capped) == {(0, 1)}
+    assert capped[(0, 1)] == bin(sketch(7, 1, 9, 1) ^ sketch(7, 2, 9, 2)).count("1")
+    # uncapped, band 0 pairs all seven docs, each pair in one row
+    uncapped = [(r["a"], r["b"]) for r in simhash_candidate_pairs(df).collect()]
+    assert len(uncapped) == len(set(uncapped)) == 7 * 6 // 2
 
 
 # --- Catalyst fingerprint ---------------------------------------------------------

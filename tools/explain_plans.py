@@ -152,7 +152,11 @@ def main():
         "  collect_list + nested-transform expansion evaluated O(n^2)\n"
         "  structs on ONE row and could OOM an executor on a mega-bucket;\n"
         "  the join form is AQE-skew-splittable.\n"
-        "- Shuffle keys are (band, 16-bit bucket, 8-byte id) — no text.",
+        "- One lazy plan: the sketch rides in the band rows and `hamming`\n"
+        "  is computed right after the join; a pair keeps only the join row\n"
+        "  of its first shared band, so there is no distinct.\n"
+        "- Shuffle rows are (band, 16-bit bucket, 8-byte id, 8-byte sketch)\n"
+        "  — no text.",
     ))
 
     nd_plan = explain_str(near_duplicates_minhash(docs.limit(200)))
@@ -184,14 +188,19 @@ def main():
     from top_secret_spark.pipeline import per_codec_top_k
 
     nds_plan = explain_str(
-        near_duplicates_simhash(docs.limit(200), materialize=False)
+        near_duplicates_simhash(docs.limit(200))
     )
     sections.append((
         "SimHash near-dup end-to-end (sketch → buckets → Hamming verify)",
         nds_plan,
-        "- The 8-byte sketch is computed once (persisted) and reused by\n"
-        "  banding and BOTH verify-join sides — the ArrowEvalPython node\n"
-        "  appears once; verify joins read the InMemoryRelation.\n"
+        "- One lazy plan, the shape of the MinHash one: the 8-byte sketch\n"
+        "  rides in the (band, bucket) rows, so `hamming` is computed right\n"
+        "  after the self-join and no join fetches sketches back.  At run\n"
+        "  time AQE reads the second join side from the first side's\n"
+        "  exchange (`ReusedExchange`), so the sketch UDF runs once per\n"
+        "  document; the initial plan shown still lists both sides.\n"
+        "- A pair keeps only the join row of its first shared band (the\n"
+        "  `NOT exists(...)` join condition), so there is no distinct.\n"
         "- Hamming filter is `bit_count(xor)` — pure codegen on longs.\n"
         "- Per-doc sketch state is 8 bytes (vs 8·num_hashes for MinHash):\n"
         "  the cheapest near-dup shuffle possible at 10^12 docs.",
@@ -648,11 +657,12 @@ def main():
             flag_contaminated_fuzzy(docs, bench_small, threshold=0.9)
             .select("doc_id", "contaminated_fuzzy", "n_bench_near")
         ),
-        "- The corpus NEVER self-joins and its text never rides an\n"
-        "  exchange: signatures are computed once (persisted — the UDF is\n"
-        "  the dominant cost), the BENCHMARK side's bands and signatures\n"
-        "  BROADCAST (eval sets are small by contract), and the verify\n"
-        "  step compares fixed-width signatures only.\n"
+        "- One lazy plan.  The corpus NEVER self-joins and its text never\n"
+        "  rides an exchange: one ArrowEvalPython per input, and the\n"
+        "  BENCHMARK side's band rows BROADCAST with the signature riding\n"
+        "  in them (eval sets are small by contract), so the estimate is\n"
+        "  computed in the join condition itself.  A (doc, bench row) pair\n"
+        "  keeps only its first shared band: no bench row id, no distinct.\n"
         "- Output rows return to the caller via one groupBy + left join\n"
         "  on the 8-byte id — per-doc flag + count, nothing wider.",
     ))

@@ -1777,10 +1777,9 @@ def _repeated_windows_per_clip(
     expose a per-clip window-index array it never reads.  The window table is persisted for
     its two passes (hash groupBy + flag join), the per-clip result is
     eagerly materialized (bounded: one short row per flagged clip), and
-    the cache is released before returning — same persist →
-    localCheckpoint(eager) → unpersist discipline as
-    flag_contaminated_fuzzy, so nothing leaks for the application
-    lifetime and the decode never runs twice."""
+    the cache is released before returning (persist →
+    localCheckpoint(eager) → unpersist), so the decode never runs
+    twice."""
     wins = audio_window_hashes(df, win_ms=win_ms).persist()
     repeated = (
         wins.groupBy("win_hash")

@@ -481,26 +481,93 @@ def with_minhash(
     )
 
 
-def _band_bucket(sig, band, bands: int):
-    """Bucket of signature ``sig`` in ``band`` (a Column): the band's
-    chunk of the signature, hashed with the band index as seed."""
-    rows_per_band = (F.size(sig) / bands).cast("int")
-    return F.xxhash64(F.slice(sig, band * rows_per_band + 1, rows_per_band), band)
+def _band_bucket(bands: int):
+    """Bucket function of a MinHash signature cut into ``bands``: band
+    ``band``'s chunk of ``sig``, hashed with the band index as seed."""
+
+    def bucket(sig, band):
+        rows_per_band = (F.size(sig) / bands).cast("int")
+        return F.xxhash64(F.slice(sig, band * rows_per_band + 1, rows_per_band), band)
+
+    return bucket
 
 
-def _banded(sig_df: DataFrame, sig_col: str, bands: int) -> DataFrame:
-    """``sig_df``'s columns plus (band, bucket), one row per band — the
-    ONE banding expression of near-dup candidate generation and fuzzy
-    decontamination (same bands ⇒ same buckets)."""
+def _simhash_bucket(band_bits: int):
+    """Bucket function of the 64-bit SimHash: band ``band``'s
+    ``band_bits``-bit slice."""
+    mask = (1 << band_bits) - 1
+    return lambda h, band: F.call_function(
+        "shiftrightunsigned", h, band * band_bits
+    ).bitwiseAND(mask)
+
+
+def _banded(sig_df: DataFrame, sig_col: str, bands: int, bucket) -> DataFrame:
+    """``sig_df``'s columns plus (band, bucket), one row per band, where
+    ``bucket(sig, band)`` (Columns) keys a band — the ONE banding
+    expression of every text LSH operator here (same bands ⇒ same
+    buckets)."""
     return sig_df.select(
         "*",
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: _band_bucket(F.col(sig_col), i, bands),
+                lambda i: bucket(F.col(sig_col), i),
             )
         ).alias("band", "bucket"),
     )
+
+
+def _first_shared_band(sig_a, sig_b, bands: int, bucket):
+    """True on the join row of the first band the pair (``sig_a``,
+    ``sig_b``) shares.  A pair sharing several buckets joins once per
+    shared band; keeping only the first makes each pair one row without
+    a distinct (and the shuffle it would take).  Sound only when every
+    band row reaches the join: a dropped bucket can hide the first."""
+    return ~F.exists(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda j: (j < F.col("band")) & (bucket(sig_a, j) == bucket(sig_b, j)),
+    )
+
+
+def _band_self_join(
+    banded: DataFrame, id_col: str, sig_col: str, *carry: str
+) -> DataFrame:
+    """Every (a < b) pair of ``banded`` rows sharing a (band, bucket),
+    with both sketches (``_sig_a``, ``_sig_b``) and each ``carry``
+    column (``<c>_a``, ``<c>_b``) riding along, so the score needs no
+    join back.  Both sides are one subtree, so AQE reads the second
+    from the first side's exchange (a ``ReusedExchange``); the merge
+    hint keeps it so when broadcast joins are on, where a broadcast
+    side would be built from a second pass of the sketch UDF.  Pair
+    expansion is a join, not an in-expression nested loop, so AQE can
+    skew-split a giant bucket."""
+
+    def side(s):
+        return banded.select(
+            "band", "bucket", F.col(id_col).alias(s),
+            F.col(sig_col).alias(f"_sig_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    return side("a").join(side("b").hint("merge"), ["band", "bucket"]).filter(
+        F.col("a") < F.col("b")
+    )
+
+
+def _spread_over_cores(df: DataFrame) -> DataFrame:
+    """``df``, repartitioned over the cores when it has fewer partitions:
+    a small parquet scan can land in fewer splits than cores, which
+    would serialize a sketch UDF (at 100 TB this is a no-op).  An input
+    whose plan holds an exchange (an ``AdaptiveSparkPlan`` root) is
+    left as it is: asking its partition count would run that shuffle
+    now and the result's action again, and AQE already coalesces it to
+    about one partition per core (in partitions of at least
+    ``spark.sql.adaptive.coalescePartitions.minPartitionSize``)."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    root = df._jdf.queryExecution().executedPlan().nodeName()
+    if root != "AdaptiveSparkPlan" and df.rdd.getNumPartitions() < cores:
+        return df.repartition(cores)
+    return df
 
 
 def minhash_similarity_col(sig_a, sig_b):
@@ -561,12 +628,13 @@ def near_duplicates_minhash(
 
     The signature rides in the band rows, so ``est_jaccard`` is computed
     right after the (band, bucket) self-join: no join fetches signatures
-    back.  Both join sides are one subtree, so the band exchange is
-    reused (a ``ReusedExchange`` in the plan) and the MinHash UDF runs
-    once per document without a persist.  A pair sharing several buckets
-    keeps only the join row of its first shared band, so no distinct
-    (and no shuffle of pairs) is needed.  Pair expansion is a join, not
-    an in-expression nested loop, so AQE can skew-split a giant bucket.
+    back.  The two join sides read one band exchange
+    (``_band_self_join``), so on an uncached input (a file scan or a
+    local relation) the MinHash UDF runs once per document without a
+    persist.  On a cached input AQE plans each side on its own and the
+    UDF runs twice (two ArrowEvalPython nodes, measured at local[4]).
+    A pair sharing several buckets keeps only the join row of its first
+    shared band, so no distinct (and no shuffle of pairs) is needed.
 
     ``collapse_exact=True`` shuffles the documents once by signature
     and bands one representative per group of identical signatures (its
@@ -613,14 +681,7 @@ def near_duplicates_minhash(
             f"collapse_exact must be True, False, or 'auto', got "
             f"{collapse_exact!r}"
         )
-    # A small parquet scan can land in fewer splits than cores, which
-    # would serialize the signature UDF; spread it first.  At 100 TB the
-    # scan already yields >> cores splits and this is a no-op.
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        df = df.repartition(cores)
-
-    sigs = with_minhash(df, text_col, num_hashes).select(
+    sigs = with_minhash(_spread_over_cores(df), text_col, num_hashes).select(
         F.col(id_col).alias("_id"), "minhash"
     )
     if collapse_exact:
@@ -637,26 +698,11 @@ def near_duplicates_minhash(
     else:
         reps = sigs.withColumn("_n", F.lit(1))
     bands = bands or _auto_bands(num_hashes, threshold)
-    banded = _banded(reps, "minhash", bands)
-
-    def side(s):
-        return banded.select(
-            "band", "bucket", F.col("_id").alias(s),
-            F.col("minhash").alias(f"_sig_{s}"), F.col("_n").alias(f"_n_{s}"),
-        )
-
+    bucket = _band_bucket(bands)
     sig_a, sig_b = F.col("_sig_a"), F.col("_sig_b")
-    # a pair sharing several buckets joins once per shared band: keep
-    # only its first shared band, so each pair is one row without a
-    # distinct (and the shuffle it would take)
-    shared_earlier = F.exists(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: (j < F.col("band"))
-        & (_band_bucket(sig_a, j, bands) == _band_bucket(sig_b, j, bands)),
-    )
-    candidates = side("a").join(side("b"), ["band", "bucket"]).filter(
-        (F.col("a") < F.col("b")) & ~shared_earlier
-    )
+    candidates = _band_self_join(
+        _banded(reps, "minhash", bands, bucket), "_id", "minhash", "_n"
+    ).filter(_first_shared_band(sig_a, sig_b, bands, bucket))
     pairs = candidates.select(
         "a", "b", "_sig_a", "_sig_b",
         minhash_similarity_col(sig_a, sig_b).alias("est_jaccard"),
@@ -967,60 +1013,45 @@ def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("simhash", make_simhash_udf()(F.col(text_col)))
 
 
-def _simhash_banded(
-    df: DataFrame, id_col: str, hash_col: str, band_bits: int
-) -> DataFrame:
-    """(id, band, bucket) rows: the 64-bit SimHash sliced into
-    64/band_bits bands — the one banding expression shared by candidate
-    generation and oversize accounting."""
-    bands = 64 // band_bits
-    mask = (1 << band_bits) - 1
-    return df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.array(*[
-                F.shiftrightunsigned(F.col(hash_col), i * band_bits).bitwiseAND(mask)
-                for i in range(bands)
-            ])
-        ).alias("band", "bucket"),
-    )
-
-
 def simhash_candidate_pairs(
     df: DataFrame, id_col: str = "doc_id", hash_col: str = "simhash",
     band_bits: int = 16, max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dup candidates = docs sharing any 16-bit band of the 64-bit
-    SimHash (catches pairs within Hamming distance 3 with certainty when
-    the differing bits span ≤3 bands).
+    SimHash → (a, b, hamming) with a < b, returned lazily as one plan
+    (catches pairs within Hamming distance 3 with certainty when the
+    differing bits span ≤3 bands).
 
-    Pair expansion is a codegen'd self-JOIN on the (band, bucket) key —
-    the band join of ``near_duplicates_minhash`` — NOT a collect_list +
-    nested-transform expansion: a mega-bucket (heavy exact duplication,
-    the norm in web crawls) is handled by the join machinery and AQE
-    skew splitting instead of materializing O(n²) structs from one row
-    on one executor.  ``max_bucket`` (optional) drops oversize buckets;
-    count them via ``simhash_oversize_buckets`` with the SAME band_bits
-    — never cap silently."""
-    banded = _simhash_banded(df, id_col, hash_col, band_bits)
+    The shape of ``near_duplicates_minhash``: the sketch rides in the
+    (band, bucket) rows, pair expansion is one self-join on them (a
+    mega-bucket — heavy exact duplication, the norm in web crawls — is
+    join work AQE can skew-split, not O(n²) structs built on one row),
+    and ``hamming`` is computed right after it, with no join fetching
+    sketches back.  A pair keeps only the join row of its first shared
+    band, so no distinct is needed.
+
+    ``max_bucket`` (optional) drops buckets of more than that many docs,
+    counted by a window over the join's own partitioning (no extra
+    shuffle); count them via ``simhash_oversize_buckets`` with the SAME
+    band_bits — never cap silently.  A dropped bucket can hide a pair's
+    first shared band, so the capped plan takes a distinct instead."""
+    bands = 64 // band_bits
+    bucket = _simhash_bucket(band_bits)
+    banded = _banded(df, hash_col, bands, bucket)
     if max_bucket is not None:
-        oversize = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("_bn"))
-            .filter(F.col("_bn") > max_bucket)
-            .select("band", "bucket")
+        size = F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+        banded = banded.withColumn("_n", size).filter(F.col("_n") <= max_bucket)
+    pairs = _band_self_join(banded, id_col, hash_col)
+    if max_bucket is None:
+        pairs = pairs.filter(
+            _first_shared_band(F.col("_sig_a"), F.col("_sig_b"), bands, bucket)
         )
-        banded = banded.join(
-            F.broadcast(oversize), ["band", "bucket"], "left_anti"
-        )
-    left = banded.select("band", "bucket", F.col(id_col).alias("a"))
-    right = banded.select("band", "bucket", F.col(id_col).alias("b"))
-    return (
-        left.join(right, ["band", "bucket"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
+    pairs = pairs.select(
+        "a", "b",
+        hamming_distance_col(F.col("_sig_a"), F.col("_sig_b"))
+        .cast("int").alias("hamming"),
     )
+    return pairs if max_bucket is None else pairs.distinct()
 
 
 def simhash_oversize_buckets(
@@ -1030,7 +1061,7 @@ def simhash_oversize_buckets(
     """(band, bucket, n) rows a ``max_bucket`` cap would drop — the
     accounting side of capped SimHash candidate generation."""
     return (
-        _simhash_banded(df, id_col, hash_col, band_bits)
+        _banded(df, hash_col, 64 // band_bits, _simhash_bucket(band_bits))
         .groupBy("band", "bucket")
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > max_bucket)
@@ -1048,28 +1079,24 @@ def near_duplicates_simhash(
     max_distance: int = 3,
     band_bits: int = 16,
     max_bucket: int | None = None,
-    materialize: bool = True,
     stats: dict | None = None,
 ) -> DataFrame:
     """End-to-end SimHash near-dup: 64-bit sketches → band-bucket
-    candidates → Hamming verify → (a, b, hamming) pairs with
-    hamming ≤ ``max_distance`` — the cheaper-sketch twin of
-    ``near_duplicates_minhash`` (8 bytes/doc vs 8·num_hashes).
+    candidates → Hamming filter → (a, b, hamming) pairs with
+    hamming ≤ ``max_distance``, returned lazily as one plan — the
+    cheaper-sketch twin of ``near_duplicates_minhash`` (8 bytes/doc vs
+    8·num_hashes), and the same plan shape (``simhash_candidate_pairs``).
 
     Recall is EXACT for the default parameters: with 64/16 = 4 bands,
     any pair within Hamming distance 3 differs in at most 3 bands, so
     by pigeonhole at least one band matches and the pair is generated
     (general rule: full recall whenever max_distance < 64/band_bits).
-    Sketches are persisted once and reused by banding and both verify
-    sides; the result is eagerly localCheckpoint-ed (≤-max_distance
-    pairs only) so intermediates are unpersisted before returning.
-    ``materialize=False`` returns lazily and leaves the persist in
-    place: write or consume the frame promptly, then
-    ``spark.catalog.clearCache()``.  Feed the pairs to
+    Nothing is cached: each action re-runs the plan, whose sketch UDF
+    runs once per document when the band exchange is reused (see
+    ``near_duplicates_minhash``).  ``stats`` (a dict) receives
+    ``n_candidate_pairs``, one extra Spark job.  Feed the pairs to
     ``near_duplicate_clusters`` / ``dedup_near(method='simhash')`` for
     actual survivor selection."""
-    from pyspark import StorageLevel
-
     if max_distance >= 64 // band_bits:
         # still usable, but recall is no longer guaranteed — surface it
         import warnings
@@ -1080,40 +1107,18 @@ def near_duplicates_simhash(
             f"band can be missed; lower band_bits for guaranteed recall",
             stacklevel=2,
         )
-    cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
-        df = df.repartition(cores)
-    sigs = (
-        with_simhash(df, text_col)
-        .select(id_col, "simhash")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # the kernel IS deterministic; the flag is an optimizer barrier —
+    # the band slices are null-intolerant, so without it Catalyst infers
+    # isnotnull(simhash) below the repartition and evaluates the UDF
+    # there AND after it
+    sketch = make_simhash_udf().asNondeterministic()
+    sigs = _spread_over_cores(df).select(
+        F.col(id_col), sketch(F.col(text_col)).alias("simhash")
     )
-    pairs = simhash_candidate_pairs(
-        sigs, id_col, "simhash", band_bits, max_bucket
-    )
-    pairs_persisted = False
+    pairs = simhash_candidate_pairs(sigs, id_col, "simhash", band_bits, max_bucket)
     if stats is not None:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-        pairs_persisted = True
         stats["n_candidate_pairs"] = pairs.count()
-    sa = sigs.select(F.col(id_col).alias("a"), F.col("simhash").alias("_ha"))
-    sb = sigs.select(F.col(id_col).alias("b"), F.col("simhash").alias("_hb"))
-    result = (
-        pairs.join(sa, "a").join(sb, "b")
-        .withColumn(
-            "hamming",
-            hamming_distance_col(F.col("_ha"), F.col("_hb")).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_distance)
-        .select("a", "b", "hamming")
-    )
-    if not materialize:
-        return result
-    result = result.localCheckpoint(eager=True)
-    if pairs_persisted:
-        pairs.unpersist()
-    sigs.unpersist()
-    return result
+    return pairs.filter(F.col("hamming") <= max_distance)
 
 
 # --- embedding-cosine near-dup ----------------------------------------------------
@@ -1206,56 +1211,34 @@ def flag_contaminated_fuzzy(
 
     Scale shape — the corpus NEVER self-joins and its text never
     shuffles: both sides get signatures (one Arrow pass each), the
-    BENCHMARK side's banded rows and signatures are BROADCAST (eval
-    sets are small by definition — thousands of rows, not billions),
-    candidates come from a corpus-banded × bench-banded bucket join,
-    and the verify step compares signatures only.  Per corpus doc the
-    output is a boolean + count via one groupBy on the 8-byte id."""
+    BENCHMARK side's band rows, signature riding in them, are BROADCAST
+    (eval sets are small by definition — thousands of rows, not
+    billions), and the estimate is computed right after the
+    corpus-banded × bench-banded bucket join.  A (doc, bench row) pair
+    keeps only the join row of its first shared band, so each counts
+    once with no bench row id and no distinct.  Per corpus doc the
+    output is a boolean + count via one groupBy on the 8-byte id,
+    returned lazily as one plan."""
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    btc = bench_text_col or text_col
     b = bands or _auto_bands(num_hashes, threshold)
+    bucket = _band_bucket(b)
     mk = make_minhash_udf(num_hashes, shingle_k)
-    # persist: the signature UDF (the dominant cost — full corpus scan +
-    # shingling + num_hashes mins per doc) feeds BOTH the banding pass
-    # and the verify join; without the persist one action evaluates it
-    # twice
-    corpus_sig = df.select(
-        F.col(id_col), mk(F.col(text_col)).alias("minhash")
-    ).persist()
-    bench_sig = benchmark.select(
-        F.monotonically_increasing_id().alias("_bid"),
-        mk(F.col(btc)).alias("_bsig"),
-    ).localCheckpoint(eager=True)  # freeze nondeterministic ids — the
-    # bench side is small by contract, so the eager materialization is
-    # cheap and both downstream uses (banding + verify) see ONE id set
-    cband = _banded(corpus_sig, "minhash", b)
-    bband = _banded(bench_sig, "_bsig", b)
-    cands = (
-        cband.join(
-            F.broadcast(bband.withColumnRenamed("_bid", "_b")),
-            ["band", "bucket"],
-        )
-        .select(F.col(id_col), F.col("_b").alias("_bid"))
-        .distinct()
+    corpus = _spread_over_cores(df).select(
+        F.col(id_col), mk(F.col(text_col)).alias("_sig")
     )
+    bench = benchmark.select(mk(F.col(bench_text_col or text_col)).alias("_bsig"))
+    sig, bsig = F.col("_sig"), F.col("_bsig")
     verified = (
-        cands.join(corpus_sig, id_col)
-        .join(F.broadcast(bench_sig), "_bid")
+        _banded(corpus, "_sig", b, bucket)
+        .join(F.broadcast(_banded(bench, "_bsig", b, bucket)), ["band", "bucket"])
         .filter(
-            minhash_similarity_col(F.col("minhash"), F.col("_bsig"))
-            >= F.lit(threshold)
+            _first_shared_band(sig, bsig, b, bucket)
+            & (minhash_similarity_col(sig, bsig) >= F.lit(threshold))
         )
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_bench_near"))
-        # eager-materialize the verified counts (one narrow row per
-        # contaminated doc — bounded by the candidate set, tiny next to
-        # the corpus), then release the signature cache: without this
-        # the persist leaks cached signature blocks for the application
-        # lifetime
-        .localCheckpoint(eager=True)
     )
-    corpus_sig.unpersist()
     return (
         df.join(verified, id_col, "left")
         .withColumn(

@@ -7271,7 +7271,10 @@ QUERIES = {
     "q64_noise_mix": (q_noise_mix, Q_NOISE_MIX_SQL),
     "q65_merge_segments": (q_merge_segments, Q_MERGE_SEGMENTS_SQL),
     "q66_transcode": (q_transcode, Q_TRANSCODE_SQL),
-    "q67_collapse_lines": (q_collapse_lines, Q_COLLAPSE_LINES_SQL),
+    # q36 here and q80 below are the direct oracles of SimHash near-dup
+    # and fuzzy decontamination, both rebuilt as one lazy LSH plan; they
+    # took the slots of two pure-Catalyst queries (q67, q103)
+    "q36_simhash_hamming": (q_simhash_hamming_neardup, Q_SIMHASH_HAMMING_SQL),
     "q69_importance_weight": (q_importance_weight, Q_IMPORTANCE_SQL),
     "q71_log_mel": (q_log_mel, Q_LOG_MEL_SQL),
     "q72_repetition_signals": (q_repetition_signals, Q_REPETITION_SQL),
@@ -7280,7 +7283,7 @@ QUERIES = {
     "q84_bandwidth_gate": (q_bandwidth_gate, Q_BANDWIDTH_SQL),
     "q101_wav_unwrap": (q_wav_unwrap, Q_WAV_UNWRAP_SQL),
     "q102_bloom_decontaminate": (q_bloom_decontaminate, Q_BLOOM_DECONTAMINATE_SQL),
-    "q103_psi_drift": (q_psi_drift, Q_PSI_DRIFT_SQL),
+    "q80_fuzzy_decontamination": (q_fuzzy_decontamination, Q_FUZZY_DECON_SQL),
     "q104_declip_repair": (q_declip_repair, Q_DECLIP_REPAIR_SQL),
     "q105_pack_audio": (q_pack_audio, Q_PACK_AUDIO_SQL),
     "q106_lang_consistency": (q_lang_consistency, Q_LANG_CONSISTENCY_SQL),
@@ -7344,7 +7347,7 @@ QUERIES = {
     "q31_filter_composition": (q_filter_composition, Q_FILTER_COMPOSITION_SQL),
     "q131_adpcm_transcode": (q_adpcm_transcode, Q_ADPCM_TRANSCODE_SQL),
     "q90_survivor_policy": (q_survivor_policy, Q_SURVIVOR_POLICY_SQL),
-    "q36_simhash_hamming": (q_simhash_hamming_neardup, Q_SIMHASH_HAMMING_SQL),
+    "q67_collapse_lines": (q_collapse_lines, Q_COLLAPSE_LINES_SQL),
     "q91_repeated_segments": (q_repeated_segments, Q_REPEATED_SEGMENTS_SQL),
     "q38_salted_topk": (q_salted_per_key_topk, Q_SALTED_TOPK_SQL),
     "q39_text_ann_topk": (q_text_ann_topk, Q_TEXT_ANN_SQL),
@@ -7367,7 +7370,7 @@ QUERIES = {
     "q70_mixture_sample": (q_mixture_sample, Q_MIXTURE_SAMPLE_SQL),
     "q76_mfcc": (q_mfcc, Q_MFCC_SQL),
     "q77_dedup_paragraphs": (q_dedup_paragraphs, Q_DEDUP_PARAGRAPHS_SQL),
-    "q80_fuzzy_decontamination": (q_fuzzy_decontamination, Q_FUZZY_DECON_SQL),
+    "q103_psi_drift": (q_psi_drift, Q_PSI_DRIFT_SQL),
     "q81_corpus_diff": (q_corpus_diff, Q_CORPUS_DIFF_SQL),
     "q82_audio_export_pipeline": (q_audio_export_pipeline, Q_AUDIO_EXPORT_SQL),
     "q83_data_card": (q_data_card, Q_DATA_CARD_SQL),
