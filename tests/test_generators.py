@@ -2,10 +2,6 @@
 every distributed generator equals its pandas row function, row for
 row, column for column, whatever the partitioning."""
 
-import importlib.util
-import json
-import os
-
 import pytest
 from pyspark.sql.types import _parse_datatype_string
 
@@ -58,37 +54,3 @@ def test_rows_frame_types_come_from_the_ddl():
     empty = C.rows_frame([])
     assert len(empty) == 0 and list(empty.columns) == list(pdf.columns[:-1])
 
-
-def _bench_scaling():
-    path = os.path.join(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))), "tools", "bench_scaling.py")
-    spec = importlib.util.spec_from_file_location("bench_scaling", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_scaling_input_reused_only_with_matching_stamp(tmp_path, monkeypatch):
-    """tools/bench_scaling.py reuses its parquet input only when the
-    _meta.json stamp names the same n_clips AND the current generator's
-    digest; any other stamp regenerates (here: reaches Spark)."""
-    import pyspark.sql
-
-    bs = _bench_scaling()
-    monkeypatch.setattr(bs, "INPUT_PARQUET", str(tmp_path))
-
-    class _NoSpark:
-        @property
-        def builder(self):
-            raise RuntimeError("regenerating")
-
-    monkeypatch.setattr(pyspark.sql, "SparkSession", _NoSpark())
-    digest = bs._generator_digest()
-    meta = tmp_path / "_meta.json"
-    meta.write_text(json.dumps({"n_clips": 100, "generator_digest": digest}))
-    assert bs.ensure_input(100) == str(tmp_path)
-    with pytest.raises(RuntimeError, match="regenerating"):
-        bs.ensure_input(101)
-    meta.write_text(json.dumps({"n_clips": 100, "generator_digest": "old"}))
-    with pytest.raises(RuntimeError, match="regenerating"):
-        bs.ensure_input(100)

@@ -469,3 +469,25 @@ def test_prefiltered_scrub_batch_over_64_required_sets():
     assert scrub_batch(texts, None, cfg) == (
         [o for o, _ in expected], [m for _, m in expected])
     assert sum(1 for _, m in expected if m) == 71
+
+
+def test_reference_per_message_latency_gate():
+    """The reference benchmark's CI gate (bin/benchmark): filtering one
+    of its three email + credit-card messages takes <= 350 ms.  One warm
+    call, then the best of 5 timed runs over the message set."""
+    import time
+
+    messages = [
+        "Hi, my email is alice@example.com and my card is 4242-4242-4242-4242.",
+        "Contact bob@test.org about the charge on 4141414141414141 today.",
+        "Send receipts to carol@mail.example.net; card 4242424242424242 failed.",
+    ]
+    for m in messages:
+        filter_text(m)
+    best = float("inf")
+    for _ in range(5):
+        t0 = time.perf_counter()
+        for m in messages:
+            filter_text(m)
+        best = min(best, time.perf_counter() - t0)
+    assert best / len(messages) * 1000 <= 350
