@@ -369,6 +369,22 @@ def test_audio_near_duplicates_planted_families(spark):
     assert capped < 30
 
 
+def test_audio_near_duplicates_scores_each_pair_once(spark):
+    """The pair-SNR UDF is an optimizer barrier: the SNR filter and the
+    output projection read ONE evaluation, so the collected final plan
+    holds exactly one ArrowEvalPython (a deterministic UDF is planned
+    twice and decodes every candidate pair twice)."""
+    from top_secret_spark.operators.audio import audio_near_duplicates
+    from top_secret_spark.sources.clips import neardup_clips_df
+
+    out = audio_near_duplicates(neardup_clips_df(spark, 12, partitions=2))
+    assert out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ArrowEvalPython") == 1
+
+
 def test_rate_consistency_gate(spark):
     from top_secret_spark.operators.audio import (
         with_audio_features,

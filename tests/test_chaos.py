@@ -142,6 +142,90 @@ def test_no_audio_operator_dies_on_poison(chaos):
     assert not failures, "\n".join(failures)
 
 
+# The nine sr-group feature operators: emitted DDL (names, order and
+# types exactly as planned; every field nullable) and the value each
+# field holds on a row the decode never yields (payload/codec poison or
+# a NULL / non-positive sr).
+_PITCH = ("pitch_ok boolean, f0_hz double, voiced_ratio double, "
+          "n_pitch_frames int",
+          {"pitch_ok": False, "f0_hz": 0.0, "voiced_ratio": 0.0,
+           "n_pitch_frames": 0})
+_REVERB = ("reverb_ok boolean, rt60_s double, n_decay_pairs int, "
+           "n_reverb_frames int",
+           {"reverb_ok": False, "rt60_s": 0.0, "n_decay_pairs": 0,
+            "n_reverb_frames": 0})
+_SNR = ("snr_ok boolean, snr_est_db double, snr_n_frames int",
+        {"snr_ok": False, "snr_est_db": 0.0, "snr_n_frames": 0})
+SR_FEATURE_OPS = {
+    "with_spectral_features": (
+        "spectral_ok boolean, spectral_centroid_hz double, "
+        "spectral_flatness double, n_frames bigint",
+        {"spectral_ok": False, "spectral_centroid_hz": 0.0,
+         "spectral_flatness": 1.0, "n_frames": 0}),
+    "with_log_mel": (
+        "mel_ok boolean, log_mel array<array<float>>, n_mel_frames int, "
+        "mel_argmax_hz double",
+        {"mel_ok": False, "log_mel": [], "n_mel_frames": 0,
+         "mel_argmax_hz": 0.0}),
+    "with_snr_estimate": _SNR,
+    "with_mfcc": (
+        "mfcc_ok boolean, mfcc array<array<float>>, n_mfcc_frames int, "
+        "mfcc_c0_mean double, mfcc_c1_mean double",
+        {"mfcc_ok": False, "mfcc": [], "n_mfcc_frames": 0,
+         "mfcc_c0_mean": 0.0, "mfcc_c1_mean": 0.0}),
+    "with_bandwidth": (
+        "bw_ok boolean, rolloff_hz double, bw_n_frames int, "
+        "upsampled_suspect boolean",
+        {"bw_ok": False, "rolloff_hz": 0.0, "bw_n_frames": 0,
+         "upsampled_suspect": False}),
+    "with_speech_activity": (
+        "vad_ok boolean, speech_ratio double, n_speech_segments int",
+        {"vad_ok": False, "speech_ratio": 0.0, "n_speech_segments": 0}),
+    "with_pitch": _PITCH,
+    "with_reverb": _REVERB,
+    "with_voice_health": (
+        ", ".join(d for d, _ in (_PITCH, _REVERB, _SNR)),
+        {**_PITCH[1], **_REVERB[1], **_SNR[1]}),
+}
+
+
+@pytest.mark.parametrize("keep_bytes", [False, True])
+def test_sr_feature_operator_schemas_pinned(chaos, keep_bytes):
+    """Plan-time schema of every sr-group feature operator: carried
+    input columns in input order (``bytes`` only with keep_bytes), then
+    the emitted fields — names, order, types and nullability."""
+    from pyspark.sql.types import DataType
+
+    import top_secret_spark.operators.audio as A
+
+    carried = ("clip_id string, " + ("bytes binary, " if keep_bytes else "")
+               + "sr_hz int, dur_ms int, codec string, transcript string, "
+               "n_channels int")
+    for name, (ddl, _) in SR_FEATURE_OPS.items():
+        got = getattr(A, name)(chaos, keep_bytes=keep_bytes).schema
+        assert got == DataType.fromDDL(f"{carried}, {ddl}"), (
+            name, got.simpleString())
+        assert all(f.nullable for f in got.fields), name
+
+
+def test_sr_feature_operators_default_poison_rows(chaos):
+    """Every row the decode never yields — undecodable payload or codec,
+    NULL or non-positive sr — reads ``<x>_ok = false`` with the default
+    measurements (0, 0.0, flatness 1.0, empty matrices), and the clean
+    pcm16 row reads ok."""
+    import top_secret_spark.operators.audio as A
+
+    poison = UNDECODABLE | BAD_SR
+    for name, (_, defaults) in SR_FEATURE_OPS.items():
+        rows = {r["clip_id"]: r for r in getattr(A, name)(chaos).collect()}
+        assert set(rows) == ALL_IDS, name
+        oks = [f for f in defaults if f.endswith("_ok")]
+        assert all(rows["ok_pcm16"][f] for f in oks), name
+        for cid in poison:
+            got = {f: rows[cid][f] for f in defaults}
+            assert got == defaults, (name, cid, got)
+
+
 def test_decode_ok_flags_exactly_the_decodable_rows(chaos):
     from top_secret_spark.operators.audio import with_audio_features
 

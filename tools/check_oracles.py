@@ -2,6 +2,11 @@
 entry on Spark AND its oracle_sql() on DuckDB at sf0.01, compare
 row-count + schema + order-insensitive value hash.
 
+Every ``ok`` line carries the Spark value hash (rows-only queries
+included), so two runs over different trees diff line for line once the
+trailing ``[N.Ns]`` timings are stripped:
+``sed 's/ \[[0-9.]*s\]$//' run.txt``.
+
 Usage: python tools/check_oracles.py [sf_dir] [only_query_prefix]
 """
 
@@ -68,9 +73,10 @@ def main():
             failures.append(name)
             print(f"FAIL {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             continue
+        hs = value_hash(srows, scols)
         if name not in oracles:
             print(f"ok   {name}: rows-only ({len(srows)} rows) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"hash {hs} [{time.time()-t0:.1f}s]")
             continue
         try:
             odf = con.sql(oracles[name])
@@ -86,7 +92,7 @@ def main():
         if sorted(scols) != sorted(ocols):
             problems.append(f"cols {sorted(scols)} vs {sorted(ocols)}")
         else:
-            hs, ho = value_hash(srows, scols), value_hash(orows, ocols)
+            ho = value_hash(orows, ocols)
             if hs != ho:
                 problems.append(f"hash {hs} vs {ho}")
         if problems:
@@ -99,7 +105,8 @@ def main():
             for x in list(oset - sset)[:3]:
                 print(f"   oracle-only: {x}")
         else:
-            print(f"ok   {name}: {len(srows)} rows match [{time.time()-t0:.1f}s]")
+            print(f"ok   {name}: {len(srows)} rows match hash {hs} "
+                  f"[{time.time()-t0:.1f}s]")
 
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
     spark.stop()

@@ -1258,11 +1258,13 @@ def decodable_indices(datas: list, codecs, codec: str, base_ok=None):
 def decode_sr_groups(datas: list, codecs, srs):
     """Yield ``(idx, samples, lengths, sr)`` for every decodable
     (codec, sample-rate) group of an Arrow batch — the ONE shared
-    scaffold behind every sr-dependent feature operator (log-mel, MFCC,
-    SNR estimate): supported-codec split, NULL-payload / NULL-or-
-    nonpositive-sr exclusion, the pcm16 odd-length poison guard, and
-    one concatenated decode per group.  Rows never yielded are the
-    caller's poison rows (leave them at their ok=false defaults).
+    scaffold behind every sr-dependent audio operator: supported-codec
+    split, NULL-payload / NULL-or-nonpositive-sr exclusion, the pcm16
+    odd-length poison guard, and one concatenated decode per group.
+    Rows never yielded are the caller's poison rows.  The feature
+    operators reach it through ``operators.audio._with_sr_features``,
+    which hands each group to every requested feature kernel and leaves
+    the poison rows at their ok=false defaults.
 
     ``datas`` is the raw payload list; ``codecs`` a string array;
     ``srs`` a float64 array with NaN for NULL rates."""

@@ -15,14 +15,26 @@ that collide with carried columns, and runs the operator's batch
 function once per Arrow batch.  Only the fixed-schema emitters
 (``frame_energy_df``, ``decoded_pcm_df``, ``audio_window_hashes``,
 ``audio_cdc_segments``) call ``mapInPandas`` directly.
+
+A batch feeds the decode through one reader: ``_sr_groups`` (and its
+channel-count twin ``_sr_nch_groups``) turns the ``bytes`` / ``codec``
+/ ``sr_hz`` columns into decoded (codec, sr) groups.  The sr-dependent
+feature operators (spectral, log-mel, SNR, MFCC, bandwidth, speech
+activity, pitch, reverb) are each one feature spec — emitted DDL plus a
+kernel over one decoded group — run by ``_with_sr_features``, which
+owns the zeroed columns, the scatter and the poison-row defaults.
+``with_voice_health`` is that runner over the pitch, reverb and SNR
+specs: one decode and one Arrow crossing for all three.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Callable, Mapping
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..kernel.audio import BYTES_PER_SAMPLE as _BYTES_PER_SAMPLE
 from ..kernel.audio import SUPPORTED_CODECS as _SUPPORTED_CODECS
@@ -34,17 +46,107 @@ _FEATURES_SCHEMA_SUFFIX = (
 )
 
 
-def _sr_groups(pdf):
-    """``kernel.audio.decode_sr_groups`` over a clips batch's
-    ``bytes`` / ``codec`` / ``sr_hz`` columns (NULL sr read as NaN)."""
+def _decode_args(pdf, *rate_cols):
+    """A clips batch as decode input: the ``bytes`` payload list, the
+    ``codec`` array, then ``sr_hz`` and each of ``rate_cols`` as float64
+    with NULL read as NaN (the decode's poison marker)."""
     import numpy as np
 
-    from ..kernel.audio import decode_sr_groups
-
-    return decode_sr_groups(
+    return (
         pdf["bytes"].tolist(),
         pdf["codec"].to_numpy(),
-        pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan),
+        *(
+            pdf[c].to_numpy(dtype="float64", na_value=np.nan)
+            for c in ("sr_hz", *rate_cols)
+        ),
+    )
+
+
+def _sr_groups(pdf):
+    """``kernel.audio.decode_sr_groups`` over a clips batch: yields
+    ``(idx, samples, lengths, sr)`` per decodable (codec, sr) group."""
+    from ..kernel.audio import decode_sr_groups
+
+    return decode_sr_groups(*_decode_args(pdf))
+
+
+def _sr_nch_groups(pdf):
+    """``kernel.audio.decode_sr_nch_groups`` over a clips batch with an
+    ``n_channels`` column: yields ``(idx, samples, lengths, sr, nch,
+    codec)`` per decodable (codec, sr, nch) group."""
+    from ..kernel.audio import decode_sr_nch_groups
+
+    return decode_sr_nch_groups(*_decode_args(pdf, "n_channels"))
+
+
+@dataclass(frozen=True)
+class _SrFeature:
+    """One feature of :func:`_with_sr_features`.  ``ddl`` is what it
+    emits; ``kernel(samples, lengths, sr)`` measures one decoded (codec,
+    sr) group and returns ``{field: values for the group}``, its own
+    ``<x>_ok`` included (the ok rule is the feature's: most require one
+    frame, speech activity one sample).  ``fill`` names the fields whose
+    poison-row default is not zero / False / ``[]``."""
+
+    ddl: str
+    kernel: Callable
+    fill: Mapping = field(default_factory=dict)
+
+
+# zeroed numpy column per emitted scalar type; array<...> fields are
+# per-row lists
+_FEATURE_DTYPES = {
+    "boolean": "bool", "double": "float64", "int": "int32", "bigint": "int64",
+}
+
+
+def _with_sr_features(
+    df: DataFrame, features: list[_SrFeature], keep_bytes: bool
+) -> DataFrame:
+    """Append every field of ``features`` through one decode and one
+    Arrow crossing: per batch, each (codec, sr) group is decoded once
+    (:func:`_sr_groups`) and handed to every feature's kernel, whose
+    values are scattered into the batch's columns.  Rows the decode
+    never yields (undecodable payload or codec, NULL or non-positive sr)
+    keep the defaults: ok false, zero measurements, ``fill`` values,
+    empty arrays.  ``bytes`` is dropped unless ``keep_bytes``."""
+    emits = T.DataType.fromDDL(", ".join(f.ddl for f in features))
+    fill = {k: v for f in features for k, v in f.fill.items()}
+    layout = [
+        (
+            f.name,
+            None if isinstance(f.dataType, T.ArrayType)
+            else _FEATURE_DTYPES[f.dataType.simpleString()],
+            fill.get(f.name, 0),
+        )
+        for f in emits.fields
+    ]
+    kernels = [f.kernel for f in features]
+
+    def run(pdf):
+        import numpy as np
+
+        n = len(pdf)
+        cols = {
+            name: [[] for _ in range(n)] if dtype is None
+            else np.full(n, default, dtype=dtype)
+            for name, dtype, default in layout
+        }
+        for idx, samples, lengths, sr in _sr_groups(pdf):
+            for kernel in kernels:
+                for name, values in kernel(samples, lengths, sr).items():
+                    col = cols[name]
+                    if isinstance(col, list):
+                        for i, v in zip(idx, values):
+                            col[i] = v
+                    else:
+                        col[idx] = values
+        for name, col in cols.items():
+            pdf[name] = col
+        return pdf
+
+    return map_batches(
+        df, run, emits=emits, drop=() if keep_bytes else ("bytes",),
     )
 
 
@@ -130,12 +232,6 @@ def set_audio_feature_columns(pdf):
     return pdf
 
 
-_SPECTRAL_SCHEMA_SUFFIX = (
-    "spectral_ok boolean, spectral_centroid_hz double, "
-    "spectral_flatness double, n_frames long"
-)
-
-
 def with_spectral_features(
     df: DataFrame,
     frame_ms: int = 32,
@@ -162,36 +258,20 @@ def with_spectral_features(
     chain further payload transforms after this one.
     """
 
-    def run(pdf):
-        import numpy as np
-
+    def kernel(samples, lengths, sr):
         from ..kernel.spectral import batch_spectral
 
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        cents = np.zeros(n, dtype=np.float64)
-        flats = np.ones(n, dtype=np.float64)
-        nfs = np.zeros(n, dtype=np.int64)
-        # frame length depends on sr: one kernel call per (codec, sr)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            c, fl, nf = batch_spectral(
-                samples, lengths, sr, frame_ms=frame_ms, hop_ms=hop_ms,
-            )
-            oks[idx] = nf > 0
-            cents[idx] = c
-            flats[idx] = fl
-            nfs[idx] = nf
-        pdf["spectral_ok"] = oks
-        pdf["spectral_centroid_hz"] = cents
-        pdf["spectral_flatness"] = flats
-        pdf["n_frames"] = nfs
-        return pdf
+        c, fl, nf = batch_spectral(
+            samples, lengths, sr, frame_ms=frame_ms, hop_ms=hop_ms,
+        )
+        return {"spectral_ok": nf > 0, "spectral_centroid_hz": c,
+                "spectral_flatness": fl, "n_frames": nf}
 
-    return map_batches(
-        df, run,
-        emits=_SPECTRAL_SCHEMA_SUFFIX,
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_SrFeature(
+        "spectral_ok boolean, spectral_centroid_hz double, "
+        "spectral_flatness double, n_frames long",
+        kernel, fill={"spectral_flatness": 1.0},
+    )], keep_bytes)
 
 
 def with_log_mel(
@@ -216,51 +296,38 @@ def with_log_mel(
     already multi-KB; the mel matrix REPLACES the waveform downstream,
     which is the point of feature extraction)."""
 
-    def run(pdf):
+    def kernel(samples, lengths, sr):
         import numpy as np
 
         from ..kernel.spectral import batch_log_mel, mel_filterbank
 
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        mels = [[] for _ in range(n)]
-        nfs = np.zeros(n, dtype=np.int64)
-        amhz = np.zeros(n, dtype=np.float64)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            mel, nf = batch_log_mel(
-                samples, lengths, sr, n_mels=n_mels,
-                frame_ms=frame_ms, hop_ms=hop_ms,
-            )
-            frame = max(2, int(sr * frame_ms / 1000))
-            centers = mel_filterbank(sr, frame, n_mels)[1]
-            off = 0
-            for k, i in enumerate(idx):
-                rows = mel[off:off + int(nf[k])]
-                off += int(nf[k])
-                mels[i] = rows.tolist()  # one C-level conversion
-                nfs[i] = int(nf[k])
-                if len(rows):
-                    amhz[i] = float(
-                        centers[int(np.argmax(rows.mean(axis=0)))]
-                    )
-                # ok only when the clip yielded >=1 frame: a decodable
-                # clip shorter than one frame leaves mel_argmax_hz at an
-                # authoritative-looking 0.0, which a downstream gate like
-                # q71's hum check (argmax < 150 Hz) would silently match.
-                # Matches the snr/bandwidth operators' ok convention.
-                oks[i] = int(nf[k]) > 0
-        pdf["mel_ok"] = oks
-        pdf["log_mel"] = mels
-        pdf["n_mel_frames"] = nfs
-        pdf["mel_argmax_hz"] = amhz
-        return pdf
+        mel, nf = batch_log_mel(
+            samples, lengths, sr, n_mels=n_mels,
+            frame_ms=frame_ms, hop_ms=hop_ms,
+        )
+        frame = max(2, int(sr * frame_ms / 1000))
+        centers = mel_filterbank(sr, frame, n_mels)[1]
+        mels = []
+        amhz = np.zeros(len(nf), dtype=np.float64)
+        off = 0
+        for k, m in enumerate(nf.tolist()):
+            rows = mel[off:off + m]
+            off += m
+            mels.append(rows.tolist())  # one C-level conversion
+            if m:
+                amhz[k] = float(centers[int(np.argmax(rows.mean(axis=0)))])
+        # ok only when the clip yielded >=1 frame: a decodable clip
+        # shorter than one frame leaves mel_argmax_hz at an
+        # authoritative-looking 0.0, which a downstream gate like q71's
+        # hum check (argmax < 150 Hz) would silently match.
+        return {"mel_ok": nf > 0, "log_mel": mels, "n_mel_frames": nf,
+                "mel_argmax_hz": amhz}
 
-    return map_batches(
-        df, run,
-        emits="mel_ok boolean, log_mel array<array<float>>, "
-              "n_mel_frames int, mel_argmax_hz double",
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_SrFeature(
+        "mel_ok boolean, log_mel array<array<float>>, "
+        "n_mel_frames int, mel_argmax_hz double",
+        kernel,
+    )], keep_bytes)
 
 
 def spectral_drop_reason_col(
@@ -1130,18 +1197,13 @@ def frame_energy_df(
         import numpy as np
         import pandas as pd
 
-        from ..kernel.audio import decode_sr_groups, frame_features
+        from ..kernel.audio import frame_features
 
         for pdf in iterator:
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
             clip_ids = pdf["clip_id"].tolist()
             ids: list = []
             frames: list = []
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
+            for idx, samples, lengths, sr in _sr_groups(pdf):
                 bounds = np.concatenate([[0], np.cumsum(lengths)])
                 for k, i in enumerate(idx):
                     ids.append(clip_ids[i])
@@ -1227,6 +1289,30 @@ def _audio_candidate_keys(
     )
 
 
+def _pair_snr_udf():
+    """A fresh ``pandas_udf`` ``(bytes_a, bytes_b, codec_a, codec_b) ->
+    snr_db`` over ``kernel.audio.batch_pair_snr``.  Built per plan,
+    never at import (the ``seam.struct_udf`` rule).
+
+    The kernel IS deterministic; the nondeterministic flag is an
+    optimizer barrier — without it Catalyst duplicates the UDF into both
+    a filter on ``snr_db`` and the output projection, decoding every
+    pair TWICE (two ArrowEvalPython nodes over the same bytes)."""
+
+    def pair_snr(ba, bb, ca, cb):
+        import pandas as pd
+
+        from ..kernel.audio import batch_pair_snr
+
+        return pd.Series(
+            batch_pair_snr(
+                ba.tolist(), bb.tolist(), ca.tolist(), cb.tolist()
+            )
+        )
+
+    return F.pandas_udf(pair_snr, "double").asNondeterministic()
+
+
 def audio_near_duplicates(
     df: DataFrame,
     id_col: str = "clip_id",
@@ -1283,31 +1369,12 @@ def audio_near_duplicates(
         F.col("bytes").alias("_bytes_b"),
         F.col("codec").alias("_codec_b"),
     )
-
-    @F.pandas_udf("double")
-    def pair_snr(ba, bb, ca, cb):
-        import pandas as pd
-
-        from ..kernel.audio import batch_pair_snr
-
-        return pd.Series(
-            batch_pair_snr(
-                ba.tolist(), bb.tolist(), ca.tolist(), cb.tolist()
-            )
-        )
-
-    # the kernel IS deterministic; the flag is an optimizer barrier —
-    # without it Catalyst duplicates the UDF into both the SNR filter
-    # and the output projection, decoding every candidate pair TWICE
-    # (two ArrowEvalPython nodes over the same bytes, seen in PLANS.md)
-    pair_snr = pair_snr.asNondeterministic()
-
     return (
         cand.join(pa, "a")
         .join(pb, "b")
         .withColumn(
             "snr_db",
-            pair_snr(
+            _pair_snr_udf()(
                 F.col("_bytes_a"), F.col("_bytes_b"),
                 F.col("_codec_a"), F.col("_codec_b"),
             ),
@@ -1377,6 +1444,24 @@ def with_rate_consistency(
     )
 
 
+def _snr_feature(**kw) -> _SrFeature:
+    """``with_snr_estimate``'s feature; ``kw`` goes to
+    ``kernel.audio.batch_snr_estimate`` (its defaults when empty)."""
+
+    def kernel(samples, lengths, sr):
+        from ..kernel.audio import batch_snr_estimate
+
+        s, nf = batch_snr_estimate(samples, lengths, sr, **kw)
+        # a decodable clip SHORTER than one frame measured nothing —
+        # snr_ok=false, or a downstream gate would read an
+        # authoritative-looking 0.0 dB
+        return {"snr_ok": nf > 0, "snr_est_db": s, "snr_n_frames": nf}
+
+    return _SrFeature(
+        "snr_ok boolean, snr_est_db double, snr_n_frames int", kernel,
+    )
+
+
 def with_snr_estimate(
     df: DataFrame,
     frame_ms: int = 20,
@@ -1396,35 +1481,8 @@ def with_snr_estimate(
     frame (nothing measurable) get snr_ok=false / 0.0 / 0 frames,
     never a stage kill.  ``bytes`` dropped unless ``keep_bytes``."""
 
-    def run(pdf):
-        import numpy as np
-
-        from ..kernel.audio import batch_snr_estimate
-
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        snrs = np.zeros(n, dtype=np.float64)
-        nfs = np.zeros(n, dtype=np.int64)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            s, nf = batch_snr_estimate(
-                samples, lengths, sr,
-                frame_ms=frame_ms, noise_q=noise_q,
-            )
-            snrs[idx] = s
-            nfs[idx] = nf
-            # a decodable clip SHORTER than one frame measured
-            # nothing — snr_ok=false, or a downstream gate would
-            # read an authoritative-looking 0.0 dB
-            oks[idx] = nf > 0
-        pdf["snr_ok"] = oks
-        pdf["snr_est_db"] = snrs
-        pdf["snr_n_frames"] = nfs
-        return pdf
-
-    return map_batches(
-        df, run,
-        emits="snr_ok boolean, snr_est_db double, snr_n_frames int",
-        drop=() if keep_bytes else ("bytes",),
+    return _with_sr_features(
+        df, [_snr_feature(frame_ms=frame_ms, noise_q=noise_q)], keep_bytes,
     )
 
 
@@ -1447,51 +1505,38 @@ def with_mfcc(
     poison rows → mfcc_ok=false; ``bytes`` dropped unless
     ``keep_bytes``."""
 
-    def run(pdf):
+    def kernel(samples, lengths, sr):
         import numpy as np
 
         from ..kernel.spectral import batch_mfcc
 
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        mats = [[] for _ in range(n)]
-        nfs = np.zeros(n, dtype=np.int64)
-        c0m = np.zeros(n, dtype=np.float64)
-        c1m = np.zeros(n, dtype=np.float64)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            mf, nf = batch_mfcc(
-                samples, lengths, sr, n_mfcc=n_mfcc,
-                n_mels=n_mels, frame_ms=frame_ms, hop_ms=hop_ms,
-            )
-            off = 0
-            for k, i in enumerate(idx):
-                rows = mf[off:off + int(nf[k])]
-                off += int(nf[k])
-                mats[i] = rows.tolist()
-                nfs[i] = int(nf[k])
-                if len(rows):
-                    m = rows.mean(axis=0)
-                    c0m[i] = float(m[0])
-                    if n_mfcc > 1:
-                        c1m[i] = float(m[1])
-                # ok requires >=1 frame — same convention as with_log_mel
-                # / with_snr_estimate: sub-frame clips must not publish a
-                # legitimate-looking mfcc_c0_mean of 0.0.
-                oks[i] = int(nf[k]) > 0
-        pdf["mfcc_ok"] = oks
-        pdf["mfcc"] = mats
-        pdf["n_mfcc_frames"] = nfs
-        pdf["mfcc_c0_mean"] = c0m
-        pdf["mfcc_c1_mean"] = c1m
-        return pdf
+        mf, nf = batch_mfcc(
+            samples, lengths, sr, n_mfcc=n_mfcc,
+            n_mels=n_mels, frame_ms=frame_ms, hop_ms=hop_ms,
+        )
+        mats = []
+        c0m = np.zeros(len(nf), dtype=np.float64)
+        c1m = np.zeros(len(nf), dtype=np.float64)
+        off = 0
+        for k, m in enumerate(nf.tolist()):
+            rows = mf[off:off + m]
+            off += m
+            mats.append(rows.tolist())
+            if m:
+                mean = rows.mean(axis=0)
+                c0m[k] = float(mean[0])
+                if n_mfcc > 1:
+                    c1m[k] = float(mean[1])
+        # ok requires >=1 frame: sub-frame clips must not publish a
+        # legitimate-looking mfcc_c0_mean of 0.0
+        return {"mfcc_ok": nf > 0, "mfcc": mats, "n_mfcc_frames": nf,
+                "mfcc_c0_mean": c0m, "mfcc_c1_mean": c1m}
 
-    return map_batches(
-        df, run,
-        emits="mfcc_ok boolean, mfcc array<array<float>>, "
-              "n_mfcc_frames int, mfcc_c0_mean double, "
-              "mfcc_c1_mean double",
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_SrFeature(
+        "mfcc_ok boolean, mfcc array<array<float>>, n_mfcc_frames int, "
+        "mfcc_c0_mean double, mfcc_c1_mean double",
+        kernel,
+    )], keep_bytes)
 
 
 def with_bandwidth(
@@ -1524,37 +1569,20 @@ def with_bandwidth(
     (``decode_sr_groups``); poison rows and sub-frame clips → bw_ok =
     false, never flagged, never a stage kill."""
 
-    def run(pdf):
-        import numpy as np
-
+    def kernel(samples, lengths, sr):
         from ..kernel.spectral import batch_rolloff
 
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        rolls = np.zeros(n, dtype=np.float64)
-        nfs = np.zeros(n, dtype=np.int64)
-        sus = np.zeros(n, dtype=bool)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            r, nf = batch_rolloff(
-                samples, lengths, sr, q=q,
-                frame_ms=frame_ms, hop_ms=hop_ms,
-            )
-            rolls[idx] = r
-            nfs[idx] = nf
-            oks[idx] = nf > 0
-            sus[idx] = (nf > 0) & (r < suspect_frac * sr)
-        pdf["bw_ok"] = oks
-        pdf["rolloff_hz"] = rolls
-        pdf["bw_n_frames"] = nfs
-        pdf["upsampled_suspect"] = sus
-        return pdf
+        r, nf = batch_rolloff(
+            samples, lengths, sr, q=q, frame_ms=frame_ms, hop_ms=hop_ms,
+        )
+        return {"bw_ok": nf > 0, "rolloff_hz": r, "bw_n_frames": nf,
+                "upsampled_suspect": (nf > 0) & (r < suspect_frac * sr)}
 
-    return map_batches(
-        df, run,
-        emits="bw_ok boolean, rolloff_hz double, bw_n_frames int, "
-              "upsampled_suspect boolean",
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_SrFeature(
+        "bw_ok boolean, rolloff_hz double, bw_n_frames int, "
+        "upsampled_suspect boolean",
+        kernel,
+    )], keep_bytes)
 
 
 def dc_removed_clips(df: DataFrame, win_ms: int = 125) -> DataFrame:
@@ -1646,42 +1674,29 @@ def with_speech_activity(
     (``speech_drop_reason_col``) is a codegen'd projection on top, so
     at 10^12 rows the cost is exactly one decode of each clip."""
 
-    def run(pdf):
+    def kernel(samples, lengths, sr):
         import numpy as np
 
         from ..kernel.audio import batch_voiced_segments
 
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        ratios = np.zeros(n, dtype=np.float64)
-        nsegs = np.zeros(n, dtype=np.int64)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            gap = max(1, int(sr * gap_ms / 1000))
-            clip_idx, seg_start, seg_end = batch_voiced_segments(
-                samples, lengths, threshold=threshold, gap=gap
-            )
-            voiced = np.zeros(len(idx), dtype=np.int64)
-            segs = np.zeros(len(idx), dtype=np.int64)
-            np.add.at(voiced, clip_idx, seg_end - seg_start)
-            np.add.at(segs, clip_idx, 1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                r = np.where(lengths > 0, voiced / lengths, 0.0)
-            ratios[idx] = r
-            nsegs[idx] = segs
-            # an empty-but-decodable payload measured nothing;
-            # same convention as with_snr_estimate's n_frames gate
-            oks[idx] = lengths > 0
-        pdf["vad_ok"] = oks
-        pdf["speech_ratio"] = ratios
-        pdf["n_speech_segments"] = nsegs.astype("int32")
-        return pdf
+        gap = max(1, int(sr * gap_ms / 1000))
+        clip_idx, seg_start, seg_end = batch_voiced_segments(
+            samples, lengths, threshold=threshold, gap=gap
+        )
+        voiced = np.zeros(len(lengths), dtype=np.int64)
+        segs = np.zeros(len(lengths), dtype=np.int64)
+        np.add.at(voiced, clip_idx, seg_end - seg_start)
+        np.add.at(segs, clip_idx, 1)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            r = np.where(lengths > 0, voiced / lengths, 0.0)
+        # an empty-but-decodable payload measured nothing
+        return {"vad_ok": lengths > 0, "speech_ratio": r,
+                "n_speech_segments": segs}
 
-    return map_batches(
-        df, run,
-        emits="vad_ok boolean, speech_ratio double, "
-              "n_speech_segments int",
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_SrFeature(
+        "vad_ok boolean, speech_ratio double, n_speech_segments int",
+        kernel,
+    )], keep_bytes)
 
 
 def audio_window_hashes(df: DataFrame, win_ms: int = 250) -> DataFrame:
@@ -1702,19 +1717,14 @@ def audio_window_hashes(df: DataFrame, win_ms: int = 250) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from ..kernel.audio import batch_window_hashes, decode_sr_groups
+        from ..kernel.audio import batch_window_hashes
 
         for pdf in iterator:
             ids_out = []
             wins_out = []
             hashes_out = []
-            datas = pdf["bytes"].tolist()
-            codecs = pdf["codec"].to_numpy()
-            srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
             clip_ids = pdf["clip_id"].to_numpy()
-            for idx, samples, lengths, sr in decode_sr_groups(
-                datas, codecs, srs
-            ):
+            for idx, samples, lengths, sr in _sr_groups(pdf):
                 win = max(1, int(sr * win_ms / 1000))
                 ci, wi, h = batch_window_hashes(samples, lengths, win)
                 ids_out.append(clip_ids[idx][ci])
@@ -2270,22 +2280,14 @@ def with_channel_stats(
     def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_channel_blocks, decode_sr_nch_groups
+        from ..kernel.audio import batch_channel_blocks
 
         n = len(pdf)
         oks = np.zeros(n, dtype=bool)
         talk0 = np.zeros(n, dtype=np.int64)
         talk1 = np.zeros(n, dtype=np.int64)
         over = np.zeros(n, dtype=np.int64)
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-        nchs = pdf["n_channels"].to_numpy(
-            dtype="float64", na_value=np.nan
-        )
-        for idx, samples, lengths, sr, nch, _codec in (
-            decode_sr_nch_groups(datas, codecs, srs, nchs)
-        ):
+        for idx, samples, lengths, sr, nch, _codec in _sr_nch_groups(pdf):
             vc, ot, nb = batch_channel_blocks(
                 samples, lengths, nch, sr,
                 threshold=threshold, block_ms=block_ms,
@@ -2331,21 +2333,13 @@ def downmix_to_mono(df: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from ..kernel.audio import batch_downmix, decode_sr_nch_groups
+        from ..kernel.audio import batch_downmix
 
-        datas = pdf["bytes"].tolist()
-        out_bytes = list(datas)
+        out_bytes = pdf["bytes"].tolist()
         nch_out = pdf["n_channels"].to_numpy(
             dtype="float64", na_value=np.nan
         ).copy()
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-        nchs = pdf["n_channels"].to_numpy(
-            dtype="float64", na_value=np.nan
-        )
-        for idx, samples, lengths, sr, nch, codec in (
-            decode_sr_nch_groups(datas, codecs, srs, nchs)
-        ):
+        for idx, samples, lengths, sr, nch, codec in _sr_nch_groups(pdf):
             mono, mlen = batch_downmix(samples, lengths, nch)
             # per-codec re-encode + per-clip slice in one helper —
             # handles the stateful adpcm case (fresh state per clip)
@@ -2605,18 +2599,14 @@ def declipped_clips(df: DataFrame, level: float = 0.95) -> DataFrame:
     def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_declip, decode_sr_groups
+        from ..kernel.audio import batch_declip
 
         n = len(pdf)
-        datas = pdf["bytes"].tolist()
-        out_bytes = list(datas)
+        out_bytes = pdf["bytes"].tolist()
         ncs = np.zeros(n, dtype=np.int64)
         nrs = np.zeros(n, dtype=np.int64)
         codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-        for idx, samples, lengths, _sr in decode_sr_groups(
-            datas, codecs, srs
-        ):
+        for idx, samples, lengths, _sr in _sr_groups(pdf):
             codec = str(codecs[idx[0]])
             rep, nc, nr = batch_declip(samples, lengths, level=level)
             for i, payload in zip(idx, _encoded_payloads(rep, lengths, codec)):
@@ -2844,19 +2834,14 @@ def denoised_clips(
     def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import decode_sr_groups
         from ..kernel.spectral import batch_denoise
 
         n = len(pdf)
-        datas = pdf["bytes"].tolist()
-        out_bytes = list(datas)
+        out_bytes = pdf["bytes"].tolist()
         oks = np.zeros(n, dtype=bool)
         nfs = np.zeros(n, dtype=np.int64)
         codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-        for idx, samples, lengths, sr in decode_sr_groups(
-            datas, codecs, srs
-        ):
+        for idx, samples, lengths, sr in _sr_groups(pdf):
             codec = str(codecs[idx[0]])
             den, nf = batch_denoise(
                 samples, lengths, sr,
@@ -2934,20 +2919,12 @@ def with_speaker_turns(
     def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import batch_speaker_turns, decode_sr_nch_groups
+        from ..kernel.audio import batch_speaker_turns
 
         n = len(pdf)
         oks = np.zeros(n, dtype=bool)
         turns = np.zeros(n, dtype=np.int64)
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-        nchs = pdf["n_channels"].to_numpy(
-            dtype="float64", na_value=np.nan
-        )
-        for idx, samples, lengths, sr, nch, _codec in (
-            decode_sr_nch_groups(datas, codecs, srs, nchs)
-        ):
+        for idx, samples, lengths, sr, nch, _codec in _sr_nch_groups(pdf):
             t, nb = batch_speaker_turns(
                 samples, lengths, nch, sr,
                 threshold=threshold, block_ms=block_ms,
@@ -2962,6 +2939,42 @@ def with_speaker_turns(
         df, run,
         emits="turn_ok boolean, n_turns bigint",
         drop=() if keep_bytes else ("bytes",),
+    )
+
+
+def _pitch_feature(**kw) -> _SrFeature:
+    """``with_pitch``'s feature; ``kw`` goes to
+    ``kernel.spectral.batch_pitch`` (its defaults when empty)."""
+
+    def kernel(samples, lengths, sr):
+        from ..kernel.spectral import batch_pitch
+
+        f0, vr, nf = batch_pitch(samples, lengths, sr, **kw)
+        return {"pitch_ok": nf > 0, "f0_hz": f0, "voiced_ratio": vr,
+                "n_pitch_frames": nf}
+
+    return _SrFeature(
+        "pitch_ok boolean, f0_hz double, voiced_ratio double, "
+        "n_pitch_frames int",
+        kernel,
+    )
+
+
+def _reverb_feature(**kw) -> _SrFeature:
+    """``with_reverb``'s feature; ``kw`` goes to
+    ``kernel.spectral.batch_reverb`` (its defaults when empty)."""
+
+    def kernel(samples, lengths, sr):
+        from ..kernel.spectral import batch_reverb
+
+        rt, pairs, nf = batch_reverb(samples, lengths, sr, **kw)
+        return {"reverb_ok": nf > 0, "rt60_s": rt, "n_decay_pairs": pairs,
+                "n_reverb_frames": nf}
+
+    return _SrFeature(
+        "reverb_ok boolean, rt60_s double, n_decay_pairs int, "
+        "n_reverb_frames int",
+        kernel,
     )
 
 
@@ -2991,38 +3004,10 @@ def with_pitch(
     authoritative-looking 0.0 — same convention as mel/snr/bandwidth).
     ``bytes`` is dropped unless ``keep_bytes``."""
 
-    def run(pdf):
-        import numpy as np
-
-        from ..kernel.spectral import batch_pitch
-
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        f0s = np.zeros(n, dtype=np.float64)
-        vrs = np.zeros(n, dtype=np.float64)
-        nfs = np.zeros(n, dtype=np.int64)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            f0, vr, nf = batch_pitch(
-                samples, lengths, sr, frame_ms=frame_ms,
-                hop_ms=hop_ms, f_min=f_min, f_max=f_max,
-                voiced_threshold=voiced_threshold,
-            )
-            f0s[idx] = f0
-            vrs[idx] = vr
-            nfs[idx] = nf
-            oks[idx] = nf > 0
-        pdf["pitch_ok"] = oks
-        pdf["f0_hz"] = f0s
-        pdf["voiced_ratio"] = vrs
-        pdf["n_pitch_frames"] = nfs
-        return pdf
-
-    return map_batches(
-        df, run,
-        emits="pitch_ok boolean, f0_hz double, voiced_ratio double, "
-              "n_pitch_frames int",
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_pitch_feature(
+        frame_ms=frame_ms, hop_ms=hop_ms, f_min=f_min, f_max=f_max,
+        voiced_threshold=voiced_threshold,
+    )], keep_bytes)
 
 
 def with_reverb(
@@ -3050,37 +3035,10 @@ def with_reverb(
     unmeasurable is NOT dry, so the gate column only fires on clips
     that measured."""
 
-    def run(pdf):
-        import numpy as np
-
-        from ..kernel.spectral import batch_reverb
-
-        n = len(pdf)
-        oks = np.zeros(n, dtype=bool)
-        rts = np.zeros(n, dtype=np.float64)
-        nps = np.zeros(n, dtype=np.int64)
-        nfs = np.zeros(n, dtype=np.int64)
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            rt, np_, nf = batch_reverb(
-                samples, lengths, sr, frame_ms=frame_ms,
-                min_run=min_run, min_pairs=min_pairs, drop_db=drop_db,
-            )
-            rts[idx] = rt
-            nps[idx] = np_
-            nfs[idx] = nf
-            oks[idx] = nf > 0
-        pdf["reverb_ok"] = oks
-        pdf["rt60_s"] = rts
-        pdf["n_decay_pairs"] = nps
-        pdf["n_reverb_frames"] = nfs
-        return pdf
-
-    return map_batches(
-        df, run,
-        emits="reverb_ok boolean, rt60_s double, n_decay_pairs int, "
-              "n_reverb_frames int",
-        drop=() if keep_bytes else ("bytes",),
-    )
+    return _with_sr_features(df, [_reverb_feature(
+        frame_ms=frame_ms, min_run=min_run, min_pairs=min_pairs,
+        drop_db=drop_db,
+    )], keep_bytes)
 
 
 def reverb_drop_reason_col(
@@ -3101,15 +3059,18 @@ def with_voice_health(
     df: DataFrame,
     keep_bytes: bool = False,
 ) -> DataFrame:
-    """Fused speech-health stage: pitch (f0 + voiced ratio), RT60
+    """Speech-health stage: pitch (f0 + voiced ratio), RT60
     reverberation proxy, and the frame-energy SNR estimate behind ONE
-    decode boundary.  Composing ``with_pitch`` → ``with_reverb`` →
-    ``with_snr_estimate`` decodes every payload three times and
+    decode boundary — the feature set (pitch, reverb, snr) at their
+    defaults, run by the same ``_with_sr_features`` runner as the three
+    individual operators.  Composing ``with_pitch`` → ``with_reverb``
+    → ``with_snr_estimate`` decodes every payload three times and
     crosses Python↔JVM three times; at 10^12 clips decode IS the audio
-    pipeline's dominant cost (see BENCH pipeline_audio), so the fused
-    stage is the shape a production speech-curation gate actually
+    pipeline's dominant cost (see BENCH pipeline_audio), so the one
+    boundary is the shape a production speech-curation gate actually
     runs.  Column semantics are IDENTICAL to the three individual
-    operators (same kernels, same defaults) — equality is pytest-gated.
+    operators (same specs, same kernels, same defaults) —
+    pytest-gated.
 
     Emits: pitch_ok/f0_hz/voiced_ratio/n_pitch_frames,
     reverb_ok/rt60_s/n_decay_pairs/n_reverb_frames,
@@ -3117,53 +3078,9 @@ def with_voice_health(
     (``reverb_drop_reason_col`` etc.) compose over the output
     unchanged."""
 
-    def run(pdf):
-        import numpy as np
-
-        from ..kernel.audio import batch_snr_estimate
-        from ..kernel.spectral import batch_pitch, batch_reverb
-
-        n = len(pdf)
-        cols = {
-            "pitch_ok": np.zeros(n, dtype=bool),
-            "f0_hz": np.zeros(n, dtype=np.float64),
-            "voiced_ratio": np.zeros(n, dtype=np.float64),
-            "n_pitch_frames": np.zeros(n, dtype=np.int64),
-            "reverb_ok": np.zeros(n, dtype=bool),
-            "rt60_s": np.zeros(n, dtype=np.float64),
-            "n_decay_pairs": np.zeros(n, dtype=np.int64),
-            "n_reverb_frames": np.zeros(n, dtype=np.int64),
-            "snr_ok": np.zeros(n, dtype=bool),
-            "snr_est_db": np.zeros(n, dtype=np.float64),
-            "snr_n_frames": np.zeros(n, dtype=np.int64),
-        }
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            f0, vr, pnf = batch_pitch(samples, lengths, sr)
-            rt, dp, rnf = batch_reverb(samples, lengths, sr)
-            snr, snf = batch_snr_estimate(samples, lengths, sr)
-            ii = np.asarray(idx, dtype=np.int64)
-            cols["f0_hz"][ii] = f0
-            cols["voiced_ratio"][ii] = vr
-            cols["n_pitch_frames"][ii] = pnf
-            cols["pitch_ok"][ii] = pnf > 0
-            cols["rt60_s"][ii] = rt
-            cols["n_decay_pairs"][ii] = dp
-            cols["n_reverb_frames"][ii] = rnf
-            cols["reverb_ok"][ii] = rnf > 0
-            cols["snr_est_db"][ii] = snr
-            cols["snr_n_frames"][ii] = snf
-            cols["snr_ok"][ii] = snf > 0
-        for k, v in cols.items():
-            pdf[k] = v
-        return pdf
-
-    return map_batches(
-        df, run,
-        emits="pitch_ok boolean, f0_hz double, voiced_ratio double, "
-              "n_pitch_frames int, reverb_ok boolean, rt60_s double, "
-              "n_decay_pairs int, n_reverb_frames int, "
-              "snr_ok boolean, snr_est_db double, snr_n_frames int",
-        drop=() if keep_bytes else ("bytes",),
+    return _with_sr_features(
+        df, [_pitch_feature(), _reverb_feature(), _snr_feature()],
+        keep_bytes,
     )
 
 

@@ -2442,10 +2442,7 @@ def q_adpcm_transcode(spark, sf_dir):
       * n_len_ok     — every payload's Catalyst-computable sample count
         (2 x byte length) equals the even-rounded source count."""
     _prep(spark)
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from .operators.audio import transcode_clips
+    from .operators.audio import _pair_snr_udf, transcode_clips
     from .sources.clips import transcode_clips_df
 
     clips = transcode_clips_df(spark, 180, partitions=8)
@@ -2458,16 +2455,6 @@ def q_adpcm_transcode(spark, sf_dir):
         F.col("codec").alias("codec_src"),
     )
 
-    @pandas_udf("double")
-    def pair_snr(ba, bb, ca, cb):
-        from .kernel.audio import batch_pair_snr
-
-        return pd.Series(
-            batch_pair_snr(
-                ba.tolist(), bb.tolist(), ca.tolist(), cb.tolist()
-            )
-        )
-
     r = F.substring("clip_id", 4, 8).cast("long")
     n_src = F.lit(400) + F.lit(37) * r
     n_even = n_src + n_src % 2
@@ -2475,7 +2462,7 @@ def q_adpcm_transcode(spark, sf_dir):
         out.join(orig, "clip_id")
         .withColumn(
             "snr_db",
-            pair_snr(
+            _pair_snr_udf()(
                 F.col("bytes_src"), F.col("bytes"),
                 F.col("codec_src"), F.col("codec"),
             ),
@@ -2536,10 +2523,7 @@ def q_transcode(spark, sf_dir):
     gated), transcript char sum (row alignment), and the SNR-pass count
     (= n_clips by the invariant)."""
     _prep(spark)
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from .operators.audio import transcode_clips
+    from .operators.audio import _pair_snr_udf, transcode_clips
     from .sources.clips import transcode_clips_df
 
     clips = transcode_clips_df(spark, 180, partitions=8)
@@ -2552,19 +2536,9 @@ def q_transcode(spark, sf_dir):
         F.col("codec").alias("codec_src"),
     )
 
-    @pandas_udf("double")
-    def pair_snr(ba, bb, ca, cb):
-        from .kernel.audio import batch_pair_snr
-
-        return pd.Series(
-            batch_pair_snr(
-                ba.tolist(), bb.tolist(), ca.tolist(), cb.tolist()
-            )
-        )
-
     joined = out.join(orig, "clip_id").withColumn(
         "snr_db",
-        pair_snr(
+        _pair_snr_udf()(
             F.col("bytes_src"), F.col("bytes"),
             F.col("codec_src"), F.col("codec"),
         ),
