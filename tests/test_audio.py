@@ -1678,6 +1678,38 @@ def test_strip_repeated_segments_poison_passthrough(spark):
     assert got["p2"]["bytes"] is None
 
 
+@pytest.mark.parametrize("op", ["detect", "strip"])
+def test_repeated_segments_one_lazy_plan(spark, tmp_path, op):
+    """Building a repeated-segment plan runs no job and caches nothing,
+    and the collected final plan over a parquet scan decodes the clips
+    once (one MapInPandas)."""
+    from top_secret_spark.operators.audio import (
+        repeated_audio_segments,
+        strip_repeated_segments,
+    )
+    from top_secret_spark.sources.clips import repeat_clips_df
+
+    path = str(tmp_path / "clips")
+    repeat_clips_df(spark, 24, partitions=2).write.parquet(path)
+    df = spark.read.parquet(path)
+    fn = repeated_audio_segments if op == "detect" else strip_repeated_segments
+    sc = spark.sparkContext
+    cached_before = sc._jsc.getPersistentRDDs().size()
+    group = f"repeated-plan-{op}"
+    sc.setJobGroup(group, "repeated-segment plan build")
+    try:
+        out = fn(df, win_ms=250)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert sc._jsc.getPersistentRDDs().size() == cached_before
+    assert len(out.collect()) == 24
+    assert sc._jsc.getPersistentRDDs().size() == cached_before
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    assert plan.split("== Initial Plan ==")[0].count("MapInPandas") == 1
+
+
 def test_speaking_rate_pairing_gate(spark):
     from top_secret_spark.operators.audio import (
         pairing_drop_reason_col,

@@ -449,8 +449,10 @@ def test_sampling_poison_values_and_plan_time_key_gate(spark):
     """Pathological sampling inputs: NULL strata/keys/sizes, negative
     and 10^12 sizes, NaN weights.  Pins two found-by-sweep defects in
     select_until_budget — a NULL-id row silently ATE budget then
-    vanished at the id join, and a negative size REFUNDED budget — and
-    the plan-time integral-key gate (under ANSI a string key would fail
+    vanished at the id join, and a negative size REFUNDED budget — the
+    NULL-key results of pack_sequences and shard_by_size (a NULL-key
+    row used to shift every later offset and then vanish), and the
+    plan-time integral-key gate (under ANSI a string key would fail
     with CAST_INVALID_INPUT mid-job, inside a task, instead of at plan
     time on the driver)."""
     import pyspark.sql.functions as F
@@ -494,11 +496,28 @@ def test_sampling_poison_values_and_plan_time_key_gate(spark):
         ("epochs", lambda: SA.repeat_epochs(
             df, {"web": 2.5, "books": 1.0}, strata_col="domain")),
         ("cap", lambda: SA.cap_per_key(df, ["domain"], 2, [F.col("doc_id")])),
-        ("pack", lambda: P.pack_sequences(df, 120)),
-        ("shard", lambda: P.shard_by_size(
-            df, 100, order_col="doc_id", size_col="n_tokens")),
     ]:
         fn().collect()  # full materialization (count() prunes columns)
+
+    # the prefix sum leaves the NULL-key row out (it shifts no offset)
+    # and returns it with NULL results; NULL sizes count 0, negative
+    # sizes are summed as given
+    offsets = {1: 0, 2: 100, 3: 150, 4: 160, 5: 190, 6: 190, 7: 190,
+               8: 170, 9: 210, 10: 250}
+    packed = {r["doc_id"]: (r["offset"], r["pack_id"], r["pack_offset"])
+              for r in P.pack_sequences(df, 120).collect()}
+    assert packed == {
+        None: (None, None, None),
+        **{i: (o, o // 120, o % 120) for i, o in offsets.items()},
+    }
+    sharded = {r["doc_id"]: (r["shard_id"], r["shard_offset"])
+               for r in P.shard_by_size(
+                   df, 100, order_col="doc_id", size_col="n_tokens"
+               ).collect()}
+    assert sharded == {
+        None: (None, None),
+        **{i: (o // 100, o % 100) for i, o in offsets.items()},
+    }
 
     # NULL-id rows must not eat budget: the NULL-key row (25 tokens)
     # sorts first but can never return through the id join — with it

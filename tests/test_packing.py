@@ -125,3 +125,135 @@ def test_shard_by_size_null_payload_and_size_col(spark):
             shard_by_size(df2, 6, order_col="clip_id",
                           size_col="n_chars").collect()}
     assert got2 == {0: 0, 1: 0, 2: 1}
+
+
+def _executions(spark):
+    """Every SQL execution of the session so far, from the status store
+    (works with the UI disabled)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    return list(conv.asJava(store.executionsList()))
+
+
+def _plan_blocks(executions):
+    """(node name, 'Input/Output [..]' line, 'Arguments:' line) of every
+    node in the formatted final plans of ``executions`` — the eager
+    checkpoint job and the totals collect included, which the result's
+    own plan does not show."""
+    import re
+
+    out = []
+    for ex in executions:
+        for block in ex.physicalPlanDescription().split("\n\n"):
+            lines = block.strip().split("\n")
+            m = re.match(r"\(\d+\) (.+)", lines[0])
+            if not m:
+                continue
+            cols = next((ln for ln in lines
+                         if ln.startswith(("Input [", "Output ["))), "")
+            args = next((ln for ln in lines
+                         if ln.startswith("Arguments:")), "")
+            out.append((m.group(1).strip(), cols, args))
+    return out
+
+
+@pytest.mark.parametrize("op", ["pack_audio", "shard"])
+def test_payload_stays_out_of_prefix_sum(spark, op):
+    """The payload never rides the prefix sum's range exchange, its
+    `_pid` exchanges or its checkpoint, and the checkpoint block left
+    cached after the call is a small fraction of the payload."""
+    import numpy as np
+
+    from top_secret_spark.kernel.audio import encode
+    from top_secret_spark.operators.audio import pack_audio_examples
+    from top_secret_spark.operators.packing import shard_by_size
+
+    rows = [(f"c{r:04d}",
+             bytearray(encode(np.full(6400, 0.1 + 0.01 * r, np.float32),
+                              "pcm16")),
+             8000, 800, "pcm16", "t") for r in range(40)]
+    df = spark.createDataFrame(
+        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
+              "codec string, transcript string")
+    payload = sum(len(r[1]) for r in rows)
+    sc = spark.sparkContext
+    rdds_before = {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+    seen = {ex.executionId() for ex in _executions(spark)}
+    if op == "pack_audio":
+        out = pack_audio_examples(df, 2500, codec="pcm16", sr_hz=8000)
+    else:
+        out = shard_by_size(df, 65536, order_col="clip_id")
+    assert out.collect()
+    blocks = _plan_blocks([ex for ex in _executions(spark)
+                           if ex.executionId() not in seen])
+    prefix = [(name, cols) for name, cols, args in blocks
+              if (name.startswith("Exchange")
+                  and ("rangepartitioning" in args
+                       or "hashpartitioning(_pid#" in args))
+              or (name.startswith("Scan ExistingRDD")
+                  and "localCheckpoint" in args)]
+    kinds = {name.split()[0] for name, _ in prefix}
+    assert kinds == {"Exchange", "Scan"}, blocks
+    assert all("bytes#" not in cols for _, cols in prefix), prefix
+    new = [i for i in sc._jsc.sc().getRDDStorageInfo()
+           if i.id() not in rdds_before]
+    assert sum(i.memSize() + i.diskSize() for i in new) < payload // 20
+
+
+def _repeated_key_clips(spark):
+    """Two segments of one clip under the same ``clip_id``, as
+    split_clips_on_silence emits them."""
+    import numpy as np
+
+    from top_secret_spark.kernel.audio import encode
+
+    rows = [(cid, bytearray(encode(np.full(8000, 0.1, np.float32), "pcm16")),
+             8000, 1000, "pcm16", "t") for cid in ("c0", "c1", "c1", "c2")]
+    return spark.createDataFrame(
+        rows, "clip_id string, bytes binary, sr_hz int, dur_ms int, "
+              "codec string, transcript string")
+
+
+@pytest.mark.parametrize(
+    "op", ["pack_sequences", "pack_audio", "shard", "select"])
+def test_repeated_order_key_raises(spark, op):
+    """A repeated order key would repeat rows at the offsets' join back
+    (duplicated audio in every example), so the call refuses it — also
+    when the twins start in different input partitions."""
+    from top_secret_spark.operators.audio import pack_audio_examples
+    from top_secret_spark.operators.packing import shard_by_size
+    from top_secret_spark.operators.sampling import select_until_budget
+
+    clips = _repeated_key_clips(spark).repartition(3)
+    docs = spark.createDataFrame(
+        [(i % 40, 10) for i in range(41)], "doc_id long, n_tokens long"
+    ).repartition(5)
+    call = {
+        "pack_sequences": lambda: pack_sequences(docs, 100),
+        "pack_audio": lambda: pack_audio_examples(
+            clips, 2500, codec="pcm16", sr_hz=8000),
+        "shard": lambda: shard_by_size(clips, 65536, order_col="clip_id"),
+        "select": lambda: select_until_budget(
+            docs, 100, "n_tokens", ["n_tokens"]),
+    }[op]
+    with pytest.raises(ValueError, match="repeats a key"):
+        call()
+
+
+def test_input_changed_between_evaluations_fails(spark, tmp_path):
+    """A nondeterministic key whose join back finds no offset fails the
+    job instead of silently losing the row."""
+    flag = tmp_path / "flag"
+    flag.write_text("a")
+    path = str(flag)
+    suffix = F.udf(
+        lambda k: f"{k}{open(path).read()}", "string"
+    ).asNondeterministic()
+    df = spark.createDataFrame(
+        [(f"d{i}", 5) for i in range(6)], "k string, n long"
+    ).withColumn("k", suffix(F.col("k")))
+    out = with_global_offset(df, "k", "n")
+    flag.write_text("b")
+    with pytest.raises(Exception, match="has no offset"):
+        out.collect()

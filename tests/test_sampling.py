@@ -312,6 +312,10 @@ def test_select_until_budget_validation_and_zero(spark):
     # a row that doesn't fit whole is dropped, not truncated
     assert select_until_budget(df, 4, "toks", ["doc_id"]).count() == 0
     assert select_until_budget(df, 5, "toks", ["doc_id"]).count() == 1
+    # survivors keep the input's column order, then the offset
+    assert select_until_budget(
+        df.select("toks", "doc_id"), 5, "toks", ["doc_id"]
+    ).columns == ["toks", "doc_id", "budget_cum"]
 
 
 def test_select_until_budget_partition_invariant(spark):

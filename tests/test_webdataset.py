@@ -65,6 +65,9 @@ def test_null_payload_and_transcript_roundtrip(spark, tmp_path):
             dur_ms=1, codec="pcm16", transcript=None),
         Row(clip_id="b", bytes=None, sr_hz=None, dur_ms=None,
             codec=None, transcript="only text"),
+        # no key, no member name: not written
+        Row(clip_id=None, bytes=bytearray(b"\x02\x03"), sr_hz=8000,
+            dur_ms=1, codec="pcm16", transcript="no key"),
     ]
     schema = ("clip_id string, bytes binary, sr_hz int, dur_ms int, "
               "codec string, transcript string")
@@ -72,6 +75,7 @@ def test_null_payload_and_transcript_roundtrip(spark, tmp_path):
         spark.createDataFrame(rows, schema), d, shard_bytes=1 << 20
     ).collect()
     got = {r["clip_id"]: r for r in read_webdataset(spark, d).collect()}
+    assert got.keys() == {"a", "b"}
     assert bytes(got["a"]["bytes"]) == b"\x00\x01"
     assert got["a"]["transcript"] is None
     assert got["b"]["bytes"] is None

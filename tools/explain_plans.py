@@ -464,9 +464,15 @@ def main():
         "Size-balanced sharding (two-phase prefix sum)",
         explain_str(shard_by_size(docs_small, 4096, order_col="doc_id",
                                   size_col="n_chars")),
-        "- One range exchange (the ordering requirement), per-partition\n"
-        "  window, then a BroadcastHashJoin adding the per-partition base\n"
-        "  offsets — never a single-partition global window.\n"
+        "- The prefix sum sees (doc_id, size) only: its range exchange,\n"
+        "  `_pid` exchange and per-partition window ran in the eager\n"
+        "  checkpoint job, read here as the `Scan ExistingRDD` of\n"
+        "  (doc_id, _v, _pid, _local, _dup); a BroadcastHashJoin adds the\n"
+        "  per-partition base offsets — never a single-partition global\n"
+        "  window.\n"
+        "- The offsets come back to the full rows through a left join on\n"
+        "  doc_id (a NULL key reads a NULL shard, a key with no offset\n"
+        "  reaches `raise_error`): the only exchange the text crosses.\n"
         "- Driver traffic is one row per partition (the totals), bounded\n"
         "  by the partition count, not the data.",
     ))
@@ -622,11 +628,15 @@ def main():
                 priority_cols=["n_chars", "doc_id"],
             )
         ),
-        "- The cumulative sum is the pack_sequences two-phase prefix sum:\n"
-        "  range partition by the priority struct -> per-PARTITION window\n"
-        "  -> one-row-per-partition totals join.  `Window` appears only\n"
-        "  partitioned by `_pid` — there is NO empty-partitionBy window\n"
-        "  dragging the corpus through one task.\n"
+        "- The cumulative sum is the pack_sequences two-phase prefix sum\n"
+        "  over (priority struct, value) only: range partition by the\n"
+        "  struct -> per-PARTITION window, both in the eager checkpoint\n"
+        "  job (read here as `Scan ExistingRDD`) -> one-row-per-partition\n"
+        "  totals join.  There is NO empty-partitionBy window dragging\n"
+        "  the corpus through one task.\n"
+        "- The offsets join back to the rows on the struct: a left join,\n"
+        "  so a row without an offset reaches `raise_error` instead of\n"
+        "  being dropped.\n"
         "- Selection itself is a codegen'd Filter; the budget is enforced\n"
         "  with exact bigint arithmetic.",
     ))

@@ -484,6 +484,18 @@ def normalized_clips(
     return map_batches(df, run, drop=())
 
 
+def _concat_bytes(pieces: Column, order: Column | None = None) -> Column:
+    """One binary from ``pieces`` by Catalyst ``aggregate`` concat, no
+    Python: an ``array<binary>`` joins in array order, or — with
+    ``order`` — ``pieces`` is an aggregate input and the group's values
+    join in ascending ``order``.  A NULL piece adds zero bytes."""
+    if order is not None:
+        pieces = F.transform(F.array_sort(F.collect_list(
+            F.struct(order.alias("o"), pieces.alias("p")))), lambda s: s["p"])
+    return F.aggregate(pieces, F.lit(b""),
+                       lambda acc, p: F.concat(acc, F.coalesce(p, F.lit(b""))))
+
+
 def merge_segments(
     df: DataFrame,
     max_dur_ms: int,
@@ -529,12 +541,7 @@ def merge_segments(
     merged = (
         grouped.groupBy(clip_col, "_grp")
         .agg(
-            F.expr(
-                "aggregate(transform(array_sort(collect_list("
-                f"struct({order_col}, bytes))), s -> coalesce(s.bytes, "
-                "cast('' as binary))), cast('' as binary), "
-                "(acc, x) -> concat(acc, x))"
-            ).alias("bytes"),
+            _concat_bytes(F.col("bytes"), F.col(order_col)).alias("bytes"),
             F.sum(F.col("dur_ms").cast("bigint")).alias("dur_ms"),
             F.count(F.lit(1)).cast("int").alias("n_segments"),
             F.min("sr_hz").alias("sr_hz"),
@@ -1758,8 +1765,8 @@ def repeated_audio_segments(
     with ``trimmed_clips``/``chunked_clips`` can cut the span).
 
     Scale shape: the ONLY things shuffled are (win_hash, clip_id,
-    win_idx) sketch rows — the groupBy folds map-side partials on the
-    8-byte hash, the flag join is hash-on-hash, and PCM never leaves
+    win_idx) sketch rows — the (hash, clip) groupBy folds map-side
+    partials, a window counts each hash's clips, and PCM never leaves
     the decode task.  At 10^12 clips this is the difference between
     shuffling ~20 B and ~4 kB per window."""
     per_clip = _repeated_windows_per_clip(
@@ -1781,38 +1788,33 @@ def _repeated_windows_per_clip(
 ) -> DataFrame:
     """Shared detect stage of the repeated-segment operators: one narrow
     row per clip that HAS repeats — (clip_id, n_repeated_windows,
-    first_repeated_win[, _drop_wins]).  ``_drop_wins`` (the
-    sort_array(collect_list) the splice consumes) is built only when
-    asked: the detect-only caller must not shuffle, checkpoint, or
-    expose a per-clip window-index array it never reads.  The window table is persisted for
-    its two passes (hash groupBy + flag join), the per-clip result is
-    eagerly materialized (bounded: one short row per flagged clip), and
-    the cache is released before returning (persist →
-    localCheckpoint(eager) → unpersist), so the decode never runs
-    twice."""
-    wins = audio_window_hashes(df, win_ms=win_ms).persist()
-    repeated = (
-        wins.groupBy("win_hash")
-        .agg(F.count_distinct("clip_id").alias("n_clips"))
-        .filter(F.col("n_clips") >= int(min_clips))
-        .select("win_hash")
+    first_repeated_win[, _drop_wins]).  ``_drop_wins`` (the sorted
+    window indices the splice consumes) is built only when asked.  One
+    lazy plan over the window hashes, so the decode runs once per
+    action: fold per (hash, clip), count each hash's clips with a
+    window, keep hashes in >= ``min_clips`` clips, fold per clip."""
+    drop = include_drop_wins
+    per_pair = (
+        audio_window_hashes(df, win_ms=win_ms)
+        .groupBy("win_hash", "clip_id")
+        .agg(
+            F.count(F.lit(1)).alias("_n"),
+            F.min("win_idx").alias("_first"),
+            *([F.collect_list("win_idx").alias("_wins")] if drop else []),
+        )
     )
-    per_clip = (
-        wins.join(repeated, "win_hash", "inner")
+    n_clips = F.count("clip_id").over(Window.partitionBy("win_hash"))
+    drop_wins = F.sort_array(F.flatten(F.collect_list("_wins")))
+    return (
+        per_pair.withColumn("_n_clips", n_clips)
+        .where(F.col("_n_clips") >= int(min_clips))
         .groupBy("clip_id")
         .agg(
-            F.count(F.lit(1)).alias("n_repeated_windows"),
-            F.min("win_idx").alias("first_repeated_win"),
-            *(
-                [F.sort_array(F.collect_list("win_idx")).alias("_drop_wins")]
-                if include_drop_wins
-                else []
-            ),
+            F.sum("_n").alias("n_repeated_windows"),
+            F.min("_first").alias("first_repeated_win"),
+            *([drop_wins.alias("_drop_wins")] if drop else []),
         )
-        .localCheckpoint(eager=True)
     )
-    wins.unpersist()
-    return per_clip
 
 
 def strip_repeated_segments(
@@ -1867,12 +1869,7 @@ def strip_repeated_segments(
     tail = F.col("bytes").substr(
         n_complete * win_bytes + 1, F.length("bytes")
     )
-    spliced = F.concat(
-        F.aggregate(
-            pieces, F.lit(b""), lambda acc, p: F.concat(acc, p)
-        ),
-        tail,
-    )
+    spliced = F.concat(_concat_bytes(pieces), tail)
     splice_applies = (
         F.col("_drop_wins").isNotNull()
         & F.col("bytes").isNotNull()
@@ -2654,15 +2651,20 @@ def pack_audio_examples(
     job).  With no declaration, uniformity is inferred from a narrow
     (codec, sr_hz) distinct — a full extra scan of two small columns;
     fine interactively, declare at 10^12 rows.  NULL/empty payloads
-    contribute nothing.
+    contribute nothing; neither does a clip with a NULL ``order_col``.
+    ``order_col`` must be unique (segments of
+    :func:`split_clips_on_silence`: ``order_col="seg_id"``), and the
+    input is evaluated twice — an uncached :func:`resampled_clips`
+    upstream resamples twice (see ``packing.with_global_offset``).
 
     Scale shape: global clip offsets come from the two-phase prefix sum
-    (``packing.with_global_offset`` — no single-partition window); the
-    per-(clip, example) byte slices are PURE CATALYST (explode a 1-2
-    element pack sequence, ``substring`` the payload); the only payload
-    shuffle is the final groupBy(pack_id) where every byte moves exactly
-    once to the example that owns it.  At 10^12 clips the exchange is
-    the unavoidable minimum — the assembly itself adds zero Python."""
+    over (order, sample count) only (``packing.with_global_offset`` —
+    no single-partition window, no payload in its range shuffle or
+    checkpoint); the per-(clip, example) byte slices are PURE CATALYST
+    (explode a 1-2 element pack sequence, ``substring`` the payload);
+    the payload moves only in the offsets' join back and the final
+    groupBy(pack_id), where every byte moves exactly once to the
+    example that owns it — the assembly adds zero Python."""
     from .packing import with_global_offset
 
     declared = codec is not None and sr_hz is not None
@@ -2725,29 +2727,14 @@ def pack_audio_examples(
     spans = d.withColumn("pack_id", F.explode(F.sequence(first, last)))
     s = F.greatest(F.col("pack_id") * size - F.col("_off"), F.lit(0))
     e = F.least(F.col("_n"), (F.col("pack_id") + 1) * size - F.col("_off"))
-    chunk = F.expr(
-        f"substring(bytes, cast({'_s'} * {width} + 1 as int), "
-        f"cast(({'_e'} - {'_s'}) * {width} as int))"
-    )
-    spans = (
-        spans.withColumn("_s", s)
-        .withColumn("_e", e)
-        .withColumn("_chunk", chunk)
-    )
+    chunk = F.expr(f"substring(bytes, cast(_s * {width} + 1 as int), "
+                   f"cast((_e - _s) * {width} as int))")
+    spans = spans.withColumns({"_s": s, "_e": e}).withColumn("_chunk", chunk)
     out = (
         spans.groupBy("pack_id")
         .agg(
             F.count(F.lit(1)).alias("n_clips"),
-            F.aggregate(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("_off", "_chunk"))
-                    ),
-                    lambda x: x["_chunk"],
-                ),
-                F.lit(b""),
-                lambda acc, p: F.concat(acc, p),
-            ).alias("bytes"),
+            _concat_bytes(F.col("_chunk"), F.col("_off")).alias("bytes"),
         )
         .withColumn(
             "dur_ms",

@@ -17,6 +17,12 @@ it as the textbook two-phase distributed prefix sum instead:
 The only driver-side data is the per-partition totals (bounded by the
 partition count, not the data), and the result is partitioning-
 independent: a global prefix sum is a pure function of (order, value).
+
+The sum sees only (order, value): ``with_global_offset`` projects that
+narrow frame itself and joins the offsets back on the order key, so a
+payload never rides the range shuffle or lands in the checkpoint that
+freezes it — (key, value, partition, local offset, duplicate flag) per
+row in the checkpoint instead of the corpus.
 """
 
 from __future__ import annotations
@@ -32,43 +38,57 @@ def with_global_offset(
     out_col: str = "offset",
 ) -> DataFrame:
     """Append ``out_col`` = exclusive global prefix sum of ``value_col``
-    in ``order_col`` order (the first row gets 0).  Two-phase
-    distributed prefix sum — no global single-partition window; see the
-    module docstring for the shape.  ``order_col`` must be unique;
-    ``value_col`` NULLs count as 0."""
+    in ``order_col`` order (the first row gets 0); see the module
+    docstring for the shape.  ``value_col`` NULLs count as 0; a NULL
+    ``order_col`` stays out of the sum and reads a NULL ``out_col``.
+    ``order_col`` must be unique: the offsets join back on it, so a
+    repeated key raises ValueError.  ``df`` is evaluated twice (the
+    narrow sum at call time, then the join back): cache or checkpoint
+    an expensive input when storing it beats recomputing it, and a
+    nondeterministic one always — a key left without an offset fails
+    the job rather than losing its row."""
     val = F.coalesce(F.col(value_col), F.lit(0)).cast("bigint")
+    narrow = df.where(F.col(order_col).isNotNull()).select(
+        F.col(order_col), val.alias("_v")
+    )
+    w = Window.partitionBy("_pid").orderBy(order_col)
     # localCheckpoint FREEZES the range partitioning: the per-partition
     # totals job below and the final join are separate actions over this
     # lineage, and RangePartitioner samples its boundaries — without the
     # checkpoint a recomputation could draw different boundaries and the
     # _pid each row saw in phase 1 would not be the _pid it joins its
-    # base offset on in phase 2
+    # base offset on in phase 2.  Equal keys share a range partition, so
+    # `lag` over `w` sees every duplicate.
     d = (
-        df.repartitionByRange(F.col(order_col))
+        narrow.repartitionByRange(F.col(order_col))
         .withColumn("_pid", F.spark_partition_id())
+        .withColumn("_local", F.coalesce(F.sum("_v").over(
+            w.rowsBetween(Window.unboundedPreceding, -1)), F.lit(0)))
+        .withColumn("_dup", F.lag(order_col).over(w) == F.col(order_col))
         .localCheckpoint(eager=True)
     )
-    w = (
-        Window.partitionBy("_pid")
-        .orderBy(order_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    d = d.withColumn("_local", F.coalesce(F.sum(val).over(w), F.lit(0)))
     # one row per partition — bounded by partition count, never by data
-    totals = sorted(
-        d.groupBy("_pid").agg(F.sum(val).alias("_t")).collect(),
-        key=lambda r: r["_pid"],
-    )
+    totals = sorted(d.groupBy("_pid").agg(
+        F.sum("_v").alias("_t"), F.max("_dup").alias("_dup")
+    ).collect(), key=lambda r: r["_pid"])
+    if any(r["_dup"] for r in totals):
+        raise ValueError(f"with_global_offset: {order_col!r} repeats a key")
     base, running = [], 0
     for r in totals:
         base.append((r["_pid"], running))
         running += int(r["_t"] or 0)
     base_df = d.sparkSession.createDataFrame(base, "_pid int, _base long")
-    return (
-        d.join(F.broadcast(base_df), "_pid")
-        .withColumn(out_col, F.col("_base") + F.col("_local"))
-        .drop("_pid", "_local", "_base")
+    offs = d.join(F.broadcast(base_df), "_pid").select(
+        order_col, (F.col("_base") + F.col("_local")).alias("_goff")
     )
+    lost = F.col(order_col).isNotNull() & F.col("_goff").isNull()
+    goff = F.when(lost, F.raise_error(F.lit(
+        f"with_global_offset: a {order_col!r} key has no offset — the "
+        "input changed between its two evaluations"
+    ))).otherwise(F.col("_goff"))
+    joined = df.join(offs, order_col, "left")
+    return joined.select(*df.columns, goff.alias("_goff")).withColumn(
+        out_col, F.col("_goff")).drop("_goff")
 
 
 def pack_sequences(
@@ -87,7 +107,10 @@ def pack_sequences(
     training uses (no padding, sequences always full).
 
     The global offsets come from :func:`with_global_offset`; everything
-    after is pure Catalyst arithmetic."""
+    after is pure Catalyst arithmetic.  A document with a NULL
+    ``order_col`` takes no place in the stream: its ``offset``,
+    ``pack_id`` and ``pack_offset`` are NULL.  ``order_col`` must be
+    unique; ``df`` is evaluated twice (see :func:`with_global_offset`)."""
     if max_tokens <= 0:
         raise ValueError("pack_sequences: max_tokens must be positive")
     out = with_global_offset(df, order_col, token_col)
@@ -127,35 +150,24 @@ def shard_by_size(
 
     ``size_col`` names a precomputed size column; by default the size
     is ``length(payload_col)`` (NULL payloads count 0 and ride along).
-    The global running total comes from :func:`with_global_offset`
-    (two-phase distributed prefix sum — no single-partition window);
-    everything after is exact bigint Catalyst arithmetic.
-
-    The prefix sum runs on a NARROW (order, size) projection — the
-    payload column never rides the range shuffle and never lands in the
-    localCheckpoint that freezes the range partitioning; the multi-KB
-    payload crosses exactly one exchange, in the key-hash join that
-    brings ``shard_id`` back.  At 100 TB the difference is the whole
-    corpus materialized to executor disk vs a few GB of (key, size)
-    pairs.
+    The running total comes from :func:`with_global_offset`; everything
+    after is exact bigint Catalyst arithmetic.  A row with a NULL
+    ``order_col`` is in no shard: its ``shard_id`` and ``shard_offset``
+    are NULL.
     """
     if shard_bytes <= 0:
         raise ValueError("shard_by_size: shard_bytes must be positive")
-    sz = "_shard_sz"
-    sized = df.select(
-        F.col(order_col),
-        (F.col(size_col) if size_col is not None
-         else F.length(F.col(payload_col))).alias(sz),
+    size = (F.col(size_col) if size_col is not None
+            else F.length(F.col(payload_col)))
+    out = with_global_offset(
+        df.withColumn("_shard_sz", size), order_col, "_shard_sz",
+        out_col="_shard_cum",
     )
-    out = with_global_offset(sized, order_col, sz, out_col="_shard_cum")
     # `div`, not `/`: double division loses bigint exactness past 2^52
     # cumulative bytes (~4.5 PB is out of range, but 2^52 B = 4.5 TB is
     # not) and would disagree with the exact `%` at shard boundaries
-    assign = (
+    return (
         out.withColumn("shard_id", F.expr(f"_shard_cum div {int(shard_bytes)}"))
         .withColumn("shard_offset", F.col("_shard_cum") % F.lit(int(shard_bytes)))
-        .select(order_col, "shard_id", "shard_offset")
-    )
-    return df.join(assign, order_col).select(
-        *df.columns, "shard_id", "shard_offset"
+        .drop("_shard_sz", "_shard_cum")
     )

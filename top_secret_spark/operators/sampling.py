@@ -365,18 +365,22 @@ def select_until_budget(
     names or Columns — e.g. ``[F.col("symbol_ppm"), "doc_id"]`` selects
     the cleanest docs first; for a DESCENDING priority negate the
     expression, e.g. ``[-F.col("importance"), "doc_id"]`` — sort-order
-    modifiers like ``.desc()`` are not orderable inside the struct key;
-    the combined order MUST be total/unique or the cumsum is
-    nondeterministic), and a row is kept iff it fits
-    WHOLE: exclusive-cumsum(value) + value <= budget.  No straddling
-    row — a hard budget is hard.  Appends ``out_col`` (the exclusive
-    cumulative value before the row) to the survivors.
+    modifiers like ``.desc()`` are not orderable inside the struct key),
+    then by ``id_col``, which must be unique (a repeated id raises
+    ValueError), so the order is always total.  A row is kept iff it
+    fits WHOLE: exclusive-cumsum(value) + value <= budget.  No
+    straddling row — a hard budget is hard.  Returns the survivors with
+    the input's columns, in order, plus ``out_col`` (the exclusive
+    cumulative value before the row).
 
     Scale: the ordering rides the same two-phase distributed prefix sum
-    as ``pack_sequences`` (range partition by the priority struct →
-    per-partition window → per-partition totals broadcast) — no global
-    single-partition window, no driver collect of data rows.  The
-    selection itself is then one Catalyst filter.
+    as ``pack_sequences`` (``packing.with_global_offset``: range
+    partition by the priority struct → per-partition window →
+    per-partition totals broadcast) — no global single-partition
+    window, no driver collect of data rows.  The selection itself is
+    then one Catalyst filter.  ``df`` and the priority expressions are
+    evaluated twice (the sum, then the join back on the priority
+    struct): precompute a costly priority (a UDF) into a column.
     """
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
@@ -384,34 +388,26 @@ def select_until_budget(
         raise ValueError("priority_cols must name at least one column")
     from .packing import with_global_offset
 
-    # The prefix sum needs only (order, value, id): project NARROW
-    # before the range shuffle + eager localCheckpoint inside
-    # with_global_offset, then join offsets back on the 8-byte id —
-    # document payloads must never ride a shuffle (or a checkpoint) to
-    # compute a bigint.  ``id_col`` must be unique (it is the join key).
-    ordc = "_sel_ord"
     cols = [F.col(c) if isinstance(c, str) else c for c in priority_cols]
     # Degenerate-input posture (both auditable in plain SQL):
-    #  - NULL-id rows can never come back through the id join, so they
-    #    must not enter the prefix sum either — otherwise they silently
-    #    EAT budget and vanish;
-    #  - NULL / negative values clamp to 0 in the SAME projection the
+    #  - NULL-id rows are dropped before the prefix sum, so they can
+    #    never EAT budget;
+    #  - NULL / negative values clamp to 0 in the SAME column the
     #    cumsum reads, so the running total and the fits-whole filter
     #    always agree (a negative "size" must not refund budget).
     val_clamped = F.greatest(
         F.lit(0).cast("bigint"),
         F.coalesce(F.col(value_col).cast("bigint"), F.lit(0).cast("bigint")),
     )
-    narrow = df.where(F.col(id_col).isNotNull()).select(
-        F.col(id_col), val_clamped.alias(value_col),
-        F.struct(*cols).alias(ordc),
+    ranked = (
+        df.where(F.col(id_col).isNotNull())
+        .withColumn("_sel_ord", F.struct(*cols, F.col(id_col).alias("_id")))
+        .withColumn("_sel_val", val_clamped)
     )
-    offs = with_global_offset(narrow, ordc, value_col, out_col=out_col)
-    val = F.col(value_col).cast("bigint")
-    kept = offs.where(F.col(out_col) + val <= F.lit(int(budget))).select(
-        id_col, out_col
-    )
-    return df.join(kept, id_col)
+    offs = with_global_offset(ranked, "_sel_ord", "_sel_val", out_col=out_col)
+    return offs.where(
+        F.col(out_col) + F.col("_sel_val") <= F.lit(int(budget))
+    ).drop("_sel_ord", "_sel_val")
 
 
 def repeat_epochs(

@@ -15,8 +15,8 @@ a re-run after a partial failure is an idempotent overwrite (tmp file +
 atomic rename), never a torn shard.
 
 Scale design: the shard assignment's prefix sum runs on a narrow
-(key, size) projection (see ``shard_by_size``), so the payload column
-crosses exactly two exchanges — the key-hash join that attaches
+(key, size) projection (``packing.with_global_offset``), so the payload
+column crosses at most two exchanges — the key-hash join that attaches
 shard_id and the groupBy(shard_id) that routes each shard's rows to
 one task (bounded by ``shard_bytes``, so a task never holds more than
 one shard of payload + one straddling row) — and is never
@@ -108,14 +108,17 @@ def write_webdataset(
     ``<key>.txt`` (text; omitted when NULL), and ``<key>.json``
     (metadata from ``meta_cols``, minified, sorted keys — always
     present).  Samples are ordered by key within a shard; shard
-    membership is ``shard_by_size`` (size-balanced, deterministic).
+    membership is ``shard_by_size`` (size-balanced, deterministic).  A
+    row with a NULL key has no member name and is not written.
 
-    The manifest is ACTION-free until the caller acts on it; writing
-    happens inside the tasks that compute it, one ``.tar`` per shard
-    via tmp-file + atomic rename (idempotent overwrite on re-run)."""
+    Building the manifest runs the shard assignment's two narrow jobs
+    over (key, size); writing happens when the caller acts on it, in
+    the tasks that compute it, one ``.tar`` per shard via tmp-file +
+    atomic rename (idempotent overwrite on re-run)."""
     os.makedirs(path, exist_ok=True)
     sharded = shard_by_size(
-        df, shard_bytes, order_col=key_col, payload_col=payload_col
+        df.where(F.col(key_col).isNotNull()), shard_bytes,
+        order_col=key_col, payload_col=payload_col,
     ).select(
         F.col("shard_id"), F.col(key_col).alias("_key"),
         F.col(payload_col).alias("_payload"),
