@@ -3,7 +3,8 @@
 The engine's poison-row contract (operators/audio.py module doc, north
 rule): a malformed row must never kill a 1000-executor stage — analysis
 operators flag it (ok=false) or skip it observably; pure-Catalyst
-transforms pass it through.  Per-operator tests pin individual poison
+transforms pass it through; the strict payload transforms refuse it with
+one ValueError naming the row.  Per-operator tests pin individual poison
 classes; this sweep drives EVERY audio-facing operator over one frame
 holding the full cross-product of malformed inputs (NULL/empty/odd
 payloads, unknown/NULL codecs, zero/negative/NULL rates and durations,
@@ -583,3 +584,131 @@ def test_frame_energy_df_skips_poison_and_bad_sr(chaos):
     by_id = {r["clip_id"]: r["frame_db"] for r in rows}
     assert len(by_id["ok_pcm16"]) > 0
     assert by_id["empty_bytes"] == []
+
+
+# The strict payload transforms (operators/audio.py module doc): a NULL
+# payload passes through NULL; any other row the decode does not yield
+# raises ValueError("<op>: clip '<clip_id>': <reason>").  label ->
+# (operator name, call, refused row -> reason pattern).
+ODD = {"odd_pcm16": "odd-length", "one_byte": "odd-length"}
+BAD_CODEC = {"unknown_codec": "undecodable codec",
+             "null_codec": "undecodable codec"}
+BAD_RATE = {cid: "sr_hz" for cid in BAD_SR}
+NOT_SLICEABLE = {cid: "not byte-sliceable"
+                 for cid in ("ok_adpcm", "unknown_codec", "null_codec")}
+
+
+def _strict_ops():
+    import top_secret_spark.operators.audio as A
+
+    per_codec = {**ODD, **BAD_CODEC}
+    return {
+        "resampled_clips": ("resampled_clips",
+                            lambda d: A.resampled_clips(d, 8000),
+                            {**per_codec, **BAD_RATE}),
+        "normalized_clips": ("normalized_clips", A.normalized_clips,
+                             per_codec),
+        "noise_mixed_clips": ("noise_mixed_clips", A.noise_mixed_clips,
+                              per_codec),
+        "transcode_clips": ("transcode_clips",
+                            lambda d: A.transcode_clips(d, "ulaw"),
+                            per_codec),
+        # pcm16 rows are already in the target codec: they pass through
+        # undecoded, odd-length ones included
+        "transcode_clips[pcm16]": ("transcode_clips", A.transcode_clips,
+                                   BAD_CODEC),
+        "trimmed_clips": ("trimmed_clips", A.trimmed_clips,
+                          {**ODD, **NOT_SLICEABLE, **BAD_RATE}),
+        "speed_perturbed_clips": ("speed_perturbed_clips",
+                                  A.speed_perturbed_clips,
+                                  {**per_codec, **BAD_RATE}),
+        "dc_removed_clips": ("dc_removed_clips", A.dc_removed_clips,
+                             {**per_codec, **BAD_RATE}),
+    }
+
+
+def _batch_fn(monkeypatch, call, df):
+    """The batch function an operator hands the seam, and its ``drop``:
+    ``map_batches`` is swapped for a recorder, so no Spark job runs."""
+    import top_secret_spark.operators.audio as A
+
+    with monkeypatch.context() as m:
+        m.setattr(A, "map_batches",
+                  lambda _df, fn, emits="", drop=(): (fn, drop))
+        return call(df)
+
+
+def _pdf(rows, drop=()):
+    """Chaos rows as one Arrow-style batch (NULL ints read NaN)."""
+    import pandas as pd
+
+    pdf = pd.DataFrame(rows, columns=SCHEMA.fieldNames())
+    if "_noise_key" in drop:
+        pdf["_noise_key"] = np.arange(len(pdf), dtype=np.int64)
+    return pdf
+
+
+OK3 = [r for r in ROWS if r[0] in ("ok_pcm16", "ok_ulaw", "ok_alaw")]
+
+
+def test_strict_payload_transform_poison_matrix(chaos, monkeypatch):
+    """Every (strict transform, chaos row) cell, driven on pandas behind
+    three clean rows: the row passes (NULL stays NULL, empty stays
+    empty, every other row gets a payload) or the batch raises naming
+    THAT row.  Pins two defects of the per-operator loops: trimmed_clips
+    completed on a NULL sr with dur_ms = -2^31, and dc_removed_clips
+    named the first clip of the codec ('ok_pcm16'), not the bad one."""
+    for label, (op, call, refused) in _strict_ops().items():
+        fn, drop = _batch_fn(monkeypatch, call, chaos)
+        for row in ROWS:
+            cid = row[0]
+            pdf = _pdf(OK3 + [row], drop)
+            if cid in refused:
+                with pytest.raises(
+                    ValueError,
+                    match=f"^{op}: clip '{cid}': .*{refused[cid]}",
+                ):
+                    fn(pdf)
+                continue
+            out = fn(pdf)
+            got = out["bytes"].tolist()
+            assert all(isinstance(b, bytes) for b in got[:3]), (label, cid)
+            if cid == "null_bytes":
+                assert got[3] is None, label
+            elif cid == "empty_bytes":
+                assert got[3] == b"", (label, got[3])
+            else:
+                assert isinstance(got[3], bytes), (label, cid)
+            if label in ("trimmed_clips", "speed_perturbed_clips"):
+                # dur_ms is rewritten from the output samples
+                assert (out["dur_ms"] >= 0).all(), (label, cid)
+
+
+def test_strict_payload_transforms_run_accepted_rows(chaos):
+    """One Spark job per strict transform over the chaos rows it
+    accepts: every row comes back, NULL payloads as NULL."""
+    from pyspark.sql import functions as F
+
+    for label, (_, call, refused) in _strict_ops().items():
+        ok = chaos.filter(~F.col("clip_id").isin(list(refused)))
+        rows = {r["clip_id"]: r for r in call(ok).collect()}
+        assert set(rows) == ALL_IDS - set(refused), label
+        assert rows["null_bytes"]["bytes"] is None, label
+        assert all(r["bytes"] is not None for cid, r in rows.items()
+                   if cid != "null_bytes"), label
+
+
+def test_split_on_silence_names_null_rate_clip(chaos, monkeypatch):
+    """split_clips_on_silence refuses a NULL sr with the strict
+    transforms' named error, not numpy's 'cannot convert float NaN to
+    integer'."""
+    from top_secret_spark.operators.audio import split_clips_on_silence
+
+    fn, _ = _batch_fn(monkeypatch, split_clips_on_silence, chaos)
+    rows = {r[0]: r for r in ROWS}
+    for cid in ("null_sr", "zero_sr"):
+        with pytest.raises(
+            ValueError,
+            match=f"^split_clips_on_silence: clip '{cid}': .*sr_hz",
+        ):
+            fn(_pdf([rows["ok_pcm16"], rows[cid]]))

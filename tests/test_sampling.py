@@ -1,6 +1,8 @@
 """Deterministic sampling: layout-independence, per-stratum rates,
 disjoint splits, and the map-only plan shape."""
 
+import warnings
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -342,7 +344,11 @@ def test_repeat_epochs_counts_and_determinism(spark):
         [(i, "a" if i % 2 == 0 else "b") for i in range(200)],
         "doc_id long, src string",
     )
-    out = repeat_epochs(df, {"a": 2.5, "b": 0.0}, strata_col="src")
+    # getItem(Column) is deprecated and warns FutureWarning on every
+    # call; map[Column] is the supported form
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        out = repeat_epochs(df, {"a": 2.5, "b": 0.0}, strata_col="src")
     rows = out.collect()
     # stratum b (epochs 0) vanishes entirely
     assert all(r["src"] == "a" for r in rows)

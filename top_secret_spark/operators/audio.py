@@ -25,12 +25,35 @@ kernel over one decoded group — run by ``_with_sr_features``, which
 owns the zeroed columns, the scatter and the poison-row defaults.
 ``with_voice_health`` is that runner over the pitch, reverb and SNR
 specs: one decode and one Arrow crossing for all three.
+
+The payload transforms — resample, normalize, noise-mix, transcode,
+trim, speed-perturb, DC-remove, downmix, declip, denoise — are each one
+kernel over a decoded group, run by ``_transform_payloads``: per Arrow
+batch one concatenated decode and one kernel call per group, then one
+whole-buffer re-encode sliced back into row payloads (trim instead
+slices the source bytes, so it takes only the fixed-width codecs).
+Resample, trim, speed-perturb, DC-remove, declip and denoise group per
+(codec, sr); normalize, noise-mix and transcode group per codec, so a
+NULL or non-positive ``sr_hz`` is legal for them; downmix groups per
+(codec, sr, nch).  A row the decode does not yield — undecodable codec,
+odd-length pcm16 payload, NULL or non-positive rate where it is grouped
+by — meets one of two poison rules:
+
+- *restoration* (downmix, declip, denoise): it passes through
+  byte-for-byte with zeroed or unchanged fields, since repair is
+  optional and a poison row stays visible to the downstream gates;
+- *strict* (the other seven): a NULL payload passes through NULL (there
+  is nothing to transform), any other such row raises
+  ``ValueError("<operator>: clip '<clip_id>': <reason>")`` naming that
+  row — a transform that must cover every row refuses rather than pass
+  a silently unchanged one.  ``split_clips_on_silence`` refuses with
+  the same error.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Mapping
+from typing import Callable, Mapping, NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -48,16 +71,18 @@ _FEATURES_SCHEMA_SUFFIX = (
 
 def _decode_args(pdf, *rate_cols):
     """A clips batch as decode input: the ``bytes`` payload list, the
-    ``codec`` array, then ``sr_hz`` and each of ``rate_cols`` as float64
-    with NULL read as NaN (the decode's poison marker)."""
+    ``codec`` array, then each of ``rate_cols`` as float64 with NULL
+    read as NaN (the decode's poison marker).  A ``None`` rate column
+    reads 1 on every row: a rate the caller does not group by."""
     import numpy as np
 
     return (
         pdf["bytes"].tolist(),
         pdf["codec"].to_numpy(),
         *(
-            pdf[c].to_numpy(dtype="float64", na_value=np.nan)
-            for c in ("sr_hz", *rate_cols)
+            np.ones(len(pdf)) if c is None
+            else pdf[c].to_numpy(dtype="float64", na_value=np.nan)
+            for c in rate_cols
         ),
     )
 
@@ -67,7 +92,7 @@ def _sr_groups(pdf):
     ``(idx, samples, lengths, sr)`` per decodable (codec, sr) group."""
     from ..kernel.audio import decode_sr_groups
 
-    return decode_sr_groups(*_decode_args(pdf))
+    return decode_sr_groups(*_decode_args(pdf, "sr_hz"))
 
 
 def _sr_nch_groups(pdf):
@@ -76,7 +101,51 @@ def _sr_nch_groups(pdf):
     codec)`` per decodable (codec, sr, nch) group."""
     from ..kernel.audio import decode_sr_nch_groups
 
-    return decode_sr_nch_groups(*_decode_args(pdf, "n_channels"))
+    return decode_sr_nch_groups(*_decode_args(pdf, "sr_hz", "n_channels"))
+
+
+# zeroed numpy column per emitted scalar type; array<...> fields are
+# per-row lists
+_FEATURE_DTYPES = {
+    "boolean": "bool", "double": "float64", "int": "int32", "bigint": "int64",
+}
+
+
+def _emit_layout(emits: T.StructType, fill: Mapping) -> list:
+    """``(name, numpy dtype or None for array<...>, default)`` per
+    emitted field: the columns a batch runner starts every row at."""
+    return [
+        (
+            f.name,
+            None if isinstance(f.dataType, T.ArrayType)
+            else _FEATURE_DTYPES[f.dataType.simpleString()],
+            fill.get(f.name, 0),
+        )
+        for f in emits.fields
+    ]
+
+
+def _default_columns(layout: list, n: int) -> dict:
+    import numpy as np
+
+    return {
+        name: [[] for _ in range(n)] if dtype is None
+        else np.full(n, default, dtype=dtype)
+        for name, dtype, default in layout
+    }
+
+
+def _scatter(cols: dict, idx, fields: Mapping) -> None:
+    """Write one decoded group's ``fields`` into the batch columns at
+    rows ``idx``: a numpy column takes one fancy-index assignment, a
+    list column (payloads, per-row arrays) one slot per row."""
+    for name, values in fields.items():
+        col = cols[name]
+        if isinstance(col, list):
+            for i, v in zip(idx, values):
+                col[i] = v
+        else:
+            col[idx] = values
 
 
 @dataclass(frozen=True)
@@ -93,13 +162,6 @@ class _SrFeature:
     fill: Mapping = field(default_factory=dict)
 
 
-# zeroed numpy column per emitted scalar type; array<...> fields are
-# per-row lists
-_FEATURE_DTYPES = {
-    "boolean": "bool", "double": "float64", "int": "int32", "bigint": "int64",
-}
-
-
 def _with_sr_features(
     df: DataFrame, features: list[_SrFeature], keep_bytes: bool
 ) -> DataFrame:
@@ -111,36 +173,16 @@ def _with_sr_features(
     keep the defaults: ok false, zero measurements, ``fill`` values,
     empty arrays.  ``bytes`` is dropped unless ``keep_bytes``."""
     emits = T.DataType.fromDDL(", ".join(f.ddl for f in features))
-    fill = {k: v for f in features for k, v in f.fill.items()}
-    layout = [
-        (
-            f.name,
-            None if isinstance(f.dataType, T.ArrayType)
-            else _FEATURE_DTYPES[f.dataType.simpleString()],
-            fill.get(f.name, 0),
-        )
-        for f in emits.fields
-    ]
+    layout = _emit_layout(
+        emits, {k: v for f in features for k, v in f.fill.items()}
+    )
     kernels = [f.kernel for f in features]
 
     def run(pdf):
-        import numpy as np
-
-        n = len(pdf)
-        cols = {
-            name: [[] for _ in range(n)] if dtype is None
-            else np.full(n, default, dtype=dtype)
-            for name, dtype, default in layout
-        }
+        cols = _default_columns(layout, len(pdf))
         for idx, samples, lengths, sr in _sr_groups(pdf):
             for kernel in kernels:
-                for name, values in kernel(samples, lengths, sr).items():
-                    col = cols[name]
-                    if isinstance(col, list):
-                        for i, v in zip(idx, values):
-                            col[i] = v
-                    else:
-                        col[idx] = values
+                _scatter(cols, idx, kernel(samples, lengths, sr))
         for name, col in cols.items():
             pdf[name] = col
         return pdf
@@ -148,6 +190,118 @@ def _with_sr_features(
     return map_batches(
         df, run, emits=emits, drop=() if keep_bytes else ("bytes",),
     )
+
+
+class _Group(NamedTuple):
+    """One decoded (codec, sr, nch) group of a batch, as a payload
+    kernel sees it; ``pdf`` is the whole batch, ``idx`` the group's
+    rows in it."""
+
+    pdf: object
+    idx: object
+    samples: object
+    lengths: object
+    sr: int
+    nch: int
+    codec: str
+
+
+def _refusal(op: str, row, slices: bool) -> ValueError:
+    """The strict transforms' one error for a row the decode does not
+    yield, naming the row and the first rule it breaks (the rules
+    :func:`kernel.audio.decode_sr_groups` applies, in its order)."""
+    codec, data = row["codec"], row["bytes"]
+    if codec not in (_BYTES_PER_SAMPLE if slices else _SUPPORTED_CODECS):
+        why = (
+            f"codec {codec!r} is not byte-sliceable: only the fixed-width "
+            f"codecs {tuple(_BYTES_PER_SAMPLE)} survive a payload slice "
+            "(transcode adpcm first)" if slices
+            else f"undecodable codec {codec!r}; supported: "
+            f"{_SUPPORTED_CODECS}"
+        )
+    elif codec == "pcm16" and len(data) % 2:
+        why = f"odd-length pcm16 payload ({len(data)} bytes)"
+    else:
+        why = f"NULL or non-positive sr_hz ({row['sr_hz']})"
+    return ValueError(
+        f"{op}: clip {row.get('clip_id')!r}: {why}; gate or repair the "
+        "row upstream (with_audio_keep_drop, with_metadata_audit)"
+    )
+
+
+def _transform_payloads(
+    df: DataFrame,
+    op: str,
+    kernel: Callable,
+    *,
+    rates: tuple = ("sr_hz", None),
+    sets: Mapping | None = None,
+    slices: bool = False,
+    keep_codec: str | None = None,
+    strict: bool = True,
+    emits: str = "",
+    drop: tuple = (),
+) -> DataFrame:
+    """The one batch loop behind every payload transform (module doc).
+    Per batch, ``kernel.audio.decode_sr_nch_groups`` decodes each
+    (codec, sr, nch) group once — ``rates`` names the ``sr_hz`` and
+    ``n_channels`` columns the transform groups by, ``None`` for a rate
+    it never reads — and ``kernel(group)`` returns ``(samples, lengths,
+    fields)``: the new signal, re-encoded and sliced back into row
+    payloads, and ``{column: values}`` for the group's rows (emitted
+    columns start at zero / False; a carried column such as ``dur_ms``
+    keeps its value on rows not yielded).  A ``slices`` transform
+    returns sample bounds ``(starts, ends, fields)`` instead and its
+    payloads are byte slices of the source, so it takes only fixed-width
+    codecs.  ``sets`` are values written on every row; a ``codec`` entry
+    is also the codec every new payload is encoded in (without one a
+    payload keeps its own codec).  Rows in ``keep_codec`` pass through
+    undecoded.  The poison rule: a NULL payload passes through NULL;
+    any other row the decode does not yield raises :func:`_refusal`
+    when ``strict``, else passes through byte-for-byte at the defaults."""
+    layout = _emit_layout(T.DataType.fromDDL(emits), {}) if emits else []
+    accepted = tuple(_BYTES_PER_SAMPLE) if slices else _SUPPORTED_CODECS
+    sets = dict(sets or {})
+
+    def run(pdf):
+        import numpy as np
+
+        from ..kernel.audio import decode_sr_nch_groups
+
+        datas, codecs, srs, nchs = _decode_args(pdf, *rates)
+        live = pdf["bytes"].notna().to_numpy()
+        if keep_codec is not None:
+            live &= codecs != keep_codec
+        decodable = live & pdf["codec"].isin(accepted).to_numpy()
+        cols = {"bytes": datas.copy(), **_default_columns(layout, len(pdf))}
+        done = np.zeros(len(pdf), dtype=bool)
+        for g in decode_sr_nch_groups(
+            datas, np.where(decodable, codecs, None), srs, nchs
+        ):
+            g = _Group(pdf, *g)
+            out, lengths, fields = kernel(g)
+            if slices:
+                bps = _BYTES_PER_SAMPLE[g.codec]
+                payloads = [
+                    bytes(datas[i])[int(s) * bps: int(e) * bps]
+                    for i, s, e in zip(g.idx, out, lengths)
+                ]
+            else:
+                payloads = _encoded_payloads(
+                    out, lengths, sets.get("codec", g.codec)
+                )
+            for name in fields.keys() - cols.keys():
+                cols[name] = pdf[name].to_numpy(copy=True)
+            _scatter(cols, g.idx, {"bytes": payloads, **fields})
+            done[g.idx] = True
+        refused = np.flatnonzero(live & ~done)
+        if strict and len(refused):
+            raise _refusal(op, pdf.iloc[refused[0]], slices)
+        for name, col in {**cols, **sets}.items():
+            pdf[name] = col
+        return pdf
+
+    return map_batches(df, run, emits=emits, drop=drop)
 
 
 def with_audio_features(df: DataFrame) -> DataFrame:
@@ -409,42 +563,24 @@ def _with_audio_reason(feats: DataFrame, th: AudioGateThresholds) -> DataFrame:
 def resampled_clips(df: DataFrame, target_sr: int = 16000) -> DataFrame:
     """Re-encode every clip at a uniform sample rate (decode → linear
     resample → pcm16) — the audio 'resize'.  Output schema matches the
-    clips table with sr_hz = target_sr and codec = pcm16.
+    clips table with sr_hz = target_sr and codec = pcm16 on every row.
+    One ``batch_resample`` per (codec, sr) group per Arrow batch; a
+    strict payload transform (module doc): a row it cannot decode
+    raises, unlike the gate path (``with_audio_features``)."""
 
-    One concatenated decode + resample + pcm16 encode per codec present
-    in the Arrow batch (``batch_decode`` → ``batch_resample`` →
-    ``float_to_pcm16`` over the whole buffer) — no per-clip numpy calls;
-    the only per-clip work is slicing the encoded buffer back into row
-    payloads.  Unlike the gate path (``with_audio_features``), this is a
-    TRANSFORM whose output must cover every input row, so undecodable
-    payloads (unknown codec, odd-length pcm16) raise loudly rather than
-    passing through corrupt or silently changed rows."""
-
-    def run(pdf):
+    def kernel(g):
         import numpy as np
 
-        from ..kernel.audio import batch_decode, batch_resample
+        from ..kernel.audio import batch_resample
 
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy()
-        out_bytes = [None] * len(pdf)
-        for codec in sorted(set(codecs.tolist()), key=str):
-            idx = np.flatnonzero(codecs == codec)
-            samples, lengths = batch_decode(
-                [bytes(datas[i]) for i in idx], codec
-            )
-            res, res_lengths = batch_resample(
-                samples, lengths, srs[idx], target_sr
-            )
-            for i, payload in zip(idx, _pcm16_payloads(res, res_lengths)):
-                out_bytes[i] = payload
-        pdf["bytes"] = out_bytes
-        pdf["sr_hz"] = target_sr
-        pdf["codec"] = "pcm16"
-        return pdf
+        return (*batch_resample(
+            g.samples, g.lengths, np.full(len(g.idx), g.sr), target_sr
+        ), {})
 
-    return map_batches(df, run, drop=())
+    return _transform_payloads(
+        df, "resampled_clips", kernel,
+        sets={"sr_hz": target_sr, "codec": "pcm16"},
+    )
 
 
 def normalized_clips(
@@ -454,34 +590,21 @@ def normalized_clips(
     pcm16 re-encode) — level equalization before feature extraction, so
     a whisper-quiet and an overdriven recording present the same scale
     to a model.  Silent clips pass through at gain 1; near-silent gain
-    is capped at ``max_gain``.  Same batching/contract as
-    :func:`resampled_clips`: one concatenated kernel pass per codec per
-    Arrow batch, undecodable payloads raise loudly (transform, not a
-    gate).  Output codec is pcm16, sample rate unchanged."""
+    is capped at ``max_gain``.  A strict payload transform grouped per
+    codec (module doc): the rate is never read.  Output codec is pcm16,
+    sample rate unchanged."""
 
-    def run(pdf):
-        import numpy as np
+    def kernel(g):
+        from ..kernel.audio import batch_normalize_gain
 
-        from ..kernel.audio import batch_decode, batch_normalize_gain
+        return batch_normalize_gain(
+            g.samples, g.lengths, target_rms, max_gain
+        ), g.lengths, {}
 
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
-        out_bytes = [None] * len(pdf)
-        for codec in sorted(set(codecs.tolist()), key=str):
-            idx = np.flatnonzero(codecs == codec)
-            samples, lengths = batch_decode(
-                [bytes(datas[i]) for i in idx], codec
-            )
-            normed = batch_normalize_gain(
-                samples, lengths, target_rms, max_gain
-            )
-            for i, payload in zip(idx, _pcm16_payloads(normed, lengths)):
-                out_bytes[i] = payload
-        pdf["bytes"] = out_bytes
-        pdf["codec"] = "pcm16"
-        return pdf
-
-    return map_batches(df, run, drop=())
+    return _transform_payloads(
+        df, "normalized_clips", kernel,
+        rates=(None, None), sets={"codec": "pcm16"},
+    )
 
 
 def _concat_bytes(pieces: Column, order: Column | None = None) -> Column:
@@ -568,41 +691,32 @@ def noise_mixed_clips(
     and an auditor can regenerate the overlay exactly
     (``kernel.audio.batch_mix_noise``).
 
-    Same batching/contract as :func:`normalized_clips`: one
-    concatenated kernel pass per codec per Arrow batch, undecodable
-    payloads raise loudly (transform, not a gate), digital-silent clips
-    (all-zero DECODED signal) pass through unchanged — noise at X dB
-    below zero signal is undefined.  A G.711 "silent" clip decodes to
-    the nonzero companded-zero reconstruction (~1e-4), so it gets noise
-    that far below — still under SILENCE_EPS, still nameable by the
-    silence gate.  Output codec is pcm16, sample rate unchanged."""
+    A strict payload transform grouped per codec (module doc).
+    Digital-silent clips (all-zero DECODED signal) pass through
+    unchanged — noise at X dB below zero signal is undefined.  A G.711
+    "silent" clip decodes to the nonzero companded-zero reconstruction
+    (~1e-4), so it gets noise that far below — still under SILENCE_EPS,
+    still nameable by the silence gate.  Output codec is pcm16, sample
+    rate unchanged."""
     keyed = df.withColumn(
         "_noise_key", F.xxhash64(F.col("clip_id"), F.lit(int(seed)))
     )
 
-    def run(pdf):
+    def kernel(g):
         import numpy as np
 
-        from ..kernel.audio import batch_decode, batch_mix_noise
+        from ..kernel.audio import batch_mix_noise
 
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
         # int64 -> uint64 reinterpret: same 64 bits, numpy-safe
-        keys = pdf["_noise_key"].to_numpy(dtype=np.int64).view(np.uint64)
-        out_bytes = [None] * len(pdf)
-        for codec in sorted(set(codecs.tolist()), key=str):
-            idx = np.flatnonzero(codecs == codec)
-            samples, lengths = batch_decode(
-                [bytes(datas[i]) for i in idx], codec
-            )
-            mixed = batch_mix_noise(samples, lengths, keys[idx], snr_db)
-            for i, payload in zip(idx, _pcm16_payloads(mixed, lengths)):
-                out_bytes[i] = payload
-        pdf["bytes"] = out_bytes
-        pdf["codec"] = "pcm16"
-        return pdf
+        keys = g.pdf["_noise_key"].to_numpy(dtype=np.int64)[g.idx]
+        return batch_mix_noise(
+            g.samples, g.lengths, keys.view(np.uint64), snr_db
+        ), g.lengths, {}
 
-    return map_batches(keyed, run, drop=("_noise_key",))
+    return _transform_payloads(
+        keyed, "noise_mixed_clips", kernel,
+        rates=(None, None), sets={"codec": "pcm16"}, drop=("_noise_key",),
+    )
 
 
 def _bps_col() -> Column:
@@ -618,7 +732,8 @@ def _bps_col() -> Column:
 
 
 # per-SAMPLE digital-zero code of every seekable codec as hex text
-# (unhex(repeat(hex, m)) keeps binary concat binary end to end); 0x80
+# (unhex(repeat(hex, m)) keeps binary concat binary end to end): the
+# silence time_masked_clips, padded_clips and redact_audio_pii write; 0x80
 # is the zero code of THIS repo's continuous-companding G.711 form —
 # pytest-gated against encode(zeros) per codec so the two can't drift
 _DIGITAL_ZERO_HEX = {"pcm16": "0000", "ulaw": "80", "alaw": "80"}
@@ -630,13 +745,6 @@ def _zero_hex_col() -> Column:
     for codec, h in _DIGITAL_ZERO_HEX.items():
         expr = F.when(F.col("codec") == codec, F.lit(h)).otherwise(expr)
     return expr
-
-
-def _pcm16_payloads(samples, lengths) -> list:
-    """Encode a concatenated float buffer to pcm16 and slice it back
-    into one bytes payload per clip — the shared re-encode tail of every
-    re-synthesizing transform (resample / normalize / speed-perturb)."""
-    return _encoded_payloads(samples, lengths, "pcm16")
 
 
 def _encoded_payloads(samples, lengths, codec: str) -> list:
@@ -698,44 +806,20 @@ def transcode_clips(df: DataFrame, target_codec: str = "pcm16") -> DataFrame:
     storage codec here; route training audio through pcm16/G.711
     targets.  ADPCM payloads hold a whole number of bytes (2 samples
     each): an odd-length source is repeat-padded by one sample and
-    decodes to the even-rounded count.  Same batching/contract as
-    :func:`resampled_clips`: one concatenated kernel pass per source
-    codec per Arrow batch, undecodable payloads raise loudly (transform,
-    not a gate).  NULL payloads pass through NULL (there is nothing to
-    transcode), matching ``time_masked_clips``/``chunked_clips``."""
+    decodes to the even-rounded count.  A strict payload transform
+    grouped per source codec (module doc); the target codec is written
+    on every row, NULL payloads included."""
     _encodable = sorted(_SUPPORTED_CODECS)
     if target_codec not in _encodable:
         raise NotImplementedError(
             f"codec '{target_codec}' requires an external encoder not "
             f"present in this container; supported: {_encodable}"
         )
-
-    def run(pdf):
-        import numpy as np
-
-        from ..kernel.audio import batch_decode
-
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
-        out_bytes = list(datas)  # same-codec rows pass through
-        nonnull = np.fromiter(
-            (d is not None for d in datas), dtype=bool, count=len(datas)
-        )
-        for codec in sorted(set(codecs.tolist()), key=str):
-            if codec == target_codec:
-                continue
-            idx = np.flatnonzero((codecs == codec) & nonnull)
-            samples, lengths = batch_decode(
-                [bytes(datas[i]) for i in idx], codec
-            )
-            payloads = _encoded_payloads(samples, lengths, target_codec)
-            for i, payload in zip(idx, payloads):
-                out_bytes[i] = payload
-        pdf["bytes"] = out_bytes
-        pdf["codec"] = target_codec
-        return pdf
-
-    return map_batches(df, run, drop=())
+    return _transform_payloads(
+        df, "transcode_clips", lambda g: (g.samples, g.lengths, {}),
+        rates=(None, None), sets={"codec": target_codec},
+        keep_codec=target_codec,
+    )
 
 
 def trimmed_clips(
@@ -746,75 +830,31 @@ def trimmed_clips(
     keeping ``pad_ms`` of context on each side.
 
     Decode runs only to FIND the bounds (`kernel.batch_trim_bounds`:
-    one flatnonzero + two searchsorted per codec per Arrow batch); the
-    retained region is then a BYTE SLICE of the original payload —
-    every SEEKABLE codec is fixed-bytes-per-sample (adpcm is not:
-    decode state is sequential, so this op raises for it) — the codec
-    column is preserved and retained samples are bit-identical to the
-    input (no decode→re-encode generation loss).  ``dur_ms`` is
-    rewritten from the retained sample count.  All-silent clips come
-    out with an empty payload (dur 0) for the audio gate to name, not
-    silently dropped, and NULL payloads pass through untouched (same
-    policy as :func:`chunked_clips`) — a transform covers every input
-    row.  Same contract as :func:`resampled_clips` otherwise:
-    undecodable payloads (unknown codec, odd-length pcm16, non-positive
-    sr) raise loudly."""
+    one flatnonzero + two searchsorted per (codec, sr) group per Arrow
+    batch); the retained region is then a BYTE SLICE of the original
+    payload — every SEEKABLE codec is fixed-bytes-per-sample (adpcm is
+    not: decode state is sequential, so this op refuses it as not
+    byte-sliceable) — the codec column is preserved and retained samples
+    are bit-identical to the input (no decode→re-encode generation
+    loss).  ``dur_ms`` is rewritten from the retained sample count.
+    All-silent clips come out with an empty payload (dur 0) for the
+    audio gate to name, not silently dropped.  A strict payload
+    transform (module doc)."""
     has_dur = "dur_ms" in df.columns
 
-    def run(pdf):
+    def kernel(g):
         import numpy as np
 
-        from ..kernel.audio import batch_decode, batch_trim_bounds
+        from ..kernel.audio import batch_trim_bounds
 
-        datas = pdf["bytes"].tolist()
-        nonnull = np.array([d is not None for d in datas])
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy()
-        out_bytes = list(datas)  # NULL payloads pass through
-        new_dur = pdf["dur_ms"].copy() if has_dur else None
-        for codec in sorted(
-            set(codecs[nonnull].tolist()), key=str
-        ):
-            bps = _BYTES_PER_SAMPLE.get(codec)
-            if bps is None:
-                raise ValueError(
-                    f"trimmed_clips: codec {codec!r} is not "
-                    "byte-sliceable — trim keeps retained samples "
-                    "bit-identical via a payload slice, which only "
-                    "fixed-width codecs (SEEKABLE_CODECS) survive; "
-                    "gate undecodable rows out upstream "
-                    "(with_audio_keep_drop), and transcode stateful "
-                    "codecs (adpcm) to pcm16/ulaw/alaw first"
-                )
-            idx = np.flatnonzero((codecs == codec) & nonnull)
-            if (srs[idx] <= 0).any():
-                raise ValueError(
-                    "trimmed_clips: non-positive sr_hz — repair "
-                    "metadata upstream"
-                )
-            samples, lengths = batch_decode(
-                [bytes(datas[i]) for i in idx], codec
-            )
-            pad = (srs[idx].astype(np.int64) * int(pad_ms)) // 1000
-            starts, ends = batch_trim_bounds(
-                samples, lengths, threshold, pad
-            )
-            for k, i in enumerate(idx):
-                out_bytes[i] = bytes(datas[i])[
-                    int(starts[k]) * bps : int(ends[k]) * bps
-                ]
-            if has_dur:
-                # cast to the Series' own dtype: pandas deprecates
-                # (future-errors) int64 setitem into an int32 column
-                new_dur.iloc[idx] = np.round(
-                    (ends - starts) * 1000.0 / srs[idx]
-                ).astype(new_dur.dtype, copy=False)
-        pdf["bytes"] = out_bytes
-        if has_dur:
-            pdf["dur_ms"] = new_dur
-        return pdf
+        starts, ends = batch_trim_bounds(
+            g.samples, g.lengths, threshold, g.sr * int(pad_ms) // 1000
+        )
+        return starts, ends, {
+            "dur_ms": np.round((ends - starts) * 1000.0 / g.sr)
+        } if has_dur else {}
 
-    return map_batches(df, run, drop=())
+    return _transform_payloads(df, "trimmed_clips", kernel, slices=True)
 
 
 def chunked_clips(
@@ -923,68 +963,35 @@ def speed_perturbed_clips(df: DataFrame, factor: float = 1.1) -> DataFrame:
     and rewrites ``dur_ms`` and ``codec`` (pcm16, like every
     re-synthesizing transform here).
 
-    Same batching as :func:`resampled_clips`, grouped per (codec, sr)
-    because the virtual source rate depends on the clip's own rate; the
-    resample kernel is the shared regime-adaptive ``batch_resample``.
-    Transform contract: undecodable payloads / non-positive sr raise
-    loudly; NULL payloads pass through."""
+    A strict payload transform grouped per (codec, sr) (module doc):
+    the virtual source rate depends on the clip's own rate; the
+    resample kernel is the shared regime-adaptive ``batch_resample``."""
     if not factor > 0:
         raise ValueError("speed_perturbed_clips: factor must be positive")
     has_dur = "dur_ms" in df.columns
 
-    def run(pdf):
+    def kernel(g):
         import numpy as np
 
-        from ..kernel.audio import batch_decode, batch_resample
+        from ..kernel.audio import batch_resample
 
-        datas = pdf["bytes"].tolist()
-        nonnull = np.array([d is not None for d in datas])
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy()
-        out_bytes = list(datas)
-        out_codec = pdf["codec"].copy()
-        new_dur = pdf["dur_ms"].copy() if has_dur else None
-        for codec, sr in sorted(
-            {(c, int(s)) for c, s, nn in
-             zip(codecs.tolist(), srs.tolist(), nonnull) if nn},
-            key=str,
-        ):
-            if sr <= 0:
-                raise ValueError(
-                    "speed_perturbed_clips: non-positive sr_hz — "
-                    "repair metadata upstream"
-                )
-            idx = np.flatnonzero(
-                (codecs == codec) & (srs == sr) & nonnull
+        virtual_sr = int(round(g.sr * factor))
+        if virtual_sr < 1:
+            raise ValueError(
+                f"speed_perturbed_clips: factor {factor} "
+                f"quantizes the virtual source rate to 0 at "
+                f"sr_hz={g.sr} - the factor is too small"
             )
-            samples, lengths = batch_decode(
-                [bytes(datas[i]) for i in idx], codec
-            )
-            virtual_sr = int(round(sr * factor))
-            if virtual_sr < 1:
-                raise ValueError(
-                    f"speed_perturbed_clips: factor {factor} "
-                    f"quantizes the virtual source rate to 0 at "
-                    f"sr_hz={sr} - the factor is too small"
-                )
-            res, res_lengths = batch_resample(
-                samples, lengths,
-                np.full(len(idx), virtual_sr, dtype=np.int64), sr
-            )
-            for i, payload in zip(idx, _pcm16_payloads(res, res_lengths)):
-                out_bytes[i] = payload
-            out_codec.iloc[idx] = "pcm16"
-            if has_dur:
-                new_dur.iloc[idx] = np.round(
-                    res_lengths * 1000.0 / sr
-                ).astype(new_dur.dtype, copy=False)
-        pdf["bytes"] = out_bytes
-        pdf["codec"] = out_codec
-        if has_dur:
-            pdf["dur_ms"] = new_dur
-        return pdf
+        res, res_lengths = batch_resample(
+            g.samples, g.lengths, np.full(len(g.idx), virtual_sr), g.sr
+        )
+        return res, res_lengths, {
+            "dur_ms": np.round(res_lengths * 1000.0 / g.sr)
+        } if has_dur else {}
 
-    return map_batches(df, run, drop=())
+    return _transform_payloads(
+        df, "speed_perturbed_clips", kernel, sets={"codec": "pcm16"},
+    )
 
 
 def split_clips_on_silence(
@@ -1009,8 +1016,10 @@ def split_clips_on_silence(
     segment 0 only (NULL elsewhere) — same contract as
     :func:`chunked_clips`.  All-silent and empty clips emit ONE empty
     segment, and NULL payloads pass through as one untouched segment
-    (a structural transform never loses rows).  Transform contract:
-    undecodable payloads / non-positive sr raise loudly."""
+    (a structural transform never loses rows).  Any other row the
+    slice cannot take — a codec outside the fixed-width ones, a NULL or
+    non-positive sr — raises the strict transforms' named error (module
+    doc)."""
     has_dur = "dur_ms" in df.columns
 
     def run(pdf):
@@ -1021,26 +1030,22 @@ def split_clips_on_silence(
         datas = pdf["bytes"].tolist()
         nonnull = np.array([d is not None for d in datas])
         codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy()
+        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
+        # segments are payload slices; NaN > 0 is False, so a NULL
+        # rate is refused with the non-positive ones
+        refused = np.flatnonzero(nonnull & ~(
+            pdf["codec"].isin(_BYTES_PER_SAMPLE).to_numpy() & (srs > 0)
+        ))
+        if len(refused):
+            raise _refusal(
+                "split_clips_on_silence", pdf.iloc[refused[0]], slices=True
+            )
         all_rows, all_s, all_e = [], [], []
         for codec, sr in sorted(
             {(c, int(s)) for c, s, nn in
              zip(codecs.tolist(), srs.tolist(), nonnull) if nn},
             key=str,
         ):
-            if _BYTES_PER_SAMPLE.get(codec) is None:
-                raise ValueError(
-                    f"split_clips_on_silence: codec {codec!r} is not "
-                    "byte-sliceable (segments are payload slices; "
-                    "stateful codecs like adpcm need a transcode to "
-                    "pcm16/ulaw/alaw first) — gate undecodable rows "
-                    "out upstream"
-                )
-            if sr <= 0:
-                raise ValueError(
-                    "split_clips_on_silence: non-positive sr_hz — "
-                    "repair metadata upstream"
-                )
             idx = np.flatnonzero(
                 (codecs == codec) & (srs == sr) & nonnull
             )
@@ -1601,43 +1606,20 @@ def dc_removed_clips(df: DataFrame, win_ms: int = 125) -> DataFrame:
     unchanged (the ``win_ms`` window only attenuates ≲ 1/win
     frequencies).
 
-    Same transform contract as :func:`normalized_clips`: one
-    concatenated kernel pass per (codec, sr) group per Arrow batch
-    (the window is sr-derived, hence the sr split), undecodable
-    payloads raise loudly (transform, not a gate).  Output codec is
-    pcm16, sample rate unchanged."""
+    A strict payload transform grouped per (codec, sr) (module doc):
+    the window is sr-derived.  Output codec is pcm16, sample rate
+    unchanged."""
 
-    def run(pdf):
-        import numpy as np
+    def kernel(g):
+        from ..kernel.audio import batch_remove_dc
 
-        from ..kernel.audio import batch_decode, batch_remove_dc
+        return batch_remove_dc(
+            g.samples, g.lengths, g.sr, win_ms=win_ms
+        ), g.lengths, {}
 
-        datas = pdf["bytes"].tolist()
-        codecs = pdf["codec"].to_numpy()
-        srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
-        out_bytes = [None] * len(pdf)
-        for codec in sorted(set(codecs.tolist()), key=str):
-            cidx = np.flatnonzero(codecs == codec)
-            for sr in np.unique(srs[cidx]):
-                if not np.isfinite(sr) or sr <= 0:
-                    bad = pdf["clip_id"].iloc[int(cidx[0])]
-                    raise ValueError(
-                        f"dc_removed_clips: NULL/invalid sr_hz on "
-                        f"clip {bad!r} — repair metadata upstream"
-                    )
-                idx = cidx[srs[cidx] == sr]
-                samples, lengths = batch_decode(
-                    [bytes(datas[i]) for i in idx], codec
-                )
-                cleaned = batch_remove_dc(samples, lengths, int(sr),
-                                          win_ms=win_ms)
-                for i, payload in zip(idx, _pcm16_payloads(cleaned, lengths)):
-                    out_bytes[i] = payload
-        pdf["bytes"] = out_bytes
-        pdf["codec"] = "pcm16"
-        return pdf
-
-    return map_batches(df, run, drop=())
+    return _transform_payloads(
+        df, "dc_removed_clips", kernel, sets={"codec": "pcm16"},
+    )
 
 
 def speech_drop_reason_col(min_ratio: float = 0.3) -> Column:
@@ -2063,25 +2045,13 @@ def redact_audio_pii(
 
     cfg = config or DEFAULT_CONFIG
     cfg.all_filters()  # plan-time label validation
+    fill = {c: bytes.fromhex(h) for c, h in _DIGITAL_ZERO_HEX.items()}
 
     def run(pdf):
         import numpy as np
 
-        from ..kernel.audio import (
-            SEEKABLE_CODECS,
-            alaw_encode,
-            ulaw_encode,
-        )
+        from ..kernel.audio import SEEKABLE_CODECS
         from ..kernel.scrub import pii_char_spans, scan_text, substitute_text
-
-        from ..kernel.audio import BYTES_PER_SAMPLE as bps
-
-        fill = {
-            "pcm16": b"\x00\x00",
-            "ulaw": bytes(ulaw_encode(np.zeros(1, np.float32)).tobytes()),
-            "alaw": bytes(alaw_encode(np.zeros(1, np.float32)).tobytes()),
-        }
-        assert tuple(fill) == tuple(bps)
 
         n = len(pdf)
         new_bytes = pdf["bytes"].tolist()
@@ -2115,7 +2085,7 @@ def redact_audio_pii(
                 or sr <= 0
             ):
                 continue
-            w = bps[codec]
+            w = _BYTES_PER_SAMPLE[codec]
             n_samp = len(data) // w
             if n_samp == 0:
                 continue
@@ -2317,40 +2287,26 @@ def downmix_to_mono(df: DataFrame) -> DataFrame:
     shrinks by the channel factor, ``dur_ms`` is unchanged (frames per
     channel are preserved; a ragged trailing partial frame is dropped).
 
-    Poison rows (undecodable codec, NULL payload/sr/n_channels) pass
-    through byte-for-byte with their original ``n_channels`` — at
-    10^12 rows a poison row must stay visible to the downstream
-    metadata audit (q88), not be silently relabeled mono.
+    A restoration payload transform grouped per (codec, sr, nch)
+    (module doc): poison rows (undecodable codec, NULL payload/sr/
+    n_channels) pass through byte-for-byte with their original
+    ``n_channels`` — at 10^12 rows a poison row must stay visible to the
+    downstream metadata audit (q88), not be silently relabeled mono.
 
     Scale: map-only, zero Exchange, zero per-clip numpy calls; the
     downmix is one mean over a ``(frames, nch)`` view of the whole
     Arrow batch."""
 
-    def run(pdf):
-        import numpy as np
-        import pandas as pd
-
+    def kernel(g):
         from ..kernel.audio import batch_downmix
 
-        out_bytes = pdf["bytes"].tolist()
-        nch_out = pdf["n_channels"].to_numpy(
-            dtype="float64", na_value=np.nan
-        ).copy()
-        for idx, samples, lengths, sr, nch, codec in _sr_nch_groups(pdf):
-            mono, mlen = batch_downmix(samples, lengths, nch)
-            # per-codec re-encode + per-clip slice in one helper —
-            # handles the stateful adpcm case (fresh state per clip)
-            for i, payload in zip(idx, _encoded_payloads(mono, mlen, codec)):
-                out_bytes[i] = payload
-            nch_out[idx] = 1
-        pdf["bytes"] = out_bytes
-        pdf["n_channels"] = pd.array(
-            [None if not np.isfinite(v) else int(v) for v in nch_out],
-            dtype="Int32",
-        )
-        return pdf
+        mono, mlen = batch_downmix(g.samples, g.lengths, g.nch)
+        return mono, mlen, {"n_channels": 1}
 
-    return map_batches(df, run, drop=())
+    return _transform_payloads(
+        df, "downmix_to_mono", kernel,
+        rates=("sr_hz", "n_channels"), strict=False,
+    )
 
 
 # --- WAV/RIFF container handling (pure Catalyst) ------------------------------
@@ -2589,36 +2545,19 @@ def declipped_clips(df: DataFrame, level: float = 0.95) -> DataFrame:
 
     Scale: map-only, zero Exchange; one concatenated decode + ONE
     global accumulate each way per (codec, sr) group per Arrow batch —
-    no per-clip or per-run Python.  Poison rows (undecodable codec /
-    NULL payload / bad sr) pass through byte-for-byte with zeroed
-    counts, same convention as :func:`downmix_to_mono`."""
+    no per-clip or per-run Python.  A restoration payload transform
+    (module doc): poison rows pass through byte-for-byte with zeroed
+    counts."""
 
-    def run(pdf):
-        import numpy as np
-
+    def kernel(g):
         from ..kernel.audio import batch_declip
 
-        n = len(pdf)
-        out_bytes = pdf["bytes"].tolist()
-        ncs = np.zeros(n, dtype=np.int64)
-        nrs = np.zeros(n, dtype=np.int64)
-        codecs = pdf["codec"].to_numpy()
-        for idx, samples, lengths, _sr in _sr_groups(pdf):
-            codec = str(codecs[idx[0]])
-            rep, nc, nr = batch_declip(samples, lengths, level=level)
-            for i, payload in zip(idx, _encoded_payloads(rep, lengths, codec)):
-                out_bytes[i] = payload
-            ncs[idx] = nc
-            nrs[idx] = nr
-        pdf["bytes"] = out_bytes
-        pdf["n_clipped"] = ncs
-        pdf["n_repaired"] = nrs
-        return pdf
+        rep, nc, nr = batch_declip(g.samples, g.lengths, level=level)
+        return rep, g.lengths, {"n_clipped": nc, "n_repaired": nr}
 
-    return map_batches(
-        df, run,
+    return _transform_payloads(
+        df, "declipped_clips", kernel, strict=False,
         emits="n_clipped bigint, n_repaired bigint",
-        drop=(),
     )
 
 
@@ -2814,39 +2753,23 @@ def denoised_clips(
     Scale: map-only, zero Exchange; selection energies cost one global
     cumsum, the noise-estimate FFT pass touches only ~``quiet_frac``
     of frames, and both FFT passes run in memory-bounded blocks — no
-    per-clip or per-frame Python.  Poison rows pass through
-    byte-for-byte (``denoise_ok`` false), sub-frame clips pass through
-    with ``denoise_ok`` true and zero frames."""
+    per-clip or per-frame Python.  A restoration payload transform
+    (module doc): poison rows pass through byte-for-byte (``denoise_ok``
+    false); sub-frame clips pass through with ``denoise_ok`` true and
+    zero frames."""
 
-    def run(pdf):
-        import numpy as np
-
+    def kernel(g):
         from ..kernel.spectral import batch_denoise
 
-        n = len(pdf)
-        out_bytes = pdf["bytes"].tolist()
-        oks = np.zeros(n, dtype=bool)
-        nfs = np.zeros(n, dtype=np.int64)
-        codecs = pdf["codec"].to_numpy()
-        for idx, samples, lengths, sr in _sr_groups(pdf):
-            codec = str(codecs[idx[0]])
-            den, nf = batch_denoise(
-                samples, lengths, sr,
-                alpha=alpha, beta=beta, quiet_frac=quiet_frac,
-            )
-            for i, payload in zip(idx, _encoded_payloads(den, lengths, codec)):
-                out_bytes[i] = payload
-            oks[idx] = True
-            nfs[idx] = nf
-        pdf["bytes"] = out_bytes
-        pdf["denoise_ok"] = oks
-        pdf["n_frames_denoised"] = nfs.astype("int32")
-        return pdf
+        den, nf = batch_denoise(
+            g.samples, g.lengths, g.sr,
+            alpha=alpha, beta=beta, quiet_frac=quiet_frac,
+        )
+        return den, g.lengths, {"denoise_ok": True, "n_frames_denoised": nf}
 
-    return map_batches(
-        df, run,
+    return _transform_payloads(
+        df, "denoised_clips", kernel, strict=False,
         emits="denoise_ok boolean, n_frames_denoised int",
-        drop=(),
     )
 
 
