@@ -712,3 +712,19 @@ def test_split_on_silence_names_null_rate_clip(chaos, monkeypatch):
             match=f"^split_clips_on_silence: clip '{cid}': .*sr_hz",
         ):
             fn(_pdf([rows["ok_pcm16"], rows[cid]]))
+
+
+def test_split_on_silence_names_odd_length_clip(chaos, monkeypatch):
+    """An odd-length pcm16 payload with a good rate is refused by name,
+    not by the decode's unnamed 'odd-length payload(s)' error for the
+    whole batch."""
+    from top_secret_spark.operators.audio import split_clips_on_silence
+
+    fn, _ = _batch_fn(monkeypatch, split_clips_on_silence, chaos)
+    rows = {r[0]: r for r in ROWS}
+    for cid in ODD:
+        with pytest.raises(
+            ValueError,
+            match=f"^split_clips_on_silence: clip '{cid}': .*odd-length",
+        ):
+            fn(_pdf([rows["ok_pcm16"], rows[cid]]))

@@ -358,6 +358,11 @@ def test_substitute_text_matches_regex_formulation(text, mapping):
     st.lists(_TEXTS, min_size=0, max_size=40),
     st.integers(min_value=1, max_value=4000),
 )
+# the edges of the interleaved segment bounds (kernel/hashing.py)
+@example(["", "the quick brown fox", "und der hund"], 8)   # empty first doc
+@example(["the quick brown fox", "ab"], 4000)            # last doc < order
+@example(["ab", "c", "", None, "d"], 1)                  # no valid n-gram
+@example(["ab\x00cd efgh", "x\x00", "\x00\x00\x00\x00"], 6)  # NUL bytes
 @settings(max_examples=120, deadline=None)
 def test_text_kernels_chunk_layout_invariance(texts, chunk_bytes):
     """langid / perplexity / char-signals results must be BIT-IDENTICAL
@@ -403,6 +408,65 @@ def test_text_kernels_chunk_layout_invariance(texts, chunk_bytes):
     np.testing.assert_array_equal(got[2], ref[2])
     for a, b in zip(got[3], ref[3]):
         np.testing.assert_array_equal(a, b)
+
+
+@given(
+    st.lists(st.integers(min_value=0, max_value=12), max_size=30),
+    st.integers(min_value=1, max_value=4),
+)
+@example([], 2)
+@example([0, 5, 1], 3)   # empty first doc, last doc shorter than the order
+@example([2, 1], 3)      # no doc holds a whole n-gram
+@settings(max_examples=200, deadline=None)
+def test_doc_sums_matches_per_doc_loop(lengths, n):
+    """doc_sums' interleaved reduceat bounds pick exactly each doc's
+    in-document start positions (integer rows, so sums are exact)."""
+    import numpy as np
+
+    from top_secret_spark.kernel.hashing import doc_sums
+
+    lengths = np.array(lengths, dtype=np.int64)
+    n_pos = max(int(lengths.sum()) - n + 1, 0)
+    values = (np.arange(2 * n_pos, dtype=np.int64) ** 2).reshape(n_pos, 2)
+    docs, sums, counts = doc_sums(values, lengths, n)
+    starts = np.cumsum(lengths) - lengths
+    want = [i for i, ln in enumerate(lengths) if ln >= n]
+    assert docs.tolist() == want
+    assert counts.tolist() == [int(lengths[i]) - n + 1 for i in want]
+    for i, got in zip(want, sums):
+        rows = values[starts[i] : starts[i] + lengths[i] - n + 1]
+        assert got.tolist() == rows.sum(axis=0).tolist(), (i, lengths, n)
+
+
+# fragments that make and break toxic terms: uppercase, the Kelvin sign
+# (lowers to ASCII "k"), dotted I (lowers to two characters), NUL, and
+# letters that glue onto a term so its word boundary fails
+_TOX_PIECES = st.sampled_from([
+    "idiot", "IDIOT", "moron", "shut up", "Shut Up", "kill yourself",
+    "\u212aill yourself", "go to hell", "loser", "freak", "İ", "\u212a",
+    "\x00", "s", "ic", "a", " ", "-", "\n", "ß", "Σ", "é",
+])
+
+
+@given(st.lists(
+    st.one_of(st.none(), st.lists(_TOX_PIECES, max_size=8).map("".join)),
+    max_size=12,
+))
+@example([])
+@example([None, "", "\x00idiot\x00", "İdiot", "\u212aill yourself"])
+@settings(max_examples=200, deadline=None)
+def test_toxic_match_counts_equals_per_text(texts):
+    """The prefiltered batch count equals the per-text regex count."""
+    import numpy as np
+
+    from top_secret_spark.kernel.toxicity import (
+        toxic_match_count,
+        toxic_match_counts,
+    )
+
+    got = toxic_match_counts(texts)
+    assert got.dtype == np.int64
+    assert got.tolist() == [toxic_match_count(t) for t in texts], texts
 
 
 # --- batch twins of the fused stage's per-row loops ----------------------

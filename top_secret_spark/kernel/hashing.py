@@ -6,17 +6,32 @@ batch — no per-row Python loops in the hot path.  Hashes are a
 deterministic polynomial over the text bytes, so results are identical
 across partitions, partitionings, retries, and cluster sizes (a
 requirement for resumable checkpoints and the F1 gate).
+
+Two invariants keep the hot loops free of index arithmetic:
+
+- *uint32 wraparound.*  The polynomial ``h = (h * 131 + byte) mod 2^32``
+  runs in uint32, whose multiply and add wrap modulo 2^32 by
+  definition: the same values as a uint64 polynomial masked to 32 bits
+  after every step, with no mask step and a quarter of the memory.
+  Every start position of a buffer is hashed at once.
+- *Interleaved bounds.*  Doc ``i`` of a buffer starts at byte ``s_i``
+  and has ``v_i = L_i - n + 1`` in-document n-gram start positions, a
+  contiguous run ``[s_i, s_i + v_i)``.  ``np.add.reduceat`` over the
+  interleaved bounds ``s_0, s_0 + v_0, s_1, s_1 + v_1, ...`` sums each
+  doc's run in its even segments; the odd segments hold the n-grams
+  that cross a doc boundary and are discarded (``doc_sums``).  A doc's
+  run is the same contiguous rows whichever way the buffer was cut, so
+  per-doc sums are bit-identical across chunk layouts.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-MASK32 = np.uint64(0xFFFFFFFF)
-MULT = np.uint64(131)
+MULT = np.uint32(131)
 # distinct seed per n-gram order so all orders share one bucket space
-def _n_seed(n: int) -> np.uint64:
-    return np.uint64((0x9E3779B1 * n * n + 0x85EBCA77 * n + 0xC2B2AE3D) & 0xFFFFFFFF)
+def _n_seed(n: int) -> np.uint32:
+    return np.uint32((0x9E3779B1 * n * n + 0x85EBCA77 * n + 0xC2B2AE3D) & 0xFFFFFFFF)
 
 
 def encode_batch(texts) -> tuple[np.ndarray, np.ndarray]:
@@ -28,42 +43,67 @@ def encode_batch(texts) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _bucketize(h: np.ndarray, buckets: int) -> np.ndarray:
-    """h mod buckets, via bitwise AND when buckets is a power of two
-    (identical result; uint64 division is ~20x a masked AND)."""
-    if buckets & (buckets - 1) == 0:
-        h &= np.uint64(buckets - 1)
+    """h mod buckets, in place: a bitwise AND when buckets is a power of
+    two (uint division is ~20x a masked AND); a no-op when every uint32
+    hash is already below buckets."""
+    if buckets >= 1 << 32:
         return h
-    return h % np.uint64(buckets)
+    if buckets & (buckets - 1) == 0:
+        h &= np.uint32(buckets - 1)
+        return h
+    h %= np.uint32(buckets)
+    return h
+
+
+def raw_ngram_hashes(data: np.ndarray, n: int, buckets: int) -> np.ndarray:
+    """Unmasked uint32 n-gram bucket ids at every start position 0..L-n
+    (no document-boundary filtering — callers drop the cross-document
+    positions themselves, e.g. with ``doc_sums``)."""
+    total = len(data)
+    if total < n:
+        return np.empty(0, np.uint32)
+    h = np.full(total - n + 1, _n_seed(n), dtype=np.uint32)
+    for i in range(n):
+        h *= MULT
+        h += data[i : total - n + 1 + i]
+    return _bucketize(h, buckets)
+
+
+def doc_sums(values: np.ndarray, lengths: np.ndarray, n: int):
+    """Per-doc sums of ``values`` (one row per n-gram start position of
+    the buffer that ``lengths`` splits, as ``raw_ngram_hashes`` returns)
+    over each doc's in-document positions → (docs, sums, counts) for the
+    docs with at least one such position.  One ``reduceat`` over the
+    interleaved bounds; the rows of a doc are summed in order along
+    axis 0, exactly as a gather of its rows followed by a reduceat
+    would sum them."""
+    v = lengths - (n - 1)
+    docs = np.flatnonzero(v > 0)
+    if not len(docs):
+        return docs, values[:0], v[:0]
+    starts = np.cumsum(lengths) - lengths
+    bounds = np.empty(2 * len(docs), dtype=np.int64)
+    bounds[0::2] = starts[docs]
+    bounds[1::2] = bounds[0::2] + v[docs]
+    if bounds[-1] == len(values):
+        # the last run ends the buffer: its segment runs to the end
+        bounds = bounds[:-1]
+    return docs, np.add.reduceat(values, bounds, axis=0)[0::2], v[docs]
 
 
 def ngram_hashes_multi(
     data: np.ndarray, lengths: np.ndarray, orders, buckets: int
 ) -> list[tuple[np.ndarray, np.ndarray]]:
-    """n-gram bucket ids for SEVERAL n-gram orders in one pass →
-    [(doc_idx, bucket), ...] aligned with ``orders``.
-
-    The byte→uint64 conversion and the per-byte doc-id expansion are
-    computed ONCE and shared across orders, and the polynomial loop runs
-    in place (h *= / += / &=) — the out-of-place form allocated two
-    buffer-sized temporaries per byte of n-gram order, which dominated
-    the whole langid stage at scale.  Results are bit-identical to the
-    original formulation.
-    """
-    total = int(lengths.sum())
+    """n-gram bucket ids for SEVERAL n-gram orders → [(doc_idx, bucket),
+    ...] aligned with ``orders``, both int64, in-document n-grams only,
+    in document order."""
     out: list[tuple[np.ndarray, np.ndarray]] = []
-    arr = None
     ndocs = len(lengths)
     for n in orders:
-        if total < n:
+        h = raw_ngram_hashes(data, n, buckets)
+        if not len(h):
             out.append((np.empty(0, np.int64), np.empty(0, np.int64)))
             continue
-        if arr is None:
-            arr = data.astype(np.uint64)
-        h = np.full(total - n + 1, _n_seed(n), dtype=np.uint64)
-        for i in range(n):
-            h *= MULT
-            h += arr[i : total - n + 1 + i]
-            h &= MASK32
         # valid positions (n-grams fully inside one doc) computed
         # ARITHMETICALLY: doc i contributes v_i = max(L_i - n + 1, 0)
         # valid positions starting at its buffer offset, and the m-th
@@ -77,35 +117,16 @@ def ngram_hashes_multi(
         np.cumsum(skipped[:-1], out=b[1:])
         d = np.repeat(np.arange(ndocs, dtype=np.int64), v)
         idx = np.arange(len(d), dtype=np.int64) + b[d]
-        hv = _bucketize(h[idx], buckets)
-        out.append((d, hv.astype(np.int64)))
+        out.append((d, h[idx].astype(np.int64)))
     return out
 
 
 def ngram_hashes(
     data: np.ndarray, lengths: np.ndarray, n: int, buckets: int
 ) -> tuple[np.ndarray, np.ndarray]:
-    """All n-gram bucket ids in one pass → (doc_idx, bucket) arrays.
-
-    N-grams crossing document boundaries are masked out by comparing the
-    doc id of an n-gram's first and last byte.
-    """
+    """All in-document n-gram bucket ids in one pass → (doc_idx, bucket)
+    arrays (see ``ngram_hashes_multi``)."""
     return ngram_hashes_multi(data, lengths, (n,), buckets)[0]
-
-
-def raw_ngram_hashes(data: np.ndarray, n: int, buckets: int) -> np.ndarray:
-    """Unmasked n-gram bucket ids at every start position 0..L-n (no
-    document-boundary filtering — callers align and mask themselves)."""
-    total = len(data)
-    if total < n:
-        return np.empty(0, np.int64)
-    arr = data.astype(np.uint64)
-    h = np.full(total - n + 1, _n_seed(n), dtype=np.uint64)
-    for i in range(n):
-        h *= MULT
-        h += arr[i : total - n + 1 + i]
-        h &= MASK32
-    return _bucketize(h, buckets).astype(np.int64)
 
 
 def pair_jaccard(

@@ -27,7 +27,7 @@ import warnings
 
 import numpy as np
 
-from .hashing import encode_batch, raw_ngram_hashes
+from .hashing import doc_sums, encode_batch, raw_ngram_hashes
 from .langid import _SEEDS, chunk_spans
 
 BUCKETS = 1 << 16
@@ -200,6 +200,14 @@ def perplexity_batch(texts, model=None) -> np.ndarray:
     if len(data) < 3:
         return out
 
+    # the per-position terms (c + alpha) / (...) as float64 tables over
+    # the buckets, so each chunk gathers finished values: elementwise
+    # the same operations on the same operands, so the same bits
+    a, v = _ALPHA, _VOCAB
+    f1, f2, f3 = (c.astype(np.float64) for c in (c1, c2, c3))
+    p1_tab = (f1 + a) / (total1 + a * v)
+    num2, den1 = f2 + a, f1 + a * v
+    num3, den2 = f3 + a, f2 + a * v
     nll = np.zeros(ndocs, dtype=np.float64)
     cnt = np.zeros(ndocs, dtype=np.float64)
     # Score in cache-resident chunks (see langid._CHUNK_BYTES): the
@@ -220,30 +228,18 @@ def perplexity_batch(texts, model=None) -> np.ndarray:
         h2 = raw_ngram_hashes(cdata, 2, buckets)  # start positions 0..L-2
         h3 = raw_ngram_hashes(cdata, 3, buckets)  # start positions 0..L-3
 
-        doc_id = np.repeat(np.arange(len(clen), dtype=np.int64), clen)
-        # trigram start positions fully inside one document
-        p = np.arange(L - 2)
-        valid = doc_id[p] == doc_id[p + 2]
-        p = p[valid]
-        if len(p) == 0:
-            continue
-
-        a, v = _ALPHA, _VOCAB
-        p1 = (c1[h1[p + 2]].astype(np.float64) + a) / (total1 + a * v)
-        p2 = (c2[h2[p + 1]].astype(np.float64) + a) / (
-            c1[h1[p + 1]].astype(np.float64) + a * v
-        )
-        p3 = (c3[h3[p]].astype(np.float64) + a) / (
-            c2[h2[p]].astype(np.float64) + a * v
-        )
+        # every trigram start position p = 0..L-3, as contiguous slices:
+        # h1[p+2] = h1[2:], h2[p+1] = h2[1:], h1[p+1] = h1[1:L-1],
+        # h3[p] = h3, h2[p] = h2[:L-2]; doc_sums drops the positions
+        # whose trigram crosses a doc boundary
+        p1 = np.take(p1_tab, h1[2:])
+        p2 = np.take(num2, h2[1:]) / np.take(den1, h1[1 : L - 1])
+        p3 = np.take(num3, h3) / np.take(den2, h2[: L - 2])
         prob = _LAMBDAS[0] * p1 + _LAMBDAS[1] * p2 + _LAMBDAS[2] * p3
 
-        # p is sorted → doc_id[p] nondecreasing → segment sums via reduceat
-        dp = doc_id[p]
-        starts = np.flatnonzero(np.r_[True, dp[1:] != dp[:-1]])
-        present = dp[starts] + s0
-        nll[present] = np.add.reduceat(-np.log(prob), starts)
-        cnt[present] = np.diff(np.r_[starts, len(dp)])
+        docs, seg, n_pos = doc_sums(-np.log(prob), clen, 3)
+        nll[docs + s0] = seg
+        cnt[docs + s0] = n_pos
     ok = cnt > 0
     out[ok] = np.exp(nll[ok] / cnt[ok])
     return np.minimum(out, _MAX_PPL)

@@ -19,6 +19,10 @@ single-word prefix in ordered-alternation engines.
 from __future__ import annotations
 
 import re
+from bisect import bisect_right
+from itertools import accumulate
+
+import numpy as np
 
 # deliberately mild, non-slur insult/abuse vocabulary — the point is the
 # pipeline stage, swappable for a production lexicon via ``make_pattern``
@@ -60,3 +64,27 @@ def toxicity_score(text: str) -> float:
     """Toxic-term matches per word, in [0, ~1]."""
     words = len(_WORD_RE.findall(text or ""))
     return toxic_match_count(text) / max(words, 1)
+
+
+def toxic_match_counts(texts) -> np.ndarray:
+    """``[toxic_match_count(t) for t in texts]`` as an int64 array,
+    running the regex only on the texts that can match.  A match is a
+    term occurring literally in the lowered text, so a text without any
+    term as a substring counts 0.  ``str.find`` scans the NUL-joined
+    lowered batch for each term (a term holds no NUL, so no hit spans
+    two texts) and jumps to the next text after each hit.  Text starts
+    come from the lengths, so a NUL inside a text is harmless."""
+    lowered = [(t or "").lower() for t in texts]
+    starts = list(accumulate((len(t) + 1 for t in lowered), initial=0))
+    joined = "\x00".join(lowered)
+    hits = set()
+    for term in TOXIC_TERMS:
+        pos = joined.find(term)
+        while pos >= 0:
+            i = bisect_right(starts, pos) - 1
+            hits.add(i)
+            pos = joined.find(term, starts[i + 1])
+    counts = np.zeros(len(lowered), dtype=np.int64)
+    for i in hits:
+        counts[i] = len(_TOX_RE.findall(lowered[i]))
+    return counts

@@ -1018,8 +1018,8 @@ def split_clips_on_silence(
     segment, and NULL payloads pass through as one untouched segment
     (a structural transform never loses rows).  Any other row the
     slice cannot take — a codec outside the fixed-width ones, a NULL or
-    non-positive sr — raises the strict transforms' named error (module
-    doc)."""
+    non-positive sr, an odd-length pcm16 payload — raises the strict
+    transforms' named error (module doc)."""
     has_dur = "dur_ms" in df.columns
 
     def run(pdf):
@@ -1032,10 +1032,15 @@ def split_clips_on_silence(
         codecs = pdf["codec"].to_numpy()
         srs = pdf["sr_hz"].to_numpy(dtype="float64", na_value=np.nan)
         # segments are payload slices; NaN > 0 is False, so a NULL
-        # rate is refused with the non-positive ones
-        refused = np.flatnonzero(nonnull & ~(
+        # rate is refused with the non-positive ones, and so is an
+        # odd-length pcm16 payload, which the decode cannot take
+        odd = np.array([
+            c == "pcm16" and d is not None and len(d) % 2 == 1
+            for c, d in zip(codecs.tolist(), datas)
+        ], dtype=bool)
+        refused = np.flatnonzero(nonnull & (odd | ~(
             pdf["codec"].isin(_BYTES_PER_SAMPLE).to_numpy() & (srs > 0)
-        ))
+        )))
         if len(refused):
             raise _refusal(
                 "split_clips_on_silence", pdf.iloc[refused[0]], slices=True

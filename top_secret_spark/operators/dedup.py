@@ -481,51 +481,61 @@ def with_minhash(
     )
 
 
+# The LSH expressions below are SQL text: PySpark builds a Python
+# lambda's Catalyst tree node by node, one py4j round trip each, while
+# SQL text is parsed on the JVM in one call (a warm MinHash near-dup
+# call made half the round trips).  Each helper takes column NAMES and
+# returns SQL, or an F.expr of it.
+
+
 def _band_bucket(bands: int):
     """Bucket function of a MinHash signature cut into ``bands``: band
-    ``band``'s chunk of ``sig``, hashed with the band index as seed."""
+    ``band``'s chunk of ``sig``, hashed with the band index as seed
+    (SQL text over the SQL texts ``sig`` and ``band``)."""
 
     def bucket(sig, band):
-        rows_per_band = (F.size(sig) / bands).cast("int")
-        return F.xxhash64(F.slice(sig, band * rows_per_band + 1, rows_per_band), band)
+        rows_per_band = f"CAST(size({sig}) / {bands} AS INT)"
+        return (
+            f"xxhash64(slice({sig}, {band} * {rows_per_band} + 1, "
+            f"{rows_per_band}), {band})"
+        )
 
     return bucket
 
 
 def _simhash_bucket(band_bits: int):
     """Bucket function of the 64-bit SimHash: band ``band``'s
-    ``band_bits``-bit slice."""
+    ``band_bits``-bit slice (SQL text)."""
     mask = (1 << band_bits) - 1
-    return lambda h, band: F.call_function(
-        "shiftrightunsigned", h, band * band_bits
-    ).bitwiseAND(mask)
+    return lambda h, band: (
+        f"(shiftrightunsigned({h}, {band} * {band_bits}) & {mask})"
+    )
 
 
 def _banded(sig_df: DataFrame, sig_col: str, bands: int, bucket) -> DataFrame:
     """``sig_df``'s columns plus (band, bucket), one row per band, where
-    ``bucket(sig, band)`` (Columns) keys a band — the ONE banding
-    expression of every text LSH operator here (same bands ⇒ same
-    buckets)."""
+    ``bucket(sig, band)`` keys a band — the ONE banding expression of
+    every text LSH operator here (same bands ⇒ same buckets)."""
     return sig_df.select(
         "*",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda i: bucket(F.col(sig_col), i),
-            )
-        ).alias("band", "bucket"),
+        F.posexplode(F.expr(
+            f"transform(sequence(0, {bands - 1}), "
+            f"i -> {bucket(f'`{sig_col}`', 'i')})"
+        )).alias("band", "bucket"),
     )
 
 
-def _first_shared_band(sig_a, sig_b, bands: int, bucket):
-    """True on the join row of the first band the pair (``sig_a``,
-    ``sig_b``) shares.  A pair sharing several buckets joins once per
-    shared band; keeping only the first makes each pair one row without
-    a distinct (and the shuffle it would take).  Sound only when every
-    band row reaches the join: a dropped bucket can hide the first."""
-    return ~F.exists(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda j: (j < F.col("band")) & (bucket(sig_a, j) == bucket(sig_b, j)),
+def _first_shared_band(sig_a: str, sig_b: str, bands: int, bucket):
+    """True on the join row of the first band the pair of sketch
+    columns (``sig_a``, ``sig_b``) shares.  A pair sharing several
+    buckets joins once per shared band; keeping only the first makes
+    each pair one row without a distinct (and the shuffle it would
+    take).  Sound only when every band row reaches the join: a dropped
+    bucket can hide the first."""
+    a, b = f"`{sig_a}`", f"`{sig_b}`"
+    return F.expr(
+        f"NOT exists(sequence(0, {bands - 1}), j -> j < band AND "
+        f"{bucket(a, 'j')} = {bucket(b, 'j')})"
     )
 
 
@@ -570,10 +580,13 @@ def _spread_over_cores(df: DataFrame) -> DataFrame:
     return df
 
 
-def minhash_similarity_col(sig_a, sig_b):
-    """Estimated Jaccard = fraction of agreeing signature positions."""
-    return F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y),
-                           lambda v: v)) / F.size(sig_a)
+def minhash_similarity_col(sig_a: str, sig_b: str):
+    """Estimated Jaccard = fraction of agreeing signature positions of
+    the sketch columns named ``sig_a`` and ``sig_b``."""
+    return F.expr(
+        f"size(filter(zip_with(`{sig_a}`, `{sig_b}`, (x, y) -> x = y), "
+        f"v -> v)) / size(`{sig_a}`)"
+    )
 
 
 def _auto_bands(num_hashes: int, threshold: float, min_detect: float = 0.9) -> int:
@@ -699,13 +712,12 @@ def near_duplicates_minhash(
         reps = sigs.withColumn("_n", F.lit(1))
     bands = bands or _auto_bands(num_hashes, threshold)
     bucket = _band_bucket(bands)
-    sig_a, sig_b = F.col("_sig_a"), F.col("_sig_b")
     candidates = _band_self_join(
         _banded(reps, "minhash", bands, bucket), "_id", "minhash", "_n"
-    ).filter(_first_shared_band(sig_a, sig_b, bands, bucket))
+    ).filter(_first_shared_band("_sig_a", "_sig_b", bands, bucket))
     pairs = candidates.select(
         "a", "b", "_sig_a", "_sig_b",
-        minhash_similarity_col(sig_a, sig_b).alias("est_jaccard"),
+        minhash_similarity_col("_sig_a", "_sig_b").alias("est_jaccard"),
     ).filter(F.col("est_jaccard") >= threshold)
     if collapse_exact:
         # each verified group pair fans out to |group_a| x |group_b|
@@ -1044,7 +1056,7 @@ def simhash_candidate_pairs(
     pairs = _band_self_join(banded, id_col, hash_col)
     if max_bucket is None:
         pairs = pairs.filter(
-            _first_shared_band(F.col("_sig_a"), F.col("_sig_b"), bands, bucket)
+            _first_shared_band("_sig_a", "_sig_b", bands, bucket)
         )
     pairs = pairs.select(
         "a", "b",
@@ -1228,13 +1240,12 @@ def flag_contaminated_fuzzy(
         F.col(id_col), mk(F.col(text_col)).alias("_sig")
     )
     bench = benchmark.select(mk(F.col(bench_text_col or text_col)).alias("_bsig"))
-    sig, bsig = F.col("_sig"), F.col("_bsig")
     verified = (
         _banded(corpus, "_sig", b, bucket)
         .join(F.broadcast(_banded(bench, "_bsig", b, bucket)), ["band", "bucket"])
         .filter(
-            _first_shared_band(sig, bsig, b, bucket)
-            & (minhash_similarity_col(sig, bsig) >= F.lit(threshold))
+            _first_shared_band("_sig", "_bsig", b, bucket)
+            & (minhash_similarity_col("_sig", "_bsig") >= F.lit(threshold))
         )
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_bench_near"))

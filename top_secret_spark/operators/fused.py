@@ -92,8 +92,6 @@ def fused_text_frame(
     perplexity → keep/drop → scrub-kept-only), shared by the
     ``pandas_udf`` wrapper and the single-crossing multimodal stage.
     Returns a DataFrame with exactly ``FUSED_FIELDS`` columns."""
-    import re
-
     import numpy as np
 
     from ..kernel.langid import detect_batch
@@ -105,7 +103,7 @@ def fused_text_frame(
         keep_drop_vector,
     )
     from ..kernel.scrub import scrub_batch
-    from ..kernel.toxicity import TOXICITY_PATTERN
+    from ..kernel.toxicity import toxic_match_counts
 
     t = texts.tolist()
     langs, confs = detect_batch(t)
@@ -123,10 +121,7 @@ def fused_text_frame(
     denom = n_chars_v.clip(min=1)
     symbol_v = (n_chars_v - n_alsp_v) / denom
     digit_v = n_dig_v / denom
-    tox_v = (
-        s.str.lower().str.count(TOXICITY_PATTERN, flags=re.ASCII).to_numpy()
-        / n_words_v.clip(min=1)
-    )
+    tox_v = toxic_match_counts(t) / n_words_v.clip(min=1)
     # dup_line_frac stays per-row but only runs where it can be
     # nonzero (a newline-bearing text); top_bigram_frac is one batch
     # pass over the texts with >= 8 words

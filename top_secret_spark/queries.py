@@ -7210,20 +7210,19 @@ ORDER BY doc_id
 
 
 QUERIES = {
-    # ROUND-5 DRIVER-SLOT ROTATION.  The driver's correctness harness
-    # records the FIRST 50 registered queries; rounds 1-4 left 65 of the
-    # 131 registered queries without a driver record (all green under
-    # the identical local gate, tools/check_oracles.py).  This round's
-    # first 50 = a 10-query CORE REGRESSION SET covering every kernel
-    # family touched this session (scrub q03, global labels q06, minhash
-    # q11, decode q16, fused pipeline e2e q22 — langid/perplexity/
-    # signals chunking, cluster dedup q30, checkpoint q34, audio gate
-    # q40, streaming q86, and the reworked WAV audit q100) + 40 NEVER-
-    # DRIVER-CHECKED queries (80% of the slate).  Every displaced query
-    # keeps its name and its oracle below, still gated locally at every
-    # scale; the 25 never-checked queries that remain local-only are
-    # each a sibling of a driver-gated family member (compositions of
-    # gated stages, or parameter variants of a gated operator).
+    # THE ORACLE WINDOW.  An external correctness harness records only
+    # the FIRST 50 registered queries; tools/check_oracles.py gates all
+    # 131 under the same protocol.  The rule for the first 50: every kernel
+    # a change rewrites has its direct oracle inside the window (the
+    # change that rewrites it moves the oracle in), and a query leaves
+    # the window only for one that runs code it does not, and only
+    # while a sibling of its own family (same operator runner or
+    # decode path) stays inside.  Each displacement is noted at the
+    # slot it freed.  The window opens with a core regression set (scrub
+    # q03, global labels q06, minhash q11, decode q16, fused pipeline
+    # q22, cluster dedup q30, checkpoint q34, audio gate q40, streaming
+    # q86, WAV audit q100); displaced queries keep their names and
+    # oracles below the window.
     "q03_scrub_substitution": (q_scrub_substitution, Q_SCRUB_SUBSTITUTION_SQL),
     "q06_global_labels": (q_global_labels, Q_GLOBAL_LABELS_SQL),
     "q11_minhash_neardup": (q_minhash_neardup, Q_MINHASH_SQL),
@@ -7254,7 +7253,11 @@ QUERIES = {
     "q72_repetition_signals": (q_repetition_signals, Q_REPETITION_SQL),
     "q73_snr_estimate": (q_snr_estimate, Q_SNR_ESTIMATE_SQL),
     "q74_webdataset_manifest": (q_webdataset_manifest, Q_WEBDATASET_SQL),
-    "q84_bandwidth_gate": (q_bandwidth_gate, Q_BANDWIDTH_SQL),
+    # q14 and q28 are the direct oracles of the langid and toxicity
+    # kernels (index-free n-gram scoring, substring prefilter); they
+    # took the slots of q84 (sibling: q59, the same spectral runner)
+    # and q121 (sibling: q16, the same decode boundary)
+    "q14_langid_planted": (q_langid_planted, Q_LANGID_SQL),
     "q101_wav_unwrap": (q_wav_unwrap, Q_WAV_UNWRAP_SQL),
     "q102_bloom_decontaminate": (q_bloom_decontaminate, Q_BLOOM_DECONTAMINATE_SQL),
     "q80_fuzzy_decontamination": (q_fuzzy_decontamination, Q_FUZZY_DECON_SQL),
@@ -7268,7 +7271,7 @@ QUERIES = {
     "q114_speaker_turns": (q_speaker_turns, Q_SPEAKER_TURNS_SQL),
     "q116_oov_gate": (q_oov_gate, Q_OOV_GATE_SQL),
     "q120_compression_gate": (q_compression_gate, Q_COMPRESSION_GATE_SQL),
-    "q121_codec_verify": (q_codec_verify, Q_CODEC_VERIFY_SQL),
+    "q28_toxicity": (q_toxicity, Q_TOXICITY_SQL),
     "q122_leakage_safe_split": (q_leakage_safe_split, Q_LEAKAGE_SPLIT_SQL),
     "q124_corpus_fit_perplexity": (q_corpus_fit_perplexity, Q_CORPUS_FIT_PPL_SQL),
     "q127_soft_dedup_weights": (q_soft_dedup_weights, Q_SOFT_DEDUP_SQL),
@@ -7297,6 +7300,8 @@ QUERIES = {
     "q75_budget_select": (q_budget_select, Q_BUDGET_SELECT_SQL),
     "q78_repeat_epochs": (q_repeat_epochs, Q_REPEAT_EPOCHS_SQL),
     "q79_cap_per_key": (q_cap_per_key, Q_CAP_PER_KEY_SQL),
+    "q84_bandwidth_gate": (q_bandwidth_gate, Q_BANDWIDTH_SQL),
+    "q121_codec_verify": (q_codec_verify, Q_CODEC_VERIFY_SQL),
     "q01_email_extract": (q_email_extract, Q_EMAIL_EXTRACT_SQL),
     "q02_category_extract_counts": (q_category_extract_counts, Q_CATEGORY_EXTRACT_SQL),
     "q05_categories_present": (q_categories_present, Q_CATEGORIES_PRESENT_SQL),
@@ -7305,7 +7310,6 @@ QUERIES = {
     "q10_dedup_exact": (q_dedup_exact, Q_DEDUP_EXACT_SQL),
     "q93_pairing_gate": (q_pairing_gate, Q_PAIRING_GATE_SQL),
     "q119_voice_health": (q_voice_health, Q_VOICE_HEALTH_SQL),
-    "q14_langid_planted": (q_langid_planted, Q_LANGID_SQL),
     "q130_pseudonymize_ids": (q_pseudonymize_ids, Q_PSEUDONYMIZE_SQL),
     "q98_channel_stats": (q_channel_stats, Q_CHANNEL_STATS_SQL),
     "q117_pitch_stats": (q_pitch_stats, Q_PITCH_STATS_SQL),
@@ -7316,7 +7320,6 @@ QUERIES = {
     "q89_vad_gate": (q_vad_gate, Q_VAD_GATE_SQL),
     "q96_audio_redact": (q_audio_redact, Q_AUDIO_REDACT_SQL),
     "q27_media_decode": (q_media_decode, Q_MEDIA_DECODE_SQL),
-    "q28_toxicity": (q_toxicity, Q_TOXICITY_SQL),
     "q29_ivf_ann": (q_ivf_ann, Q_IVF_ANN_SQL),
     "q31_filter_composition": (q_filter_composition, Q_FILTER_COMPOSITION_SQL),
     "q131_adpcm_transcode": (q_adpcm_transcode, Q_ADPCM_TRANSCODE_SQL),
